@@ -351,21 +351,3 @@ def l2_norm(a: Column) -> Column:
             lambda acc, v: acc + v,
         )
     )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

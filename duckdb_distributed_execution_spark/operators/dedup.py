@@ -30,7 +30,12 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from duckdb_distributed_execution_spark.functions import persist_tracked
-from duckdb_distributed_execution_spark.operators.text import normalize_text, tokens
+from duckdb_distributed_execution_spark.operators.text import (
+    arrow_normalize,
+    arrow_tokens,
+    normalize_text,
+    tokens,
+)
 
 
 def hash60(col: Column) -> Column:
@@ -293,7 +298,6 @@ def _minhash_doc_hashes(pdf, id_col, text_col, shingle_n, shingle_fn):
 
     import numpy as np
     import pandas as pd
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     md5 = hashlib.md5
@@ -314,14 +318,7 @@ def _minhash_doc_hashes(pdf, id_col, text_col, shingle_n, shingle_fn):
             [s for lst in sh_lists for s in lst], dtype=object
         )
     else:
-        x = pa.array(pdf[text_col].str.lower(), type=pa.string())
-        x = pc.replace_substring_regex(x, "[^a-z0-9 ]", " ")
-        x = pc.replace_substring_regex(x, " +", " ")
-        x = pc.utf8_trim(x, " ")
-        toks = pc.split_pattern(x, " ")
-        lens = pc.list_value_length(toks).to_numpy(
-            zero_copy_only=False
-        ).astype(np.int64)
+        toks, lens = arrow_tokens(arrow_normalize(pdf[text_col]))
         flat = pc.list_flatten(toks).to_pandas().values
         n_sh = np.maximum(lens - (shingle_n - 1), 0)
         doc_ids = np.repeat(pdf[id_col].values, n_sh)
@@ -843,7 +840,6 @@ def minhash_lsh_pairs(
         # Jaccard verification (tests gate candidates / possible pairs
         # so a vacuous banding config can never pass CI).
         return cand
-    pruned = cand
     # Jaccard verification joins the 28-bit hashed shingle sets back,
     # only for surviving candidates — reusing the checkpointed
     # signature table (collect_set = distinct base hashes; jaccard()
@@ -852,8 +848,8 @@ def minhash_lsh_pairs(
     # (≤ |set|²/2²⁸ ≈ 1e-5 per pair).
     sh = sig.select("doc", "sh")
     verified = (
-        pruned.join(sh.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a")),
-                    on="id_a")
+        cand.join(sh.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a")),
+                  on="id_a")
         .join(sh.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b")),
               on="id_b")
         .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
@@ -1154,12 +1150,6 @@ def positional_word_kgrams(col: Column, k: int) -> Column:
     return F.transform(
         idx, lambda i: F.array_join(F.slice(toks, i, k), " ")
     )
-
-
-def positional_word_trigrams(col: Column) -> Column:
-    """Array of word trigrams in position order (index i covers tokens
-    i..i+2); docs under 3 tokens yield an empty array."""
-    return positional_word_kgrams(col, 3)
 
 
 def substring_cut_spans(

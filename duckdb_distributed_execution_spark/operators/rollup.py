@@ -35,16 +35,6 @@ _FNS = ("count", "sum", "min", "max", "avg")
 _DEC = "decimal(38,6)"
 
 
-def _state_cols(specs: dict[str, tuple[str, str]]) -> list[str]:
-    cols = []
-    for out, (fn, _) in specs.items():
-        if fn == "avg":
-            cols += [f"{out}__sum", f"{out}__cnt"]
-        else:
-            cols.append(f"{out}__{'cnt' if fn == 'count' else fn}")
-    return cols
-
-
 def build_state(
     df: DataFrame, group_cols: list[str], specs: dict[str, tuple[str, str]]
 ) -> DataFrame:

@@ -117,7 +117,7 @@ def ivf_assign(
     ) + F.col("__cc")
     # r7 (ADVICE): the argmin key is the QUANTIZED distance
     # ⌊d²·1e6+.5⌋ with cid tie-break — the same convention as
-    # ivf_assign_n / ivf_assign_numpy and the SQL oracles, so a
+    # ivf_assign_numpy and the SQL oracles, so a
     # corpus assigned here can be mixed with quantized query-side
     # probes without near-tie disagreement. Raw dist rides along as
     # a payload field ((qdist, cid) is already unique per vid).
@@ -211,55 +211,6 @@ def ivf_assign_numpy(
         fn,
         schema=f"{id_col} {dt[id_col]}, {cid_col} long, dist double, "
         f"{vec_col} {dt[vec_col]}",
-    )
-
-
-def ivf_assign_n(
-    vecs: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cid_col: str = "cid",
-) -> DataFrame:
-    """Multi-probe assignment: the ``nprobe`` nearest centroids per
-    vector (squared-L2, centroid id tie-break). ``nprobe=1`` is
-    exactly ``ivf_assign``. Used on the QUERY side of an IVF probe —
-    searching the runner-up cells recovers most of the recall lost to
-    quantization at the cost of nprobe× candidates, still ≪ brute
-    force."""
-    # same hoisted expansion as ivf_assign (bit-identical doubles);
-    # the window stays — nprobe > 1 needs ranked rows, and this runs
-    # on the QUERY side (bounded), never the corpus
-    c = centroids.select(
-        F.col(cid_col).alias("__cid"),
-        F.col(vec_col).alias("__cv"),
-        dot_product(F.col(vec_col), F.col(vec_col)).alias("__cc"),
-    )
-    v = vecs.select(
-        F.col(id_col).alias("__vid"),
-        F.col(vec_col).alias("__v"),
-        dot_product(F.col(vec_col), F.col(vec_col)).alias("__vv"),
-    )
-    pdist = (
-        F.col("__vv") - F.lit(2.0) * dot_product(F.col("__v"), F.col("__cv"))
-    ) + F.col("__cc")
-    dists = v.join(F.broadcast(c)).select("__vid", "__cid", pdist.alias("dist"))
-    # quantized ordering — identical to the oracle's and to the numpy
-    # corpus-side assignment, so query-side probes and corpus cells
-    # can never disagree at a near-tie (r6)
-    w = Window.partitionBy("__vid").orderBy(
-        F.floor(F.col("dist") * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        F.col("__cid"),
-    )
-    return (
-        dists.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= nprobe)
-        .select(
-            F.col("__vid").alias(id_col),
-            F.col("__cid").alias(cid_col),
-            "dist",
-        )
     )
 
 

@@ -31,6 +31,55 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col)).cast("long")
 
 
+def arrow_normalize(texts):
+    """``normalize_text`` over a pandas Series of non-null strings,
+    computed with Arrow compute kernels (RE2) instead of
+    java.util.regex inside codegen — the shared first step of every
+    Arrow text kernel here (and of dedup's MinHash signature kernel).
+
+    Parity argument (why RE2-vs-Java regex dialects cannot diverge):
+    the first replacement maps every char outside [a-z0-9 ] to a
+    space, so by the time the whitespace-collapse runs, the string
+    contains only [a-z0-9 ] — the ``\\s`` dialect difference (Java
+    includes \\x0B, RE2 does not) is unreachable. Lowercasing goes
+    through Python ``str.lower()`` (full Unicode case mapping,
+    matching the JVM's — Arrow's utf8_lower uses SIMPLE mapping and
+    visibly diverges on expanding lowercases like 'İ' → 'i̇', which
+    contributes an extra 'i' token on the JVM path; pinned by
+    tests/test_arrow_text.py)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    x = pa.array(texts.str.lower(), type=pa.string())
+    x = pc.replace_substring_regex(x, "[^a-z0-9 ]", " ")
+    x = pc.replace_substring_regex(x, " +", " ")
+    return pc.utf8_trim(x, " ")
+
+
+def arrow_tokens(norm):
+    """``tokens`` over :func:`arrow_normalize` output → (list array of
+    tokens, int64 numpy token counts). An empty text yields one empty
+    token (split("") → [""]), matching both the JVM form and the
+    DuckDB oracle's string_split."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    toks = pc.split_pattern(norm, " ")
+    lens = pc.list_value_length(toks).to_numpy(
+        zero_copy_only=False
+    ).astype(np.int64)
+    return toks, lens
+
+
+def md5_hex(norm) -> list[str]:
+    """``fingerprint`` of :func:`arrow_normalize` output: hashlib's md5
+    hexdigest over the UTF-8 bytes equals Spark's md5."""
+    import hashlib
+
+    return [hashlib.md5(s.encode("utf-8")).hexdigest()
+            for s in norm.to_pylist()]
+
+
 def tokens_exploded_arrow(df, id_col: str = "doc_id",
                           text_col: str = "text",
                           term_col: str = "term"):
@@ -39,24 +88,12 @@ def tokens_exploded_arrow(df, id_col: str = "doc_id",
     computed with Arrow compute kernels (RE2) in one mapInPandas pass
     instead of java.util.regex inside codegen. Measured at organic
     sf1: the JVM regex chain was ~2 s of bm25_retrieval_topk's 3.75 s
-    wall; the Arrow pass cuts the tokenize stage ~3×.
-
-    Parity argument (why RE2-vs-Java regex dialects cannot diverge):
-    the first replacement maps every char outside [a-z0-9 ] to a
-    space, so by the time the whitespace-collapse and split run, the
-    string contains only [a-z0-9 ] — the ``\\s`` dialect difference
-    (Java includes \\x0B, RE2 does not) is unreachable. Lowercasing
-    goes through Python ``str.lower()`` (full Unicode case mapping,
-    matching the JVM's — Arrow's utf8_lower uses SIMPLE mapping and
-    visibly diverges on expanding lowercases like 'İ' → 'i̇', which
-    contributes an extra 'i' token on the JVM path; pinned by
-    tests/test_arrow_text.py). Null texts drop their row (explode
-    semantics); empty/whitespace-only texts yield one empty term
-    (split("") → [""]), matching both the JVM form and the DuckDB
-    oracle's string_split."""
+    wall; the Arrow pass cuts the tokenize stage ~3×. Parity with the
+    JVM form: see :func:`arrow_normalize`. Null texts drop their row
+    (explode semantics); empty/whitespace-only texts yield one empty
+    term."""
     import numpy as np
     import pandas as pd
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     from duckdb_distributed_execution_spark.functions import (
@@ -70,14 +107,7 @@ def tokens_exploded_arrow(df, id_col: str = "doc_id",
             pdf = pdf[pdf[text_col].notna()]
             if not len(pdf):
                 continue
-            x = pa.array(pdf[text_col].str.lower(), type=pa.string())
-            x = pc.replace_substring_regex(x, "[^a-z0-9 ]", " ")
-            x = pc.replace_substring_regex(x, " +", " ")
-            x = pc.utf8_trim(x, " ")
-            toks = pc.split_pattern(x, " ")
-            lens = pc.list_value_length(toks).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
+            toks, lens = arrow_tokens(arrow_normalize(pdf[text_col]))
             ids = np.repeat(pdf[id_col].values, lens)
             yield pd.DataFrame(
                 {id_col: ids, term_col: pc.list_flatten(toks).to_pandas()}
@@ -123,14 +153,7 @@ def grouped_token_counts_arrow(df, group_col: str,
             pdf = pdf[pdf[text_col].notna()]
             if not len(pdf):
                 continue
-            x = pa.array(pdf[text_col].str.lower(), type=pa.string())
-            x = pc.replace_substring_regex(x, "[^a-z0-9 ]", " ")
-            x = pc.replace_substring_regex(x, " +", " ")
-            x = pc.utf8_trim(x, " ")
-            toks = pc.split_pattern(x, " ")
-            lens = pc.list_value_length(toks).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
+            toks, lens = arrow_tokens(arrow_normalize(pdf[text_col]))
             grp = np.repeat(pdf[group_col].values, lens)
             agg = pa.table(
                 {group_col: pa.array(grp), term_col: pc.list_flatten(toks)}
@@ -193,14 +216,7 @@ def term_counts_arrow(df, id_col: str, text_col: str, terms,
             pdf = pdf[pdf[text_col].notna()]
             if not len(pdf):
                 continue
-            x = pa.array(pdf[text_col].str.lower(), type=pa.string())
-            x = pc.replace_substring_regex(x, "[^a-z0-9 ]", " ")
-            x = pc.replace_substring_regex(x, " +", " ")
-            x = pc.utf8_trim(x, " ")
-            toks = pc.split_pattern(x, " ")
-            lens = pc.list_value_length(toks).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
+            toks, lens = arrow_tokens(arrow_normalize(pdf[text_col]))
             codes = pc.fill_null(
                 pc.index_in(pc.list_flatten(toks), value_set=tarr), -1
             ).to_numpy(zero_copy_only=False).astype(np.int64)
@@ -347,17 +363,13 @@ def fingerprint_kv_arrow(df, id_col: str = "doc_id",
     """(id, dedup_key) via ONE Arrow-batched normalize+md5 pass —
     byte-identical to ``fingerprint`` (same regex chain through Arrow
     RE2 kernels + Python full-case lower; the JVM-equivalence argument
-    is doc_features_arrow's, whose fp column is this exact kernel).
+    is arrow_normalize's).
     The corpus-scale fast path for exact dedup: Java's interpreted
     regex replace chain dominates the JVM form's wall once documents
     are beyond toy scale (measured at organic sf1: 2.17 → 1.15 s),
     while below that the Python-worker fixed cost dominates — callers
     gate on input bytes (see queries/llm.py::dedup_exact)."""
-    import hashlib
-
     import pandas as pd
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
     from duckdb_distributed_execution_spark.functions import (
         ensure_min_parallelism,
@@ -370,14 +382,7 @@ def fingerprint_kv_arrow(df, id_col: str = "doc_id",
             if not len(pdf):
                 continue
             mask = pdf[text_col].notna()
-            x = pa.array(pdf[text_col][mask].str.lower(), type=pa.string())
-            x = pc.replace_substring_regex(x, "[^a-z0-9 ]", " ")
-            x = pc.replace_substring_regex(x, " +", " ")
-            x = pc.utf8_trim(x, " ")
-            fp = [
-                hashlib.md5(s.encode("utf-8")).hexdigest()
-                for s in x.to_pylist()
-            ]
+            fp = md5_hex(arrow_normalize(pdf[text_col][mask]))
             out = pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
@@ -446,7 +451,7 @@ def doc_features_arrow(df, id_col: str = "doc_id",
 
     - normalization runs the same regex chain via Arrow kernels (the
       RE2-vs-Java dialect difference is unreachable — see
-      tokens_exploded_arrow's parity argument);
+      arrow_normalize's parity argument);
     - quality is the same double arithmetic in the same operation
       order (IEEE-identical in numpy);
     - fp is md5 over the same normalized bytes (hashlib hexdigest ==
@@ -460,8 +465,6 @@ def doc_features_arrow(df, id_col: str = "doc_id",
     the ingest funnel's base-stage wall (ADVICE-class hot path; the
     oracle-facing semantics are pinned by the funnel's own oracle and
     by test_operators' JVM-vs-Arrow equivalence test)."""
-    import hashlib
-
     import numpy as np
     import pandas as pd
     import pyarrow as pa
@@ -480,19 +483,9 @@ def doc_features_arrow(df, id_col: str = "doc_id",
                 continue
             mask = pdf[text_col].notna().values
             arr = pa.array(pdf[text_col][mask], type=pa.string())
-            # Python str.lower == JVM full case mapping (see
-            # tokens_exploded_arrow — Arrow's utf8_lower is the
-            # SIMPLE mapping and diverges on 'İ' etc.)
-            x = pa.array(
-                pdf[text_col][mask].str.lower(), type=pa.string()
-            )
-            x = pc.replace_substring_regex(x, "[^a-z0-9 ]", " ")
-            x = pc.replace_substring_regex(x, " +", " ")
-            x = pc.utf8_trim(x, " ")
-            toks = pc.split_pattern(x, " ")
-            n = pc.list_value_length(toks).to_numpy(
-                zero_copy_only=False
-            ).astype(np.float64)
+            norm = arrow_normalize(pdf[text_col][mask])
+            toks, n = arrow_tokens(norm)
+            n = n.astype(np.float64)
             uniq = np.empty(len(n))
             swc = np.empty(len(n))
             for i, lst in enumerate(toks.to_pylist()):
@@ -503,10 +496,7 @@ def doc_features_arrow(df, id_col: str = "doc_id",
                 + 0.3 * (uniq / n)
                 + 0.3 * (1.0 - swc / n)
             )
-            fp = [
-                hashlib.md5(s.encode("utf-8")).hexdigest()
-                for s in x.to_pylist()
-            ]
+            fp = md5_hex(norm)
             nw = pc.count_substring(arr, " ").to_numpy(
                 zero_copy_only=False
             ).astype(np.int64) + 1

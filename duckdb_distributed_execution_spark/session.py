@@ -35,7 +35,7 @@ import tempfile
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,6 +85,44 @@ def _empty_df(spark: SparkSession, schema) -> DataFrame:
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
+# Per-rule violation predicates: the one definition of each constraint
+# shared by the write-time gate (Engine._check_constraints), ALTER ...
+# SET NOT NULL and the expect() data-quality rules.
+def _nulls(cols: list[str]) -> Column:
+    """NOT NULL: a NULL in any of ``cols``."""
+    return functools.reduce(
+        lambda a, b: a | b, [F.col(c).isNull() for c in cols]
+    )
+
+
+def _outside(col: str, vals) -> Column:
+    """ENUM domain / accepted values: a non-NULL value not in ``vals``."""
+    return F.col(col).isNotNull() & ~F.col(col).isin(list(vals))
+
+
+def _fails(check: str) -> Column:
+    """CHECK: only FALSE violates — a NULL check passes (standard
+    semantics; filter() and when() both treat NULL as not-TRUE)."""
+    return ~F.expr(check)
+
+
+def _duplicate_keys(df: DataFrame, keycols: list[str]) -> DataFrame:
+    """PRIMARY KEY / UNIQUE: the key groups of ``df`` holding more than
+    one row. Rows with a NULL key component are exempt (SQL UNIQUE
+    semantics; PK columns are NOT NULL so nothing escapes there). One
+    grouped count over the key columns only — map-side combining, no
+    row data shuffled."""
+    nonnull = functools.reduce(
+        lambda a, b: a & b, [F.col(c).isNotNull() for c in keycols]
+    )
+    return (
+        df.select(*keycols).filter(nonnull)
+        .groupBy(*keycols)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > 1)
+    )
 
 
 def _ddl(fn):
@@ -741,9 +779,10 @@ class Engine:
     def create_table(self, name: str, columns_ddl: str) -> None:
         """CREATE TABLE name (col type, …) with DuckDB-style types
         mapped per SURVEY §1.2 and DuckDB inline constraints parsed
-        and enforced: PRIMARY KEY / UNIQUE (insert-time uniqueness),
-        NOT NULL, DEFAULT <expr>, CHECK (<pred>) — column-level and
-        table-level forms."""
+        and enforced: PRIMARY KEY / UNIQUE, NOT NULL, DEFAULT <expr>,
+        CHECK (<pred>) — column-level and table-level forms.
+        Constraints are checked on every write: INSERT, UPDATE, MERGE
+        and COPY FROM."""
         if self.table_exists(name):
             raise ValueError(f"table {name!r} already exists")
         schema, cons = parse_create_columns(columns_ddl)
@@ -805,40 +844,64 @@ class Engine:
                 del store[k]
         self._not_null -= {k for k in self._not_null if k[0] == name}
 
-    # Small managed tables compact to one file so a scan is a single
-    # task — the analog of the reference's small-table bypass
-    # (task_partitioner.cpp:14-21: < 1 row group ⇒ one DELEGATED task).
+    # Small managed tables compact to one file (when a rewrite replaces
+    # every file) so a scan is a single task — the analog of the
+    # reference's small-table bypass (task_partitioner.cpp:14-21: < 1
+    # row group ⇒ one DELEGATED task).
     _COMPACT_BYTES = 64 * 1024 * 1024
 
-    def _rewrite(self, name: str, df: DataFrame, op: str = "rewrite",
+    def _rewrite(self, name: str, rows, op: str = "rewrite",
+                 files: list[str] | None = None,
                  compact: bool = True) -> None:
-        """Copy-on-write rewrite of a managed table (Spark parquet
-        tables are immutable; ALTER/DELETE rewrite — same approach a
-        lakehouse format takes). The pre-rewrite state is snapshotted
-        first (hardlinks, no data copy) for time travel, the new files
-        are fully materialized BEFORE the old version is touched, and
-        the swap itself is one atomic manifest rename — a concurrent
-        reader sees the complete old table or the complete new one."""
+        """THE copy-on-write commit of a managed table (parquet files
+        are immutable; ALTER/DELETE/UPDATE/MERGE rewrite, as a lakehouse
+        format does): swap the live ``files`` (default: all) for the
+        files of ``rows`` — a DataFrame, or a function of the replaced
+        rows (read through the table's view when all are replaced).
+        Other files stay byte-identical. The prior state is snapshotted
+        first (hardlinks) for time travel, the new files are fully
+        materialized BEFORE the old version is touched, and the swap is
+        one atomic manifest rename; superseded files are unlinked after
+        the commit (their inodes live on in the snapshot)."""
+        t = self._require_managed(name)
+        whole = files is None or set(files) >= set(self._managed_files(name))
+        if not isinstance(rows, DataFrame):
+            rows = rows(
+                self.table(name) if whole else self.spark.read.parquet(*files)
+            )
+        if whole and compact and self._live_bytes(name) < self._COMPACT_BYTES:
+            rows = rows.coalesce(1)
+        self._snapshot(name, op)
+        m = self._adopt_manifest(t.path)
+        new = self._ingest_files(t.path, rows, m["version"] + 1)
+        base = os.path.realpath(t.path)
+        gone = (
+            {os.path.join(base, f) for f in m["files"]} if whole
+            else {os.path.realpath(p) for p in files}
+        )
+        kept = [f for f in m["files"] if os.path.join(base, f) not in gone]
+        # One CAS publishes the version after the one the rewrite read
+        # its state from: a concurrent commit in between raises
+        # ConcurrentWriteError with nothing applied. The stream
+        # idempotence map (txns) carries forward.
+        manifest.commit_exact(t.path, kept + new, op, m["version"],
+                              txns=m.get("txns"))
+        for p in sorted(gone):  # post-commit GC
+            try:
+                os.remove(p)
+            except OSError:
+                pass
+        self._attach_managed(name, t.path)
+
+    def _require_managed(self, name: str,
+                         verb: str = "DELETE") -> RegisteredTable:
         t = self._tables[name]
         if not t.managed:
             raise ValueError(
                 f"table {name!r} is an external registered table; "
-                "ALTER/DELETE require a managed table"
+                f"ALTER/{verb} require a managed table"
             )
-        if compact and self._live_bytes(name) < self._COMPACT_BYTES:
-            df = df.coalesce(1)
-        self._snapshot(name, op)
-        m = self._adopt_manifest(t.path)
-        new = self._ingest_files(t.path, df, m["version"] + 1)
-        old = list(m["files"])
-        self._commit_manifest(t.path, new, op, base_version=m["version"],
-                              txns=m.get("txns"))
-        for f in old:  # post-commit GC (inodes live on in the snapshot)
-            try:
-                os.remove(os.path.join(t.path, f))
-            except OSError:
-                pass
-        self._attach_managed(name, t.path)
+        return t
 
     def _live_bytes(self, name: str) -> int:
         """Total bytes of the manifest-listed live files — the policy
@@ -1010,66 +1073,75 @@ class Engine:
         target = self.table(name)
         aligned = df.select(*[F.col(c).cast(f.dataType).alias(f.name) for c, f in
                               zip(df.columns, target.schema.fields)])
-        nn_cols = [c for (tn, c) in self._not_null if tn == name]
-        if nn_cols:
-            viol = aligned.filter(
-                functools.reduce(
-                    lambda a, b: a | b, [F.col(c).isNull() for c in nn_cols]
-                )
-            )
-            if viol.limit(1).count() > 0:
-                raise ValueError(
-                    f"NOT NULL constraint violated on {name}.{nn_cols}"
-                )
+        after = target.unionByName(aligned)
+        self._check_constraints(name, aligned, after=after)
+        if self._live_bytes(name) >= self._COMPACT_BYTES:
+            self._append_files(name, aligned, "insert")
+        else:
+            self._rewrite(name, after, op="insert")
+
+    def _check_constraints(self, name: str, rows: DataFrame,
+                           cols: set[str] | None = None,
+                           after: DataFrame | None = None,
+                           extra: tuple[Column, ...] = ()) -> list:
+        """THE constraint gate of every write (INSERT, UPDATE, MERGE,
+        COPY FROM): raise ValueError on the first declared rule of
+        ``name`` the write breaks, before anything is staged.
+        ``rows`` are the rows written (table columns); ``cols`` limits
+        the check to rules over those columns (UPDATE's SET list).
+        NOT NULL/ENUM/CHECK run as ONE pass over ``rows``, which also
+        returns the values of the ``extra`` aggregates (a row count
+        then costs no second pass). PRIMARY KEY/UNIQUE run over
+        ``after``, the table as the write leaves it; None skips them."""
+        lower = {c.lower() for c in cols or ()}
+
+        def touched(used) -> bool:
+            return cols is None or bool({c.lower() for c in used} & lower)
+
+        columns = rows.columns
+        rules = []
+        nn = sorted(c for (tn, c) in self._not_null
+                    if tn == name and c in columns and touched([c]))
+        if nn:
+            rules.append((_nulls(nn), lambda r: (
+                f"NOT NULL constraint violated on {name}.{nn}")))
         for (tn, col), vals in self._enums.items():
-            if tn != name or col not in aligned.columns:
-                continue
-            bad = aligned.filter(
-                F.col(col).isNotNull() & ~F.col(col).isin(vals)
-            )
-            sample = bad.limit(1).collect()
-            if sample:
-                raise ValueError(
-                    f"ENUM domain violated on {name}.{col}: "
-                    f"{sample[0][col]!r} not in {vals}"
-                )
+            if tn == name and col in columns and touched([col]):
+                rules.append((_outside(col, vals), lambda r, c=col, v=vals: (
+                    f"ENUM domain violated on {name}.{c}: {r[c]!r} not in {v}"
+                )))
         for check in self._checks.get(name, []):
-            # Standard CHECK semantics: only FALSE violates (a NULL
-            # check passes), which is exactly what filter(~expr) keeps.
-            bad = aligned.filter(~F.expr(check)).limit(1).collect()
-            if bad:
-                raise ValueError(
-                    f"CHECK ({check}) violated on {name}: {tuple(bad[0])!r}"
-                )
-        for keycols in self._keys.get(name, []):
-            # PRIMARY KEY / UNIQUE: the combined relation must stay
-            # unique on the key set. Rows with a NULL key component
-            # are exempt (SQL UNIQUE semantics; PK columns are NOT
-            # NULL so nothing escapes there). One grouped count over
-            # the key columns only — map-side combining, no row data
-            # shuffled.
-            nonnull = functools.reduce(
-                lambda a, b: a & b, [F.col(c).isNotNull() for c in keycols]
-            )
-            dup = (
-                target.select(*keycols)
-                .unionAll(aligned.select(*keycols))
-                .filter(nonnull)
-                .groupBy(*keycols)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") > 1)
-                .limit(1)
-                .collect()
-            )
+            if touched(re.findall(r"\w+", check)):
+                rules.append((_fails(check), lambda r, c=check: (
+                    f"CHECK ({c}) violated on {name}: {tuple(r)!r}")))
+        row = F.struct(*columns)
+        out, samples = [], ()
+        if extra:
+            got = rows.agg(*extra, *[
+                F.first(F.when(bad, row), ignorenulls=True)
+                for bad, _ in rules
+            ]).collect()[0]
+            out, samples = list(got)[:len(extra)], got[len(extra):]
+        elif rules:
+            # a filter, not an aggregate: a rule the schema already
+            # guarantees (NOT NULL over non-nullable input) folds to
+            # FALSE and the pass costs no Spark job at all
+            hit = rows.filter(functools.reduce(
+                lambda a, b: a | b, [bad for bad, _ in rules]
+            )).select(*[F.when(bad, row) for bad, _ in rules]).limit(1)
+            samples = next(iter(hit.collect()), ())
+        for (_, message), sample in zip(rules, samples):
+            if sample is not None:
+                raise ValueError(message(sample))
+        keys = self._keys.get(name, []) if after is not None else []
+        for keycols in filter(touched, keys):
+            dup = _duplicate_keys(after, keycols).limit(1).collect()
             if dup:
                 raise ValueError(
                     f"duplicate key {keycols} on {name}: "
                     f"{tuple(dup[0])[:-1]!r}"
                 )
-        if self._live_bytes(name) >= self._COMPACT_BYTES:
-            self._append_files(name, aligned, "insert")
-        else:
-            self._rewrite(name, target.unionByName(aligned), op="insert")
+        return out
 
     def insert_values(self, name: str, rows: list[tuple],
                       columns: list[str] | None = None) -> None:
@@ -1177,44 +1249,23 @@ class Engine:
         CREATE TABLE constraints).
         """
         t = self.table(name)
+        # rule → (target label, violating rows), through the same
+        # per-rule predicates the write-time constraint gate uses
+        violations = {
+            "not_null": lambda c: (c, t.filter(_nulls([c]))),
+            "unique": lambda cs: (",".join(cs), _duplicate_keys(t, list(cs))),
+            "accepted_values": lambda a: (a[0], t.filter(_outside(*a))),
+            "in_range": lambda a: (a[0], t.filter(
+                F.col(a[0]).isNotNull() & ~F.col(a[0]).between(a[1], a[2])
+            )),
+            "check": lambda p: (p, t.filter(_fails(p))),
+        }
         rows = []
         for rule in rules:
-            if "not_null" in rule:
-                col = rule["not_null"]
-                bad = t.filter(F.col(col).isNull())
-                label, target_col = "not_null", col
-            elif "unique" in rule:
-                cols = list(rule["unique"])
-                nonnull = functools.reduce(
-                    lambda a, b: a & b,
-                    [F.col(c).isNotNull() for c in cols],
-                )
-                bad = (
-                    t.select(*cols).filter(nonnull)
-                    .groupBy(*cols)
-                    .agg(F.count(F.lit(1)).alias("__n"))
-                    .filter(F.col("__n") > 1)
-                )
-                label, target_col = "unique", ",".join(cols)
-            elif "accepted_values" in rule:
-                col, vals = rule["accepted_values"]
-                bad = t.filter(
-                    F.col(col).isNotNull() & ~F.col(col).isin(list(vals))
-                )
-                label, target_col = "accepted_values", col
-            elif "in_range" in rule:
-                col, lo, hi = rule["in_range"]
-                bad = t.filter(
-                    F.col(col).isNotNull()
-                    & ((F.col(col) < lo) | (F.col(col) > hi))
-                )
-                label, target_col = "in_range", col
-            elif "check" in rule:
-                pred = rule["check"]
-                bad = t.filter(~F.expr(pred))
-                label, target_col = "check", pred
-            else:
+            label = next((k for k in violations if k in rule), None)
+            if label is None:
                 raise ValueError(f"unknown rule {rule!r}")
+            target_col, bad = violations[label](rule[label])
             n = bad.count()
             sample = ""
             if n:
@@ -1250,7 +1301,7 @@ class Engine:
     @_ddl
     def set_not_null(self, name: str, col: str) -> None:
         self._require_column(name, col)
-        if self.table(name).filter(F.col(col).isNull()).limit(1).count() > 0:
+        if self.table(name).filter(_nulls([col])).limit(1).count() > 0:
             raise ValueError(
                 f"cannot SET NOT NULL: {name}.{col} contains NULLs"
             )
@@ -1286,27 +1337,11 @@ class Engine:
     # where the predicate allows (optimize_zorder makes that sharp).
     # The matched-row count falls out of the same single pass.
 
-    def _read_manifest(self, path: str) -> dict | None:
-        return manifest.read_manifest(path)
-
     def _adopt_manifest(self, path: str) -> dict:
         """Manifest for a directory that predates one (legacy layout or
         an externally-written parquet dir, e.g. a fresh CTAS): adopt
         the current ``*.parquet`` listing as the initial version."""
         return manifest.adopt(path)
-
-    def _commit_manifest(self, path: str, files: list[str], op: str,
-                         base_version: int | None = None,
-                         txns: dict | None = None) -> dict:
-        """THE commit point of every state-dependent mutation: one CAS
-        publishes ``files`` as the version after ``base_version`` (the
-        version the mutation read its state from). A concurrent commit
-        in between raises ConcurrentWriteError with nothing applied.
-        ``txns`` carries the base version's application-transaction
-        map forward (rewrites must never erase stream idempotence
-        state)."""
-        return manifest.commit_exact(path, files, op, base_version,
-                                     txns=txns)
 
     def _managed_files(self, name: str) -> list[str]:
         """Live data files of a managed table — manifest-resolved,
@@ -1370,33 +1405,6 @@ class Engine:
             os.path.realpath(unquote(urlparse(r["__f"]).path)) for r in rows
         )
         return paths, sum(r["__n"] for r in rows)
-
-    def _replace_files(self, name: str, op: str, matched: list[str],
-                       replacement: DataFrame) -> None:
-        """Snapshot, then swap ONLY ``matched`` files for the files of
-        ``replacement`` — every other file stays byte-identical on disk
-        (the time-travel snapshot hardlinks them, no copy). The swap is
-        one atomic manifest rename; superseded files are unlinked only
-        after the commit (their inodes survive in the snapshot)."""
-        t = self._tables[name]
-        self._snapshot(name, op)
-        m = self._adopt_manifest(t.path)
-        new = self._ingest_files(t.path, replacement, m["version"] + 1)
-        base = os.path.realpath(t.path)
-        matched_set = {os.path.realpath(p) for p in matched}
-        kept = [
-            f for f in m["files"]
-            if os.path.join(base, f) not in matched_set
-        ]
-        self._commit_manifest(t.path, kept + new, op,
-                              base_version=m["version"],
-                              txns=m.get("txns"))
-        for p in sorted(matched_set):  # post-commit GC
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-        self._attach_managed(name, t.path)
 
     def adopt_external_files(self, name: str) -> int:
         """Commit any *.parquet files an OUT-OF-BAND writer dropped
@@ -1511,12 +1519,7 @@ class Engine:
         scales with matched files, not table size (the reference's
         DELETE — and this engine's until round 6 — was a full-table
         pass for any predicate; distributed_delete.cpp:27-126)."""
-        t = self._tables[name]
-        if not t.managed:
-            raise ValueError(
-                f"table {name!r} is an external registered table; "
-                "ALTER/DELETE require a managed table"
-            )
+        self._require_managed(name)
         keep = ~F.expr(condition) | F.expr(condition).isNull()
         matched, n_deleted = self._matched_files(name, condition)
         if n_deleted == 0:
@@ -1533,16 +1536,8 @@ class Engine:
                     .select(imeta["id_col"])
                     .localCheckpoint()
                 )))
-        all_files = self._managed_files(name)
-        if set(matched) >= set(all_files):
-            # every file holds matches — a full rewrite IS the minimum
-            # (and keeps the small-table single-file compaction policy)
-            self._rewrite(name, self.table(name).filter(keep), op="delete")
-        else:
-            self._replace_files(
-                name, "delete", matched,
-                self.spark.read.parquet(*matched).filter(keep),
-            )
+        self._rewrite(name, lambda src: src.filter(keep), op="delete",
+                      files=matched)
         for iname, ids in idx_deletes:
             self.vector_index_delete(iname, ids)
         return n_deleted
@@ -1553,41 +1548,33 @@ class Engine:
         pruning as delete_from: only files containing condition-TRUE
         rows are rewritten (non-matching rows in a rewritten file are
         carried through unchanged). Returns rows updated."""
-        t = self._tables[name]
-        if not t.managed:
-            raise ValueError(
-                f"table {name!r} is an external registered table; "
-                "ALTER/UPDATE require a managed table"
-            )
-
-        dtypes = {f.name: f.dataType for f in self.table(name).schema.fields}
+        self._require_managed(name, "UPDATE")
+        target = self.table(name)
+        fields = target.schema.fields
+        unknown = set(set_exprs) - {f.name for f in fields}
+        if unknown:
+            raise ValueError(f"columns {sorted(unknown)} not in {name!r}")
+        cond = F.expr(condition)
 
         def apply(df: DataFrame) -> DataFrame:
-            cond = F.expr(condition)
-            out = df
-            for col, expr in set_exprs.items():
-                # cast back to the column's declared type: with file
-                # pruning a type-widening SET would otherwise change
-                # the schema of ONLY the rewritten files
-                out = out.withColumn(
-                    col,
-                    F.when(cond, F.expr(expr))
-                    .otherwise(F.col(col))
-                    .cast(dtypes[col]),
-                )
-            return out
+            # ONE select: every SET expression and the WHERE see the
+            # row as it was before the update (SQL semantics). Cast
+            # back to the declared type: with file pruning a type-
+            # widening SET would otherwise change the schema of ONLY
+            # the rewritten files.
+            return df.select(*[
+                F.when(cond, F.expr(set_exprs[f.name]))
+                .otherwise(F.col(f.name)).cast(f.dataType).alias(f.name)
+                if f.name in set_exprs else F.col(f.name)
+                for f in fields
+            ])
 
         matched, n_updated = self._matched_files(name, condition)
         if n_updated == 0:
             return 0
-        all_files = self._managed_files(name)
-        if set(matched) >= set(all_files):
-            self._rewrite(name, apply(self.table(name)), op="update")
-            return n_updated
-        self._replace_files(
-            name, "update", matched,
-            apply(self.spark.read.parquet(*matched)),
-        )
+        self._check_constraints(name, apply(target.filter(cond)),
+                                cols=set(set_exprs), after=apply(target))
+        self._rewrite(name, apply, op="update", files=matched)
         return n_updated
 
     def summarize(self, name: str) -> DataFrame:
@@ -1630,6 +1617,7 @@ class Engine:
         #files × #columns rows (metadata-scale at any table size).
         min/max are stringified (heterogeneous types, same convention
         as summarize())."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         t = self._tables.get(name)
@@ -1658,10 +1646,12 @@ class Engine:
                             mins[cname] = st.min
                         if cname not in maxs or st.max > maxs[cname]:
                             maxs[cname] = st.max
-                    except TypeError:
+                    except (TypeError, pa.ArrowNotImplementedError):
                         # mixed physical types across row groups (e.g.
-                        # bytes vs str after a schema change) — zone
-                        # map unavailable rather than a crash
+                        # bytes vs str after a schema change), or
+                        # statistics pyarrow cannot decode (INT64-backed
+                        # DECIMAL(<=18)) — zone map unavailable rather
+                        # than a crash
                         skip.add(cname)
                         mins.pop(cname, None)
                         maxs.pop(cname, None)
@@ -1700,10 +1690,8 @@ class Engine:
             return 0
         total = sum(os.path.getsize(p) for p in small)
         n_out = max(1, (total + target_bytes - 1) // target_bytes)
-        self._replace_files(
-            name, "compact", small,
-            self.spark.read.parquet(*small).repartition(int(n_out)),
-        )
+        self._rewrite(name, lambda src: src.repartition(int(n_out)),
+                      op="compact", files=small, compact=False)
         return len(small)
 
     def optimize_zorder(self, name: str, columns: list[str]) -> None:
@@ -2716,7 +2704,8 @@ class Engine:
             raise ValueError(f"copy_from requires a managed table, got {name!r}")
         target = self.spark.table(name)
         df = read(self.spark, path, fmt=fmt, schema=target.schema, **options)
-        n = df.count()
+        n, = self._check_constraints(name, df, after=target.unionByName(df),
+                                     extra=(F.count(F.lit(1)),))
         self._append_files(name, df, "copy", snapshot=False)
         return n
 
@@ -2826,10 +2815,7 @@ class Engine:
     def restore_version(self, name: str, version: int) -> None:
         """Roll a managed table back to a snapshot (the rollback
         itself is snapshotted first, so it can be undone)."""
-        df = self.table_at_version(name, version)
-        # Materialize via the snapshot files themselves (the read
-        # above is lazy over them; _rewrite will copy into a fresh
-        # live directory).
+        df = self.table_at_version(name, version)  # lazy over the snapshot
         self._rewrite(name, df, op=f"restore v{version}")
 
     def vacuum_history(self, name: str, keep_last: int = 0) -> int:
@@ -2859,10 +2845,8 @@ class Engine:
             raise ValueError("compact_table requires a managed table")
         before = len(self._managed_files(name))
         n = max(1, -(-self._live_bytes(name) // target_file_bytes))
-        self._rewrite(
-            name, self.table(name).repartition(n), op="compact",
-            compact=False,
-        )
+        self._rewrite(name, self.table(name).repartition(n), op="compact",
+                      compact=False)
         return {
             "files_before": before,
             "files_after": len(self._managed_files(name)),
@@ -2929,12 +2913,19 @@ class Engine:
         multiple matches for one target row."""
         target = self.table(name)
         aligned = source.select(*[F.col(c) for c in target.columns])
-        n_src = aligned.count()
+        kept = target.join(aligned.select(*on), on=on, how="left_anti")
+        after = kept.unionByName(aligned)
+        # Source keys are distinct (checked below), so a key holding
+        # every ON column cannot be duplicated by the merge.
+        keyed = all(set(on) <= set(k) for k in self._keys.get(name, []))
+        n_src, = self._check_constraints(
+            name, aligned, after=None if keyed else after,
+            extra=(F.count(F.lit(1)),),
+        )
         if aligned.select(*on).distinct().count() != n_src:
             raise ValueError("merge_upsert: duplicate keys in source")
-        kept = target.join(aligned.select(*on), on=on, how="left_anti")
         n_updated = target.count() - kept.count()
-        self._rewrite(name, kept.unionByName(aligned))
+        self._rewrite(name, after)
         return {"updated": n_updated, "inserted": n_src - n_updated}
 
     def close(self) -> None:

@@ -1,0 +1,127 @@
+"""Declared constraints hold on every write path of a managed table.
+
+Each write op (insert_into, insert_values, update_table, merge_upsert,
+copy_from) is driven into each constraint it can break (NOT NULL,
+CHECK, ENUM, PRIMARY KEY). The write must raise ValueError with the
+constraint's message and leave the table's rows and its version
+history exactly as they were. UPDATE semantics are checked against
+DuckDB, which evaluates every SET expression and the WHERE on the
+row as it was before the update and rejects the same three
+violations.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+DDL = ("id INTEGER PRIMARY KEY, n INTEGER NOT NULL, "
+       "tag ENUM('ok', 'bad'), code INTEGER, CHECK (n >= 0)")
+SCHEMA = "id INT, n INT, tag STRING, code INT"
+ROWS = [(1, 1, "ok", 10), (2, 2, "bad", 20)]
+
+# constraint → (violating new row, UPDATE SET on id = 1, match)
+VIOLATIONS = {
+    "not_null": ((3, None, "ok", 30), {"n": "NULL"}, "NOT NULL"),
+    "check": ((3, -1, "ok", 30), {"n": "n - 5"}, "CHECK"),
+    "enum": ((3, 1, "meh", 30), {"tag": "'meh'"}, "ENUM domain"),
+    "primary_key": ((1, 5, "ok", 30), {"id": "id + 1"}, "duplicate key"),
+}
+
+
+def _write(engine, spark, tmp_path, op, name, row, set_exprs):
+    if op == "insert_into":
+        engine.insert_into(name, spark.createDataFrame([row], SCHEMA))
+    elif op == "insert_values":
+        engine.insert_values(name, [row])
+    elif op == "update_table":
+        engine.update_table(name, set_exprs, "id = 1")
+    elif op == "merge_upsert":
+        if row[0] == 1:
+            # new code, existing id: the merge inserts a second id 1
+            engine.merge_upsert(
+                name, spark.createDataFrame([row], SCHEMA), on=["code"]
+            )
+        else:
+            # updates the existing id 1 row with the violating values
+            engine.merge_upsert(
+                name, spark.createDataFrame([(1, *row[1:])], SCHEMA),
+                on=["id"],
+            )
+    else:
+        path = str(tmp_path / "src.parquet")
+        spark.createDataFrame([row], SCHEMA).write.parquet(path)
+        engine.copy_from(name, path)
+
+
+@pytest.mark.parametrize("constraint", sorted(VIOLATIONS))
+@pytest.mark.parametrize(
+    "op",
+    ["insert_into", "insert_values", "update_table", "merge_upsert",
+     "copy_from"],
+)
+def test_write_rejects_violation(engine, spark, tmp_path, op, constraint):
+    name = f"wc_{op}_{constraint}"
+    engine.create_table(name, DDL)
+    try:
+        engine.insert_values(name, ROWS)
+        history = engine.history(name)
+        row, set_exprs, match = VIOLATIONS[constraint]
+        with pytest.raises(ValueError, match=match):
+            _write(engine, spark, tmp_path, op, name, row, set_exprs)
+        assert engine.history(name) == history
+        assert sorted(map(tuple, engine.table(name).collect())) == ROWS
+    finally:
+        engine.drop_table(name)
+
+
+def test_update_matches_duckdb(engine):
+    """UPDATE reads the pre-update row in every SET expression and in
+    the WHERE, and rejects NOT NULL, CHECK and PRIMARY KEY violations
+    — the same outcomes as DuckDB."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE u (k INTEGER, v INTEGER, w INTEGER)")
+    con.execute("INSERT INTO u VALUES (1, 1, 0), (2, 7, 0)")
+    con.execute("UPDATE u SET v = v * 10, w = v WHERE v < 5")
+    want = con.execute("SELECT * FROM u ORDER BY k").fetchall()
+    assert want == [(1, 10, 1), (2, 7, 0)]
+    engine.create_table("upd_u", "k INTEGER, v INTEGER, w INTEGER")
+    engine.insert_values("upd_u", [(1, 1, 0), (2, 7, 0)])
+    assert engine.update_table("upd_u", {"v": "v * 10", "w": "v"},
+                               "v < 5") == 1
+    assert sorted(map(tuple, engine.table("upd_u").collect())) == want
+    engine.drop_table("upd_u")
+
+    con.execute("CREATE TABLE c (id INTEGER PRIMARY KEY, "
+                "n INTEGER NOT NULL, CHECK (n >= 0))")
+    con.execute("INSERT INTO c VALUES (1, 1), (2, 2)")
+    engine.create_table(
+        "upd_c", "id INTEGER PRIMARY KEY, n INTEGER NOT NULL, CHECK (n >= 0)"
+    )
+    engine.insert_values("upd_c", [(1, 1), (2, 2)])
+    for col, expr, match in (("n", "NULL", "NOT NULL"),
+                             ("n", "n - 5", "CHECK"),
+                             ("id", "2", "duplicate key")):
+        with pytest.raises(duckdb.ConstraintException):
+            con.execute(f"UPDATE c SET {col} = {expr} WHERE id = 1")
+        with pytest.raises(ValueError, match=match):
+            engine.update_table("upd_c", {col: expr}, "id = 1")
+    want = con.execute("SELECT * FROM c ORDER BY id").fetchall()
+    assert sorted(map(tuple, engine.table("upd_c").collect())) == want
+    engine.drop_table("upd_c")
+
+
+def test_table_files_decimal_zone_map(engine):
+    """table_files on a DECIMAL(<=18) column: pyarrow cannot decode the
+    INT64-backed statistics, so that column's zone map is absent and
+    the call still lists every file with the other columns' ranges."""
+    import decimal
+
+    engine.create_table("tf_dec", "id BIGINT, price DECIMAL(12,2)")
+    engine.insert_values("tf_dec", [(1, decimal.Decimal("1.50")),
+                                    (7, decimal.Decimal("9.25"))])
+    rows = engine.table_files("tf_dec").collect()
+    assert {(r.column, r.min_val, r.max_val) for r in rows} >= {("id", "1", "7")}
+    assert {r.n_rows for r in rows} == {2}
+    engine.drop_table("tf_dec")

@@ -1,4 +1,4 @@
-"""Auto-generate the README Spark-vs-DuckDB A/B table — honestly.
+"""Auto-generate the Spark-vs-DuckDB A/B tables — honestly.
 
 Round-4 verdict ("What's wrong" #1): the r4 README table was built
 from a best-ever unloaded-machine Spark JSON paired with a DuckDB run
@@ -8,22 +8,32 @@ same-session measurement said ~2.1x. This builder now refuses that:
 - both JSONs must carry the session stamp bench.py/bench_duckdb.py
   emit (``ts`` wall-clock + ``boot_id``), come from the SAME boot,
   and lie within 30 minutes of each other;
-- the recommended mode is ``--sessions N`` (default 3 when writing
-  the README): run ``bench.py`` and ``tools/bench_duckdb.py``
+- the recommended mode is ``--sessions N`` (3 when publishing):
+  run ``bench.py`` and ``tools/bench_duckdb.py``
   back-to-back N times and publish per-query MEDIANS across
   sessions — the reproducible number, not the minimum.
 
-    python tools/ab_table.py --sessions 3 --write-readme
+    python tools/ab_table.py --sessions 3 --write
     python tools/ab_table.py [--bench BENCH_r05.json] [--duckdb d.json]
+    python tools/ab_table.py --check
 
 With explicit files the stamp check still applies
 (``--allow-mismatched-sessions`` overrides, loudly, for forensics on
 historical JSONs that predate the stamp).
+
+Tables are published in ``ab_tables/``, one file per (date, host),
+never in README.md. Each file carries a ``Host: cpus=N boot=<id>``
+line. ``--check`` applies the staleness rule — a table must be
+generated after the last commit touching any module its queries'
+plans are built from — only to tables stamped with the host it runs
+on: a table from another host (or an earlier boot) cannot be
+regenerated here and is history, not a current claim.
 """
 
 from __future__ import annotations
 
 import argparse
+import ast
 import datetime
 import glob
 import json
@@ -34,6 +44,17 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "duckdb_distributed_execution_spark"
+ARCHIVE = os.path.join(ROOT, "ab_tables")
+
+BLOCK_RE = re.compile(
+    r"<!-- AB_TABLE(?P<tag>[A-Z0-9_]*):BEGIN[^>]*-->(?P<body>.*?)"
+    r"<!-- AB_TABLE(?P=tag):END -->",
+    re.S,
+)
+_STAMP_RE = re.compile(r"^Source: .*?(\d{4}-\d{2}-\d{2} \d{2}:\d{2})Z", re.M)
+_ROW_RE = re.compile(r"^\| ([a-z][a-z0-9_]+) \|", re.M)
+_HOST_RE = re.compile(r"^Host: cpus=(\d+) boot=(\S+)", re.M)
 
 def mark_begin(tag: str) -> str:
     return f"<!-- AB_TABLE{tag}:BEGIN (generated by tools/ab_table.py) -->"
@@ -47,6 +68,154 @@ MARK_BEGIN = mark_begin("")
 MARK_END = mark_end("")
 
 MAX_SKEW_SECONDS = 1800
+
+
+def current_host() -> tuple[int, str]:
+    """(cpus, boot id) of this host: the cores this process may use and
+    the kernel's per-boot id. A table stamped with another pair was
+    measured elsewhere or before a reboot."""
+    with open("/proc/sys/kernel/random/boot_id") as f:
+        return len(os.sched_getaffinity(0)), f.read().strip()
+
+
+def read_blocks(text: str) -> list[tuple[str, datetime.datetime, list[str]]]:
+    """(tag, generation time, query names) of every AB_TABLE block in
+    ``text``. The time is the block's minute-resolution UTC ``Source:``
+    stamp."""
+    blocks = []
+    for mm in BLOCK_RE.finditer(text):
+        body, tag = mm.group("body"), f"AB_TABLE{mm.group('tag')}"
+        stamp = _STAMP_RE.search(body)
+        if not stamp:
+            raise ValueError(f"{tag} block has no Source stamp")
+        ts = datetime.datetime.strptime(
+            stamp.group(1), "%Y-%m-%d %H:%M"
+        ).replace(tzinfo=datetime.timezone.utc)
+        queries = _ROW_RE.findall(body)
+        if not queries:
+            raise ValueError(f"{tag} block has no query rows")
+        blocks.append((tag, ts, queries))
+    return blocks
+
+
+def read_archive() -> list[tuple[str, tuple[int, str] | None, str]]:
+    """(path, host stamp or None, text) of every file in ab_tables/."""
+    out = []
+    for path in sorted(glob.glob(os.path.join(ARCHIVE, "*.md"))):
+        with open(path) as f:
+            text = f.read()
+        m = _HOST_RE.search(text)
+        out.append((path, (int(m.group(1)), m.group(2)) if m else None,
+                    text))
+    return out
+
+
+def _module_file(modname: str) -> str | None:
+    rel = modname.replace(".", "/")
+    for cand in (f"{rel}.py", f"{rel}/__init__.py"):
+        p = os.path.join(ROOT, cand)
+        if os.path.exists(p):
+            return p
+    return None
+
+
+def _package_imports(path: str) -> set[str]:
+    """In-package modules imported anywhere in ``path`` (incl. inside
+    function bodies — several queries import their operator lazily)."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    mods: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module:
+            if node.module.startswith(PKG):
+                mods.add(node.module)
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.startswith(PKG):
+                    mods.add(alias.name)
+    return mods
+
+
+def query_files(names: list[str]) -> set[str]:
+    """The files a table's query plans are built from: each query's
+    defining module plus every in-package module it imports."""
+    if ROOT not in sys.path:
+        sys.path.insert(0, ROOT)
+    from duckdb_distributed_execution_spark.queries import all_queries
+
+    specs = all_queries()
+    files: set[str] = set()
+    for n in names:
+        spec = specs.get(n)
+        if spec is None:  # renamed/retired query: the regen will drop it
+            continue
+        f = _module_file(spec.fn.__module__)
+        if f is None:
+            continue
+        files.add(f)
+        for dep in _package_imports(f):
+            df = _module_file(dep)
+            if df:
+                files.add(df)
+    return files
+
+
+def last_commit_utc(files: set[str]) -> tuple[datetime.datetime | None, str]:
+    """COMMITTER time and subject of the newest commit touching
+    ``files`` (None when git history is unavailable)."""
+    out = subprocess.run(
+        ["git", "log", "-1", "--format=%ct %h %s", "--"]
+        + sorted(os.path.relpath(f, ROOT) for f in files),
+        cwd=ROOT, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    if not out:
+        return None, ""
+    ct, rest = out.split(" ", 1)
+    return (
+        datetime.datetime.fromtimestamp(int(ct), tz=datetime.timezone.utc),
+        rest,
+    )
+
+
+def staleness(tag: str, stamp: datetime.datetime,
+              queries: list[str]) -> str | None:
+    """Why the table is stale, or None. A one-minute grace absorbs the
+    stamp's minute truncation."""
+    files = query_files(queries)
+    if not files:
+        return f"{tag}: could not resolve any query modules"
+    last, desc = last_commit_utc(files)
+    if last is None or last <= stamp + datetime.timedelta(minutes=1):
+        return None
+    return (
+        f"{tag} (generated {stamp:%Y-%m-%d %H:%M}Z) is STALE: commit "
+        f"[{desc}] at {last:%Y-%m-%d %H:%M}Z touches its queries' "
+        f"modules. Regenerate with tools/ab_table.py before publishing."
+    )
+
+
+def check() -> list[str]:
+    """Every problem with the published tables: an AB_TABLE block in
+    README.md, an archive file without a host stamp, or a stale table
+    stamped with this host."""
+    problems = []
+    with open(os.path.join(ROOT, "README.md")) as f:
+        if BLOCK_RE.search(f.read()):
+            problems.append("README.md holds an AB_TABLE block; tables "
+                            "belong in ab_tables/")
+    here = current_host()
+    for path, host, text in read_archive():
+        if host is None:
+            problems.append(f"{os.path.relpath(path, ROOT)} has no "
+                            "'Host: cpus=N boot=<id>' stamp")
+        elif host == here:
+            try:
+                blocks = read_blocks(text)
+            except ValueError as exc:
+                problems.append(f"{os.path.relpath(path, ROOT)}: {exc}")
+                continue
+            problems += filter(None, (staleness(*b) for b in blocks))
+    return problems
 
 
 def latest_bench() -> str:
@@ -196,7 +365,13 @@ def main() -> None:
     ap.add_argument("--allow-mismatched-sessions", action="store_true",
                     help="build anyway from stampless/mismatched JSONs, "
                          "with a loud warning (forensics only)")
-    ap.add_argument("--write-readme", action="store_true")
+    ap.add_argument("--write", action="store_true",
+                    help="publish the table in this host's dated file "
+                         "under ab_tables/")
+    ap.add_argument("--check", action="store_true",
+                    help="exit 1 if README.md holds a table, an archive "
+                         "file lacks a host stamp, or a table stamped "
+                         "with this host is stale")
     ap.add_argument("--sf-dir", default=None,
                     help="data directory for --sessions runs "
                          "(default: bench.py's own default sf0.1)")
@@ -204,10 +379,16 @@ def main() -> None:
                     help="comma-separated registry names for --sessions "
                          "runs (default: the headline set)")
     ap.add_argument("--tag", default="",
-                    help="README marker suffix — e.g. _SF1_FAMILIES "
+                    help="marker suffix — e.g. _SF1_FAMILIES "
                          "writes a separate AB_TABLE_SF1_FAMILIES "
-                         "section instead of replacing the main table")
+                         "block instead of replacing the main table")
     args = ap.parse_args()
+
+    if args.check:
+        problems = check()
+        for p in problems:
+            print(p, file=sys.stderr)
+        sys.exit(1 if problems else 0)
 
     if args.sessions:
         spark, duck, prov = run_sessions(
@@ -230,31 +411,38 @@ def main() -> None:
             )
             duck_src = "fresh tools/bench_duckdb.py run"
         check_same_session(spark, duck, args.allow_mismatched_sessions)
-        source = f"Source: `{os.path.basename(bench_path)}` + {duck_src}."
+        when = datetime.datetime.fromtimestamp(
+            spark.get("ts", 0), tz=datetime.timezone.utc
+        ).strftime("%Y-%m-%d %H:%MZ")
+        source = (f"Source: `{os.path.basename(bench_path)}` + {duck_src}"
+                  f", {when}.")
 
     mb, me = mark_begin(args.tag), mark_end(args.tag)
     table = f"{mb}\n{source}\n\n{build_table(spark, duck)}\n{me}"
     print(table)
-    if args.write_readme:
-        rp = os.path.join(ROOT, "README.md")
-        with open(rp) as f:
-            txt = f.read()
+    if args.write:
+        host = current_host()
+        day = datetime.datetime.now(datetime.timezone.utc).strftime("%Y-%m-%d")
+        path = os.path.join(
+            ARCHIVE, f"{day}_{host[0]}cpu_{host[1][:8]}.md"
+        )
+        if os.path.exists(path):
+            with open(path) as f:
+                txt = f.read()
+        else:
+            txt = (f"# Spark vs DuckDB A/B tables, {day}\n\n"
+                   f"Host: cpus={host[0]} boot={host[1]}\n")
         pat = re.compile(
             re.escape(mb) + r".*?" + re.escape(me), re.DOTALL
         )
         if pat.search(txt):
-            txt = pat.sub(table, txt)
+            txt = pat.sub(lambda _: table, txt)
         else:
-            title = (
-                "## Spark vs DuckDB A/B (auto-generated)"
-                if not args.tag
-                else f"## Spark vs DuckDB A/B — {args.tag.strip('_')}"
-                " (auto-generated)"
-            )
-            txt += f"\n\n{title}\n\n" + table + "\n"
-        with open(rp, "w") as f:
+            txt += "\n" + table + "\n"
+        os.makedirs(ARCHIVE, exist_ok=True)
+        with open(path, "w") as f:
             f.write(txt)
-        print(f"\nREADME.md updated ({rp})", file=sys.stderr)
+        print(f"\n{os.path.relpath(path, ROOT)} updated", file=sys.stderr)
 
 
 if __name__ == "__main__":
