@@ -35,10 +35,12 @@ from pyspark.sql import types as T
 # session accumulates cached relations (guide §5: unpersist when
 # done; bench.py and the plan-pin tests clearCache around them, but a
 # real Engine session has no such sweep). Every such persist registers
-# here — weak-keyed by the session object so a dropped session frees
-# its entries — and Engine.release_operator_caches() unpersists them
-# without touching user-managed caches (cache_table / persist calls
-# outside the operators).
+# here and Engine.release_operator_caches() unpersists them without
+# touching user-managed caches (cache_table / persist calls outside
+# the operators). Weak-keyed by the session object so a dropped
+# session frees its entries; the values are the JVM Dataset handles
+# (``df._jdf``), not the Python DataFrames, because a DataFrame holds
+# its session and would keep the weak key alive forever.
 _TRACKED_PERSISTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
@@ -46,25 +48,27 @@ def persist_tracked(df, level=None):
     """``df.persist(level)`` + registration for facade-level release.
     ``level=None`` keeps pyspark's own default storage level."""
     df = df.persist() if level is None else df.persist(level)
-    _TRACKED_PERSISTS.setdefault(df.sparkSession, []).append(df)
+    _TRACKED_PERSISTS.setdefault(df.sparkSession, []).append(df._jdf)
     return df
 
 
 def release_operator_persists(spark) -> int:
     """Unpersist every operator-internal tracked persist on this
-    session (blocking=False — async block drop, like unpersist()'s
-    default). Returns the number of relations released."""
-    dfs = _TRACKED_PERSISTS.pop(spark, [])
-    for df in dfs:
-        df.unpersist()
-    return len(dfs)
+    session (blocking=False — async block drop, as
+    ``DataFrame.unpersist()`` does by default). Returns the number of
+    relations released."""
+    jdfs = _TRACKED_PERSISTS.pop(spark, [])
+    for jdf in jdfs:
+        jdf.unpersist(False)
+    return len(jdfs)
 
 
 # Defensive ceiling for the size-gated fused single-task kernels
 # (guide §1.2). Every query site routes to a fused kernel only below
-# a ~4 MB table_bytes gate (≲50k rows in this repo's corpora), but the
-# operators themselves must defend: an ungated future caller passing a
-# large relation would otherwise get a silent one-task death march.
+# the queries.small_table gate (4 MiB, ≲50k rows in this repo's
+# corpora), but the operators themselves must defend: an ungated
+# future caller passing a large relation would otherwise get a silent
+# one-task death march.
 # Counted at RUNTIME inside the kernel (driver-side Catalyst estimates
 # are unknown for mid-pipeline relations), ~40× above any gated input
 # so it can only fire on misuse.

@@ -714,7 +714,7 @@ def minhash_lsh_pairs(
     # ``fuse`` (r9): callers below the corpus-size gate route the
     # ENTIRE pipeline through the single-task kernel (guide §1.2 —
     # at toy scale the distributed plan is ~10 stages of fixed cost;
-    # the queries gate on table_bytes like every fused kernel here).
+    # the queries gate on small_table like every fused kernel here).
     # Only the fixed shingle chains have a Python twin, so a custom
     # ``shingles`` Column keeps the distributed form.
     if fuse and shingles is None:

@@ -134,7 +134,7 @@ def connected_components(
 
     ``fused=True`` (r9) routes through connected_components_fused —
     the single-task union-find twin callers gate in below a corpus
-    scale threshold (queries pass table_bytes-derived hints; the
+    scale threshold (queries pass queries.small_table; the
     iterative loop stays the default and the only path above the
     gate). The fused path does not touch last_round_count."""
     global last_round_count

@@ -348,8 +348,8 @@ def kcenter_greedy_fused(
     same in both forms), the same ⌊d²·quant+.5⌋ int64 quantization
     BEFORE the fold, the same elementwise least across rounds, the
     same (max dq, then min id) pick, and the same min-id first pick.
-    Callers gate on corpus file size (table_bytes ≤ 4 MB, the repo's
-    standard stats stand-in); above the gate the distributed loop —
+    Callers gate on corpus file size (queries.small_table, the repo's
+    one scale gate); above the gate the distributed loop —
     whose per-round scan parallelizes — is untouched."""
     import numpy as np
     import pandas as pd

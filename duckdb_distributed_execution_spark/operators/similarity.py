@@ -817,7 +817,7 @@ def cosine_banded_pairs_fused(
     the JVM zip_with (elementwise casts and +/* are deterministic, so
     the planted vectors are bit-identical).
 
-    Callers gate on corpus file size (table_bytes), the identical
+    Callers gate on corpus file size (queries.small_table), the one
     fixed-cost-vs-slope gate every Arrow kernel here uses; above the
     gate the distributed form's bucketed self-join + broadcast verify
     is the designed scale shape."""

@@ -21,7 +21,12 @@ from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators import text as X
-from duckdb_distributed_execution_spark.queries import arr_str, load, register
+from duckdb_distributed_execution_spark.queries import (
+    arr_str,
+    load,
+    register,
+    small_table,
+)
 
 # ---------------------------------------------------------------------------
 # URL parsing / per-domain corpus stats
@@ -215,10 +220,8 @@ def tokens_per_lang_topk(spark, sf_dir):
       (lang, term)-keyed shuffle is the skew-safe shape.
 
     Either way the window input is |vocab per lang|, not |tokens|."""
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
     d = load(spark, sf_dir, "documents")["documents"]
-    if table_bytes(sf_dir, "documents") > 4 * 1024 * 1024:
+    if not small_table(sf_dir, "documents"):
         freq = (
             X.grouped_token_counts_arrow(d, "lang")
             .groupBy("lang", "term")
@@ -358,7 +361,6 @@ def semantic_dedup_seeded(spark, sf_dir):
         cosine_pairs_blocked_numpy,
         semantic_dedup_pairs_fused,
     )
-    from duckdb_distributed_execution_spark.queries import table_bytes
 
     e = load(spark, sf_dir, "embeddings")["embeddings"]
     # Gate measured same-session: sf0.1 fused 0.22 s vs 0.53 s / 3
@@ -366,7 +368,7 @@ def semantic_dedup_seeded(spark, sf_dir):
     # gate stays below sf1 so the cluster-parallel applyInPandas
     # keeps the scale decades (sf1/sf10 A/B rows) on the designed
     # IVF-blocked shape.
-    if table_bytes(sf_dir, "embeddings") <= 4 * 1024 * 1024:
+    if small_table(sf_dir, "embeddings"):
         return semantic_dedup_pairs_fused(
             e, id_col="vec_id", vec_col="embedding", k_seeds=8,
             threshold=0.3, assign_round=6,

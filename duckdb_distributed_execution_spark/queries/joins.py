@@ -24,6 +24,8 @@ from duckdb_distributed_execution_spark.queries import (
     SHUFFLE_HASH_GATE_BYTES,
     load,
     register,
+    small_table,
+    table_bytes,
 )
 
 
@@ -238,21 +240,18 @@ def join_multi_star(spark, sf_dir):
     0.89 s — AQE's runtime join choice beats the forced shuffle-hash
     until the fact sorts dominate. At sf0.1 (2.7 MB) the rewrite is
     pure fixed cost (0.49 s simple vs 0.76 s rewritten, r9) — so:
-    ≤8 MB simple; >8 MB agg-below-join + snowflake prefilter; the
-    SHUFFLE_HASH pin only beyond 64 MB (sf10+: 3.71 → 1.94 s, r9),
-    where the build side is far beyond any broadcast budget and
-    sort-merge sorts are the next term. File size stands in for
-    catalog stats, as everywhere in this repo."""
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
+    small orders (small_table) simple; otherwise agg-below-join +
+    snowflake prefilter; the SHUFFLE_HASH pin only beyond
+    SHUFFLE_HASH_GATE_BYTES (64 MB; sf10+: 3.71 → 1.94 s, r9), where
+    the build side is far beyond any broadcast budget and sort-merge
+    sorts are the next term."""
     t = load(spark, sf_dir, "customer", "orders", "lineitem", "nation", "region")
     rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     region = t["region"].filter(F.col("r_name").isin("AMERICA", "ASIA"))
     orders_dated = t["orders"].filter(
         F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp")
     )
-    ob = table_bytes(sf_dir, "orders")
-    if ob <= 8 * 1024 * 1024:
+    if small_table(sf_dir, "orders"):
         return (
             orders_dated
             .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
@@ -267,7 +266,8 @@ def join_multi_star(spark, sf_dir):
                  exact_sum(rev).alias("revenue"))
         )
     return join_multi_star_scale_plan(
-        spark, sf_dir, shuffle_hash=ob > SHUFFLE_HASH_GATE_BYTES
+        spark, sf_dir,
+        shuffle_hash=table_bytes(sf_dir, "orders") > SHUFFLE_HASH_GATE_BYTES,
     )
 
 

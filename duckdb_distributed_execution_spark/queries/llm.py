@@ -14,7 +14,7 @@ from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators.graph import oracle_pagerank_sql
 from duckdb_distributed_execution_spark.operators import multimodal as M
 from duckdb_distributed_execution_spark.operators import text as X
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 
 
 @register(
@@ -30,24 +30,13 @@ from duckdb_distributed_execution_spark.queries import load, register
 )
 def dedup_exact(spark, sf_dir):
     """Exact dedup groups on the normalized-text fingerprint — one
-    hash shuffle, map-side combined. Above a metadata-cheap input-size
-    gate the fingerprint runs as one Arrow-batched normalize+md5 pass
-    (fingerprint_kv_arrow — byte-identical; Java's interpreted regex
+    hash shuffle, map-side combined. Above the scale gate
+    (small_table) the fingerprint runs as one Arrow-batched
+    normalize+md5 pass (fingerprint_kv_arrow — byte-identical; Java's interpreted regex
     chain measured 2.17 → 1.15 s at organic sf1); below it the JVM
     column form wins (Python-worker fixed cost dominates toy scale)."""
-    import os as _os
-
     d = load(spark, sf_dir, "documents")["documents"]
-    p = _os.path.join(sf_dir, "documents.parquet")
-    nbytes = (
-        sum(
-            _os.path.getsize(_os.path.join(r, f))
-            for r, _, fs in _os.walk(p) for f in fs
-        )
-        if _os.path.isdir(p)
-        else (_os.path.getsize(p) if _os.path.exists(p) else 0)
-    )
-    if nbytes > 2 * 1024 * 1024:
+    if not small_table(sf_dir, "documents"):
         kv = X.fingerprint_kv_arrow(d, "doc_id", "text")
         return kv.groupBy("dedup_key").agg(
             F.min("doc_id").alias("keep_id"),
@@ -150,13 +139,11 @@ def dedup_minhash_lsh(spark, sf_dir):
     the corpus-size gate the post-signature pipeline fuses into one
     numpy task (r9, minhash_lsh_pairs_fused — bit-identical, pinned
     by test + selfcheck); above it the designed distributed shape."""
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
     d = load(spark, sf_dir, "documents")["documents"]
     pairs = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         verify_threshold=0.12,
-        fuse=table_bytes(sf_dir, "documents") <= 4 * 1024 * 1024,
+        fuse=small_table(sf_dir, "documents"),
     )
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
@@ -417,10 +404,9 @@ def text_quality(spark, sf_dir):
     from duckdb_distributed_execution_spark.functions import (
         ensure_min_parallelism,
     )
-    from duckdb_distributed_execution_spark.queries import table_bytes
 
     d = load(spark, sf_dir, "documents")["documents"]
-    if table_bytes(sf_dir, "documents") > 2 * 1024 * 1024:
+    if not small_table(sf_dir, "documents"):
         feats = X.doc_features_arrow(
             d, "doc_id", "text", emit_stopwords=True
         )
@@ -648,17 +634,6 @@ def _cc_edges(spark, sf_dir):
     return D.simhash_pairs(d, "doc_id", "text", max_hamming=3, block_col="lang")
 
 
-def _cc_fused(sf_dir):
-    """Scale gate for the single-task union-find CC twin (r9): below
-    it the alternating-star loop is ~15 jobs of pure fixed cost
-    (measured 5-16 s at sf0.1 for a 3-round graph); above it the
-    iterative loop is the designed shape. Same table_bytes stats
-    stand-in as every other gate."""
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
-    return table_bytes(sf_dir, "documents") <= 4 * 1024 * 1024
-
-
 @register(
     "dedup_connected_components",
     oracle="WITH RECURSIVE "
@@ -673,7 +648,7 @@ def dedup_connected_components(spark, sf_dir):
     from duckdb_distributed_execution_spark.operators import graph as G
 
     cc = G.connected_components(
-        _cc_edges(spark, sf_dir), fused=_cc_fused(sf_dir)
+        _cc_edges(spark, sf_dir), fused=small_table(sf_dir, "documents")
     )
     return cc.select(F.col("node").alias("doc_id"), F.col("comp").alias("component"))
 
@@ -692,7 +667,9 @@ def dedup_cluster_keep_one(spark, sf_dir):
     size — the row set a pipeline anti-joins against to drop dups."""
     from duckdb_distributed_execution_spark.operators import graph as G
 
-    return G.dedup_clusters(_cc_edges(spark, sf_dir), fused=_cc_fused(sf_dir))
+    return G.dedup_clusters(
+        _cc_edges(spark, sf_dir), fused=small_table(sf_dir, "documents")
+    )
 
 
 @register(
@@ -724,7 +701,7 @@ def dedup_cluster_keep_best(spark, sf_dir):
 
     d = load(spark, sf_dir, "documents")["documents"]
     cc = G.connected_components(
-        _cc_edges(spark, sf_dir), fused=_cc_fused(sf_dir)
+        _cc_edges(spark, sf_dir), fused=small_table(sf_dir, "documents")
     )
     q = d.select("doc_id", X.hashed_logit("text").alias("logit"))
     joined = cc.join(q, cc["node"] == q["doc_id"]).select(

@@ -26,7 +26,7 @@ from duckdb_distributed_execution_spark.operators.similarity import (
     oracle_planted_corpus_sql,
     plant_near_dups,
 )
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 
 # --- Banded-LSH configuration (round-4 retune) -----------------------------
 #
@@ -56,16 +56,6 @@ from duckdb_distributed_execution_spark.queries import load, register
 
 _EVERY, _SHIFT, _THRESH = 7, 0.4, 0.8
 _N_TABLES, _BAND_BITS = 16, 12
-
-# Corpus-size gate for the fused single-task kernel (r9): below this
-# the distributed plan is pure fixed cost (6 jobs at sf0.1 for a
-# ~2k-row corpus; measured same-session 0.96 → 0.27 s fused); above
-# it the single task loses to the bucketed self-join + broadcast
-# verify (sf1, 5.9 MB / 20k rows: fused 4.2 s vs distributed 2.1 s —
-# the per-bucket pair work parallelizes, the kernel serializes it).
-# File size stands in for catalog stats, the same convention as every
-# other Arrow-kernel gate in this repo.
-_FUSED_GATE_BYTES = 4 * 1024 * 1024
 
 _PLANTED_BODY = oracle_planted_corpus_sql(
     every=_EVERY, shift_scale=_SHIFT,
@@ -135,9 +125,13 @@ def dedup_embedding_cosine_banded(spark, sf_dir):
     from duckdb_distributed_execution_spark.operators.similarity import (
         cosine_banded_pairs_fused,
     )
-    from duckdb_distributed_execution_spark.queries import table_bytes
 
-    if table_bytes(sf_dir, "embeddings") <= _FUSED_GATE_BYTES:
+    # Measured same-session: at sf0.1 (~2k rows) the distributed plan
+    # is 6 jobs of pure fixed cost (0.96 → 0.27 s fused); at sf1
+    # (20k rows) the single task loses to the bucketed self-join +
+    # broadcast verify (fused 4.2 s vs distributed 2.1 s — the
+    # per-bucket pair work parallelizes, the kernel serializes it).
+    if small_table(sf_dir, "embeddings"):
         e = load(spark, sf_dir, "embeddings")["embeddings"]
         return cosine_banded_pairs_fused(
             e, "vec_id", "embedding", "label",

@@ -23,7 +23,7 @@ from duckdb_distributed_execution_spark.operators.text import (
     token_count,
     tokens,
 )
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 
 _CAP = 128  # context-window size in tokens for the packing queries
 
@@ -604,13 +604,11 @@ def minhash_lsh_selectivity(spark, sf_dir):
     break both this hash and the pytest gate."""
     from duckdb_distributed_execution_spark.operators import dedup as D
 
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
     d = load(spark, sf_dir, "documents")["documents"]
     cand = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         candidates_only=True,
-        fuse=table_bytes(sf_dir, "documents") <= 4 * 1024 * 1024,
+        fuse=small_table(sf_dir, "documents"),
     )
     # Tagged UNION + pivot agg instead of a 1-row scalar cross join
     # (same pattern as embedding_banded_selectivity).

@@ -22,7 +22,7 @@ from duckdb_distributed_execution_spark.functions import (
     oracle_exact_sum,
 )
 from duckdb_distributed_execution_spark.operators import dedup as D
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 
 # ---------------------------------------------------------------------------
 # CUSUM changepoint over daily event volume
@@ -275,13 +275,11 @@ def dedup_threshold_curve(spark, sf_dir):
     thresholds cost the same as one. Jaccard values are exact
     rationals (integer set sizes divided once), so θ comparisons are
     engine-identical without rounding."""
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
     d = load(spark, sf_dir, "documents")["documents"]
     pairs = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         verify_threshold=min(_CURVE_THRESHOLDS),
-        fuse=table_bytes(sf_dir, "documents") <= 4 * 1024 * 1024,
+        fuse=small_table(sf_dir, "documents"),
     )
     th = F.array(*[F.lit(float(t)) for t in _CURVE_THRESHOLDS])
     swept = pairs.select(

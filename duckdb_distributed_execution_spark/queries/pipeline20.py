@@ -21,7 +21,7 @@ from duckdb_distributed_execution_spark.functions import (
 )
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators.text import tokens
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 
 # ---------------------------------------------------------------------------
 # Theil–Sen robust trend over daily event volume
@@ -147,13 +147,11 @@ def dedup_cross_source_matrix(spark, sf_dir):
     two broadcast-able hash joins of |pairs| rows, and the rollup key
     space is |sources|². Mean Jaccard uses the exact-decimal rounded
     convention."""
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
     d = load(spark, sf_dir, "documents")["documents"]
     pairs = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         verify_threshold=0.12,
-        fuse=table_bytes(sf_dir, "documents") <= 4 * 1024 * 1024,
+        fuse=small_table(sf_dir, "documents"),
     )
     src = d.select("doc_id", "source")
     joined = (

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators import dedup as D
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 from duckdb_distributed_execution_spark.queries.llm import _CC_EDGES_ORACLE
 
 # ---------------------------------------------------------------------------
@@ -53,10 +53,7 @@ def dup_cluster_size_histogram(spark, sf_dir):
     after runs on the |components| aggregate; the singleton count is
     a tagged-union combine of two 1-row aggregates."""
     from duckdb_distributed_execution_spark.operators import graph as G
-    from duckdb_distributed_execution_spark.queries.llm import (
-        _cc_edges,
-        _cc_fused,
-    )
+    from duckdb_distributed_execution_spark.queries.llm import _cc_edges
 
     # cc feeds BOTH the size histogram and the paired-node count; a
     # localCheckpoint stops the second consumer from re-running the
@@ -64,7 +61,7 @@ def dup_cluster_size_histogram(spark, sf_dir):
     # internal checkpoint, unlike the iterative loop whose per-round
     # checkpoints made recomputation cheap by accident).
     cc = G.connected_components(
-        _cc_edges(spark, sf_dir), fused=_cc_fused(sf_dir)
+        _cc_edges(spark, sf_dir), fused=small_table(sf_dir, "documents")
     ).localCheckpoint()
     sizes = cc.groupBy("comp").agg(F.count(F.lit(1)).alias("sz"))
     hist = sizes.groupBy(F.col("sz").alias("cluster_size")).agg(

@@ -19,7 +19,7 @@ from __future__ import annotations
 from duckdb_distributed_execution_spark.operators.linalg import (
     kcenter_greedy,
 )
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 
 _K = 6
 
@@ -80,11 +80,9 @@ def coreset_kcenter_greedy(spark, sf_dir):
     operators/linalg.py::kcenter_greedy — it is vanishingly unlikely,
     not impossible."""
     e = load(spark, sf_dir, "embeddings")["embeddings"]
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
-    # r9 size gate: below 4 MB the whole greedy loop runs in one task
-    # (15 fixed-cost jobs → 1); above, the distributed per-round scan.
-    if table_bytes(sf_dir, "embeddings") <= 4 * 1024 * 1024:
+    # r9 scale gate: on a small table the whole greedy loop runs in one
+    # task (15 fixed-cost jobs → 1); above, the distributed per-round scan.
+    if small_table(sf_dir, "embeddings"):
         from duckdb_distributed_execution_spark.operators.linalg import (
             kcenter_greedy_fused,
         )

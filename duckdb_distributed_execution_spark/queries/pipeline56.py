@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators import graph as G
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 from duckdb_distributed_execution_spark.queries.llm import (
     _CC_EDGES_ORACLE,
     _SIMHASH_UND_ORACLE,
@@ -143,9 +143,9 @@ def cluster_safe_split(spark, sf_dir):
     d = load(spark, sf_dir, "documents")["documents"]
     edges = _cc_edges(spark, sf_dir).select("id_a", "id_b")
     edges = edges.localCheckpoint()  # feeds CC and the leak count
-    from duckdb_distributed_execution_spark.queries.llm import _cc_fused
-
-    cc = G.connected_components(edges, fused=_cc_fused(sf_dir)).select(
+    cc = G.connected_components(
+        edges, fused=small_table(sf_dir, "documents")
+    ).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
     )
     comp = d.select("doc_id").join(cc, "doc_id", "left").select(

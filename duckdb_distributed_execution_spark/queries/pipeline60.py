@@ -27,7 +27,7 @@ from duckdb_distributed_execution_spark.operators.bpe import (
     bpe_apply_expr,
     oracle_bpe_apply,
 )
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 from duckdb_distributed_execution_spark.queries.pipeline42 import BPE_MERGES
 
 _N = 3         # token-gram width (wave-57 convention)
@@ -83,8 +83,6 @@ def dedup_minhash_token_lsh(spark, sf_dir):
     pipeline fuses into one numpy task (minhash_lsh_pairs_fused —
     length-prefilter + searchsorted verify; 6.0 → 1.7 s at sf0.1
     same-session, bit-identical pairs)."""
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
     d = load(spark, sf_dir, "documents")["documents"]
     pairs = D.minhash_lsh_pairs(
         d,
@@ -94,7 +92,7 @@ def dedup_minhash_token_lsh(spark, sf_dir):
         band_size=2,
         verify_threshold=_THRESH,
         shingle_fn=token_shingles_py(BPE_MERGES, _N, _SEP),
-        fuse=table_bytes(sf_dir, "documents") <= 4 * 1024 * 1024,
+        fuse=small_table(sf_dir, "documents"),
     )
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 

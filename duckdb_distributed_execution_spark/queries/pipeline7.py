@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators import text as X
-from duckdb_distributed_execution_spark.queries import load, register
+from duckdb_distributed_execution_spark.queries import load, register, small_table
 
 # ---------------------------------------------------------------------------
 # Window frame EXCLUDE CURRENT ROW (DuckDB-native; Spark emulation)
@@ -311,12 +311,10 @@ def minhash_candidate_recall(spark, sf_dir):
         blocked, "doc_id", "text", n=2, threshold=_RECALL_T,
         block_col="__blk",
     ).select("id_a", "id_b")
-    from duckdb_distributed_execution_spark.queries import table_bytes
-
     cand = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         verify_threshold=0.0,
-        fuse=table_bytes(sf_dir, "documents") <= 4 * 1024 * 1024,
+        fuse=small_table(sf_dir, "documents"),
     ).select("id_a", "id_b")
     hits = truth.join(cand, on=["id_a", "id_b"], how="left_semi")
     return (

@@ -24,7 +24,7 @@ from duckdb_distributed_execution_spark.functions import (
 from duckdb_distributed_execution_spark.queries import (
     load,
     register,
-    shuffle_hash_if_big,
+    small_table,
 )
 
 
@@ -1066,7 +1066,7 @@ def tpch_q9_partsupp(spark, sf_dir):
         .join(F.broadcast(t["nation"]),
               F.col("n_nationkey") == F.col("s_nationkey"))
     )
-    # r10: the hint gate drops from 64 MB to 8 MB of orders — at sf1
+    # r10: SHUFFLE_HASH exactly when orders is not small — at sf1
     # (25.7 MB) the projected orders side exceeds the broadcast budget
     # so AQE falls back to sort-merge, and the sort-free shuffled hash
     # build on the red-filtered (~1/8) lineitem side wins 1.9×
@@ -1074,9 +1074,10 @@ def tpch_q9_partsupp(spark, sf_dir):
     # 1.99 s, worse — the profit rows are 1-per-line already). At
     # sf0.1 (2.7 MB) AQE broadcasts and the forced shuffle loses (r9),
     # so the gate keeps the hint off there.
+    if not small_table(sf_dir, "orders"):
+        li = li.hint("shuffle_hash")
     return (
-        shuffle_hash_if_big(li, sf_dir, "orders", threshold=8 * 1024 * 1024)
-        .join(
+        li.join(
             t["orders"].select("o_orderkey", "o_orderdate"),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )

@@ -28,7 +28,12 @@ from duckdb_distributed_execution_spark.functions import (
     oracle_exact_avg_rounded,
     oracle_exact_sum,
 )
-from duckdb_distributed_execution_spark.queries import arr_str, load, register
+from duckdb_distributed_execution_spark.queries import (
+    arr_str,
+    load,
+    register,
+    small_table,
+)
 
 
 @register(
@@ -149,19 +154,18 @@ def ann_bruteforce_topk(spark, sf_dir):
     the oracle's exact summation order; at 4-decimal rounding the two
     agree on every measured corpus.
 
-    r9: below a 4 MB corpus gate the collect + scan + window plan
-    (3 jobs of fixed cost at sf0.1) fuses into ONE single-task Arrow
-    kernel (brute_force_topk_fused — same matmul, same lexsort rank
-    order); above it the per-batch top-k prune + window stays the
+    r9: below the corpus-size gate (small_table) the collect + scan +
+    window plan (3 jobs of fixed cost at sf0.1) fuses into ONE
+    single-task Arrow kernel (brute_force_topk_fused — same matmul,
+    same lexsort rank order); above it the per-batch top-k prune + window stays the
     designed exact-scan shape."""
     from duckdb_distributed_execution_spark.operators.similarity import (
         brute_force_topk_fused,
         brute_force_topk_numpy,
     )
-    from duckdb_distributed_execution_spark.queries import table_bytes
 
     e = load(spark, sf_dir, "embeddings")["embeddings"]
-    if table_bytes(sf_dir, "embeddings") <= 4 * 1024 * 1024:
+    if small_table(sf_dir, "embeddings"):
         return brute_force_topk_fused(
             e, id_col="vec_id", vec_col="embedding", k=10,
             query_id_below=5,

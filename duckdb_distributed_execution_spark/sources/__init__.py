@@ -10,9 +10,28 @@ distributed_insert.cpp:71-86)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 _READERS = ("parquet", "csv", "json", "orc")
+
+
+def path_bytes(path: str) -> int:
+    """On-disk size of a file, or of every file under a directory; a
+    missing path counts as 0 bytes. The file-size statistic that
+    stands in for a catalog's ANALYZE stats in the queries' scale
+    gate (``queries.table_bytes``) and the streaming backlog sizing."""
+    try:
+        if os.path.isdir(path):
+            return sum(
+                os.path.getsize(os.path.join(r, f))
+                for r, _, fs in os.walk(path)
+                for f in fs
+            )
+        return os.path.getsize(path)
+    except OSError:
+        return 0
 
 
 def read(
@@ -41,7 +60,6 @@ def _nanos_columns(path: str) -> list[str]:
     per path — the probe is driver-side filesystem work that would
     otherwise repeat on every query construction)."""
     import glob
-    import os
 
     import pyarrow.parquet as pq
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import time
+from collections import deque
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -110,14 +111,25 @@ def classify_plan(df: DataFrame) -> tuple[str, str, int]:
     return mode, merge, num_tasks
 
 
+# Ring size of the query recorder. A record is the SQL text plus six
+# scalars, so 10,000 of them stay a few MB even for long statements,
+# which bounds a long-lived session, while keeping far more history
+# than any stats or history read in this repo looks at (a benchmark
+# DML run records a few hundred).
+RECORDER_MAX_RECORDS = 10_000
+
+
 class QueryRecorder:
-    """In-memory recorder, same surface as the reference's
-    query_recorder.cpp ring (unbounded here; ``clear()`` to reset)."""
+    """In-memory ring of the last RECORDER_MAX_RECORDS queries, same
+    surface as the reference's query_recorder.cpp ring (``clear()`` to
+    reset)."""
 
     def __init__(self, spark: SparkSession, num_workers: int):
         self._spark = spark
         self._num_workers = num_workers
-        self._records: list[QueryExecutionInfo] = []
+        self._records: deque[QueryExecutionInfo] = deque(
+            maxlen=RECORDER_MAX_RECORDS
+        )
 
     def record(self, sql: str, df: DataFrame, duration_ms: int) -> QueryExecutionInfo:
         mode, merge, tasks = classify_plan(df)

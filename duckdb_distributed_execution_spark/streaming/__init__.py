@@ -14,7 +14,6 @@ against the batch result.
 
 from __future__ import annotations
 
-import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,11 +23,10 @@ from pyspark.sql import types as T
 # Accumulated on-disk size of the stream sources opened on each
 # session since the last drain, recorded by the read_*_stream helpers
 # and CONSUMED (popped) by run_to_memory's state-partition sizing.
-# The same file-size statistic every other scale gate in this repo
-# uses (queries.table_bytes — the stand-in for a catalog's ANALYZE
-# stats). Weak-keyed by the session object (not id(): a GC'd
-# session's id can be reused and alias an unrelated session — r9
-# advice) and summed across sources (a stream-stream join's backlog
+# The same file-size statistic the queries' scale gate uses
+# (sources.path_bytes — the stand-in for a catalog's ANALYZE stats).
+# Weak-keyed by the session object (not id(): a GC'd session's id
+# can be reused and alias an unrelated session — r9 advice) and summed across sources (a stream-stream join's backlog
 # is both inputs, not just the last one read).
 _SOURCE_BYTES: "weakref.WeakKeyDictionary[SparkSession, int]" = (
     weakref.WeakKeyDictionary()
@@ -41,18 +39,9 @@ def note_stream_source_bytes(spark: SparkSession, path: str) -> None:
     partitions from the backlog instead of the session constant.
     Bytes ACCUMULATE across sources until run_to_memory consumes the
     total, so multi-source pipelines size from their whole backlog."""
-    try:
-        if os.path.isdir(path):
-            b = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            b = os.path.getsize(path)
-    except OSError:
-        return
-    _SOURCE_BYTES[spark] = _SOURCE_BYTES.get(spark, 0) + b
+    from duckdb_distributed_execution_spark.sources import path_bytes
+
+    _SOURCE_BYTES[spark] = _SOURCE_BYTES.get(spark, 0) + path_bytes(path)
 
 
 def _events_schema(ts_is_nanos: bool) -> T.StructType:

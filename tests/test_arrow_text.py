@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators import text as X
+from tests.conftest import SF_ORACLE
 
 ADVERSARIAL = [
     (1, "Hello, World!  multiple   spaces"),
@@ -215,24 +216,17 @@ def test_doc_features_arrow_stopwords_matches_jvm(spark, docs):
     assert j == a
 
 
-def test_text_quality_gated_paths_identical(spark):
+def test_text_quality_gated_paths_identical(spark, monkeypatch):
     """Both size-gated text_quality plans (Arrow fused kernel vs
     min-parallelized JVM expressions) must return identical rows on
     the same corpus — the gate may only change the plan, never the
     result."""
-    from duckdb_distributed_execution_spark.queries import all_queries
-
-    fn = all_queries()["text_quality"].fn
-    sf = "/root/testdata/sf0.01"
     import duckdb_distributed_execution_spark.queries as Q
 
-    real = Q.table_bytes
-    got_small = fn(spark, sf)  # below the 2 MB gate: JVM path
-    try:
-        Q.table_bytes = lambda *_a, **_k: 1 << 30  # force Arrow path
-        got_big = fn(spark, sf)
-    finally:
-        Q.table_bytes = real
+    fn = Q.all_queries()["text_quality"].fn
+    got_small = fn(spark, SF_ORACLE)  # small under the scale gate: JVM
+    monkeypatch.setattr(Q, "SMALL_TABLE_BYTES", -1)  # force Arrow path
+    got_big = fn(spark, SF_ORACLE)
     assert got_small.exceptAll(got_big).limit(1).count() == 0
     assert got_big.exceptAll(got_small).limit(1).count() == 0
 

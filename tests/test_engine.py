@@ -126,6 +126,19 @@ def test_query_stats_recording(engine, basic_table):
     assert engine.get_query_execution_stats().count() == 0
 
 
+def test_query_recorder_is_bounded(spark, monkeypatch):
+    """The recorder is a ring: past RECORDER_MAX_RECORDS the oldest
+    records drop, so a long-lived session cannot grow it unboundedly."""
+    from duckdb_distributed_execution_spark import stats
+
+    monkeypatch.setattr(stats, "RECORDER_MAX_RECORDS", 3)
+    rec = stats.QueryRecorder(spark, num_workers=4)
+    for i in range(5):
+        rec.record(f"q{i}", spark.range(1), duration_ms=i)
+    assert len(rec) == 3
+    assert [r.query for r in rec.history_df().collect()] == ["q2", "q3", "q4"]
+
+
 def test_execution_modes(engine, spark):
     """small_table_optimization parity: a tiny table executes as a
     single task (DELEGATED); a repartitioned registration shuffles
@@ -1166,3 +1179,30 @@ def test_release_operator_caches(engine):
     assert engine.release_operator_caches() >= 1
     assert jcm.isEmpty()
     assert engine.release_operator_caches() == 0
+
+
+def test_tracked_persists_do_not_keep_session_alive(spark):
+    """The tracked-persist registry is weak-keyed by session, so a
+    dropped session must be collectable even while it still has a
+    tracked persist: the registry may not hold anything that refers
+    back to the session (a DataFrame does)."""
+    import gc
+    import weakref
+
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    from duckdb_distributed_execution_spark.functions import persist_tracked
+
+    other = spark.newSession()
+    df = persist_tracked(other.range(3))
+    df.unpersist()
+    ref = weakref.ref(other)
+    del df, other
+    try:
+        # pyspark's RDD.toDF closes over the most recently constructed
+        # session; constructing one more releases the dropped one.
+        spark.newSession()
+        gc.collect()
+        assert ref() is None
+    finally:
+        _monkey_patch_RDD(spark)

@@ -174,8 +174,8 @@ def test_aqe_skew_join_split(spark, tmp_path):
 # never actually run.)
 HEADLINE_SHUFFLE_BUDGETS = {
     "agg_pricing_summary": 1,   # one partial→final agg exchange
-    # r9 plans are SIZE-GATED (queries.table_bytes standing in for
-    # catalog stats): at smoke scale join_multi_star takes the simple
+    # r9 plans are SIZE-GATED (queries.small_table, file size standing
+    # in for catalog stats): at smoke scale join_multi_star takes the simple
     # broadcast shape and q9 withholds its SHUFFLE_HASH hint, so the
     # counts below are the small-SF topology; at sf10 the gates flip
     # to agg-below-join + shuffle-hash (branch equality pinned by
@@ -187,7 +187,7 @@ HEADLINE_SHUFFLE_BUDGETS = {
     #                             feeding the single numpy task
     #                             (banding/cap/pairs/verify); the sig
     #                             kernel itself is zero-exchange.
-    #                             Above the 4 MB corpus gate the
+    #                             Above the small_table gate the
     #                             distributed shape (band bucket →
     #                             verify, 2 exchanges) returns.
     "tpch_q9_partsupp": 2,      # scalar supplier-count agg + final

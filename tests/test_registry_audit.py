@@ -89,3 +89,31 @@ def test_every_query_fn_takes_spark_and_sfdir():
 
 def test_registry_names_match_specs():
     assert all(name == spec.name for name, spec in all_queries().items())
+
+
+# A byte-size literal: 1024 * 1024 (any spacing), a shift by 20, or
+# the spelled-out 1048576.
+_BYTE_SIZE_LITERAL = re.compile(r"1024\s*\*\s*1024|<<\s*20\b|\b1_?048_?576\b")
+
+
+def test_queries_hold_no_byte_size_literals():
+    """Every small-versus-large plan choice goes through one policy
+    (queries.small_table / SMALL_TABLE_BYTES), and every size
+    threshold is a named constant in queries/__init__.py — a byte
+    literal anywhere else in queries/ is a private gate."""
+    import pathlib
+
+    import duckdb_distributed_execution_spark.queries as Q
+
+    pkg = pathlib.Path(Q.__file__).parent
+    offenders = [
+        f"{path.name}:{n}: {line.strip()}"
+        for path in sorted(pkg.glob("*.py"))
+        if path.name != "__init__.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _BYTE_SIZE_LITERAL.search(line)
+    ]
+    assert not offenders, (
+        "byte-size literals outside queries/__init__.py (route the "
+        "decision through queries.small_table): " + "; ".join(offenders)
+    )
