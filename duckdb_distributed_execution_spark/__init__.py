@@ -29,7 +29,16 @@ Catalyst planner, shuffle service and partial/final aggregation
   ``F.zip_with``/``F.aggregate``, exact-decimal aggregation helpers).
 """
 
+from pyspark.files import SparkFiles as _SparkFiles
+
 from duckdb_distributed_execution_spark.session import Engine
+
+if _SparkFiles._is_running_on_worker:
+    # Imported by a Spark Python worker: stop its per-task zip directory
+    # re-reads (see pyworker). Never in the driver.
+    from duckdb_distributed_execution_spark import pyworker as _pyworker
+
+    _pyworker.install()
 
 __all__ = ["Engine", "ensure_worker_pythonpath"]
 __version__ = "0.1.0"

@@ -95,17 +95,22 @@ def check_fused_input_rows(n_rows: int, what: str, limit: int | None = None) -> 
 
 
 def local_rows_df(spark, rows, schema):
-    """Small driver-side relation as a DataFrame WITHOUT the
-    default-parallelism Python-slice tax (guide §4: every Python path
-    pays the JVM↔Python boundary). ``createDataFrame(list, schema)``
-    parallelizes the pickled rows into defaultParallelism slices, and
-    every plan execution then evaluates each slice through its own
-    Python-worker read — measured 0.46 s steady-state for a 10-row
-    relation at local[32], and 5+ s when a later ``coalesce(1)``
-    evaluates the 32 slices sequentially in one task. Slicing by the
-    data instead (one slice per ~10k rows) makes the same relation
-    cost ~0.2 s. Use for every broadcast-lookup/offset/centroid-style
-    relation built from driver-side rows."""
+    """Small driver-side relation as a DataFrame in as few slices as
+    its rows need (one per ~10k rows). ``createDataFrame(list,
+    schema)`` parallelizes the pickled rows into defaultParallelism
+    slices, and every plan execution reads each slice through its own
+    Python-worker round trip. The cost of that round trip was not the
+    JVM↔Python boundary: each one began with pyspark re-reading every
+    zip directory the worker had imported (``pyworker``), ~0.2 s of
+    CPU. Measured on a 4-core host, ``count()`` of a 10-row relation
+    at local[4]: 4 slices 0.91 s CPU / 0.38 s wall, after a
+    ``coalesce(1)`` 0.74 s wall (the slices read one after another),
+    1 slice 0.29 s CPU / 0.27 s wall. With the re-reads gone
+    (``Engine.start_local``): 4 slices 0.19 s CPU / 0.19 s wall,
+    coalesced 0.24 s wall, 1 slice 0.10 s CPU / 0.13 s wall — what is
+    left is ~0.03 s of task set-up per slice. Use for every
+    broadcast-lookup/offset/centroid-style relation built from
+    driver-side rows."""
     rows = list(rows)
     n = max(
         1,

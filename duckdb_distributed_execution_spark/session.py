@@ -69,6 +69,12 @@ TESTDATA_TABLES = (
 # resurrected by an adopt sweep (round-8: structural, not docstring).
 _ENGINE_STAGED_RE = re.compile(r"v\d+-part-.*\.parquet$")
 
+# The directory holding this package: the Python workers' PYTHONPATH
+# in sessions Engine.start_local builds.
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
 
 from duckdb_distributed_execution_spark.functions import (
     local_rows_df as _local_rows_df,
@@ -236,6 +242,12 @@ class Engine:
             # a several-hundred-plan workload — measured +50% wall on
             # the 17-query bench; harmless when fewer plans run).
             .config("spark.sql.codegen.cache.maxEntries", "5000")
+            # Every Python worker forks from a daemon that first stops
+            # the per-task zip directory re-reads (pyworker); workers
+            # import it from this checkout whatever the driver's CWD.
+            .config("spark.python.daemon.module",
+                    "duckdb_distributed_execution_spark.pyworker")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         )
         spark = builder.getOrCreate()
         return cls(spark, num_workers=workers)
@@ -1071,14 +1083,19 @@ class Engine:
         if not t.managed:
             raise ValueError("INSERT requires a managed table")
         target = self.table(name)
+        # persisted: the constraint check and the write read the source
+        # once between them
         aligned = df.select(*[F.col(c).cast(f.dataType).alias(f.name) for c, f in
-                              zip(df.columns, target.schema.fields)])
-        after = target.unionByName(aligned)
-        self._check_constraints(name, aligned, after=after)
-        if self._live_bytes(name) >= self._COMPACT_BYTES:
-            self._append_files(name, aligned, "insert")
-        else:
-            self._rewrite(name, after, op="insert")
+                              zip(df.columns, target.schema.fields)]).persist()
+        try:
+            after = target.unionByName(aligned)
+            self._check_constraints(name, aligned, after=after)
+            if self._live_bytes(name) >= self._COMPACT_BYTES:
+                self._append_files(name, aligned, "insert")
+            else:
+                self._rewrite(name, after, op="insert")
+        finally:
+            aligned.unpersist()
 
     def _check_constraints(self, name: str, rows: DataFrame,
                            cols: set[str] | None = None,
@@ -1155,23 +1172,27 @@ class Engine:
         row as a nested Py4J worker exception during the constraint
         scan instead of a clean driver-side TypeError at insert time.
         The verifier is the same one createDataFrame(list, schema)
-        applies; VALUES lists are tiny, so the driver loop is free."""
-        from pyspark.sql.types import _make_type_verifier
+        applies; VALUES lists are tiny, so the driver loop is free.
+        Should pyspark drop that private verifier, the rows go through
+        createDataFrame(list, schema), which verifies on the driver
+        too."""
+        try:
+            from pyspark.sql.types import _make_type_verifier
+        except ImportError:
+            _make_type_verifier = None
 
         target = self.table(name)
-        if columns is None:
-            verify = _make_type_verifier(target.schema)
-            for r in rows:
-                verify(r)
-            df = _local_rows_df(self.spark, rows, target.schema)
+        schema = target.schema if columns is None else T.StructType(
+            [target.schema[c] for c in columns]
+        )
+        if _make_type_verifier is None:
+            df = self.spark.createDataFrame(rows, schema)
         else:
-            sub = T.StructType(
-                [target.schema[c] for c in columns]
-            )
-            verify = _make_type_verifier(sub)
+            verify = _make_type_verifier(schema)
             for r in rows:
                 verify(r)
-            df = _local_rows_df(self.spark, rows, sub)
+            df = _local_rows_df(self.spark, rows, schema)
+        if columns is not None:
             for f in target.schema.fields:
                 if f.name not in columns:
                     dflt = self._defaults.get((name, f.name))
@@ -2912,20 +2933,27 @@ class Engine:
         if the source has duplicate keys — SQL MERGE semantics forbid
         multiple matches for one target row."""
         target = self.table(name)
-        aligned = source.select(*[F.col(c) for c in target.columns])
-        kept = target.join(aligned.select(*on), on=on, how="left_anti")
-        after = kept.unionByName(aligned)
-        # Source keys are distinct (checked below), so a key holding
-        # every ON column cannot be duplicated by the merge.
-        keyed = all(set(on) <= set(k) for k in self._keys.get(name, []))
-        n_src, = self._check_constraints(
-            name, aligned, after=None if keyed else after,
-            extra=(F.count(F.lit(1)),),
-        )
-        if aligned.select(*on).distinct().count() != n_src:
-            raise ValueError("merge_upsert: duplicate keys in source")
-        n_updated = target.count() - kept.count()
-        self._rewrite(name, after)
+        # persisted: the checks, the counts and the rewrite read the
+        # source once between them
+        aligned = source.select(*[F.col(c) for c in target.columns]).persist()
+        try:
+            kept = target.join(aligned.select(*on), on=on, how="left_anti")
+            after = kept.unionByName(aligned)
+            # Source keys are distinct (checked below), so a key holding
+            # every ON column cannot be duplicated by the merge.
+            keyed = all(set(on) <= set(k) for k in self._keys.get(name, []))
+            # distinct keys counted as structs: count_distinct over the
+            # bare columns would skip keys holding a NULL
+            n_src, n_keys = self._check_constraints(
+                name, aligned, after=None if keyed else after,
+                extra=(F.count(F.lit(1)), F.count_distinct(F.struct(*on))),
+            )
+            if n_keys != n_src:
+                raise ValueError("merge_upsert: duplicate keys in source")
+            n_updated = target.count() - kept.count()
+            self._rewrite(name, after)
+        finally:
+            aligned.unpersist()
         return {"updated": n_updated, "inserted": n_src - n_updated}
 
     def close(self) -> None:

@@ -367,6 +367,95 @@ def test_merge_upsert_empty_source(engine, spark):
     engine.drop_table("mrg_e")
 
 
+def _counted_source(spark, rows, schema):
+    """``rows`` as a DataFrame whose first column passes through a
+    Python UDF; the returned accumulator counts the rows evaluated."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def seen(x):
+        acc.add(1)
+        return x
+
+    df = spark.createDataFrame(rows, schema)
+    first = df.schema.fields[0]
+    return df.withColumn(
+        first.name, F.udf(seen, first.dataType)(first.name)
+    ), acc
+
+
+def test_merge_and_insert_evaluate_source_once(engine, spark):
+    schema = "id INTEGER, v INTEGER"
+    engine.create_table("once_t", "id INTEGER PRIMARY KEY, v INTEGER NOT NULL")
+    try:
+        engine.insert_values("once_t", [(1, 10), (2, 20)])
+        src, acc = _counted_source(spark, [(2, 99), (3, 30), (4, 40)], schema)
+        assert engine.merge_upsert("once_t", src, on=["id"]) == {
+            "updated": 1, "inserted": 2,
+        }
+        assert acc.value == 3
+        src, acc = _counted_source(spark, [(5, 50), (6, 60)], schema)
+        engine.insert_into("once_t", src)
+        assert acc.value == 2
+        assert sorted(map(tuple, engine.table("once_t").collect())) == [
+            (1, 10), (2, 99), (3, 30), (4, 40), (5, 50), (6, 60),
+        ]
+    finally:
+        engine.drop_table("once_t")
+
+
+def test_merge_duplicate_null_keys(engine, spark):
+    """Source keys holding NULL count as equal, as DISTINCT does."""
+    schema = "id INTEGER, k STRING, v INTEGER"
+    engine.create_table("mrg_n", schema)
+    try:
+        dup = spark.createDataFrame([(None, "a", 1), (None, "a", 2)], schema)
+        assert dup.select("id", "k").distinct().count() == 1
+        with pytest.raises(ValueError, match="duplicate keys in source"):
+            engine.merge_upsert("mrg_n", dup, on=["id", "k"])
+        ok = spark.createDataFrame(
+            [(None, "a", 1), (None, None, 2), (1, None, 3)], schema
+        )
+        assert ok.select("id", "k").distinct().count() == 3
+        assert engine.merge_upsert("mrg_n", ok, on=["id", "k"]) == {
+            "updated": 0, "inserted": 3,
+        }
+    finally:
+        engine.drop_table("mrg_n")
+
+
+def test_insert_values_without_private_verifier(engine, monkeypatch):
+    """Without pyspark's private row verifier, insert_values still
+    rejects a malformed row eagerly with TypeError, changing nothing."""
+    import builtins
+
+    real_import = builtins.__import__
+
+    def no_verifier(name, globals=None, locals=None, fromlist=(), level=0):
+        # pyspark itself still reaches the function through its module
+        # globals (it recurses on its own name); only the import fails
+        if name == "pyspark.sql.types" and "_make_type_verifier" in (
+                fromlist or ()):
+            raise ImportError("cannot import name '_make_type_verifier'")
+        return real_import(name, globals, locals, fromlist, level)
+
+    monkeypatch.setattr(builtins, "__import__", no_verifier)
+    engine.create_table("iv_nv", "id BIGINT, s VARCHAR DEFAULT 'd'")
+    try:
+        engine.insert_values("iv_nv", [(1, "a")])
+        engine.insert_values("iv_nv", [(2,)], columns=["id"])
+        history = engine.history("iv_nv")
+        with pytest.raises(TypeError):
+            engine.insert_values("iv_nv", [("x", "b")])
+        with pytest.raises(TypeError):
+            engine.insert_values("iv_nv", [("y",)], columns=["id"])
+        assert engine.history("iv_nv") == history
+        assert sorted(map(tuple, engine.table("iv_nv").collect())) == [
+            (1, "a"), (2, "d"),
+        ]
+    finally:
+        engine.drop_table("iv_nv")
+
+
 def test_compact_table(engine, spark):
     import os
 
