@@ -342,17 +342,13 @@ def remote_stream_window_counts(spark, sf_dir):
         build_remote_db,
         register_remote_source,
     )
-    from duckdb_distributed_execution_spark.streaming import (
-        note_stream_source_bytes,
-        run_to_memory,
-    )
+    from duckdb_distributed_execution_spark.streaming import run_to_memory
 
     load(spark, sf_dir, "events")
     register_remote_source(spark)
     db = build_remote_db(sf_dir)
-    # Custom-source stream: record the backlog size for run_to_memory's
-    # state-partition sizing (the file-source readers do this inline).
-    note_stream_source_bytes(spark, db)
+    # run_to_memory sizes the state partitions from the database file,
+    # the stream's ``path`` option
     stream = (
         spark.readStream.format("duckdb_remote")
         .option("path", db)

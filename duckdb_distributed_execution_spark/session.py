@@ -35,7 +35,8 @@ import tempfile
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -129,6 +130,68 @@ def _duplicate_keys(df: DataFrame, keycols: list[str]) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("__n"))
         .filter(F.col("__n") > 1)
     )
+
+
+def _unlink(paths) -> None:
+    """Remove files; one already gone is not an error."""
+    for p in paths:
+        try:
+            os.remove(p)
+        except OSError:
+            pass
+
+
+class _RowCounts:
+    """Row counts a write observes on its own plan
+    (``DataFrame.observe``): the staged write computes them, so they
+    cost no Spark job of their own. Tap each counted relation while
+    building the written plan; read the counts once the write ran.
+    ``spark`` is the session that runs the write."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        self._session = spark._jsparkSession
+        self._taps: dict[
+            str, tuple[Observation | None, DataFrame, Column | None]] = {}
+        self._got: dict[str, int] | None = None
+
+    def tap(self, name: str, df: DataFrame,
+            where: Column | None = None) -> DataFrame:
+        """``df``, counting as ``name`` the rows flowing through it
+        (only those where ``where`` is TRUE, when given)."""
+        if df.sparkSession._jsparkSession != self._session:
+            # An observation completes through the session that
+            # registered it, and only that session's queries report to
+            # it: rows of another session (a foreachBatch micro-batch)
+            # would never report. They are counted directly instead.
+            self._taps[name] = (None, df, where)
+            return df
+        obs = Observation()
+        self._taps[name] = (obs, df, where)
+        hit = F.lit(1) if where is None else F.when(where, 1)
+        return df.observe(obs, F.count(hit).alias("n"))
+
+    def get(self) -> dict[str, int]:
+        """The counts, after the write ran. Spark drops an observation
+        together with a subtree whose rows it proves unused (DELETE
+        ... WHERE true filters on a constant FALSE above the tap);
+        such a count is taken by a direct pass over the tapped rows."""
+        if self._got is None:
+            self._got = {}
+            for name, (obs, df, where) in self._taps.items():
+                self._got[name] = self._observed(obs)
+                if self._got[name] is None:
+                    rows = df if where is None else df.filter(where)
+                    self._got[name] = rows.count()
+        return self._got
+
+    @staticmethod
+    def _observed(obs: Observation | None) -> int | None:
+        if obs is None:
+            return None
+        try:
+            return obs.get["n"]
+        except Py4JJavaError:  # no metrics: the tap was pruned
+            return None
 
 
 def _ddl(fn):
@@ -455,10 +518,7 @@ class Engine:
     def create_materialized_view(self, name: str, query: str) -> None:
         if self.table_exists(name) or name in self._views:
             raise ValueError(f"view or table {name!r} already exists")
-        df = self.spark.sql(query)
-        path = self._managed_path(name)
-        df.write.mode("overwrite").parquet(path)
-        self._attach_managed(name, path)
+        self._write_managed(name, self.spark.sql(query))
         self._matviews[name] = query
 
     def refresh_materialized_view(self, name: str) -> None:
@@ -810,23 +870,33 @@ class Engine:
             self._checks[name] = cons.checks
         if cons.foreign:
             self._foreign[name] = cons.foreign
-        empty = _empty_df(self.spark, schema).coalesce(1)
-        path = self._managed_path(name)
-        empty.write.mode("overwrite").parquet(path)
-        self._attach_managed(name, path)
+        self._write_managed(name, _empty_df(self.spark, schema).coalesce(1))
 
-    def _attach_managed(self, name: str, path: str) -> None:
+    def _write_managed(self, name: str, df: DataFrame) -> None:
+        """Write ``df`` as the first version of managed table ``name``
+        and attach it with the schema just written."""
+        path = self._managed_path(name)
+        df.write.mode("overwrite").parquet(path)
+        self._attach_managed(name, path, df.schema)
+
+    def _attach_managed(self, name: str, path: str,
+                        schema: T.StructType | None = None) -> None:
         """Register the live version of a managed table as its temp
         view. The view reads the MANIFEST-listed files explicitly, so
         staged-but-uncommitted files and crash orphans in the same
-        directory are invisible to every query."""
+        directory are invisible to every query.
+
+        ``schema`` is the schema of the frame the engine just wrote
+        there. Spark keeps it in every file footer and a parquet read
+        infers exactly it, made nullable (the file source makes a
+        given schema nullable the same way), so passing it skips the
+        one-task schema-inference job. None (a directory of unknown
+        provenance: catalog reload, reattach, adopt) infers."""
         m = self._adopt_manifest(path)
         files = [os.path.join(path, f) for f in m["files"]]
-        df = (
-            self.spark.read.parquet(*files)
-            if files
-            else self.spark.read.parquet(path)
-        )
+        reader = self.spark.read if schema is None else (
+            self.spark.read.schema(schema))
+        df = reader.parquet(*files) if files else reader.parquet(path)
         df.createOrReplaceTempView(name)
         self._tables[name] = RegisteredTable(name, path, "parquet", managed=True)
 
@@ -862,30 +932,48 @@ class Engine:
     # row group ⇒ one DELEGATED task).
     _COMPACT_BYTES = 64 * 1024 * 1024
 
+    def _small(self, name: str) -> bool:
+        """Below ``_COMPACT_BYTES`` of live files: a rewrite replaces
+        every file with one compacted file, so INSERT rewrites instead
+        of appending and DELETE/UPDATE skip the file-pruning probe
+        (it could not spare a file)."""
+        return self._live_bytes(name) < self._COMPACT_BYTES
+
     def _rewrite(self, name: str, rows, op: str = "rewrite",
                  files: list[str] | None = None,
-                 compact: bool = True) -> None:
+                 compact: bool = True,
+                 counts: _RowCounts | None = None,
+                 changes: str | None = None) -> dict[str, int]:
         """THE copy-on-write commit of a managed table (parquet files
         are immutable; ALTER/DELETE/UPDATE/MERGE rewrite, as a lakehouse
         format does): swap the live ``files`` (default: all) for the
         files of ``rows`` — a DataFrame, or a function of the replaced
         rows (read through the table's view when all are replaced).
-        Other files stay byte-identical. The prior state is snapshotted
-        first (hardlinks) for time travel, the new files are fully
-        materialized BEFORE the old version is touched, and the swap is
-        one atomic manifest rename; superseded files are unlinked after
-        the commit (their inodes live on in the snapshot)."""
+        Other files stay byte-identical.
+
+        Stage, observe, validate, then CAS. The new files are fully
+        written first, invisible because no manifest lists them. The
+        row ``counts`` tapped on ``rows`` are read off that same write
+        (no job of their own). A write whose ``changes`` count is zero
+        changed nothing: its staged files are unlinked and it returns
+        without a snapshot or a commit. Otherwise the prior state is
+        snapshotted (hardlinks) for time travel, one atomic manifest
+        CAS publishes the swap, and superseded files are unlinked after
+        the commit (their inodes live on in the snapshot). Returns the
+        counts."""
         t = self._require_managed(name)
         whole = files is None or set(files) >= set(self._managed_files(name))
         if not isinstance(rows, DataFrame):
-            rows = rows(
-                self.table(name) if whole else self.spark.read.parquet(*files)
-            )
-        if whole and compact and self._live_bytes(name) < self._COMPACT_BYTES:
+            rows = rows(self._scan(name, None if whole else files))
+        if whole and compact and self._small(name):
             rows = rows.coalesce(1)
-        self._snapshot(name, op)
         m = self._adopt_manifest(t.path)
         new = self._ingest_files(t.path, rows, m["version"] + 1)
+        got = counts.get() if counts is not None else {}
+        if changes is not None and not got[changes]:
+            _unlink(os.path.join(t.path, f) for f in new)
+            return got
+        self._snapshot(name, op)
         base = os.path.realpath(t.path)
         gone = (
             {os.path.join(base, f) for f in m["files"]} if whole
@@ -898,12 +986,17 @@ class Engine:
         # idempotence map (txns) carries forward.
         manifest.commit_exact(t.path, kept + new, op, m["version"],
                               txns=m.get("txns"))
-        for p in sorted(gone):  # post-commit GC
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-        self._attach_managed(name, t.path)
+        _unlink(sorted(gone))  # post-commit GC
+        self._attach_managed(name, t.path, rows.schema)
+        return got
+
+    def _scan(self, name: str, files: list[str] | None = None) -> DataFrame:
+        """The rows of a managed table's ``files`` (default: the live
+        table, through its view), read with the view's schema."""
+        view = self.table(name)
+        if files is None:
+            return view
+        return self.spark.read.schema(view.schema).parquet(*files)
 
     def _require_managed(self, name: str,
                          verb: str = "DELETE") -> RegisteredTable:
@@ -929,34 +1022,40 @@ class Engine:
 
     def _append_files(self, name: str, df: DataFrame, op: str,
                       snapshot: bool = True,
-                      txn: tuple[str, int] | None = None) -> bool:
+                      txn: tuple[str, int] | None = None,
+                      counts: _RowCounts | None = None,
+                      changes: str | None = None) -> bool:
         """Atomic append: the new files land under the next version's
         names first, then ONE manifest rename makes them visible — a
         reader never sees a partially-written append (the old
         mode('append') write exposed in-progress part files to
-        directory-listing readers). ``txn=(app_id, version)`` makes
-        the append IDEMPOTENT per application transaction (replayed
-        streaming micro-batches commit at most once — the txns map
-        travels in the same manifest CAS as the file list). Returns
-        False when the txn was already applied (staged files are
-        unlinked, nothing committed)."""
+        directory-listing readers). ``counts`` and ``changes`` work as
+        in ``_rewrite``: an append whose ``changes`` count is zero
+        unlinks its staged files and commits nothing.
+        ``txn=(app_id, version)`` makes the append IDEMPOTENT per
+        application transaction (replayed streaming micro-batches
+        commit at most once — the txns map travels in the same
+        manifest CAS as the file list). Returns False when nothing was
+        committed (staged files are unlinked): the txn was already
+        applied, or the append was empty."""
         t = self._tables[name]
-        if snapshot:
-            self._snapshot(name, op)
+        schema = self.table(name).schema
         m = self._adopt_manifest(t.path)
         new = self._ingest_files(t.path, df, m["version"] + 1)
+        staged = [os.path.join(t.path, f) for f in new]
+        if changes is not None and not counts.get()[changes]:
+            _unlink(staged)
+            return False
+        if snapshot:
+            self._snapshot(name, op)
         # Blind append: rebases onto any concurrent commit and retries
         # (manifest.commit_append) — INSERTs never lose a race.
         out = manifest.commit_append(t.path, new, op, txn=txn)
         if txn is not None and not set(new) <= set(out["files"]):
             # idempotent skip: this txn version was already applied
-            for f in new:
-                try:
-                    os.remove(os.path.join(t.path, f))
-                except OSError:
-                    pass
+            _unlink(staged)
             return False
-        self._attach_managed(name, t.path)
+        self._attach_managed(name, t.path, schema)
         return True
 
     # ALTER TABLE family — parity with GenerateAlterTableSQL
@@ -985,6 +1084,7 @@ class Engine:
             raise ValueError("rename requires a managed table")
         if self.table_exists(new):
             raise ValueError(f"table {new!r} already exists")
+        schema = self.table(old).schema
         new_path = self._managed_path(new)
         os.rename(t.path, new_path)
         if os.path.isdir(self._snapshot_dir(old)):
@@ -994,7 +1094,7 @@ class Engine:
             os.rename(self._snapshot_dir(old), self._snapshot_dir(new))
         self.spark.catalog.dropTempView(old)
         del self._tables[old]
-        self._attach_managed(new, new_path)
+        self._attach_managed(new, new_path, schema)
         # Constraint bookkeeping follows the table (r8: previously the
         # defaults/NOT NULL/CHECK/PK/ENUM entries stayed keyed under
         # the old name, so enforcement silently lapsed after a rename
@@ -1090,26 +1190,24 @@ class Engine:
         try:
             after = target.unionByName(aligned)
             self._check_constraints(name, aligned, after=after)
-            if self._live_bytes(name) >= self._COMPACT_BYTES:
-                self._append_files(name, aligned, "insert")
-            else:
+            if self._small(name):
                 self._rewrite(name, after, op="insert")
+            else:
+                self._append_files(name, aligned, "insert")
         finally:
             aligned.unpersist()
 
     def _check_constraints(self, name: str, rows: DataFrame,
                            cols: set[str] | None = None,
-                           after: DataFrame | None = None,
-                           extra: tuple[Column, ...] = ()) -> list:
+                           after: DataFrame | None = None) -> None:
         """THE constraint gate of every write (INSERT, UPDATE, MERGE,
         COPY FROM): raise ValueError on the first declared rule of
         ``name`` the write breaks, before anything is staged.
         ``rows`` are the rows written (table columns); ``cols`` limits
         the check to rules over those columns (UPDATE's SET list).
-        NOT NULL/ENUM/CHECK run as ONE pass over ``rows``, which also
-        returns the values of the ``extra`` aggregates (a row count
-        then costs no second pass). PRIMARY KEY/UNIQUE run over
-        ``after``, the table as the write leaves it; None skips them."""
+        NOT NULL/ENUM/CHECK run as ONE filtered pass over ``rows``.
+        PRIMARY KEY/UNIQUE run over ``after``, the table as the write
+        leaves it; None skips them."""
         lower = {c.lower() for c in cols or ()}
 
         def touched(used) -> bool:
@@ -1131,18 +1229,12 @@ class Engine:
             if touched(re.findall(r"\w+", check)):
                 rules.append((_fails(check), lambda r, c=check: (
                     f"CHECK ({c}) violated on {name}: {tuple(r)!r}")))
-        row = F.struct(*columns)
-        out, samples = [], ()
-        if extra:
-            got = rows.agg(*extra, *[
-                F.first(F.when(bad, row), ignorenulls=True)
-                for bad, _ in rules
-            ]).collect()[0]
-            out, samples = list(got)[:len(extra)], got[len(extra):]
-        elif rules:
+        samples = ()
+        if rules:
             # a filter, not an aggregate: a rule the schema already
             # guarantees (NOT NULL over non-nullable input) folds to
             # FALSE and the pass costs no Spark job at all
+            row = F.struct(*columns)
             hit = rows.filter(functools.reduce(
                 lambda a, b: a | b, [bad for bad, _ in rules]
             )).select(*[F.when(bad, row) for bad, _ in rules]).limit(1)
@@ -1158,7 +1250,6 @@ class Engine:
                     f"duplicate key {keycols} on {name}: "
                     f"{tuple(dup[0])[:-1]!r}"
                 )
-        return out
 
     def insert_values(self, name: str, rows: list[tuple],
                       columns: list[str] | None = None) -> None:
@@ -1262,40 +1353,63 @@ class Engine:
         - ``{"check": "<sql predicate>"}`` (violates when FALSE;
           NULL passes, CHECK semantics)
 
-        Each rule is a filtered aggregate over the table scan —
-        embarrassingly parallel, no driver-side row iteration; unique
-        is one grouped count on the key columns only. With
-        ``raise_on_violation`` the first violated rule raises, making
-        this a write-gate (the ingest-side twin of the enforced
-        CREATE TABLE constraints).
+        The row rules (not_null, accepted_values, in_range, check)
+        fold into ONE aggregate over the table scan: per rule a count
+        of violating rows and the first violating row as the sample.
+        Each unique rule is one grouped count on its key columns only.
+        No driver-side row iteration. With ``raise_on_violation`` the
+        first violated rule, in rule order, raises, making this a
+        write-gate (the ingest-side twin of the enforced CREATE TABLE
+        constraints).
         """
         t = self.table(name)
-        # rule → (target label, violating rows), through the same
+        # rule → (target label, violation predicate), through the same
         # per-rule predicates the write-time constraint gate uses
-        violations = {
-            "not_null": lambda c: (c, t.filter(_nulls([c]))),
-            "unique": lambda cs: (",".join(cs), _duplicate_keys(t, list(cs))),
-            "accepted_values": lambda a: (a[0], t.filter(_outside(*a))),
-            "in_range": lambda a: (a[0], t.filter(
-                F.col(a[0]).isNotNull() & ~F.col(a[0]).between(a[1], a[2])
-            )),
-            "check": lambda p: (p, t.filter(_fails(p))),
+        row_rules = {
+            "not_null": lambda c: (c, _nulls([c])),
+            "accepted_values": lambda a: (a[0], _outside(*a)),
+            "in_range": lambda a: (a[0], F.col(a[0]).isNotNull()
+                                   & ~F.col(a[0]).between(a[1], a[2])),
+            "check": lambda p: (p, _fails(p)),
         }
-        rows = []
+        checks = []  # (label, target, predicate or unique key columns)
         for rule in rules:
-            label = next((k for k in violations if k in rule), None)
+            label = next(
+                (k for k in (*row_rules, "unique") if k in rule), None)
             if label is None:
                 raise ValueError(f"unknown rule {rule!r}")
-            target_col, bad = violations[label](rule[label])
-            n = bad.count()
-            sample = ""
-            if n:
-                sample = str(tuple(bad.limit(1).collect()[0]))
-                if raise_on_violation:
-                    raise ValueError(
-                        f"expectation {label}({target_col}) violated on "
-                        f"{name!r}: {n} rows, e.g. {sample}"
-                    )
+            if label == "unique":
+                cols = list(rule[label])
+                checks.append((label, ",".join(cols), cols))
+            else:
+                checks.append((label, *row_rules[label](rule[label])))
+        preds = [p for label, _, p in checks if label != "unique"]
+        found = iter(())
+        if preds:
+            row = F.struct(*t.columns)
+            got = t.agg(*[
+                agg for bad in preds for agg in (
+                    F.count(F.when(bad, 1)),
+                    F.first(F.when(bad, row), ignorenulls=True),
+                )
+            ]).collect()[0]
+            found = iter(zip(got[::2], got[1::2]))
+        rows = []
+        for label, target_col, pred in checks:
+            if label == "unique":
+                dup = _duplicate_keys(t, pred)
+                n, sample = dup.agg(
+                    F.count(F.lit(1)),
+                    F.first(F.struct(*dup.columns)),
+                ).collect()[0]
+            else:
+                n, sample = next(found)
+            sample = str(tuple(sample)) if n else ""
+            if n and raise_on_violation:
+                raise ValueError(
+                    f"expectation {label}({target_col}) violated on "
+                    f"{name!r}: {n} rows, e.g. {sample}"
+                )
             rows.append((label, target_col, n, sample))
         return _local_rows_df(
             self.spark,
@@ -1356,7 +1470,11 @@ class Engine:
     # by Spark's `_metadata.file_path` — exact runtime pruning for ANY
     # predicate, itself pruned by parquet footer min/max + pushdown
     # where the predicate allows (optimize_zorder makes that sharp).
-    # The matched-row count falls out of the same single pass.
+    # A small table (Engine._small) skips the probe: its rewrite
+    # compacts every file into one anyway, so the probe could spare
+    # nothing. Either way the returned row count is observed on the
+    # rewrite itself (_RowCounts), and a write matching nothing commits
+    # nothing.
 
     def _adopt_manifest(self, path: str) -> dict:
         """Manifest for a directory that predates one (legacy layout or
@@ -1414,9 +1532,8 @@ class Engine:
         holding rows where ``condition`` is TRUE, total matched rows)."""
         from urllib.parse import unquote, urlparse
 
-        live = self._managed_files(name)
         rows = (
-            self.spark.read.parquet(*live)
+            self._scan(name, self._managed_files(name))
             .filter(F.expr(condition))
             .groupBy(F.col("_metadata.file_path").alias("__f"))
             .agg(F.count(F.lit(1)).alias("__n"))
@@ -1534,33 +1651,40 @@ class Engine:
         rewrites the predicate as first-column IN (...), which is wrong
         unless column 1 is a key). Returns rows deleted.
 
-        Copy-on-write with FILE PRUNING: one probe scan yields both
-        the deleted-row count and the set of files containing matches;
-        only those files are re-filtered and rewritten, so DELETE cost
-        scales with matched files, not table size (the reference's
-        DELETE — and this engine's until round 6 — was a full-table
-        pass for any predicate; distributed_delete.cpp:27-126)."""
+        Copy-on-write with FILE PRUNING: on a table at or above
+        ``_COMPACT_BYTES`` one probe scan finds the files containing
+        matches; only those files are re-filtered and rewritten, so
+        DELETE cost scales with matched files, not table size (the
+        reference's DELETE — and this engine's until round 6 — was a
+        full-table pass for any predicate;
+        distributed_delete.cpp:27-126). A small table is rewritten
+        whole in one job. The deleted-row count is observed on the
+        rewrite."""
         self._require_managed(name)
-        keep = ~F.expr(condition) | F.expr(condition).isNull()
-        matched, n_deleted = self._matched_files(name, condition)
-        if n_deleted == 0:
-            return 0
+        cond = F.expr(condition)
+        keep = ~cond | cond.isNull()
+        matched = None
+        if not self._small(name):
+            matched, n_deleted = self._matched_files(name, condition)
+            if n_deleted == 0:
+                return 0
         # r9: propagate the delete to every vector index built over
         # this table — capture the doomed ids BEFORE the files go
         # (localCheckpoint pins them), tombstone after the commit
-        idx_deletes = []
-        for iname, imeta in self._vector_indexes.items():
-            if imeta["table"] == name:
-                idx_deletes.append((iname, (
-                    self.spark.read.parquet(*matched)
-                    .filter(F.expr(condition))
-                    .select(imeta["id_col"])
-                    .localCheckpoint()
-                )))
-        self._rewrite(name, lambda src: src.filter(keep), op="delete",
-                      files=matched)
-        for iname, ids in idx_deletes:
-            self.vector_index_delete(iname, ids)
+        idx_deletes = [
+            (iname, self._scan(name, matched).filter(cond)
+             .select(imeta["id_col"]).localCheckpoint())
+            for iname, imeta in self._vector_indexes.items()
+            if imeta["table"] == name
+        ]
+        counts = _RowCounts(self.spark)
+        n_deleted = self._rewrite(
+            name, lambda src: counts.tap("deleted", src, cond).filter(keep),
+            op="delete", files=matched, counts=counts, changes="deleted",
+        )["deleted"]
+        if n_deleted:
+            for iname, ids in idx_deletes:
+                self.vector_index_delete(iname, ids)
         return n_deleted
 
     def update_table(self, name: str, set_exprs: dict[str, str],
@@ -1568,7 +1692,8 @@ class Engine:
         """UPDATE ... SET ... WHERE — copy-on-write with the same file
         pruning as delete_from: only files containing condition-TRUE
         rows are rewritten (non-matching rows in a rewritten file are
-        carried through unchanged). Returns rows updated."""
+        carried through unchanged); a small table is rewritten whole.
+        Returns rows updated, observed on the rewrite."""
         self._require_managed(name, "UPDATE")
         target = self.table(name)
         fields = target.schema.fields
@@ -1590,13 +1715,18 @@ class Engine:
                 for f in fields
             ])
 
-        matched, n_updated = self._matched_files(name, condition)
-        if n_updated == 0:
-            return 0
+        matched = None
+        if not self._small(name):
+            matched, n_updated = self._matched_files(name, condition)
+            if n_updated == 0:
+                return 0
         self._check_constraints(name, apply(target.filter(cond)),
                                 cols=set(set_exprs), after=apply(target))
-        self._rewrite(name, apply, op="update", files=matched)
-        return n_updated
+        counts = _RowCounts(self.spark)
+        return self._rewrite(
+            name, lambda src: apply(counts.tap("updated", src, cond)),
+            op="update", files=matched, counts=counts, changes="updated",
+        )["updated"]
 
     def summarize(self, name: str) -> DataFrame:
         """DuckDB-SUMMARIZE-style profile of a registered table: one
@@ -2142,16 +2272,12 @@ class Engine:
         cents = cents.select(
             F.col("cid").cast("long").alias("cid"), F.col(vec_col)
         )
-        cpath = self._managed_path(f"{name}__centroids")
-        cents.coalesce(1).write.mode("overwrite").parquet(cpath)
-        self._attach_managed(f"{name}__centroids", cpath)
+        self._write_managed(f"{name}__centroids", cents.coalesce(1))
 
         assigned = S.ivf_assign_numpy(corpus, cents, id_col, vec_col)
         # cid-sorted layout: the serve-time `cid IN probes` filter
         # prunes unprobed cells' row groups via parquet min/max stats
-        apath = self._managed_path(f"{name}__cells")
-        assigned.sort("cid").write.mode("overwrite").parquet(apath)
-        self._attach_managed(f"{name}__cells", apath)
+        self._write_managed(f"{name}__cells", assigned.sort("cid"))
         # build-time assignment quality — the drift baseline
         # vector_index_stats compares serving-time state against
         build = self.table(f"{name}__cells").agg(
@@ -2164,11 +2290,8 @@ class Engine:
         # tombstones: ids DELETEd from the index since the build —
         # CAS-appended like upserts, anti-joined at serve time
         id_type = dict(corpus.dtypes)[id_col]
-        tpath = self._managed_path(f"{name}__tombstones")
-        _empty_df(self.spark, f"{id_col} {id_type}").write.mode(
-            "overwrite"
-        ).parquet(tpath)
-        self._attach_managed(f"{name}__tombstones", tpath)
+        self._write_managed(f"{name}__tombstones",
+                            _empty_df(self.spark, f"{id_col} {id_type}"))
 
         import numpy as np
 
@@ -2184,11 +2307,9 @@ class Engine:
             (int(cids[i]), int(cids[j]), r)
             for i, j, r in S.centroid_graph_edges(C, cc, graph_edges)
         ]
-        gpath = self._managed_path(f"{name}__graph")
-        _local_rows_df(
+        self._write_managed(f"{name}__graph", _local_rows_df(
             self.spark, edges, "src long, dst long, rank int"
-        ).coalesce(1).write.mode("overwrite").parquet(gpath)
-        self._attach_managed(f"{name}__graph", gpath)
+        ).coalesce(1))
 
         pq_dsub = None
         if pq_m is not None:
@@ -2220,11 +2341,8 @@ class Engine:
                     F.col("__id").alias("code"), "sub",
                     F.col("sv").alias("cv"),
                 )
-            cbpath = self._managed_path(f"{name}__codebook")
-            pq_codebook.select("sub", "code", "cv").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(cbpath)
-            self._attach_managed(f"{name}__codebook", cbpath)
+            self._write_managed(f"{name}__codebook", pq_codebook.select(
+                "sub", "code", "cv").coalesce(1))
             # encode the PERSISTED cells relation (it carries vector
             # AND cid) — one Arrow pass, cid passes through the
             # kernel; no interpreted sq_l2 relation, no struct-min
@@ -2235,9 +2353,7 @@ class Engine:
                 id_col, vec_col, m=pq_m, dsub=pq_dsub,
                 passthrough=("cid",),
             )
-            kpath = self._managed_path(f"{name}__codes")
-            codes.sort("cid").write.mode("overwrite").parquet(kpath)
-            self._attach_managed(f"{name}__codes", kpath)
+            self._write_managed(f"{name}__codes", codes.sort("cid"))
 
         meta = {
             "table": table,
@@ -2725,10 +2841,11 @@ class Engine:
             raise ValueError(f"copy_from requires a managed table, got {name!r}")
         target = self.spark.table(name)
         df = read(self.spark, path, fmt=fmt, schema=target.schema, **options)
-        n, = self._check_constraints(name, df, after=target.unionByName(df),
-                                     extra=(F.count(F.lit(1)),))
-        self._append_files(name, df, "copy", snapshot=False)
-        return n
+        self._check_constraints(name, df, after=target.unionByName(df))
+        counts = _RowCounts(self.spark)
+        self._append_files(name, counts.tap("rows", df), "copy",
+                           snapshot=False, counts=counts, changes="rows")
+        return counts.get()["rows"]
 
     def reattach_warehouse(self) -> list[str]:
         """Catalog recovery: re-register every managed table found in
@@ -2897,9 +3014,7 @@ class Engine:
         state = rollup.build_state(
             self.table(source_table), group_cols, specs
         )
-        path = self._managed_path(name)
-        state.coalesce(1).write.mode("overwrite").parquet(path)
-        self._attach_managed(name, path)
+        self._write_managed(name, state.coalesce(1))
         self._rollups[name] = (group_cols, specs)
 
     def rollup_apply_delta(self, name: str, delta: DataFrame) -> None:
@@ -2931,30 +3046,44 @@ class Engine:
         DELETE/UPDATE; at lakehouse scale the identical plan (anti-join
         + union) is what Delta's MERGE executes under the hood.  Errors
         if the source has duplicate keys — SQL MERGE semantics forbid
-        multiple matches for one target row."""
+        multiple matches for one target row. The target, kept and
+        source row counts are observed on the rewrite (updated =
+        target − kept); an empty source commits nothing."""
         target = self.table(name)
-        # persisted: the checks, the counts and the rewrite read the
-        # source once between them
+        # persisted: the checks and the rewrite read the source once
+        # between them
         aligned = source.select(*[F.col(c) for c in target.columns]).persist()
         try:
-            kept = target.join(aligned.select(*on), on=on, how="left_anti")
-            after = kept.unionByName(aligned)
+            keys = aligned.select(*on)
+
+            def merged(tap=lambda _, df: df) -> DataFrame:
+                # the target rows no source key matches, in the target's
+                # column order (a USING join puts the ON columns
+                # first), then the source rows
+                kept = tap("target", target).join(
+                    keys, on=on, how="left_anti").select(*target.columns)
+                return tap("kept", kept).unionByName(tap("source", aligned))
+
             # Source keys are distinct (checked below), so a key holding
             # every ON column cannot be duplicated by the merge.
             keyed = all(set(on) <= set(k) for k in self._keys.get(name, []))
-            # distinct keys counted as structs: count_distinct over the
-            # bare columns would skip keys holding a NULL
-            n_src, n_keys = self._check_constraints(
-                name, aligned, after=None if keyed else after,
-                extra=(F.count(F.lit(1)), F.count_distinct(F.struct(*on))),
-            )
-            if n_keys != n_src:
+            self._check_constraints(
+                name, aligned, after=None if keyed else merged())
+            # groupBy puts NULL keys in one group, so a NULL-holding
+            # key counts as a duplicate like any other
+            dup = keys.groupBy(*on).agg(F.count(F.lit(1)).alias("__n"))
+            if dup.filter(F.col("__n") > 1).limit(1).collect():
                 raise ValueError("merge_upsert: duplicate keys in source")
-            n_updated = target.count() - kept.count()
-            self._rewrite(name, after)
+            # The counts are tapped on a plan of their own: the PK check
+            # above may run an action over merged(), and an observation
+            # reports the first action that carries it.
+            counts = _RowCounts(self.spark)
+            got = self._rewrite(name, merged(counts.tap), counts=counts,
+                                changes="source")
         finally:
             aligned.unpersist()
-        return {"updated": n_updated, "inserted": n_src - n_updated}
+        n_updated = got["target"] - got["kept"]
+        return {"updated": n_updated, "inserted": got["source"] - n_updated}
 
     def close(self) -> None:
         # A user-provided warehouse is durable (persistent catalog +

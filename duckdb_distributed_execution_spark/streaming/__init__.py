@@ -14,34 +14,54 @@ against the batch result.
 
 from __future__ import annotations
 
-import weakref
+import fnmatch
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Accumulated on-disk size of the stream sources opened on each
-# session since the last drain, recorded by the read_*_stream helpers
-# and CONSUMED (popped) by run_to_memory's state-partition sizing.
-# The same file-size statistic the queries' scale gate uses
-# (sources.path_bytes — the stand-in for a catalog's ANALYZE stats).
-# Weak-keyed by the session object (not id(): a GC'd session's id
-# can be reused and alias an unrelated session — r9 advice) and summed across sources (a stream-stream join's backlog
-# is both inputs, not just the last one read).
-_SOURCE_BYTES: "weakref.WeakKeyDictionary[SparkSession, int]" = (
-    weakref.WeakKeyDictionary()
-)
+
+def _source_location(relation) -> tuple[str | None, str | None]:
+    """(``path``, ``pathGlobFilter``) options of a streaming relation
+    node of an analyzed plan; (None, None) for any other node."""
+    kind = relation.nodeName()
+    if kind == "StreamingRelation":  # DataSource v1: the file sources
+        options = relation.dataSource().options()
+
+        def get(key):
+            got = options.get(key)
+            return got.get() if got.isDefined() else None
+    elif kind == "StreamingRelationV2":  # e.g. Python data sources
+        get = relation.extraOptions().get
+    else:
+        return None, None
+    return get("path"), get("pathGlobFilter")
 
 
-def note_stream_source_bytes(spark: SparkSession, path: str) -> None:
-    """Record the on-disk size of a stream source about to be drained
-    on this session — lets run_to_memory size stateful-shuffle
-    partitions from the backlog instead of the session constant.
-    Bytes ACCUMULATE across sources until run_to_memory consumes the
-    total, so multi-source pipelines size from their whole backlog."""
+def stream_source_bytes(stream_df: DataFrame) -> int:
+    """On-disk size of what ``stream_df`` reads, found in its analyzed
+    plan: the ``path`` option of each streaming relation (a file
+    source's directory narrowed by its ``pathGlobFilter``, or a custom
+    source's file such as ``duckdb_remote``'s database). A
+    stream-stream join counts both inputs; a source without a path
+    counts 0. The same file-size statistic the queries' scale gate
+    uses (sources.path_bytes — the stand-in for a catalog's ANALYZE
+    stats)."""
     from duckdb_distributed_execution_spark.sources import path_bytes
 
-    _SOURCE_BYTES[spark] = _SOURCE_BYTES.get(spark, 0) + path_bytes(path)
+    total = 0
+    leaves = stream_df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        path, glob = _source_location(leaves.apply(i))
+        if path is None:
+            continue
+        if glob and os.path.isdir(path):
+            total += sum(path_bytes(os.path.join(path, f))
+                         for f in fnmatch.filter(os.listdir(path), glob))
+        else:
+            total += path_bytes(path)
+    return total
 
 
 def _events_schema(ts_is_nanos: bool) -> T.StructType:
@@ -74,11 +94,8 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     from duckdb_distributed_execution_spark import ensure_worker_pythonpath
 
     ensure_worker_pythonpath(spark)
-    import os
-
     from duckdb_distributed_execution_spark.sources import _nanos_columns
 
-    note_stream_source_bytes(spark, path)
     ts_is_nanos = "ts" in _nanos_columns(path)
     if ts_is_nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -100,9 +117,6 @@ def read_documents_stream(spark: SparkSession, path: str) -> DataFrame:
     from duckdb_distributed_execution_spark import ensure_worker_pythonpath
 
     ensure_worker_pythonpath(spark)
-    import os
-
-    note_stream_source_bytes(spark, path)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -240,7 +254,9 @@ def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete"):
     wave on a toy backlog, i.e. the partition count, not the data, was
     the cost (stream-stream join at sf0.1: 9.2 s at 32 partitions vs
     2.8 s at 4, identical results). So size the stateful shuffle from
-    the recorded source backlog — one partition per 32 MB, floor 4 —
+    the stream's own source backlog (``stream_source_bytes``; a stream
+    built but never drained cannot inflate another drain's sizing) —
+    one partition per 32 MB, floor 4 —
     capped at the session's configured shuffle partitions so a real
     deployment (which sizes that conf for its cluster and its
     per-trigger volume) is left exactly as configured. Results are
@@ -249,15 +265,13 @@ def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete"):
     over partitions either way. The session conf is restored before
     returning (the conf is only read at query start).
 
-    The recorded backlog is CONSUMED here (popped), so a later stream
-    built without a read_*_stream helper never inherits an unrelated
-    earlier stream's size. NOT thread-safe: the conf override is
+    NOT thread-safe: the conf override is
     session-global for the duration of the drain, so a query started
     concurrently on the shared session inherits the reduced partition
     count (single-threaded use — the test/bench pattern — is safe)."""
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    src_bytes = _SOURCE_BYTES.pop(spark, None)
+    src_bytes = stream_source_bytes(stream_df)
     try:
         cap = int(prev)
     except ValueError:  # e.g. "auto" on some vendors' runtimes

@@ -340,12 +340,15 @@ def test_streaming_ppl_screen_matches_batch(spark):
 
 
 def test_run_to_memory_sizes_state_partitions(spark):
-    """r9: run_to_memory sizes the stateful shuffle from the recorded
+    """r9: run_to_memory sizes the stateful shuffle from the stream's
     source backlog (one partition per 32 MB, floor 4, cap = session
     conf) and restores the session conf afterwards. The tiny smoke
-    backlog must run its state operator at the floor; a fake huge
-    backlog must stay at the session cap. The actually-used partition
-    count is read from the terminated query's progress."""
+    backlog must run its state operator at the floor; a session conf
+    below the floor caps it; a source without a path leaves the
+    session conf in force. The actually-used partition count is read
+    from the terminated query's progress."""
+    from pyspark.sql import functions as F
+
     events_path = os.path.join(SF_SMOKE, "events.parquet")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     cap = int(prev)
@@ -360,22 +363,25 @@ def test_run_to_memory_sizes_state_partitions(spark):
     assert state_partitions(q) == 4
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
-    # The drain CONSUMES the recorded backlog (r10 advice: a later
-    # stream without a read_*_stream helper must not inherit it).
-    assert S._SOURCE_BYTES.get(spark) is None
+    # Session conf below the floor → the cap wins.
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        stream = S.windowed_event_counts(
+            S.read_events_stream(spark, events_path))
+        q = S.run_to_memory(stream, "sized_cap_sink")
+        assert state_partitions(q) == 2
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    # Fake huge backlog → cap at the session conf (read_events_stream
-    # recorded the real size at plan build; force the fake afterwards).
-    stream = S.windowed_event_counts(S.read_events_stream(spark, events_path))
-    S._SOURCE_BYTES[spark] = 100 << 30
-    q = S.run_to_memory(stream, "sized_cap_sink")
-    assert state_partitions(q) == cap
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-
-    # No recorded source → conf untouched (session default applies).
-    stream = S.windowed_event_counts(S.read_events_stream(spark, events_path))
-    S._SOURCE_BYTES.pop(spark, None)
-    q = S.run_to_memory(stream, "sized_none_sink")
+    # No source path (a generated stream) → conf untouched.
+    ticks = spark.readStream.format("rate-micro-batch").option(
+        "rowsPerBatch", 10).load()
+    assert S.stream_source_bytes(ticks) == 0
+    q = S.run_to_memory(
+        ticks.groupBy((F.col("value") % 3).alias("k")).count(),
+        "sized_none_sink",
+    )
     assert state_partitions(q) == cap
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
@@ -384,7 +390,8 @@ def test_state_sizing_holds_across_micro_batches(spark, tmp_path):
     """r10 verdict item 9: the backlog-derived state-partition sizing
     is read once at query start and holds for EVERY micro-batch of a
     multi-batch drain (maxFilesPerTrigger=1 over a multi-file source),
-    and the session conf is restored afterwards."""
+    and the session conf is restored afterwards. The source is a plain
+    readStream: run_to_memory finds its directory in the plan."""
     events_path = os.path.join(SF_SMOKE, "events.parquet")
     src = str(tmp_path / "events_multi")
     spark.read.parquet(events_path).repartition(3).write.parquet(src)
@@ -394,7 +401,6 @@ def test_state_sizing_holds_across_micro_batches(spark, tmp_path):
     stream = S.windowed_event_counts(
         reader.option("maxFilesPerTrigger", 1).parquet(src)
     )
-    S.note_stream_source_bytes(spark, src)
     q = S.run_to_memory(stream, "multi_batch_sink")
 
     progresses = [p for p in q.recentProgress if p["stateOperators"]]
@@ -408,12 +414,31 @@ def test_state_sizing_holds_across_micro_batches(spark, tmp_path):
 def test_source_bytes_accumulate_across_sources(spark):
     """r10 advice: a multi-source pipeline (stream-stream join) sizes
     its stateful shuffle from the SUM of its sources' backlogs, not
-    just the last one read."""
+    just the last one read; the file source counts only the file its
+    glob filter admits."""
+    from duckdb_distributed_execution_spark.sources import path_bytes
+
     events_path = os.path.join(SF_SMOKE, "events.parquet")
-    S._SOURCE_BYTES.pop(spark, None)
-    S.read_events_stream(spark, events_path)
-    one = S._SOURCE_BYTES.get(spark)
-    assert one and one > 0
-    S.read_events_stream(spark, events_path)
-    assert S._SOURCE_BYTES.get(spark) == 2 * one
-    S._SOURCE_BYTES.pop(spark, None)
+    clicks = S.read_events_stream(spark, events_path)
+    purchases = S.read_events_stream(spark, events_path)
+    one = S.stream_source_bytes(clicks)
+    assert one == path_bytes(events_path) > 0
+    joined = S.stream_stream_join(clicks, purchases)
+    assert S.stream_source_bytes(joined) == 2 * one
+
+
+def test_undrained_stream_does_not_inflate_next_drain(spark, tmp_path):
+    """ROADMAP small fix: a stream that is built but never drained must
+    not count toward another stream's sizing. The undrained stream
+    reads a (sparse) 1 GiB file — enough for 32 partitions — while the
+    drained one reads the smoke events and must run at the floor."""
+    big = tmp_path / "big"
+    big.mkdir()
+    with open(big / "docs.parquet", "wb") as fh:
+        fh.truncate(1 << 30)
+    S.read_documents_stream(spark, str(big / "docs.parquet"))
+
+    events_path = os.path.join(SF_SMOKE, "events.parquet")
+    stream = S.windowed_event_counts(S.read_events_stream(spark, events_path))
+    q = S.run_to_memory(stream, "undrained_neighbour_sink")
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 4

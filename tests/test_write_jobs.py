@@ -1,0 +1,131 @@
+"""Spark jobs per managed-table write.
+
+On a small table every write job is driver round trip, so the job
+count is the write's latency. Each op runs under its own job group and
+the status tracker counts the jobs it started:
+
+* DELETE and UPDATE (SET columns without rules) rewrite a small table
+  whole in one job; the deleted/updated count is observed on that
+  write, and neither the rewrite nor the view re-registration infers
+  a schema.
+* INSERT keeps its PRIMARY KEY pass (source cache stage, key shuffle,
+  key result) and one write.
+* MERGE adds the source-key check and the anti-join write.
+
+The sources declare ``qty`` non-nullable, as a typed client batch
+does, so the NOT NULL rule folds away and costs no job.
+* At or above ``_COMPACT_BYTES`` DELETE still probes which files hold
+  matches.
+"""
+
+from __future__ import annotations
+
+import decimal
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+DDL = ("id BIGINT PRIMARY KEY, qty INTEGER NOT NULL, "
+       "price DECIMAL(12,2), tag VARCHAR")
+
+
+SCHEMA = T.StructType([
+    T.StructField("id", T.LongType(), False),
+    T.StructField("qty", T.IntegerType(), False),
+    T.StructField("price", T.DecimalType(12, 2), True),
+    T.StructField("tag", T.StringType(), True),
+])
+
+
+def _rows(spark, lo, hi):
+    return spark.createDataFrame(
+        [(i, i % 100, decimal.Decimal(i) / 4, "abcd"[i % 4])
+         for i in range(lo, hi)],
+        SCHEMA,
+    )
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"write-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def eng(spark, tmp_path):
+    from duckdb_distributed_execution_spark import Engine
+
+    e = Engine(spark, num_workers=4, warehouse=str(tmp_path / "wh"))
+    e.create_table("wj_t", DDL)
+    e.insert_into("wj_t", _rows(spark, 0, 400))
+    yield e
+    e.drop_table("wj_t", if_exists=True)
+    e.close()
+
+
+def test_small_table_write_job_budget(spark, eng):
+    n, jobs = _jobs(spark, lambda: eng.delete_from("wj_t", "id % 7 = 3"))
+    assert (n, jobs) == (57, 1)
+
+    n, jobs = _jobs(spark, lambda: eng.update_table(
+        "wj_t", {"price": "price + 1"}, "tag = 'b' AND qty < 50"))
+    assert n > 0 and jobs == 1
+
+    _, jobs = _jobs(spark, lambda: eng.insert_into(
+        "wj_t", _rows(spark, 400, 450)))
+    assert jobs <= 4
+
+    got, jobs = _jobs(spark, lambda: eng.merge_upsert(
+        "wj_t", _rows(spark, 440, 460), ["id"]))
+    assert got == {"updated": 10, "inserted": 10}
+    assert jobs <= 5
+    assert eng.table("wj_t").count() == 400 - 57 + 50 + 10
+
+
+def test_large_table_delete_still_probes(spark, eng):
+    """At or above the compaction threshold a DELETE probes which files
+    hold matches (one aggregate over ``_metadata.file_path``) and
+    rewrites only those."""
+    eng._COMPACT_BYTES = 0
+    eng.insert_into("wj_t", _rows(spark, 400, 500).coalesce(1))
+    files = eng._managed_files("wj_t")
+    assert len(files) >= 2
+    calls = []
+    real = eng._matched_files
+
+    def probe(name, condition):
+        calls.append(condition)
+        return real(name, condition)
+
+    eng._matched_files = probe
+    n, jobs = _jobs(spark, lambda: eng.delete_from("wj_t", "id >= 450"))
+    assert n == 50 and calls == ["id >= 450"]
+    # the probe's aggregate on top of the rewrite of the one matched file
+    assert jobs >= 2
+    assert files[0] in eng._managed_files("wj_t"), "unmatched file kept"
+
+
+def test_expect_row_rules_one_pass(spark, eng):
+    """expect() folds its row rules into one aggregate: three rules,
+    two of them violated, cost the jobs of one global aggregate."""
+    rules = [{"not_null": "tag"},
+             {"accepted_values": ("tag", ["a", "b"])},
+             {"in_range": ("qty", 0, 49)}]
+    _, one_agg = _jobs(
+        spark, lambda: eng.table("wj_t").agg(F.count(F.lit(1))).collect())
+    out, jobs = _jobs(spark, lambda: eng.expect("wj_t", rules))
+    assert jobs == one_agg
+    got = {(r.rule, r.target): (r.n_violations, r.sample) for r in out.collect()}
+    assert got[("not_null", "tag")] == (0, "")
+    assert got[("accepted_values", "tag")][0] == 200
+    assert got[("in_range", "qty")][0] == 200
+    assert got[("in_range", "qty")][1].startswith("(")
