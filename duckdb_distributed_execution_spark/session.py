@@ -146,10 +146,12 @@ class _RowCounts:
     (``DataFrame.observe``): the staged write computes them, so they
     cost no Spark job of their own. Tap each counted relation while
     building the written plan; read the counts once the write ran.
-    ``spark`` is the session that runs the write."""
+    ``spark`` is the session that runs the write; ``changes`` names the
+    tap whose zero count means the write changed nothing."""
 
-    def __init__(self, spark: SparkSession) -> None:
+    def __init__(self, spark: SparkSession, changes: str) -> None:
         self._session = spark._jsparkSession
+        self._changes = changes
         self._taps: dict[
             str, tuple[Observation | None, DataFrame, Column | None]] = {}
         self._got: dict[str, int] | None = None
@@ -183,6 +185,10 @@ class _RowCounts:
                     rows = df if where is None else df.filter(where)
                     self._got[name] = rows.count()
         return self._got
+
+    def changed(self) -> bool:
+        """Whether the write changed any row (after it ran)."""
+        return bool(self.get()[self._changes])
 
     @staticmethod
     def _observed(obs: Observation | None) -> int | None:
@@ -942,42 +948,44 @@ class Engine:
     def _rewrite(self, name: str, rows, op: str = "rewrite",
                  files: list[str] | None = None,
                  compact: bool = True,
-                 counts: _RowCounts | None = None,
-                 changes: str | None = None) -> dict[str, int]:
+                 counts: _RowCounts | None = None) -> dict[str, int]:
         """THE copy-on-write commit of a managed table (parquet files
         are immutable; ALTER/DELETE/UPDATE/MERGE rewrite, as a lakehouse
         format does): swap the live ``files`` (default: all) for the
         files of ``rows`` — a DataFrame, or a function of the replaced
-        rows (read through the table's view when all are replaced).
-        Other files stay byte-identical.
+        rows. Other files stay byte-identical. A function reads exactly
+        the files the commit replaces, listed by the manifest version
+        the CAS builds on, so a file another process committed since
+        this engine attached its view is read and carried over, not
+        dropped.
 
         Stage, observe, validate, then CAS. The new files are fully
         written first, invisible because no manifest lists them. The
         row ``counts`` tapped on ``rows`` are read off that same write
-        (no job of their own). A write whose ``changes`` count is zero
-        changed nothing: its staged files are unlinked and it returns
-        without a snapshot or a commit. Otherwise the prior state is
+        (no job of their own). A write whose counts show no changed
+        row (``_RowCounts.changed``) unlinks its staged files and
+        returns without a snapshot or a commit. Otherwise the prior state is
         snapshotted (hardlinks) for time travel, one atomic manifest
         CAS publishes the swap, and superseded files are unlinked after
         the commit (their inodes live on in the snapshot). Returns the
         counts."""
         t = self._require_managed(name)
-        whole = files is None or set(files) >= set(self._managed_files(name))
+        m = self._adopt_manifest(t.path)
+        base = os.path.realpath(t.path)
+        live = [os.path.join(base, f) for f in m["files"]]
+        whole = files is None or set(files) >= set(live)
         if not isinstance(rows, DataFrame):
-            rows = rows(self._scan(name, None if whole else files))
+            rows = rows(self._scan(name, live if whole else files))
         if whole and compact and self._small(name):
             rows = rows.coalesce(1)
-        m = self._adopt_manifest(t.path)
         new = self._ingest_files(t.path, rows, m["version"] + 1)
         got = counts.get() if counts is not None else {}
-        if changes is not None and not got[changes]:
+        if counts is not None and not counts.changed():
             _unlink(os.path.join(t.path, f) for f in new)
             return got
         self._snapshot(name, op)
-        base = os.path.realpath(t.path)
         gone = (
-            {os.path.join(base, f) for f in m["files"]} if whole
-            else {os.path.realpath(p) for p in files}
+            set(live) if whole else {os.path.realpath(p) for p in files}
         )
         kept = [f for f in m["files"] if os.path.join(base, f) not in gone]
         # One CAS publishes the version after the one the rewrite read
@@ -990,13 +998,10 @@ class Engine:
         self._attach_managed(name, t.path, rows.schema)
         return got
 
-    def _scan(self, name: str, files: list[str] | None = None) -> DataFrame:
-        """The rows of a managed table's ``files`` (default: the live
-        table, through its view), read with the view's schema."""
-        view = self.table(name)
-        if files is None:
-            return view
-        return self.spark.read.schema(view.schema).parquet(*files)
+    def _scan(self, name: str, files: list[str]) -> DataFrame:
+        """The rows of a managed table's ``files``, read with the view's
+        schema (no schema-inference job)."""
+        return self.spark.read.schema(self.table(name).schema).parquet(*files)
 
     def _require_managed(self, name: str,
                          verb: str = "DELETE") -> RegisteredTable:
@@ -1023,15 +1028,14 @@ class Engine:
     def _append_files(self, name: str, df: DataFrame, op: str,
                       snapshot: bool = True,
                       txn: tuple[str, int] | None = None,
-                      counts: _RowCounts | None = None,
-                      changes: str | None = None) -> bool:
+                      counts: _RowCounts | None = None) -> bool:
         """Atomic append: the new files land under the next version's
         names first, then ONE manifest rename makes them visible — a
         reader never sees a partially-written append (the old
         mode('append') write exposed in-progress part files to
-        directory-listing readers). ``counts`` and ``changes`` work as
-        in ``_rewrite``: an append whose ``changes`` count is zero
-        unlinks its staged files and commits nothing.
+        directory-listing readers). ``counts`` work as in
+        ``_rewrite``: an append that changed no row unlinks its staged
+        files and commits nothing.
         ``txn=(app_id, version)`` makes the append IDEMPOTENT per
         application transaction (replayed streaming micro-batches
         commit at most once — the txns map travels in the same
@@ -1043,7 +1047,7 @@ class Engine:
         m = self._adopt_manifest(t.path)
         new = self._ingest_files(t.path, df, m["version"] + 1)
         staged = [os.path.join(t.path, f) for f in new]
-        if changes is not None and not counts.get()[changes]:
+        if counts is not None and not counts.changed():
             _unlink(staged)
             return False
         if snapshot:
@@ -1066,16 +1070,16 @@ class Engine:
         from duckdb_distributed_execution_spark.typemap import duckdb_to_spark
 
         dt = duckdb_to_spark(type_str)
-        df = self.table(name).withColumn(col, F.lit(default).cast(dt))
-        self._rewrite(name, df)
+        self._rewrite(
+            name, lambda cur: cur.withColumn(col, F.lit(default).cast(dt)))
 
     @_ddl
     def drop_column(self, name: str, col: str) -> None:
-        self._rewrite(name, self.table(name).drop(col))
+        self._rewrite(name, lambda cur: cur.drop(col))
 
     @_ddl
     def rename_column(self, name: str, old: str, new: str) -> None:
-        self._rewrite(name, self.table(name).withColumnRenamed(old, new))
+        self._rewrite(name, lambda cur: cur.withColumnRenamed(old, new))
 
     @_ddl
     def rename_table(self, old: str, new: str) -> None:
@@ -1119,7 +1123,8 @@ class Engine:
         from duckdb_distributed_execution_spark.typemap import duckdb_to_spark
 
         dt = duckdb_to_spark(type_str)
-        self._rewrite(name, self.table(name).withColumn(col, F.col(col).cast(dt)))
+        self._rewrite(
+            name, lambda cur: cur.withColumn(col, F.col(col).cast(dt)))
 
     @_ddl
     def create_bucketed_table(
@@ -1191,7 +1196,8 @@ class Engine:
             after = target.unionByName(aligned)
             self._check_constraints(name, aligned, after=after)
             if self._small(name):
-                self._rewrite(name, after, op="insert")
+                self._rewrite(name, lambda cur: cur.unionByName(aligned),
+                              op="insert")
             else:
                 self._append_files(name, aligned, "insert")
         finally:
@@ -1672,15 +1678,16 @@ class Engine:
         # this table — capture the doomed ids BEFORE the files go
         # (localCheckpoint pins them), tombstone after the commit
         idx_deletes = [
-            (iname, self._scan(name, matched).filter(cond)
+            (iname, self._scan(name, matched or self._managed_files(name))
+             .filter(cond)
              .select(imeta["id_col"]).localCheckpoint())
             for iname, imeta in self._vector_indexes.items()
             if imeta["table"] == name
         ]
-        counts = _RowCounts(self.spark)
+        counts = _RowCounts(self.spark, changes="deleted")
         n_deleted = self._rewrite(
             name, lambda src: counts.tap("deleted", src, cond).filter(keep),
-            op="delete", files=matched, counts=counts, changes="deleted",
+            op="delete", files=matched, counts=counts,
         )["deleted"]
         if n_deleted:
             for iname, ids in idx_deletes:
@@ -1722,10 +1729,10 @@ class Engine:
                 return 0
         self._check_constraints(name, apply(target.filter(cond)),
                                 cols=set(set_exprs), after=apply(target))
-        counts = _RowCounts(self.spark)
+        counts = _RowCounts(self.spark, changes="updated")
         return self._rewrite(
             name, lambda src: apply(counts.tap("updated", src, cond)),
-            op="update", files=matched, counts=counts, changes="updated",
+            op="update", files=matched, counts=counts,
         )["updated"]
 
     def summarize(self, name: str) -> DataFrame:
@@ -1860,7 +1867,8 @@ class Engine:
             *[F.max(F.col(c)).alias(c) for c in columns]
         ).collect()[0]
         max_vals = [max(int(maxes[c] or 0), 1) for c in columns]
-        self._rewrite(name, zorder_rewrite(df, columns, max_vals))
+        self._rewrite(
+            name, lambda cur: zorder_rewrite(cur, columns, max_vals))
 
     def copy_to(self, query: str, path: str, fmt: str = "parquet",
                 partition_by: list[str] | None = None,
@@ -2842,9 +2850,9 @@ class Engine:
         target = self.spark.table(name)
         df = read(self.spark, path, fmt=fmt, schema=target.schema, **options)
         self._check_constraints(name, df, after=target.unionByName(df))
-        counts = _RowCounts(self.spark)
+        counts = _RowCounts(self.spark, changes="rows")
         self._append_files(name, counts.tap("rows", df), "copy",
-                           snapshot=False, counts=counts, changes="rows")
+                           snapshot=False, counts=counts)
         return counts.get()["rows"]
 
     def reattach_warehouse(self) -> list[str]:
@@ -2983,7 +2991,7 @@ class Engine:
             raise ValueError("compact_table requires a managed table")
         before = len(self._managed_files(name))
         n = max(1, -(-self._live_bytes(name) // target_file_bytes))
-        self._rewrite(name, self.table(name).repartition(n), op="compact",
+        self._rewrite(name, lambda cur: cur.repartition(n), op="compact",
                       compact=False)
         return {
             "files_before": before,
@@ -3024,13 +3032,9 @@ class Engine:
         from duckdb_distributed_execution_spark.operators import rollup
 
         group_cols, specs = self._rollups[name]
-        new_state = rollup.merge_states(
-            self.table(name),
-            rollup.build_state(delta, group_cols, specs),
-            group_cols,
-            specs,
-        )
-        self._rewrite(name, new_state)
+        delta_state = rollup.build_state(delta, group_cols, specs)
+        self._rewrite(name, lambda cur: rollup.merge_states(
+            cur, delta_state, group_cols, specs))
 
     def rollup_read(self, name: str) -> DataFrame:
         """Finalized user-facing aggregate values from stored state."""
@@ -3056,11 +3060,11 @@ class Engine:
         try:
             keys = aligned.select(*on)
 
-            def merged(tap=lambda _, df: df) -> DataFrame:
-                # the target rows no source key matches, in the target's
-                # column order (a USING join puts the ON columns
-                # first), then the source rows
-                kept = tap("target", target).join(
+            def merged(cur: DataFrame, tap=lambda _, df: df) -> DataFrame:
+                # the rows of ``cur`` no source key matches, in the
+                # target's column order (a USING join puts the ON
+                # columns first), then the source rows
+                kept = tap("target", cur).join(
                     keys, on=on, how="left_anti").select(*target.columns)
                 return tap("kept", kept).unionByName(tap("source", aligned))
 
@@ -3068,7 +3072,7 @@ class Engine:
             # every ON column cannot be duplicated by the merge.
             keyed = all(set(on) <= set(k) for k in self._keys.get(name, []))
             self._check_constraints(
-                name, aligned, after=None if keyed else merged())
+                name, aligned, after=None if keyed else merged(target))
             # groupBy puts NULL keys in one group, so a NULL-holding
             # key counts as a duplicate like any other
             dup = keys.groupBy(*on).agg(F.count(F.lit(1)).alias("__n"))
@@ -3077,9 +3081,9 @@ class Engine:
             # The counts are tapped on a plan of their own: the PK check
             # above may run an action over merged(), and an observation
             # reports the first action that carries it.
-            counts = _RowCounts(self.spark)
-            got = self._rewrite(name, merged(counts.tap), counts=counts,
-                                changes="source")
+            counts = _RowCounts(self.spark, changes="source")
+            got = self._rewrite(name, lambda cur: merged(cur, counts.tap),
+                                counts=counts)
         finally:
             aligned.unpersist()
         n_updated = got["target"] - got["kept"]

@@ -339,14 +339,17 @@ def test_streaming_ppl_screen_matches_batch(spark):
     assert 0 < len(got) <= 0.11 * len(batch)
 
 
-def test_run_to_memory_sizes_state_partitions(spark):
+def test_run_to_memory_sizes_state_partitions(spark, tmp_path):
     """r9: run_to_memory sizes the stateful shuffle from the stream's
     source backlog (one partition per 32 MB, floor 4, cap = session
     conf) and restores the session conf afterwards. The tiny smoke
-    backlog must run its state operator at the floor; a session conf
-    below the floor caps it; a source without a path leaves the
-    session conf in force. The actually-used partition count is read
-    from the terminated query's progress."""
+    backlog must run its state operator at the floor; a huge backlog
+    at the session cap; a session conf below the floor caps it; a
+    source without a path leaves the session conf in force. The
+    actually-used partition count is read from the terminated query's
+    progress."""
+    import shutil
+
     from pyspark.sql import functions as F
 
     events_path = os.path.join(SF_SMOKE, "events.parquet")
@@ -361,6 +364,20 @@ def test_run_to_memory_sizes_state_partitions(spark):
     stream = S.windowed_event_counts(S.read_events_stream(spark, events_path))
     q = S.run_to_memory(stream, "sized_floor_sink")
     assert state_partitions(q) == 4
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+    # Huge backlog (100 GiB) → the session cap. The directory holds the
+    # smoke events plus a sparse ``_pad`` file: the backlog counts it,
+    # Spark's file source skips ``_``-prefixed files.
+    huge = tmp_path / "huge"
+    huge.mkdir()
+    shutil.copy(events_path, huge / "events.parquet")
+    with open(huge / "_pad", "wb") as fh:
+        fh.truncate(100 << 30)
+    stream = S.windowed_event_counts(S.read_events_stream(spark, str(huge)))
+    assert S.stream_source_bytes(stream) > 100 << 30
+    q = S.run_to_memory(stream, "sized_huge_sink")
+    assert state_partitions(q) == cap
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
     # Session conf below the floor → the cap wins.

@@ -64,6 +64,50 @@ def test_writes_changing_nothing_commit_nothing(spark, eng, tmp_path):
     assert _rows(eng, "we_t") == rows
 
 
+def _append_externally(eng, name, rows):
+    """Commit ``rows`` the way another process appends to the table
+    (a parquet file plus manifest.commit_append), unseen by ``eng``'s
+    view."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = eng._tables[name].path
+    ids, codes, vs = zip(*rows)
+    pq.write_table(pa.table({
+        "id": pa.array(ids, pa.int64()),
+        "code": pa.array(codes, pa.int32()),
+        "v": pa.array(vs, pa.string()),
+    }), os.path.join(path, "external-0.parquet"))
+    manifest.commit_append(path, ["external-0.parquet"], "external append")
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "insert", "merge",
+                                "add_column"])
+def test_whole_rewrite_keeps_rows_appended_by_another_process(spark, eng,
+                                                              op):
+    """A small-table write rewrites every live file. It must read the
+    files of the manifest it commits over, not this engine's view: a
+    file another process appended since the view was attached is
+    carried into the new version, not dropped."""
+    ext = [(500, 5000, "ext500"), (501, 5010, "ext501")]
+    _append_externally(eng, "we_t", ext)
+    assert eng._small("we_t")
+    if op == "delete":
+        assert eng.delete_from("we_t", "id < 2") == 2
+    elif op == "update":
+        assert eng.update_table("we_t", {"v": "'u'"}, "id < 2") == 2
+    elif op == "insert":
+        eng.insert_values("we_t", [(600, 6000, "ins")])
+    elif op == "merge":
+        assert eng.merge_upsert("we_t", spark.createDataFrame(
+            [(0, 1, "m")], SCHEMA), on=["id"]) == {
+                "updated": 1, "inserted": 0}
+    else:
+        eng.add_column("we_t", "extra", "INTEGER", default=1)
+    got = {r["id"]: r["v"] for r in eng.table("we_t").collect()}
+    assert got[500] == "ext500" and got[501] == "ext501"
+
+
 def test_delete_all_then_merge(spark, eng):
     assert eng.delete_from("we_t", "true") == 20
     assert _rows(eng, "we_t") == []
