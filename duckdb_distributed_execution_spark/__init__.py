@@ -31,7 +31,11 @@ Catalyst planner, shuffle service and partial/final aggregation
 
 from pyspark.files import SparkFiles as _SparkFiles
 
-from duckdb_distributed_execution_spark.session import Engine
+from duckdb_distributed_execution_spark.session import (
+    _PACKAGE_PARENT,
+    Engine,
+    _unlink,
+)
 
 if _SparkFiles._is_running_on_worker:
     # Imported by a Spark Python worker: stop its per-task zip directory
@@ -48,18 +52,19 @@ _PYFILES_ADDED: set[str] = set()
 
 
 def ensure_worker_pythonpath(spark) -> None:
-    """Ship this package to Spark's Python workers via ``addPyFile``.
+    """Make this package importable in Spark's Python workers.
 
     Operators that send Python closures to executors (the
     ``duckdb_remote`` Python DataSource, ``mapInPandas`` multimodal
     decode, ``applyInPandas`` sessionization) reference module-level
     helpers, which cloudpickle serializes BY REFERENCE — the worker
-    process must be able to import the package. That import only
-    works for free when the driver's CWD is the repo root (workers
-    inherit it on sys.path); a harness launched from anywhere else
-    gets ``ModuleNotFoundError`` in the worker. Zipping the package
-    once per SparkContext and ``addPyFile``-ing it makes worker-side
-    imports location-independent. Idempotent per application."""
+    process must be able to import the package. Sessions built by
+    ``session.local_session`` already list the package's parent on
+    ``spark.executorEnv.PYTHONPATH``. Any other session (the driver's
+    CWD is on the workers' path only when it is the repo root) gets the
+    package zipped and ``addPyFile``-d once per application; the zip is
+    removed at interpreter exit."""
+    import atexit
     import os
     import shutil
     import tempfile
@@ -68,15 +73,14 @@ def ensure_worker_pythonpath(spark) -> None:
     key = sc.applicationId
     if key in _PYFILES_ADDED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    base = os.path.join(
-        tempfile.gettempdir(), f"dde_spark_pkg_{os.getpid()}"
-    )
-    zip_path = shutil.make_archive(
-        base,
-        "zip",
-        root_dir=os.path.dirname(pkg_dir),
-        base_dir=os.path.basename(pkg_dir),
-    )
-    sc.addPyFile(zip_path)
+    worker_path = sc.getConf().get("spark.executorEnv.PYTHONPATH") or ""
+    if _PACKAGE_PARENT not in worker_path.split(os.pathsep):
+        zip_path = shutil.make_archive(
+            os.path.join(tempfile.gettempdir(), f"dde_spark_pkg_{os.getpid()}"),
+            "zip",
+            root_dir=_PACKAGE_PARENT,
+            base_dir=__name__,
+        )
+        atexit.register(_unlink, [zip_path])
+        sc.addPyFile(zip_path)
     _PYFILES_ADDED.add(key)

@@ -71,10 +71,62 @@ TESTDATA_TABLES = (
 _ENGINE_STAGED_RE = re.compile(r"v\d+-part-.*\.parquet$")
 
 # The directory holding this package: the Python workers' PYTHONPATH
-# in sessions Engine.start_local builds.
+# in sessions local_session builds.
 _PACKAGE_PARENT = os.path.dirname(
     os.path.dirname(os.path.abspath(__file__))
 )
+
+
+def local_cores() -> int:
+    """Cores a local session runs on: $SPARK_GRAFT_CPUS, else the CPUs
+    this process may use."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def local_session(master: str | None = None, app_name: str = "dde-spark",
+                  conf: dict[str, str] | None = None) -> SparkSession:
+    """The one place a Spark session is built (≈
+    duckherder_start_local_server). ``master`` defaults to
+    ``local[local_cores()]``. ``conf`` overrides any setting below."""
+    settings = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+        # The generated-class cache defaults to 100 entries, far too
+        # few for a query mix whose plans hold several hundred codegen
+        # units: the big stages were Janino-recompiled every pass
+        # (measured +50 % wall on the 17 headline queries). Static.
+        "spark.sql.codegen.cache.maxEntries": "5000",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Every task of a local session is process-local anyway.
+        "spark.locality.wait": "0s",
+        "spark.sql.shuffle.partitions": str(local_cores()),
+        "spark.driver.memory": _driver_memory(),
+    }
+    builder = SparkSession.builder.appName(app_name)
+    # Under spark-submit the JVM exists already: its master stands, and
+    # as its workers may not see this checkout, the package reaches
+    # them as ensure_worker_pythonpath's zip.
+    if master is not None or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(master or f"local[{local_cores()}]")
+        # Every Python worker forks from a daemon that first stops the
+        # per-task zip directory re-reads (pyworker); workers import it
+        # from this checkout whatever the driver's CWD, so
+        # ensure_worker_pythonpath ships no zip to these sessions.
+        settings["spark.python.daemon.module"] = (
+            "duckdb_distributed_execution_spark.pyworker")
+        settings["spark.executorEnv.PYTHONPATH"] = _PACKAGE_PARENT
+    spark = builder.config(map={**settings, **(conf or {})}).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def _driver_memory() -> str:
+    """Half of physical RAM, at most 8 GiB."""
+    with open("/proc/meminfo") as f:
+        total_kb = int(f.readline().split()[1])
+    return f"{max(1, min(8, total_kb // (2 * 1024 * 1024)))}g"
 
 
 from duckdb_distributed_execution_spark.functions import (
@@ -237,10 +289,8 @@ class IndexEntry:
 
 
 class Engine:
-    def __init__(self, spark: SparkSession, num_workers: int | None = None,
-                 warehouse: str | None = None):
+    def __init__(self, spark: SparkSession, warehouse: str | None = None):
         self.spark = spark
-        self.num_workers = num_workers or spark.sparkContext.defaultParallelism
         self._tables: dict[str, RegisteredTable] = {}
         self._indexes: dict[str, IndexEntry] = {}
         # ALTER COLUMN SET/DROP DEFAULT and NOT NULL bookkeeping
@@ -272,7 +322,7 @@ class Engine:
         )
 
         ensure_worker_pythonpath(spark)
-        self.recorder = QueryRecorder(spark, self.num_workers)
+        self.recorder = QueryRecorder(spark)
         self._warehouse = warehouse or tempfile.mkdtemp(prefix="dde_spark_wh_")
         # An engine OWNS (and deletes on close) only a warehouse it
         # created itself; an explicit warehouse is durable across
@@ -292,34 +342,14 @@ class Engine:
     # Session bootstrap (≈ duckherder_start_local_server)
     # ------------------------------------------------------------------
     @classmethod
-    def start_local(cls, workers: int = 4, app_name: str = "dde-spark",
-                    shuffle_partitions: int | None = None) -> "Engine":
-        builder = (
-            SparkSession.builder.master(f"local[{workers}]")
-            .appName(app_name)
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config(
-                "spark.sql.shuffle.partitions",
-                str(shuffle_partitions or max(workers * 4, 4)),
-            )
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.ui.enabled", "false")
-            # Static conf: size the generated-class cache for a wide
-            # query mix (default 100 entries recompiles constantly on
-            # a several-hundred-plan workload — measured +50% wall on
-            # the 17-query bench; harmless when fewer plans run).
-            .config("spark.sql.codegen.cache.maxEntries", "5000")
-            # Every Python worker forks from a daemon that first stops
-            # the per-task zip directory re-reads (pyworker); workers
-            # import it from this checkout whatever the driver's CWD.
-            .config("spark.python.daemon.module",
-                    "duckdb_distributed_execution_spark.pyworker")
-            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
-        )
-        spark = builder.getOrCreate()
-        return cls(spark, num_workers=workers)
+    def start_local(cls, workers: int = 4,
+                    app_name: str = "dde-spark") -> "Engine":
+        """An engine on a ``local[workers]`` session with
+        ``max(workers * 4, 4)`` shuffle partitions."""
+        return cls(local_session(
+            f"local[{workers}]", app_name,
+            {"spark.sql.shuffle.partitions": str(max(workers * 4, 4))},
+        ))
 
     # ------------------------------------------------------------------
     # Table registry (≈ duckherder_register_remote_table)
@@ -633,7 +663,7 @@ class Engine:
         (distributed_server_function.cpp:243-262): the number of
         parallel workers — here Spark's executor-slot parallelism for
         the session."""
-        return self.num_workers
+        return self.spark.sparkContext.defaultParallelism
 
     @_ddl
     def load_extension(self, extension: str) -> None:

@@ -124,9 +124,8 @@ class QueryRecorder:
     surface as the reference's query_recorder.cpp ring (``clear()`` to
     reset)."""
 
-    def __init__(self, spark: SparkSession, num_workers: int):
+    def __init__(self, spark: SparkSession):
         self._spark = spark
-        self._num_workers = num_workers
         self._records: deque[QueryExecutionInfo] = deque(
             maxlen=RECORDER_MAX_RECORDS
         )
@@ -138,7 +137,9 @@ class QueryRecorder:
             execution_mode=mode,
             merge_strategy=merge,
             query_duration_ms=duration_ms,
-            num_workers_used=min(self._num_workers, max(tasks, 1)),
+            num_workers_used=min(
+                self._spark.sparkContext.defaultParallelism, max(tasks, 1)
+            ),
             num_tasks_generated=tasks,
             execution_start_time=_dt.datetime.now(),
         )

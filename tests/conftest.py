@@ -13,29 +13,16 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from duckdb_distributed_execution_spark.session import local_session
 
-    s = (
-        SparkSession.builder.master("local[8]")
-        .appName("dde-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        # The suite compiles hundreds of distinct codegen units; the
-        # default 100-entry class cache thrashes (see bench.py).
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
+    yield local_session(app_name="dde-spark-tests")
 
 
 @pytest.fixture(scope="session")
 def engine(spark):
     from duckdb_distributed_execution_spark import Engine
 
-    eng = Engine(spark, num_workers=4)
+    eng = Engine(spark)
     yield eng
     eng.close()
 

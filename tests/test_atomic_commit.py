@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 def eng(spark):
     from duckdb_distributed_execution_spark import Engine
 
-    e = Engine(spark, num_workers=4)
+    e = Engine(spark)
     e._COMPACT_BYTES = 0  # keep multi-file layouts (production shape)
     yield e
     e.close()

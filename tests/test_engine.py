@@ -132,7 +132,7 @@ def test_query_recorder_is_bounded(spark, monkeypatch):
     from duckdb_distributed_execution_spark import stats
 
     monkeypatch.setattr(stats, "RECORDER_MAX_RECORDS", 3)
-    rec = stats.QueryRecorder(spark, num_workers=4)
+    rec = stats.QueryRecorder(spark)
     for i in range(5):
         rec.record(f"q{i}", spark.range(1), duration_ms=i)
     assert len(rec) == 3
@@ -587,7 +587,7 @@ def test_worker_count_and_extensions(engine):
     analogs (distributed_server_function.cpp:243-281)."""
     import pytest
 
-    assert engine.get_worker_count() == engine.num_workers > 0
+    assert engine.get_worker_count() == engine.spark.sparkContext.defaultParallelism > 0
     engine.load_extension("httpfs")
     engine.load_extension("json")
     engine.load_extension("httpfs")  # idempotent
@@ -690,7 +690,7 @@ def test_copy_from_and_warehouse_recovery(engine, spark, tmp_path):
     assert n == 25
     assert engine.execute("SELECT COUNT(*) FROM cf_t")[0][0] == 25
 
-    eng2 = Engine(spark, num_workers=2, warehouse=engine._warehouse)
+    eng2 = Engine(spark, warehouse=engine._warehouse)
     try:
         # r8: the persistent catalog restores the table at CONSTRUCTION
         # (tests/test_persistent_catalog.py); reattach_warehouse stays

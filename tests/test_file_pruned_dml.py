@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 def dml_engine(spark):
     from duckdb_distributed_execution_spark import Engine
 
-    eng = Engine(spark, num_workers=4)
+    eng = Engine(spark)
     # Disable small-table compaction so inserts append distinct files —
     # the multi-file layout every production-scale table has.
     eng._COMPACT_BYTES = 0

@@ -286,8 +286,8 @@ def test_two_engines_interleaved_inserts(spark):
     because appends rebase through the CAS."""
     from duckdb_distributed_execution_spark import Engine
 
-    e1 = Engine(spark, num_workers=4)
-    e2 = Engine(spark, num_workers=4)
+    e1 = Engine(spark)
+    e2 = Engine(spark)
     try:
         e1.create_table("cas_two", "k BIGINT")
         path = e1._tables["cas_two"].path
@@ -316,7 +316,7 @@ def test_concurrent_staging_does_not_collide(spark):
     files are writer-unique; both ingests land intact."""
     from duckdb_distributed_execution_spark import Engine
 
-    e = Engine(spark, num_workers=4)
+    e = Engine(spark)
     try:
         e.create_table("cas_stage", "k BIGINT")
         path = e._tables["cas_stage"].path
@@ -358,7 +358,7 @@ def test_concurrent_staging_does_not_collide(spark):
 def test_vacuum_sweeps_stray_staging_dirs(spark):
     from duckdb_distributed_execution_spark import Engine
 
-    e = Engine(spark, num_workers=4)
+    e = Engine(spark)
     try:
         e.create_table("cas_vac", "k BIGINT")
         path = os.path.realpath(e._tables["cas_vac"].path)
@@ -381,7 +381,7 @@ def test_engine_delete_conflicts_with_concurrent_commit(spark, monkeypatch):
     committing an append from inside the DELETE's staging step."""
     from duckdb_distributed_execution_spark import Engine
 
-    eng = Engine(spark, num_workers=4)
+    eng = Engine(spark)
     try:
         eng.create_table("cas_del", "k BIGINT")
         eng.insert_into(

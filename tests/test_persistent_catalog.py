@@ -39,7 +39,7 @@ def _scrub_temp_views(spark):
 
 
 def _build(spark, warehouse) -> None:
-    e = Engine(spark, num_workers=4, warehouse=warehouse)
+    e = Engine(spark, warehouse=warehouse)
     e.create_table(
         "pc_t",
         "id INTEGER PRIMARY KEY, v INTEGER CHECK (v >= 0), "
@@ -62,7 +62,7 @@ def test_ddl_surface_survives_second_session(spark, warehouse):
         "catalog must be persisted in the warehouse"
     )
 
-    e2 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e2 = Engine(spark, warehouse=warehouse)
     try:
         assert e2.catalog_load_warnings == []
         # tables + data
@@ -91,7 +91,7 @@ def test_ddl_surface_survives_second_session(spark, warehouse):
 
 def test_constraints_still_enforced_in_second_session(spark, warehouse):
     _build(spark, warehouse)
-    e2 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e2 = Engine(spark, warehouse=warehouse)
     try:
         # PRIMARY KEY uniqueness
         with pytest.raises(ValueError, match="(?i)unique|duplicate|key"):
@@ -118,13 +118,13 @@ def test_constraints_still_enforced_in_second_session(spark, warehouse):
 
 def test_drops_and_renames_persist(spark, warehouse):
     _build(spark, warehouse)
-    e2 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e2 = Engine(spark, warehouse=warehouse)
     e2.drop_view("pc_v")
     e2.drop_index("pc_idx")
     e2.rename_table("pc_t", "pc_renamed")
     e2.close()
 
-    e3 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e3 = Engine(spark, warehouse=warehouse)
     try:
         assert e3.catalog_load_warnings == []
         assert "pc_v" not in e3.list_views()
@@ -142,11 +142,11 @@ def test_rename_migrates_constraints(spark, warehouse):
     them — and the persistent catalog would have made the lapse
     durable), in-session AND across a catalog reload."""
     _build(spark, warehouse)
-    e = Engine(spark, num_workers=4, warehouse=warehouse)
+    e = Engine(spark, warehouse=warehouse)
     e.rename_table("pc_t", "pc_renamed")
     e.close()
 
-    e2 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e2 = Engine(spark, warehouse=warehouse)
     try:
         with pytest.raises(ValueError, match="(?i)check"):
             e2.insert_values("pc_renamed", [(9, -1, "neg", None)])
@@ -170,7 +170,7 @@ def test_close_preserves_explicit_warehouse(spark, warehouse):
     assert os.path.isdir(warehouse)
     assert os.path.exists(os.path.join(warehouse, "_catalog.json"))
     # while a self-created temp warehouse is still torn down
-    e = Engine(spark, num_workers=4)
+    e = Engine(spark)
     tmp_wh = e._warehouse
     e.close()
     assert not os.path.exists(tmp_wh)
@@ -189,15 +189,9 @@ def test_catalog_across_real_processes(warehouse):
     common = f"""
 import sys
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[2]")
-    .appName("cat-proc")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
 from duckdb_distributed_execution_spark import Engine
-e = Engine(spark, num_workers=2, warehouse={warehouse!r})
+from duckdb_distributed_execution_spark.session import local_session
+e = Engine(local_session("local[2]", "cat-proc"), warehouse={warehouse!r})
 """
     writer = common + """
 e.create_table("pp_t", "id INTEGER PRIMARY KEY, v INTEGER NOT NULL")
@@ -225,7 +219,7 @@ except ValueError:
 
 
 def test_missing_backing_data_warns_not_fails(spark, warehouse, tmp_path):
-    e = Engine(spark, num_workers=4, warehouse=warehouse)
+    e = Engine(spark, warehouse=warehouse)
     ext = str(tmp_path / "ext.parquet")
     spark.range(5).write.parquet(ext)
     e.register_table("pc_ext", ext)
@@ -235,7 +229,7 @@ def test_missing_backing_data_warns_not_fails(spark, warehouse, tmp_path):
     import shutil
 
     shutil.rmtree(ext)
-    e2 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e2 = Engine(spark, warehouse=warehouse)
     try:
         assert any("pc_ext" in w for w in e2.catalog_load_warnings)
         assert "pc_keep" in e2.list_tables(), (
@@ -256,7 +250,7 @@ def test_non_json_defaults_survive_reload_as_valid_sql(spark, warehouse):
 
     for n in ("pc_dec",):
         spark.catalog.dropTempView(n)
-    e = Engine(spark, num_workers=4, warehouse=warehouse)
+    e = Engine(spark, warehouse=warehouse)
     e.create_table(
         "pc_dec",
         "id INTEGER, price DECIMAL(8,2), d DATE, ts TIMESTAMP",
@@ -270,7 +264,7 @@ def test_non_json_defaults_survive_reload_as_valid_sql(spark, warehouse):
         e.set_column_default("pc_dec", "id", object())
     e.close()
 
-    e2 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e2 = Engine(spark, warehouse=warehouse)
     try:
         e2.insert_values("pc_dec", [(1,)], columns=["id"])
         row = e2.table("pc_dec").collect()[0]

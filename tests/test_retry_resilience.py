@@ -24,13 +24,11 @@ import sys
 sys.path.insert(0, "@REPO@")
 import numpy as np
 from pyspark import TaskContext
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
-spark = (SparkSession.builder.master("local[8,2]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+from duckdb_distributed_execution_spark.session import local_session
+
+spark = local_session("local[8,2]", conf={"spark.sql.shuffle.partitions": "8"})
 SF = "/root/testdata/sf0.001"
 
 
@@ -80,7 +78,7 @@ assert base == retried, "covariance drifted under retry"
 # materialized BEFORE the registry append).
 from duckdb_distributed_execution_spark import Engine
 
-eng = Engine(spark, num_workers=4)
+eng = Engine(spark)
 eng.create_table("retry_reg", "fp VARCHAR, first_seen_batch BIGINT")
 batch = spark.createDataFrame(
     [(i, f"doc text {i % 5}") for i in range(20)], "id long, text string"

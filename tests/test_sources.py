@@ -6,10 +6,12 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark import sources
 from duckdb_distributed_execution_spark.plans import formatted_plan
+from tests.conftest import SF_SMOKE
 
 
 def test_csv_round_trip(spark):
@@ -208,20 +210,14 @@ def test_remote_source_distributed_insert(spark, tmp_path):
     con.close()
 
 
-def test_worker_imports_cwd_independent():
-    """Queries that ship Python closures to workers (mapInPandas
-    multimodal decode, the duckdb_remote Python DataSource — batch and
-    STREAMING) must work when the harness's CWD is not the repo root:
-    ensure_worker_pythonpath ships the package via addPyFile and the
-    DataSource module is registered pickle-by-value. Regression for
-    the ModuleNotFoundError class of failure (worker processes don't
-    inherit the driver's sys.path)."""
-    import subprocess
-    import sys
-
-    code = """
+# A session the engine did not build, driven from outside the repo:
+# the package reaches its workers only through
+# ensure_worker_pythonpath's zip.
+_FOREIGN_SESSION = """
+import glob
 import sys
-sys.path.insert(0, "/root/repo")
+import tempfile
+sys.path.insert(0, @REPO@)
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[4]")
     .config("spark.ui.enabled", "false")
@@ -229,16 +225,51 @@ spark = (SparkSession.builder.master("local[4]")
 spark.sparkContext.setLogLevel("ERROR")
 from duckdb_distributed_execution_spark.queries import all_queries
 qs = all_queries()
-n1 = qs["multimodal_features"].fn(spark, "/root/testdata/sf0.001").count()
-n2 = qs["remote_stream_window_counts"].fn(spark, "/root/testdata/sf0.001").count()
+n1 = qs["multimodal_features"].fn(spark, @SF@).count()
+n2 = qs["remote_stream_window_counts"].fn(spark, @SF@).count()
 assert n1 > 0 and n2 > 0, (n1, n2)
 print("CWD_INDEPENDENT_OK")
+print("ZIPS", len(glob.glob(tempfile.gettempdir() + "/dde_spark_pkg_*")))
 """
+
+
+@pytest.fixture(scope="module")
+def foreign_session_run(tmp_path_factory):
+    """Runs _FOREIGN_SESSION with CWD /tmp and its own TMPDIR; returns
+    the finished process and that TMPDIR."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path_factory.mktemp("foreign_tmpdir")
+    code = _FOREIGN_SESSION.replace("@REPO@", repr(repo)).replace(
+        "@SF@", repr(SF_SMOKE))
     out = subprocess.run(
         [sys.executable, "-c", code],
         cwd="/tmp",
+        env={**os.environ, "TMPDIR": str(tmp)},
         capture_output=True,
         text=True,
         timeout=300,
     )
+    return out, tmp
+
+
+def test_worker_imports_cwd_independent(foreign_session_run):
+    """Queries that ship Python closures to workers (mapInPandas
+    multimodal decode, the duckdb_remote Python DataSource — batch and
+    STREAMING) must work when the harness's CWD is not the repo root:
+    ensure_worker_pythonpath ships the package via addPyFile and the
+    DataSource module is registered pickle-by-value. Regression for
+    the ModuleNotFoundError class of failure (worker processes don't
+    inherit the driver's sys.path)."""
+    out, _ = foreign_session_run
     assert "CWD_INDEPENDENT_OK" in out.stdout, out.stderr[-2000:]
+
+
+def test_foreign_session_package_zip_removed_at_exit(foreign_session_run):
+    """The zip ensure_worker_pythonpath ships to a foreign session
+    exists while the process runs and is gone once it exits."""
+    out, tmp = foreign_session_run
+    assert "ZIPS 1" in out.stdout, out.stdout[-500:] + out.stderr[-2000:]
+    assert list(tmp.glob("dde_spark_pkg_*")) == []

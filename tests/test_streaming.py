@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from duckdb_distributed_execution_spark import streaming as S
 from duckdb_distributed_execution_spark.queries import all_queries
 from tests.conftest import SF_SMOKE
@@ -339,7 +341,18 @@ def test_streaming_ppl_screen_matches_batch(spark):
     assert 0 < len(got) <= 0.11 * len(batch)
 
 
-def test_run_to_memory_sizes_state_partitions(spark, tmp_path):
+@pytest.fixture
+def shuffle_cap_above_floor(spark):
+    """A session shuffle-partition conf of 8, above run_to_memory's
+    floor of 4 whatever the host's core count; restored afterwards."""
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def test_run_to_memory_sizes_state_partitions(spark, tmp_path,
+                                              shuffle_cap_above_floor):
     """r9: run_to_memory sizes the stateful shuffle from the stream's
     source backlog (one partition per 32 MB, floor 4, cap = session
     conf) and restores the session conf afterwards. The tiny smoke

@@ -42,7 +42,7 @@ def warehouse(tmp_path):
 
 
 def _engine(spark, warehouse):
-    e = Engine(spark, num_workers=4, warehouse=warehouse)
+    e = Engine(spark, warehouse=warehouse)
     e.register_table("vl_corpus", f"{SF}/embeddings.parquet",
                      replace=True)
     queries = (

@@ -38,7 +38,7 @@ def _pairs(df):
 def _setup(spark, warehouse):
     for n in ("vi_corpus", "vi__centroids", "vi__cells", "vi__graph"):
         spark.catalog.dropTempView(n)
-    e = Engine(spark, num_workers=4, warehouse=warehouse)
+    e = Engine(spark, warehouse=warehouse)
     e.register_table(
         "vi_corpus", f"{SF}/embeddings.parquet", replace=True
     )
@@ -79,7 +79,7 @@ def test_index_survives_second_session_without_rebuild(spark, warehouse):
     finally:
         e.close()
 
-    e2 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e2 = Engine(spark, warehouse=warehouse)
     try:
         assert e2.list_vector_indexes() == ["vi"]
         assert set(e2.list_tables()) >= {
@@ -198,7 +198,7 @@ def test_drop_is_durable(spark, warehouse):
             e.vector_search("vi", queries)
     finally:
         e.close()
-    e2 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e2 = Engine(spark, warehouse=warehouse)
     try:
         assert e2.list_vector_indexes() == []
         assert "vi__cells" not in e2.list_tables()

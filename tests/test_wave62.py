@@ -32,7 +32,7 @@ def _ids(df):
 
 
 def _setup(spark, warehouse):
-    e = Engine(spark, num_workers=4, warehouse=warehouse)
+    e = Engine(spark, warehouse=warehouse)
     e.register_table("vi62_corpus", f"{SF}/embeddings.parquet", replace=True)
     corpus = spark.table("vi62_corpus").filter(F.col("vec_id") >= 8)
     corpus.createOrReplaceTempView("vi62_corpus")
@@ -154,7 +154,7 @@ def test_pq_survives_second_session(spark, warehouse):
         )
     finally:
         e.close()
-    e2 = Engine(spark, num_workers=4, warehouse=warehouse)
+    e2 = Engine(spark, warehouse=warehouse)
     try:
         got = _ids(
             e2.vector_search("vi62", queries, k=5, nprobe=2,

@@ -26,7 +26,7 @@ SCHEMA = "id BIGINT, code INT, v STRING"
 def eng(spark, tmp_path):
     from duckdb_distributed_execution_spark import Engine
 
-    e = Engine(spark, num_workers=4, warehouse=str(tmp_path / "wh"))
+    e = Engine(spark, warehouse=str(tmp_path / "wh"))
     e.create_table("we_t", DDL)
     e.insert_values("we_t", [(i, i * 10, f"v{i}") for i in range(20)])
     yield e

@@ -64,7 +64,7 @@ def _jobs(spark, fn):
 def eng(spark, tmp_path):
     from duckdb_distributed_execution_spark import Engine
 
-    e = Engine(spark, num_workers=4, warehouse=str(tmp_path / "wh"))
+    e = Engine(spark, warehouse=str(tmp_path / "wh"))
     e.create_table("wj_t", DDL)
     e.insert_into("wj_t", _rows(spark, 0, 400))
     yield e

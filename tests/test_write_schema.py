@@ -45,7 +45,7 @@ def _check(eng, name):
 def eng(spark, tmp_path):
     from duckdb_distributed_execution_spark import Engine
 
-    e = Engine(spark, num_workers=4, warehouse=str(tmp_path / "wh"))
+    e = Engine(spark, warehouse=str(tmp_path / "wh"))
     yield e
     e.drop_vector_index("ws_idx", if_exists=True)
     for name in ("ws_t", "ws_t2"):

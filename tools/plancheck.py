@@ -60,24 +60,15 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from duckdb_distributed_execution_spark.plans import (
         formatted_plan,
         summarize,
         summarize_executed,
     )
     from duckdb_distributed_execution_spark.queries import all_queries
+    from duckdb_distributed_execution_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plancheck")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(app_name="plancheck")
 
     specs = all_queries()
     names = args.names or sorted(specs)

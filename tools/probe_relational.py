@@ -15,7 +15,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -191,7 +190,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/tmp/dde_sf10")
     ap.add_argument("--n", type=int, default=3)
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     ap.add_argument("--queries", default="join_multi_star,tpch_q9_partsupp")
     ap.add_argument("--skip-duckdb", action="store_true")
     ap.add_argument("--max-partition-bytes", default=None,
@@ -199,6 +197,10 @@ def main() -> None:
     args = ap.parse_args()
 
     from duckdb_distributed_execution_spark.queries import all_queries
+    from duckdb_distributed_execution_spark.session import (
+        local_cores,
+        local_session,
+    )
 
     specs = all_queries()
     names = [q.strip() for q in args.queries.split(",") if q.strip()]
@@ -212,23 +214,11 @@ def main() -> None:
         "events_tumbling_window": [("fast", fast_events_tumbling)],
     }
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("probe-relational")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .config("spark.locality.wait", "0s")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .getOrCreate()
+    spark = local_session(
+        app_name="probe-relational",
+        conf={"spark.sql.files.maxPartitionBytes": args.max_partition_bytes}
+        if args.max_partition_bytes else None,
     )
-    if args.max_partition_bytes:
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", args.max_partition_bytes
-        )
-    spark.sparkContext.setLogLevel("ERROR")
 
     variants: list[tuple[str, object]] = []
     for n in names:
@@ -257,7 +247,7 @@ def main() -> None:
         import duckdb
 
         con = duckdb.connect()
-        con.execute(f"SET threads={args.cpus}")
+        con.execute(f"SET threads={local_cores()}")
         tables = [
             "region", "nation", "customer", "supplier", "part",
             "orders", "lineitem", "events", "documents", "embeddings",

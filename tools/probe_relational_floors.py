@@ -139,30 +139,20 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/tmp/dde_sf10")
     ap.add_argument("--n", type=int, default=3)
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     args = ap.parse_args()
-
-    from pyspark.sql import SparkSession
 
     from duckdb_distributed_execution_spark import Engine
     from duckdb_distributed_execution_spark.queries import all_queries, load
-
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("probe-relational-floors")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .config("spark.locality.wait", "0s")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.sql.warehouse.dir",
-                f"/tmp/dde_floors_wh_{os.getpid()}")
-        .getOrCreate()
+    from duckdb_distributed_execution_spark.session import (
+        local_cores,
+        local_session,
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    engine = Engine(spark, num_workers=int(args.cpus))
+
+    spark = local_session(
+        app_name="probe-relational-floors",
+        conf={"spark.sql.warehouse.dir": f"/tmp/dde_floors_wh_{os.getpid()}"},
+    )
+    engine = Engine(spark)
 
     # untimed: the co-located layout (the one-time prep a 100 TB
     # deployment amortizes across every star join on these facts)
@@ -201,7 +191,7 @@ def main() -> None:
     import duckdb
 
     con = duckdb.connect()
-    con.execute(f"SET threads={args.cpus}")
+    con.execute(f"SET threads={local_cores()}")
     for tname in ("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "events"):
         p = os.path.join(args.sf_dir, f"{tname}.parquet")

@@ -132,7 +132,7 @@ def verify() -> None:
 
     rc = subprocess.call(
         [sys.executable, os.path.join(os.path.dirname(__file__), "selfcheck.py"),
-         "--sf", OUT, "--cores", "32", *VERIFY_QUERIES]
+         "--sf", OUT, *VERIFY_QUERIES]
     )
     sys.exit(rc)
 
@@ -171,25 +171,16 @@ def verify_banded_subset(factor: int) -> None:
     pairs. A recall/candidate bug that appears only under 100x bucket
     density would break this equality."""
     import duckdb
-
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from duckdb_distributed_execution_spark.queries import all_queries
     from duckdb_distributed_execution_spark.queries.pipeline13 import (
         dedup_embedding_cosine_banded,
     )
+    from duckdb_distributed_execution_spark.session import local_session
 
     reg = all_queries()
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(app_name="probe-scale-verify")
     t0 = time.perf_counter()
     big = dedup_embedding_cosine_banded(spark, OUT)
     base_id = (
@@ -276,21 +267,12 @@ def main() -> None:
         verify()
         return
 
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .config("spark.locality.wait", "0s")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from duckdb_distributed_execution_spark.session import local_session
+
+    spark = local_session(app_name="probe-scale")
 
     from duckdb_distributed_execution_spark.operators import dedup as D
     from duckdb_distributed_execution_spark.operators.asof import asof_join

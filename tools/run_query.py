@@ -33,26 +33,13 @@ def main() -> None:
     ap.add_argument("--limit", type=int, default=20)
     ap.add_argument("--master", default=None,
                     help="override master (default: spark-submit's, "
-                    "or local[*] standalone)")
+                    "or local[$SPARK_GRAFT_CPUS] standalone)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from duckdb_distributed_execution_spark.queries import all_queries
+    from duckdb_distributed_execution_spark.session import local_session
 
-    builder = SparkSession.builder.appName(f"dde-spark:{args.name}")
-    if args.master:
-        builder = builder.master(args.master)
-    elif "SPARK_MASTER" not in os.environ and not os.environ.get(
-        "SPARK_SUBMIT_DEPLOY_MODE"
-    ):
-        builder = builder.master("local[*]")
-    spark = (
-        builder.config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = local_session(args.master, f"dde-spark:{args.name}")
 
     specs = all_queries()
     if args.name not in specs:

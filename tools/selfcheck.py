@@ -68,54 +68,35 @@ def main():
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--verbose", action="store_true")
     ap.add_argument(
-        "--cores", default="8",
-        help="local[N] worker threads (vary to prove partition independence)")
-    ap.add_argument(
-        "--partitions", default=None,
-        help="spark.sql.shuffle.partitions (default = --cores)")
-    ap.add_argument(
         "--master", default=None,
-        help="Spark master override — e.g. local-cluster[2,16,4096] to "
-             "run the sweep under REAL process separation (2 executor "
-             "JVMs, separate python workers): proves no single-JVM/"
-             "single-process assumption hides in driver-side state, "
-             "broadcasts, or per-task connections (round-4 verdict "
-             "task 4). Default: local[--cores].")
+        help="Spark master override — e.g. local[8] to vary the thread "
+             "count (proves partition independence), or "
+             "local-cluster[2,16,4096] to run the sweep under REAL "
+             "process separation (2 executor JVMs, separate python "
+             "workers): proves no single-JVM/single-process assumption "
+             "hides in driver-side state, broadcasts, or per-task "
+             "connections (round-4 verdict task 4). Default: "
+             "local[$SPARK_GRAFT_CPUS].")
     ap.add_argument(
         "--conf", action="append", default=[],
         help="extra spark conf k=v (repeatable) — e.g. "
              "spark.executor.memory=4g for a spark:// standalone "
-             "master whose default 1g executors would OOM")
+             "master whose default 1g executors would OOM, or "
+             "spark.sql.shuffle.partitions=N")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from duckdb_distributed_execution_spark.session import local_session
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    builder = (
-        SparkSession.builder.master(args.master or f"local[{args.cores}]")
-        .appName("selfcheck")
-        # Executors in local-cluster mode are separate JVMs spawning
-        # their own python workers; the package must be importable
-        # there (in plain local mode this is inherited and harmless).
-        .config("spark.executorEnv.PYTHONPATH", repo)
-        .config("spark.sql.shuffle.partitions", args.partitions or args.cores)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        # 300+ distinct plans sweep through this session; the default
-        # 100-entry codegen class cache would Janino-recompile stages
-        # constantly (see bench.py).
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
+    # Executors in local-cluster mode are separate JVMs spawning their
+    # own python workers; the factory puts the package on their path.
+    spark = local_session(
+        args.master, "selfcheck",
+        dict(kv.split("=", 1) for kv in args.conf),
     )
-    for kv in args.conf:
-        k, _, v = kv.partition("=")
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
     for t in TABLES:
