@@ -18,6 +18,10 @@ Two concerns live here:
    row-at-a-time Python UDFs by avoiding serialization; for hot
    verify paths use the Arrow-batched numpy matmul variants in
    operators/similarity.py (``cosine_verify_numpy``) instead.
+
+It also holds the operator plumbing: tracked persists, the runner of
+the size-gated fused single-task kernels (``fused_single_task``) and
+small driver-side relations (``local_rows_df``).
 """
 
 from __future__ import annotations
@@ -75,16 +79,14 @@ def release_operator_persists(spark) -> int:
 FUSED_KERNEL_MAX_ROWS = 2_000_000
 
 
-def check_fused_input_rows(n_rows: int, what: str, limit: int | None = None) -> None:
+def check_fused_input_rows(n_rows: int, what: str, limit: int) -> None:
     """Raise if a single-task fused kernel received more rows than any
     gated caller can send — fail loudly instead of serializing a
     large corpus through one task (r9 verdict, What's wrong #5).
-    Kernels capture ``limit`` driver-side at construction (the module
-    global is read where the operator is built, so tests can lower it;
+    ``fused_single_task`` reads ``limit`` from FUSED_KERNEL_MAX_ROWS
+    driver-side, where the operator is built, so tests can lower it;
     executor workers re-import this module and would not see a
-    monkeypatched value)."""
-    if limit is None:
-        limit = FUSED_KERNEL_MAX_ROWS
+    monkeypatched value."""
     if n_rows > limit:
         raise RuntimeError(
             f"{what}: fused single-task kernel received {n_rows} rows "
@@ -92,6 +94,30 @@ def check_fused_input_rows(n_rows: int, what: str, limit: int | None = None) -> 
             "~4 MB scale gate — route large inputs through the "
             "distributed form"
         )
+
+
+def fused_single_task(df, kernel, schema: str, what: str):
+    """Run a size-gated fused kernel: ``df`` coalesced to ONE task,
+    its non-empty Arrow batches concatenated into one pandas frame,
+    the row guard applied, then ``kernel(pdf)``, which returns the
+    output frame or None for no rows. A caller that must keep its
+    upstream stage parallel passes ``df.repartition(1)``; the
+    optimizer folds this coalesce into it."""
+    limit = FUSED_KERNEL_MAX_ROWS  # captured driver-side
+
+    def run(batches):
+        import pandas as pd
+
+        parts = [p for p in batches if len(p)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
+        check_fused_input_rows(len(pdf), what, limit)
+        out = kernel(pdf)
+        if out is not None:
+            yield out
+
+    return df.coalesce(1).mapInPandas(run, schema=schema)
 
 
 def local_rows_df(spark, rows, schema):

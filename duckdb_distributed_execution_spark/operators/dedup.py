@@ -556,12 +556,10 @@ def minhash_lsh_pairs_fused(
     import numpy as np
     import pandas as pd
 
-    from duckdb_distributed_execution_spark import functions as _fx
     from duckdb_distributed_execution_spark.functions import (
-        check_fused_input_rows,
+        fused_single_task,
     )
 
-    fused_cap = _fx.FUSED_KERNEL_MAX_ROWS  # captured driver-side
     assert num_hashes % band_size == 0
     n_bands = num_hashes // band_size
     id_t = dict(df.dtypes)[id_col]
@@ -571,16 +569,7 @@ def minhash_lsh_pairs_fused(
     )
     mh_names = [f"mh_{i}" for i in range(num_hashes)]
 
-    def run(batches):
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            pd.concat(parts, ignore_index=True)
-            if len(parts) > 1
-            else parts[0]
-        )
-        check_fused_input_rows(len(pdf), "minhash_lsh_pairs_fused", fused_cap)
+    def kernel(pdf):
         uniq = pdf["doc"].values
         mins = np.vstack([pdf[m].values for m in mh_names])  # k x n
         doc_h = [
@@ -610,7 +599,7 @@ def minhash_lsh_pairs_fused(
                 ia_parts.append(idx[r])
                 ib_parts.append(idx[c])
         if not ia_parts:
-            return
+            return None
         ia = np.concatenate(ia_parts)
         ib = np.concatenate(ib_parts)
         # unordered pair, emitted (smaller id, larger id) like the
@@ -621,15 +610,14 @@ def minhash_lsh_pairs_fused(
         keys = np.unique(ia.astype(np.int64) * n + ib)
         ia, ib = keys // n, keys % n
         if candidates_only:
-            yield pd.DataFrame({"id_a": uniq[ia], "id_b": uniq[ib]})
-            return
+            return pd.DataFrame({"id_a": uniq[ia], "id_b": uniq[ib]})
         sa, sb = sizes[ia], sizes[ib]
         lo = np.minimum(sa, sb).astype(np.float64)
         hi = np.maximum(sa, sb).astype(np.float64)
         keep = lo >= (thr - 1e-9) * hi
         ia, ib, sa, sb = ia[keep], ib[keep], sa[keep], sb[keep]
         if not len(ia):
-            return
+            return None
         # exact |A∩B| per surviving pair: pairs are sorted by ia, so
         # group by ia and binary-search each partner's hashes against
         # A's sorted array in one vectorized searchsorted per group.
@@ -652,8 +640,8 @@ def minhash_lsh_pairs_fused(
         jac = inter_d / union
         mask = jac >= thr
         if not mask.any():
-            return
-        yield pd.DataFrame(
+            return None
+        return pd.DataFrame(
             {
                 "id_a": uniq[ia[mask]],
                 "id_b": uniq[ib[mask]],
@@ -666,11 +654,13 @@ def minhash_lsh_pairs_fused(
         if candidates_only
         else f"id_a {id_t}, id_b {id_t}, jaccard double"
     )
-    # repartition(1), not coalesce(1): coalesce would collapse the
-    # upstream sig kernel to one task too; the exchange it costs is
-    # one narrow ~|docs|·(8 longs + hash set) spill, and it is the
+    # repartition(1), not a bare coalesce(1): coalesce would collapse
+    # the upstream sig kernel to one task too; the exchange it costs
+    # is one narrow ~|docs|·(8 longs + hash set) spill, and it is the
     # ONLY exchange in the whole plan.
-    return sig.repartition(1).mapInPandas(run, schema=out_schema)
+    return fused_single_task(
+        sig.repartition(1), kernel, out_schema, "minhash_lsh_pairs_fused"
+    )
 
 
 def minhash_lsh_pairs(

@@ -50,19 +50,15 @@ def connected_components_fused(
     are returned; self-loop-only nodes are their own component."""
     import pandas as pd
 
-    from duckdb_distributed_execution_spark import functions as _fx
     from duckdb_distributed_execution_spark.functions import (
-        check_fused_input_rows,
+        fused_single_task,
     )
 
-    fused_cap = _fx.FUSED_KERNEL_MAX_ROWS  # captured driver-side
-    dt = dict(edges.dtypes)
-    node_t = dt[src]
+    node_t = dict(edges.dtypes)[src]
     sel = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
 
-    def run(batches):
+    def kernel(pdf):
         parent: dict = {}
-        n_seen = 0
 
         def find(x):
             root = x
@@ -73,34 +69,28 @@ def connected_components_fused(
             return root
 
         nodes = set()
-        for pdf in batches:
-            n_seen += len(pdf)
-            check_fused_input_rows(
-                n_seen, "connected_components_fused", fused_cap
-            )
-            for u, v in zip(pdf["u"], pdf["v"]):
-                un, vn = u is None or pd.isna(u), v is None or pd.isna(v)
-                if not un:
-                    nodes.add(u)
-                if not vn:
-                    nodes.add(v)
-                if un or vn or u == v:
-                    continue
-                ra, rb = find(u), find(v)
-                if ra == rb:
-                    continue
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra  # smaller id stays root ⇒ comp = min
+        for u, v in zip(pdf["u"], pdf["v"]):
+            un, vn = u is None or pd.isna(u), v is None or pd.isna(v)
+            if not un:
+                nodes.add(u)
+            if not vn:
+                nodes.add(v)
+            if un or vn or u == v:
+                continue
+            ra, rb = find(u), find(v)
+            if ra == rb:
+                continue
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra  # smaller id stays root ⇒ comp = min
         if not nodes:
-            return
+            return None
         out = sorted(nodes)
-        yield pd.DataFrame(
-            {"node": out, "comp": [find(n) for n in out]}
-        )
+        return pd.DataFrame({"node": out, "comp": [find(n) for n in out]})
 
-    return sel.coalesce(1).mapInPandas(
-        run, schema=f"node {node_t}, comp {node_t}"
+    return fused_single_task(
+        sel, kernel, f"node {node_t}, comp {node_t}",
+        "connected_components_fused",
     )
 
 

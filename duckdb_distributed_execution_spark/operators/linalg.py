@@ -42,8 +42,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.functions import (
-    check_fused_input_rows,
+    fused_single_task,
     local_rows_df,
+)
+from duckdb_distributed_execution_spark.operators.similarity import (
+    QUANT,
+    _sq_dist_q,
 )
 
 _SCALE = 1e9
@@ -244,12 +248,18 @@ def pca_project(
     )
 
 
+def _center_dq(V, vv, c):
+    """⌊d²·1e6+.5⌋ of every row to one center ``c`` — the shared
+    quantized d² of operators/similarity.py (``_sq_dist_q``), which
+    both kcenter forms rank by."""
+    return _sq_dist_q(V, vv, c[None, :], np.dot(c, c)[None])[1][:, 0]
+
+
 def kcenter_greedy(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 6,
-    quant: float = 1e6,
 ) -> DataFrame:
     """k-center greedy (farthest-point) coreset selection — the
     classic data-curation pick (Sener & Savarese 2018 active-learning
@@ -262,8 +272,8 @@ def kcenter_greedy(
     64 floats) folded into the running min-distance relation (narrow:
     id + one long), localCheckpoint-pinned; the argmax is a bounded
     driver fetch. Distances are quantized to ⌊d²·1e6+.5⌋ longs BEFORE
-    the argmax; exact quantized ties break by id — mirrored by the
-    unrolled-CTE DuckDB oracle in queries/pipeline50.py.
+    the argmax (``_center_dq``); exact quantized ties break by id —
+    mirrored by the unrolled-CTE DuckDB oracle in queries/pipeline50.py.
 
     Cross-engine determinism contract (ADVICE r5): d² is computed via
     the SAME dot-product expansion on both sides —
@@ -278,9 +288,6 @@ def kcenter_greedy(
     Duplicate points are legal: once every point has distance 0 the
     argmax degenerates to the minimum id, identically on both
     engines."""
-    import numpy as np
-    import pandas as pd
-
     spark = df.sparkSession
     first = df.orderBy(id_col).select(id_col, vec_col).head()
     cur_id, cur_vec = first[0], np.asarray(first[1], dtype=np.float64)
@@ -291,18 +298,14 @@ def kcenter_greedy(
 
         def d2q(batches):
             c = b.value
-            cc = float(np.dot(c, c))
             for pdf in batches:
                 if not len(pdf):
                     continue
                 V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-                # dot(e,e) − 2·dot(e,c) + dot(c,c), the oracle's exact
-                # expansion and operation order (see docstring).
-                d = np.einsum("ij,ij->i", V, V) - 2.0 * (V @ c) + cc
                 yield pd.DataFrame(
                     {
                         "vec_id_": pdf[id_col].values,
-                        "dq": np.floor(d * quant + 0.5).astype(np.int64),
+                        "dq": _center_dq(V, np.einsum("ij,ij->i", V, V), c),
                     }
                 )
 
@@ -323,7 +326,7 @@ def kcenter_greedy(
             df.filter(F.col(id_col) == cur_id).select(vec_col).head()[0],
             dtype=np.float64,
         )
-        picks.append((t, cur_id, seldq / quant))
+        picks.append((t, cur_id, seldq / QUANT))
     return local_rows_df(
         spark, picks, f"sel_round long, {id_col} long, dist double"
     ).select("sel_round", id_col, F.round("dist", 4).alias("dist"))
@@ -334,7 +337,6 @@ def kcenter_greedy_fused(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 6,
-    quant: float = 1e6,
 ) -> DataFrame:
     """Size-gated single-task twin of :func:`kcenter_greedy` (guide
     §1.2: at toy scale the distributed loop is 3 jobs × (k−1) rounds
@@ -342,57 +344,32 @@ def kcenter_greedy_fused(
     argmax fetch, plus a pushed-filter vec fetch — while the compute
     is microseconds). The whole greedy loop runs in ONE coalesced
     mapInPandas task over the corpus, result-identical by
-    construction: the same ``dot(e,e) − 2·(V@c) + dot(c,c)`` numpy
-    expansion per row (row dots are row-local, so batching cannot
-    change them; the K=dim axis the BLAS kernel reduces over is the
-    same in both forms), the same ⌊d²·quant+.5⌋ int64 quantization
-    BEFORE the fold, the same elementwise least across rounds, the
-    same (max dq, then min id) pick, and the same min-id first pick.
-    Callers gate on corpus file size (queries.small_table, the repo's
-    one scale gate); above the gate the distributed loop —
-    whose per-round scan parallelizes — is untouched."""
-    import numpy as np
-    import pandas as pd
+    construction: the same ``_center_dq`` per round (row dots are
+    row-local, so batching cannot change them), the same elementwise
+    least across rounds, the same (max dq, then min id) pick, and the
+    same min-id first pick. Callers gate on corpus file size
+    (queries.small_table, the repo's one scale gate); above the gate
+    the distributed loop — whose per-round scan parallelizes — is
+    untouched."""
 
-    from duckdb_distributed_execution_spark import functions as _fx
-
-    fused_cap = _fx.FUSED_KERNEL_MAX_ROWS  # captured driver-side
-    schema = f"sel_round long, {id_col} long, dist double"
-
-    def run(batches):
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            pd.concat(parts, ignore_index=True)
-            if len(parts) > 1
-            else parts[0]
-        )
-        check_fused_input_rows(len(pdf), "kcenter_greedy_fused", fused_cap)
+    def kernel(pdf):
         ids = pdf[id_col].values
         V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
         ee = np.einsum("ij,ij->i", V, V)
         sel = int(np.argmin(ids))
         picks = [(0, int(ids[sel]), 0.0)]
-        cur = V[sel]
         dist = None
         for t in range(1, k):
-            cc = float(np.dot(cur, cur))
-            d = ee - 2.0 * (V @ cur) + cc
-            dq = np.floor(d * quant + 0.5).astype(np.int64)
+            dq = _center_dq(V, ee, V[sel])
             dist = dq if dist is None else np.minimum(dist, dq)
-            m = dist.max()
-            cand = np.flatnonzero(dist == m)
+            cand = np.flatnonzero(dist == dist.max())
             sel = int(cand[np.argmin(ids[cand])])
-            picks.append((t, int(ids[sel]), float(int(dist[sel]) / quant)))
-            cur = V[sel]
-        yield pd.DataFrame(
-            picks, columns=["sel_round", id_col, "dist"]
-        )
+            picks.append((t, int(ids[sel]), float(int(dist[sel]) / QUANT)))
+        return pd.DataFrame(picks, columns=["sel_round", id_col, "dist"])
 
-    return (
-        df.select(id_col, vec_col)
-        .coalesce(1)
-        .mapInPandas(run, schema=schema)
-        .select("sel_round", id_col, F.round("dist", 4).alias("dist"))
-    )
+    return fused_single_task(
+        df.select(id_col, vec_col),
+        kernel,
+        f"sel_round long, {id_col} long, dist double",
+        "kcenter_greedy_fused",
+    ).select("sel_round", id_col, F.round("dist", 4).alias("dist"))

@@ -2,22 +2,32 @@
 
 Two paths (north-star greenfield, BASELINE.json):
 
-- ``brute_force_topk`` — exact: broadcast the query set, stream the
-  corpus, per-query top-k via window. The corpus never shuffles.
+- ``brute_force_topk_numpy`` — exact: the collected query set scores
+  every Arrow batch of the corpus in one numpy matmul, each batch
+  keeps its per-query top-k, and a rank window merges them (REPOSE's
+  local-top-k-then-merge, ICDE 2021). The corpus never shuffles.
 - ``lsh_topk`` — approximate scale path: random-hyperplane signatures
   bucket the corpus; candidates come only from the query's bucket
   (equi-join), then exact cosine re-ranks. An IVF variant is the same
   plan with learned centroids instead of hyperplanes.
+
+The numpy math each operator runs per batch lives once, in the
+private functions below; a size-gated single-task kernel
+(``*_fused``) and its distributed Arrow pass call the same function,
+so the two forms agree by construction.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.functions import (
-    check_fused_input_rows,
     dot_product,
+    ensure_min_parallelism,
+    fused_single_task,
     l2_norm,
     local_rows_df,
 )
@@ -27,37 +37,116 @@ from duckdb_distributed_execution_spark.queries.vectors import (
     lsh_bucket,
 )
 
+# Squared distances are ranked as ⌊d²·QUANT+.5⌋ longs, the convention
+# the SQL oracles mirror with CAST(floor(dist*1e6+0.5) AS BIGINT).
+QUANT = 1e6
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector. Norms are
-    computed once per row, not per pair."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
+
+def _cosine_topk(V, Vn, Q, Qn, ids, k, exclude=None):
+    """Per-query top-k of the cosine block (V·Qᵀ)/(‖v‖·‖q‖) in
+    (sim DESC, id ASC) order, the order of every rank window here, so
+    a batch's top-k holds every global top-k row of that batch and a
+    per-batch prune is exact. ``exclude`` (rows × queries, bool) sets
+    cells to -inf first. Returns (query index, row index, sim) per
+    kept row, grouped by query, rank order within a query."""
+    S = (V @ Q.T) / np.outer(Vn, Qn)
+    if exclude is not None:
+        S = np.where(exclude, -np.inf, S)
+    qi, ri = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for j in range(S.shape[1]):
+        order = np.lexsort((ids, -S[:, j]))[:k]
+        qi.append(np.full(len(order), j))
+        ri.append(order)
+    qi, ri = np.concatenate(qi), np.concatenate(ri)
+    return qi, ri, S[ri, qi]
+
+
+def _sq_dist_q(V, vv, C, cc):
+    """(d², ⌊d²·QUANT+.5⌋) per (row, centroid), d² via the oracle's
+    expansion ⟨v,v⟩ − 2⟨v,c⟩ + ⟨c,c⟩ in its operation order. numpy's
+    pairwise dot summation can differ from DuckDB's sequential fold in
+    last ulps; ranking the quantized value makes a flipped pick a
+    measure-zero boundary event, and the oracle hash would catch it."""
+    D = vv[:, None] - 2.0 * (V @ C.T) + cc[None, :]
+    return D, np.floor(D * QUANT + 0.5).astype(np.int64)
+
+
+def _nearest(V, vv, C, cc):
+    """Index of each row's nearest centroid by quantized d² (first
+    minimum, so centroids sorted by id break ties to the lowest id)
+    and the row's raw d² to it."""
+    D, DQ = _sq_dist_q(V, vv, C, cc)
+    j = np.argmin(DQ, axis=1)
+    return j, D[np.arange(len(j)), j]
+
+
+def _centroid_graph(C, cc, graph_edges):
+    """Each centroid's ``graph_edges`` nearest OTHER centroids by
+    quantized d² (stable sort: cid tie-break), as index arrays."""
+    qdc = _sq_dist_q(C, cc, C, cc)[1]
+    np.fill_diagonal(qdc, np.iinfo(np.int64).max)
+    return np.argsort(qdc, axis=1, kind="stable")[:, :graph_edges]
+
+
+def _band_planes(n_tables, band_bits, dim):
+    """dim × (n_tables·band_bits) float64 matrix of the shared
+    ``_rademacher_planes`` literals."""
+    return np.asarray(
+        _rademacher_planes(n_tables * band_bits, dim), dtype=np.float64
+    ).T
+
+
+def _band_keys(V, P, band_bits):
+    """n × n_tables bucket ids: the sign bits of V·P, packed
+    ``band_bits`` to a table."""
+    S = (V @ P) >= 0.0
+    weights = (1 << np.arange(band_bits)).astype(np.int64)
+    return S.reshape(len(V), P.shape[1] // band_bits, band_bits) @ weights
+
+
+def _verify_cosine(A, B, threshold):
+    """Row-wise cosine of two (pairs × dim) blocks (einsum dot over
+    the norms): (mask of sim ≥ threshold, kept sims rounded to 4)."""
+    sims = np.einsum("ij,ij->i", A, B) / (
+        np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
+    mask = sims >= threshold
+    return mask, np.round(sims[mask], 4)
+
+
+def _nearest_seed(V, S, Sn, seed_ids):
+    """Seed id of each row's max cosine, rounded to 6 decimals before
+    the argmax; seeds sorted by id, so ties go to the lowest seed id
+    (the oracle's ORDER BY sim DESC, seed_id)."""
+    sims = np.round(
+        (V @ S.T) / np.outer(np.linalg.norm(V, axis=1), Sn), 6
     )
-    sims = c.join(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        (dot_product(F.col("__qv"), F.col("__cv"))
-         / (F.col("__qn") * F.col("__cn"))).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return seed_ids[np.argmax(sims, axis=1)]
+
+
+def _blocked_pairs(ids, V, threshold, row_block):
+    """Cosine pairs ≥ threshold among id-sorted rows (column index >
+    row index is exactly id_a < id_b), scored ``row_block`` rows at a
+    time so memory is row_block·n doubles. Returns (id_a, id_b, sim
+    rounded to 4)."""
+    n = len(ids)
+    norms = np.linalg.norm(V, axis=1)
+    cols_idx = np.arange(n)
+    ia, ib, ss = [], [], []
+    for s in range(0, n, row_block):
+        e = min(s + row_block, n)
+        S = (V[s:e] @ V.T) / np.outer(norms[s:e], norms)
+        mask = (S >= threshold) & (cols_idx[None, :] > np.arange(s, e)[:, None])
+        r, c = np.nonzero(mask)
+        ia.append(ids[r + s])
+        ib.append(ids[c])
+        ss.append(np.round(S[r, c], 4))
+    return np.concatenate(ia), np.concatenate(ib), np.concatenate(ss)
+
+
+def _vectors(col) -> np.ndarray:
+    """An Arrow batch's array column as an (n × dim) float64 matrix."""
+    return np.asarray(list(col), dtype=np.float64)
 
 
 def sq_l2(a, b):
@@ -107,10 +196,6 @@ def ivf_assign(
     # interpreted folds run at the SCAN's parallelism; a 1-2 task
     # single-row-group input serializes the corpus×centroids pass —
     # ensure_min_parallelism restores it (no-op when already parallel)
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
     v = ensure_min_parallelism(v)
     dist = (
         F.col("__vv") - F.lit(2.0) * dot_product(F.col("__v"), F.col("__cv"))
@@ -124,7 +209,7 @@ def ivf_assign(
     paired = v.join(F.broadcast(c)).select(
         "__vid",
         F.struct(
-            F.floor(dist * F.lit(1e6) + F.lit(0.5)).cast("long")
+            F.floor(dist * F.lit(QUANT) + F.lit(0.5)).cast("long")
             .alias("qdist"),
             F.col("__cid"),
             dist.alias("dist"),
@@ -150,7 +235,6 @@ def ivf_assign_numpy(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cid_col: str = "cid",
-    quant: float = 1e6,
 ) -> DataFrame:
     """Corpus-side IVF assignment as ONE numpy matmul per Arrow batch
     — no per-pair interpreted folds, no shuffle at all (the argmin is
@@ -158,29 +242,13 @@ def ivf_assign_numpy(
     along, since every consumer of a numpy-assigned corpus (ivf_topk
     member side, the RAG serving path) needs it next.
 
-    Determinism contract (the kcenter convention,
-    operators/linalg.py): d² via the oracle's exact expansion
-    ⟨v,v⟩ − 2⟨v,c⟩ + ⟨c,c⟩, quantized to ⌊d²·1e6+.5⌋ BEFORE the
-    argmin, ties to the lowest centroid id — mirrored by
-    ``ORDER BY CAST(floor(dist*1e6+0.5) AS BIGINT), cid`` in the IVF
-    oracles (queries/vectors.py::_IVF_ASSIGN). numpy's pairwise dot
-    summation can differ from DuckDB's sequential fold in last ulps;
-    the quantization makes a flipped pick a measure-zero boundary
-    event rather than a live hazard, and the oracle hash would catch
-    it loudly."""
-    import numpy as np
-    import pandas as pd
-
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
-    cent = sorted(
-        ((r[cid_col], list(r[vec_col])) for r in centroids.collect()),
-        key=lambda t: t[0],
-    )
-    cids = np.asarray([c[0] for c in cent], dtype=np.int64)
-    C = np.asarray([c[1] for c in cent], dtype=np.float64)
+    Determinism contract (``_nearest``, shared with ivf_topk,
+    pq_encode_numpy and query routing): d² via the oracle's exact
+    expansion, quantized to ⌊d²·1e6+.5⌋ BEFORE the argmin, ties to the
+    lowest centroid id — mirrored by ``ORDER BY CAST(floor(dist*1e6+
+    0.5) AS BIGINT), cid`` in the IVF oracles
+    (queries/vectors.py::_IVF_ASSIGN)."""
+    cids, C = _sorted_vectors(centroids.select(cid_col, vec_col).collect())
     cc = np.einsum("ij,ij->i", C, C)
     dt = dict(corpus.dtypes)
     b = corpus.sparkSession.sparkContext.broadcast((cids, C, cc))
@@ -188,19 +256,15 @@ def ivf_assign_numpy(
     def fn(batches):
         k_ids, K, k_cc = b.value
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
-            V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            vv = np.einsum("ij,ij->i", V, V)
-            D = vv[:, None] - 2.0 * (V @ K.T) + k_cc[None, :]
-            DQ = np.floor(D * quant + 0.5).astype(np.int64)
-            j = np.argmin(DQ, axis=1)  # first minimum = lowest cid
+            V = _vectors(pdf[vec_col])
+            j, dist = _nearest(V, np.einsum("ij,ij->i", V, V), K, k_cc)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
                     cid_col: k_ids[j],
-                    "dist": D[np.arange(n), j],
+                    "dist": dist,
                     vec_col: pdf[vec_col].values,
                 }
             )
@@ -214,11 +278,34 @@ def ivf_assign_numpy(
     )
 
 
+def _sorted_vectors(rows):
+    """Collected (id, vector) rows → (int64 ids, float64 matrix),
+    sorted by id."""
+    rows = sorted(((r[0], list(r[1])) for r in rows), key=lambda t: t[0])
+    return (
+        np.asarray([r[0] for r in rows], dtype=np.int64),
+        np.asarray([r[1] for r in rows], dtype=np.float64),
+    )
+
+
+def _graph_nbrs(graph_rows, cids, graph_edges):
+    """Persisted (src_cid, dst_cid, rank) graph rows → index-space
+    neighbor lists in rank order, mapped through the cid sort."""
+    pos = {int(c): i for i, c in enumerate(cids)}
+    by_src: dict[int, list[tuple[int, int]]] = {}
+    for src, dst, rank in graph_rows:
+        by_src.setdefault(pos[int(src)], []).append((int(rank), pos[int(dst)]))
+    return [
+        [j for _, j in sorted(by_src.get(i, []))[:graph_edges]]
+        for i in range(len(cids))
+    ]
+
+
 def _route_probes(Q, qq, C, cc, nprobe, graph_edges, graph_nbrs=None):
     """Per-query probe-cell indices under the shared quantized
-    convention (exact oracle expansion + ⌊d²·1e6+.5⌋ rank; centroids
-    are sorted by cid, so a STABLE argsort's tie-break IS the cid
-    tie-break). Two routing modes, one convention:
+    convention (``_sq_dist_q``; centroids are sorted by cid, so a
+    STABLE argsort's tie-break IS the cid tie-break). Two routing
+    modes, one convention:
 
     * nprobe (graph_edges None): the query's ``nprobe`` nearest cells.
     * GRAPH routing (wave 59): the probe set is the query's ENTRY
@@ -239,20 +326,13 @@ def _route_probes(Q, qq, C, cc, nprobe, graph_edges, graph_nbrs=None):
     graph routing is a pure table lookup (no centroid-pairwise
     distance recompute at serve time), so serving always walks exactly
     the edges the build committed."""
-    import numpy as np
-
-    D = (qq[:, None] - 2.0 * (Q @ C.T)) + cc[None, :]
-    qd = np.floor(D * 1e6 + 0.5).astype(np.int64)
     if graph_edges is None:
+        qd = _sq_dist_q(Q, qq, C, cc)[1]
         return np.argsort(qd, axis=1, kind="stable")[:, :nprobe]
-    if graph_nbrs is not None:
-        nbrs = np.asarray(graph_nbrs, dtype=np.int64)
-    else:
-        DC = (cc[:, None] - 2.0 * (C @ C.T)) + cc[None, :]
-        qdc = np.floor(DC * 1e6 + 0.5).astype(np.int64)
-        np.fill_diagonal(qdc, np.iinfo(np.int64).max)
-        nbrs = np.argsort(qdc, axis=1, kind="stable")[:, :graph_edges]
-    entry = np.argmin(qd, axis=1)  # first-min = lowest cid
+    if graph_nbrs is None:
+        graph_nbrs = _centroid_graph(C, cc, graph_edges)
+    entry = _nearest(Q, qq, C, cc)[0]
+    nbrs = np.asarray(graph_nbrs, dtype=np.int64)
     return np.concatenate([entry[:, None], nbrs[entry]], axis=1)
 
 
@@ -261,17 +341,58 @@ def centroid_graph_edges(C, cc, graph_edges: int):
     (src_idx, dst_idx, rank) rows of each centroid's ``graph_edges``
     nearest other centroids — the same quantized ranking
     _route_probes walks at query time."""
-    import numpy as np
-
-    DC = (cc[:, None] - 2.0 * (C @ C.T)) + cc[None, :]
-    qdc = np.floor(DC * 1e6 + 0.5).astype(np.int64)
-    np.fill_diagonal(qdc, np.iinfo(np.int64).max)
-    nbrs = np.argsort(qdc, axis=1, kind="stable")[:, :graph_edges]
+    nbrs = _centroid_graph(C, cc, graph_edges)
     return [
         (int(i), int(j), r + 1)
         for i in range(len(C))
         for r, j in enumerate(nbrs[i])
     ]
+
+
+def _probe_topk(ids, cell, V, Vn, a_qids, a_Q, a_Qn, c2q, k):
+    """One batch of IVF probe scoring: each cell's rows against the
+    queries probing that cell, per-query top-k (``_cosine_topk``).
+    Returns a (query_id, neighbor_id, sim) frame, or None."""
+    out_q, out_n, out_s = [], [], []
+    for c in np.unique(cell):
+        qidx = c2q.get(int(c))
+        if qidx is None:
+            continue
+        m = cell == c
+        mi = ids[m]
+        qi, ri, sim = _cosine_topk(V[m], Vn[m], a_Q[qidx], a_Qn[qidx], mi, k)
+        out_q.append(a_qids[qidx[qi]])
+        out_n.append(mi[ri])
+        out_s.append(sim)
+    if not out_q:
+        return None
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(out_q),
+            "neighbor_id": np.concatenate(out_n),
+            "sim": np.concatenate(out_s),
+        }
+    )
+
+
+def _rank_topk(cand: DataFrame, k: int, key: str = "query_id") -> DataFrame:
+    """Merge per-batch top-k candidates: rank by (sim DESC,
+    neighbor_id ASC) within ``key`` and keep ranks 1..k."""
+    w = Window.partitionBy(key).orderBy(
+        F.col("sim").desc(), F.col("neighbor_id")
+    )
+    return cand.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _cell_queries(probe_idx, cids):
+    """cid → array of query indices probing that cell."""
+    cell_to_q: dict[int, list[int]] = {}
+    for qi, cells in enumerate(probe_idx):
+        for ci in cells:
+            cell_to_q.setdefault(int(cids[ci]), []).append(qi)
+    return {c: np.asarray(v) for c, v in cell_to_q.items()}
 
 
 def ivf_topk(
@@ -306,16 +427,8 @@ def ivf_topk(
     batch with the same quantized argmin, then scores it, so the
     corpus crosses the Arrow boundary once and only per-batch top-k
     survivors (queries × k × n_batches rows) reach the rank window.
-    The assignment arithmetic is byte-for-byte the ivf_assign_numpy
-    kernel (exact ⟨v,v⟩−2⟨v,c⟩+⟨c,c⟩ expansion, ⌊d²·1e6+.5⌋ argmin,
-    first-minimum = lowest cid)."""
-    import numpy as np
-    import pandas as pd
-
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
+    The assignment is ivf_assign_numpy's ``_nearest`` and the scoring
+    ivf_serve_topk's ``_probe_topk``."""
     # ONE driver job fetches BOTH bounded sides (centroids + query
     # set) — they are usually two filters of the same scan, and two
     # sequential collect() jobs paid the per-job floor twice (a
@@ -333,38 +446,18 @@ def ivf_topk(
         )
     )
     rows = tagged.collect()
-    cent = sorted(
-        ((r["__id"], list(r["__v"])) for r in rows if r["__side"] == 1),
-        key=lambda t: t[0],
+    cids, C = _sorted_vectors(
+        (r["__id"], r["__v"]) for r in rows if r["__side"] == 1
     )
-    cids = np.asarray([c[0] for c in cent], dtype=np.int64)
-    C = np.asarray([c[1] for c in cent], dtype=np.float64)
     cc = np.einsum("ij,ij->i", C, C)
-    qrows = [
-        (r["__id"], list(r["__v"])) for r in rows if r["__side"] == 2
-    ]
+    qrows = [(r["__id"], list(r["__v"])) for r in rows if r["__side"] == 2]
     qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    Q = np.asarray(
-        [[float(x) for x in r[1]] for r in qrows], dtype=np.float64
-    )
+    Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
     qq = np.einsum("ij,ij->i", Q, Q)
     probe_idx = _route_probes(Q, qq, C, cc, nprobe, graph_edges)
-    cell_to_q: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        for ci in probe_idx[qi]:
-            cell_to_q.setdefault(int(cids[ci]), []).append(qi)
-    Qn = np.sqrt(qq)
     dt = dict(corpus.dtypes)
     b = corpus.sparkSession.sparkContext.broadcast(
-        (
-            qids,
-            Q,
-            Qn,
-            {c: np.asarray(v) for c, v in cell_to_q.items()},
-            cids,
-            C,
-            cc,
-        )
+        (qids, Q, np.sqrt(qq), _cell_queries(probe_idx, cids), cids, C, cc)
     )
 
     def run(batches):
@@ -372,40 +465,15 @@ def ivf_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].values
-            V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            # inline corpus assignment — same kernel as
-            # ivf_assign_numpy (exact expansion, quantized argmin,
-            # first minimum = lowest cid)
+            V = _vectors(pdf[vec_col])
             vv = np.einsum("ij,ij->i", V, V)
-            DA = vv[:, None] - 2.0 * (V @ K.T) + k_cc[None, :]
-            j = np.argmin(
-                np.floor(DA * 1e6 + 0.5).astype(np.int64), axis=1
+            cell = k_ids[_nearest(V, vv, K, k_cc)[0]]
+            out = _probe_topk(
+                pdf[id_col].values, cell, V, np.sqrt(vv),
+                a_qids, a_Q, a_Qn, c2q, k,
             )
-            cell = k_ids[j]
-            Vn = np.sqrt(vv)
-            out_q, out_n, out_s = [], [], []
-            for c in np.unique(cell):
-                qidx = c2q.get(int(c))
-                if qidx is None:
-                    continue
-                m = cell == c
-                mi = ids[m]
-                S = (V[m] @ a_Q[qidx].T) / np.outer(Vn[m], a_Qn[qidx])
-                for jj, qi in enumerate(qidx):
-                    order = np.lexsort((mi, -S[:, jj]))[: min(k, len(mi))]
-                    out_q.append(np.full(len(order), a_qids[qi]))
-                    out_n.append(mi[order])
-                    out_s.append(S[order, jj])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
-            )
+            if out is not None:
+                yield out
 
     cand = ensure_min_parallelism(
         corpus.select(id_col, vec_col)
@@ -413,12 +481,7 @@ def ivf_topk(
         run,
         schema=f"query_id long, neighbor_id {dt[id_col]}, sim double",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(cand, k)
 
 
 def ivf_serve_topk(
@@ -442,23 +505,10 @@ def ivf_serve_topk(
     into the cells SCAN (the cells table is written cid-sorted at
     build time, so parquet row-group min/max stats prune unprobed
     cells' row groups — at 100 TB the scan reads only the probed
-    cells' files), then ONE masked numpy matmul per Arrow batch with
-    the same stable lexsort top-k as ivf_topk. Scoring arithmetic is
-    identical to ivf_topk's, so build+serve equals assign+probe
-    bit-for-bit."""
-    import numpy as np
-    import pandas as pd
-
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
-    cent = sorted(
-        ((r[cid_col], list(r[vec_col])) for r in centroids.collect()),
-        key=lambda t: t[0],
-    )
-    cids = np.asarray([c[0] for c in cent], dtype=np.int64)
-    C = np.asarray([c[1] for c in cent], dtype=np.float64)
+    cells' files), then ONE masked numpy matmul per Arrow batch
+    (``_probe_topk``, the same scoring as ivf_topk), so build+serve
+    equals assign+probe bit-for-bit."""
+    cids, C = _sorted_vectors(centroids.select(cid_col, vec_col).collect())
     cc = np.einsum("ij,ij->i", C, C)
     qrows = [
         (r[id_col], list(r[vec_col]))
@@ -469,79 +519,38 @@ def ivf_serve_topk(
     qq = np.einsum("ij,ij->i", Q, Q)
     graph_nbrs = None
     if graph_rows is not None and graph_edges is not None:
-        # persisted (src_cid, dst_cid, rank) rows → index-space
-        # neighbor array in rank order, mapped through the cid sort
-        pos = {int(c): i for i, c in enumerate(cids)}
-        by_src: dict[int, list[tuple[int, int]]] = {}
-        for src, dst, rank in graph_rows:
-            by_src.setdefault(pos[int(src)], []).append(
-                (int(rank), pos[int(dst)])
-            )
-        graph_nbrs = [
-            [j for _, j in sorted(by_src.get(i, []))[:graph_edges]]
-            for i in range(len(cids))
-        ]
+        graph_nbrs = _graph_nbrs(graph_rows, cids, graph_edges)
     probe_idx = _route_probes(Q, qq, C, cc, nprobe, graph_edges,
                               graph_nbrs=graph_nbrs)
-    cell_to_q: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        for ci in probe_idx[qi]:
-            cell_to_q.setdefault(int(cids[ci]), []).append(qi)
-    probed = sorted(cell_to_q)
-    Qn = np.sqrt(qq)
+    c2q = _cell_queries(probe_idx, cids)
     dt = dict(cells.dtypes)
-    b = cells.sparkSession.sparkContext.broadcast(
-        (qids, Q, Qn, {c: np.asarray(v) for c, v in cell_to_q.items()})
-    )
+    b = cells.sparkSession.sparkContext.broadcast((qids, Q, np.sqrt(qq), c2q))
 
     def run(batches):
-        a_qids, a_Q, a_Qn, c2q = b.value
+        a_qids, a_Q, a_Qn, a_c2q = b.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].values
-            cell = pdf[cid_col].values
-            V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            Vn = np.sqrt(np.einsum("ij,ij->i", V, V))
-            out_q, out_n, out_s = [], [], []
-            for c in np.unique(cell):
-                qidx = c2q.get(int(c))
-                if qidx is None:
-                    continue
-                m = cell == c
-                mi = ids[m]
-                S = (V[m] @ a_Q[qidx].T) / np.outer(Vn[m], a_Qn[qidx])
-                for jj, qi in enumerate(qidx):
-                    order = np.lexsort((mi, -S[:, jj]))[: min(k, len(mi))]
-                    out_q.append(np.full(len(order), a_qids[qi]))
-                    out_n.append(mi[order])
-                    out_s.append(S[order, jj])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
+            V = _vectors(pdf[vec_col])
+            out = _probe_topk(
+                pdf[id_col].values, pdf[cid_col].values, V,
+                np.sqrt(np.einsum("ij,ij->i", V, V)),
+                a_qids, a_Q, a_Qn, a_c2q, k,
             )
+            if out is not None:
+                yield out
 
     # the serve-time scan: ONLY probed cells — this filter reaches the
     # parquet scan (cells is cid-sorted at build time, so row-group
     # stats prune everything else)
     scan = cells.select(id_col, cid_col, vec_col).filter(
-        F.col(cid_col).isin([int(c) for c in probed])
+        F.col(cid_col).isin([int(c) for c in sorted(c2q)])
     )
     cand = ensure_min_parallelism(scan).mapInPandas(
         run,
         schema=f"query_id long, neighbor_id {dt[id_col]}, sim double",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(cand, k)
 
 
 def lsh_topk(
@@ -581,11 +590,7 @@ def lsh_topk(
         (dot_product(F.col("__qv"), F.col("__cv"))
          / (F.col("__qn") * F.col("__cn"))).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(sims, k)
 
 
 def cosine_banded_candidates(
@@ -630,12 +635,7 @@ def cosine_banded_candidates(
     Reference has no ANN/dedup surface (north star, BASELINE.json);
     the exact contract this approximates is dedup_embedding_cosine
     (queries/llm.py)."""
-    import numpy as np
-    import pandas as pd
-
-    planes = _rademacher_planes(n_tables * band_bits, dim)
-    P = np.asarray(planes, dtype=np.float64).T  # dim x (T*b)
-    weights = (1 << np.arange(band_bits)).astype(np.int64)
+    P = _band_planes(n_tables, band_bits, dim)
     block = F.col(block_col) if block_col else F.lit(0)
     prepared = df.select(
         F.col(id_col).alias("__id"),
@@ -649,9 +649,7 @@ def cosine_banded_candidates(
             n = len(pdf)
             if not n:
                 continue
-            V = np.asarray(list(pdf["__vec"]), dtype=np.float64)
-            S = (V @ P) >= 0.0  # n x (T*b) sign bits
-            B = S.reshape(n, n_tables, band_bits) @ weights  # n x T
+            B = _band_keys(_vectors(pdf["__vec"]), P, band_bits)  # n x T
             yield pd.DataFrame(
                 {
                     "__id": np.repeat(pdf["__id"].values, n_tables),
@@ -702,87 +700,47 @@ def cosine_banded_pairs(
     n_tables: int = 16,
     band_bits: int = 12,
     dim: int = 64,
-    verify: str = "fold",
 ) -> DataFrame:
     """LSH candidates → exact cosine verify ≥ threshold. The verify
     step is exact, so precision is 1.0 by construction; recall is the
     candidate-generation recall (see cosine_banded_candidates).
     Returns (id_a, id_b, sim) with sim rounded to 4 decimals.
 
-    ``verify`` picks the cosine implementation: "fold" (default) is
-    the sequential higher-order-function fold whose doubles match the
-    DuckDB oracle bit-for-bit — with a selective candidate set it
-    touches ~0.5% of pairs, so the interpreted cost is off the hot
-    path; "numpy" routes the joined pairs through the Arrow-batched
-    SIMD verify (cosine_verify_numpy — 3.1x faster at 200k pairs,
-    identical pair sets in practice, but numpy's pairwise summation
-    can differ from the fold in the last ulps, so hash-compared
-    oracle paths keep "fold")."""
+    The joined pairs go through the Arrow-batched SIMD verify
+    (cosine_verify_numpy — 3.1x faster than the interpreted fold at
+    200k pairs). numpy's pairwise summation can differ from DuckDB's
+    sequential fold in the last ulps, so a pair whose cosine sits
+    within an ulp of the threshold or of a 4-decimal rounding tie
+    could differ from the oracle; none has been observed."""
     cand = cosine_banded_candidates(
         df, id_col, vec_col, block_col, n_tables, band_bits, dim
     )
-    # BROADCAST the narrow (id -> vector, norm) side of both verify
-    # joins: candidate pairs are 2 ids wide, and a shuffle join here
-    # would ship dim*8-byte vectors through a PAIR-count-sized
-    # exchange — measured at the 100x probe (a corpus of 100-way
-    # near-identical replicas, ~1.5e8 candidates): the vector-carrying
-    # shuffle wrote >60 GB of spill and filled the disk. With the
-    # broadcast, pair rows pick their vectors map-side and no
-    # pair-sized vector exchange exists. The broadcast is the corpus
-    # id->vector map (n*dim*8 bytes; ~1 MB at sf0.1, ~120 MB at the
-    # 100x probe) — beyond broadcastable corpus sizes, shard the
-    # verify by block (IVF cell / label) or carry vectors through the
-    # bucket join itself (the oracle's sig shape) instead.
-    if verify not in ("fold", "numpy"):
-        raise ValueError(f"verify must be 'fold' or 'numpy': {verify!r}")
-    # The numpy verify computes norms inside the Arrow batch — don't
-    # pay two interpreted fold traversals of the corpus for columns
-    # it would ignore.
-    norm = [l2_norm(F.col(vec_col)).alias("__n")] if verify == "fold" else []
-    v = df.select(
-        F.col(id_col).alias("__vid"),
-        F.col(vec_col).alias("__v"),
-        *norm,
+    # BROADCAST the narrow (id -> vector) side of both verify joins:
+    # candidate pairs are 2 ids wide, and a shuffle join here would
+    # ship dim*8-byte vectors through a PAIR-count-sized exchange —
+    # measured at the 100x probe (a corpus of 100-way near-identical
+    # replicas, ~1.5e8 candidates): the vector-carrying shuffle wrote
+    # >60 GB of spill and filled the disk. With the broadcast, pair
+    # rows pick their vectors map-side and no pair-sized vector
+    # exchange exists. The broadcast is the corpus id->vector map
+    # (n*dim*8 bytes; ~1 MB at sf0.1, ~120 MB at the 100x probe) —
+    # beyond broadcastable corpus sizes, shard the verify by block
+    # (IVF cell / label) or carry vectors through the bucket join
+    # itself (the oracle's sig shape) instead.
+    v = df.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v"))
+    sims = cand.join(
+        F.broadcast(
+            v.select(F.col("__vid").alias("id_a"), F.col("__v").alias("__va"))
+        ),
+        on="id_a",
+    ).join(
+        F.broadcast(
+            v.select(F.col("__vid").alias("id_b"), F.col("__v").alias("__vb"))
+        ),
+        on="id_b",
     )
-    na = [F.col("__n").alias("__na")] if verify == "fold" else []
-    nb = [F.col("__n").alias("__nb")] if verify == "fold" else []
-    sims = (
-        cand.join(
-            F.broadcast(
-                v.select(
-                    F.col("__vid").alias("id_a"),
-                    F.col("__v").alias("__va"),
-                    *na,
-                )
-            ),
-            on="id_a",
-        )
-        .join(
-            F.broadcast(
-                v.select(
-                    F.col("__vid").alias("id_b"),
-                    F.col("__v").alias("__vb"),
-                    *nb,
-                )
-            ),
-            on="id_b",
-        )
-    )
-    if verify == "numpy":
-        return cosine_verify_numpy(
-            sims.select("id_a", "id_b", "__va", "__vb"),
-            threshold=threshold,
-        )
-    scored = sims.select(
-        "id_a",
-        "id_b",
-        (
-            dot_product(F.col("__va"), F.col("__vb"))
-            / (F.col("__na") * F.col("__nb"))
-        ).alias("sim"),
-    )
-    return scored.filter(F.col("sim") >= threshold).select(
-        "id_a", "id_b", F.round("sim", 4).alias("sim")
+    return cosine_verify_numpy(
+        sims.select("id_a", "id_b", "__va", "__vb"), threshold=threshold
     )
 
 
@@ -798,18 +756,16 @@ def cosine_banded_pairs_fused(
     plant: tuple | None = None,
 ) -> DataFrame:
     """Single-task fused twin of ``plant_near_dups →
-    cosine_banded_pairs(verify='numpy')`` for corpora below the scale
-    gate (guide §1.2/§2.4: at toy scale the distributed plan is pure
-    fixed cost — 6 jobs: sig persist materialization, a bucket
-    broadcast, the pair-distinct exchange, two verify-map broadcasts
-    each re-scanning the corpus through interpreted cast/zip_with
-    HOFs, and the verify Arrow pass). This form computes the SAME
-    numpy math — float32→float64 exact casts, the identical
-    (n×dim)@(dim×T·b) sign matmul against the shared
-    ``_rademacher_planes`` literals, per-(block, table, bucket)
-    collision pairs, einsum dot / norm verify, 4-decimal round — in
-    ONE mapInPandas task over the coalesced corpus: zero exchanges,
-    zero broadcasts, one Arrow boundary.
+    cosine_banded_pairs`` for corpora below the scale gate (guide
+    §1.2/§2.4: at toy scale the distributed plan is pure fixed cost —
+    6 jobs: sig persist materialization, a bucket broadcast, the
+    pair-distinct exchange, two verify-map broadcasts each re-scanning
+    the corpus through interpreted cast/zip_with HOFs, and the verify
+    Arrow pass). This form runs the SAME numpy functions —
+    ``_band_keys`` over the shared ``_rademacher_planes`` literals,
+    per-(block, table, bucket) collision pairs, ``_verify_cosine`` —
+    in ONE mapInPandas task over the coalesced corpus: zero
+    exchanges, zero broadcasts, one Arrow boundary.
 
     ``plant`` = (every, shift_scale, id_offset) additionally folds
     plant_near_dups into the kernel: clone = f64(v) + c·f64(roll(v))
@@ -817,41 +773,23 @@ def cosine_banded_pairs_fused(
     the JVM zip_with (elementwise casts and +/* are deterministic, so
     the planted vectors are bit-identical).
 
-    Callers gate on corpus file size (queries.small_table), the one
-    fixed-cost-vs-slope gate every Arrow kernel here uses; above the
+    Callers gate on corpus file size (queries.small_table); above the
     gate the distributed form's bucketed self-join + broadcast verify
     is the designed scale shape."""
-    import numpy as np
-    import pandas as pd
-
-    from duckdb_distributed_execution_spark import functions as _fx
-
-    fused_cap = _fx.FUSED_KERNEL_MAX_ROWS  # captured driver-side
-    planes = _rademacher_planes(n_tables * band_bits, dim)
-    P = np.asarray(planes, dtype=np.float64).T  # dim x (T*b)
-    weights = (1 << np.arange(band_bits)).astype(np.int64)
+    P = _band_planes(n_tables, band_bits, dim)
     thr = float(threshold)
     blk_cols = [block_col] if block_col else []
     sel = df.select(id_col, *blk_cols, vec_col)
     id_t = dict(sel.dtypes)[id_col]
 
-    def run(batches):
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            pd.concat(parts, ignore_index=True)
-            if len(parts) > 1
-            else parts[0]
-        )
-        check_fused_input_rows(len(pdf), "cosine_banded_pairs_fused", fused_cap)
+    def kernel(pdf):
         ids = pdf[id_col].to_numpy()
         blk = (
             pdf[block_col].to_numpy()
             if block_col
             else np.zeros(len(pdf), dtype=np.int64)
         )
-        V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+        V = _vectors(pdf[vec_col])
         if plant is not None:
             every, shift_scale, id_offset = plant
             m = (ids % every) == 0
@@ -860,8 +798,7 @@ def cosine_banded_pairs_fused(
             blk = np.concatenate([blk, blk[m]])
             V = np.vstack([V, C])
         n = len(ids)
-        S = (V @ P) >= 0.0
-        B = S.reshape(n, n_tables, band_bits) @ weights  # n x T
+        B = _band_keys(V, P, band_bits)  # n x T
         ia_parts: list = []
         ib_parts: list = []
         for t in range(n_tables):
@@ -877,7 +814,7 @@ def cosine_banded_pairs_fused(
                 ia_parts.append(idx[r])
                 ib_parts.append(idx[c])
         if not ia_parts:
-            return
+            return None
         ia = np.concatenate(ia_parts)
         ib = np.concatenate(ib_parts)
         ida, idb = ids[ia], ids[ib]
@@ -885,22 +822,14 @@ def cosine_banded_pairs_fused(
         ia[swap], ib[swap] = ib[swap], ia[swap]
         uniq = np.unique(ia.astype(np.int64) * n + ib)
         ia, ib = uniq // n, uniq % n
-        A, Bv = V[ia], V[ib]
-        dots = np.einsum("ij,ij->i", A, Bv)
-        sims = dots / (
-            np.linalg.norm(A, axis=1) * np.linalg.norm(Bv, axis=1)
-        )
-        mask = sims >= thr
-        yield pd.DataFrame(
-            {
-                "id_a": ids[ia[mask]],
-                "id_b": ids[ib[mask]],
-                "sim": np.round(sims[mask], 4),
-            }
+        mask, sims = _verify_cosine(V[ia], V[ib], thr)
+        return pd.DataFrame(
+            {"id_a": ids[ia[mask]], "id_b": ids[ib[mask]], "sim": sims}
         )
 
-    return sel.coalesce(1).mapInPandas(
-        run, schema=f"id_a {id_t}, id_b {id_t}, sim double"
+    return fused_single_task(
+        sel, kernel, f"id_a {id_t}, id_b {id_t}, sim double",
+        "cosine_banded_pairs_fused",
     )
 
 
@@ -910,93 +839,44 @@ def semantic_dedup_pairs_fused(
     vec_col: str = "embedding",
     k_seeds: int = 8,
     threshold: float = 0.3,
-    assign_round: int = 6,
     row_block: int = 4096,
 ) -> DataFrame:
     """Single-task fused twin of semantic_dedup_seeded's three-job
     plan (seed collect → assign_nearest_seed_numpy Arrow pass →
     groupBy(cluster) exchange → cosine_pairs_blocked_numpy Arrow
-    pass) for corpora below the scale gate. Same numpy math in ONE
-    mapInPandas task: rows sorted by id, the k lowest ids are the
-    seeds (the orderBy/limit collect's contract), assignment is the
-    identical rounded-cosine matmul with the ascending-seed-id argmax
-    tie-break, and the within-cluster pass replicates
-    cosine_pairs_blocked_numpy exactly (id-sorted rows, row_block
-    chunked (chunk×dim)@(dim×n) score matmul, upper triangle,
-    4-decimal round). Zero exchanges, zero collect jobs, one Arrow
-    boundary. Above the gate the per-cluster applyInPandas remains
-    the designed IVF-blocked scale shape (cluster count = the
-    parallelism)."""
-    import numpy as np
-    import pandas as pd
-
-    from duckdb_distributed_execution_spark import functions as _fx
-
-    fused_cap = _fx.FUSED_KERNEL_MAX_ROWS  # captured driver-side
+    pass) for corpora below the scale gate. The same numpy functions
+    in ONE mapInPandas task: rows sorted by id, the k lowest ids are
+    the seeds (the orderBy/limit collect's contract), ``_nearest_seed``
+    assigns, and ``_blocked_pairs`` scores each cluster. Zero
+    exchanges, zero collect jobs, one Arrow boundary. Above the gate
+    the per-cluster applyInPandas remains the designed IVF-blocked
+    scale shape (cluster count = the parallelism)."""
     sel = df.select(id_col, vec_col)
     id_t = dict(sel.dtypes)[id_col]
     thr = float(threshold)
 
-    def run(batches):
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            pd.concat(parts, ignore_index=True)
-            if len(parts) > 1
-            else parts[0]
-        )
-        check_fused_input_rows(len(pdf), "semantic_dedup_pairs_fused", fused_cap)
+    def kernel(pdf):
         ids = pdf[id_col].to_numpy()
-        V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+        V = _vectors(pdf[vec_col])
         order = np.argsort(ids, kind="stable")
         ids, V = ids[order], V[order]
-        seed_ids = ids[:k_seeds]
-        S = V[:k_seeds]
-        Sn = np.linalg.norm(S, axis=1)
-        sims = np.round(
-            (V @ S.T) / np.outer(np.linalg.norm(V, axis=1), Sn),
-            assign_round,
-        )
-        best = seed_ids[np.argmax(sims, axis=1)]
-        out_c: list = []
-        out_a: list = []
-        out_b: list = []
-        out_s: list = []
+        seed_ids, S = ids[:k_seeds], V[:k_seeds]
+        best = _nearest_seed(V, S, np.linalg.norm(S, axis=1), seed_ids)
+        out: list = []
         for cid in seed_ids:
             m = best == cid
-            cn = int(m.sum())
-            if cn < 2:
+            if int(m.sum()) < 2:
                 continue
-            cV = V[m]
-            cids = ids[m]  # ascending (global id sort)
-            norms = np.linalg.norm(cV, axis=1)
-            cols_idx = np.arange(cn)
-            for s in range(0, cn, row_block):
-                e = min(s + row_block, cn)
-                Sc = (cV[s:e] @ cV.T) / np.outer(norms[s:e], norms)
-                mask = (Sc >= thr) & (
-                    cols_idx[None, :] > np.arange(s, e)[:, None]
-                )
-                r, c = np.nonzero(mask)
-                out_c.append(np.repeat(cid, len(r)))
-                out_a.append(cids[r + s])
-                out_b.append(cids[c])
-                out_s.append(np.round(Sc[r, c], 4))
-        if not out_a:
-            return
-        yield pd.DataFrame(
-            {
-                "cluster": np.concatenate(out_c),
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "sim": np.concatenate(out_s),
-            }
-        )
+            a, b, sim = _blocked_pairs(ids[m], V[m], thr, row_block)
+            out.append((np.repeat(cid, len(a)), a, b, sim))
+        if not out:
+            return None
+        cols = [np.concatenate(c) for c in zip(*out)]
+        return pd.DataFrame(dict(zip(("cluster", "id_a", "id_b", "sim"), cols)))
 
-    return sel.coalesce(1).mapInPandas(
-        run,
-        schema=f"cluster long, id_a {id_t}, id_b {id_t}, sim double",
+    return fused_single_task(
+        sel, kernel, f"cluster long, id_a {id_t}, id_b {id_t}, sim double",
+        "semantic_dedup_pairs_fused",
     )
 
 
@@ -1088,11 +968,7 @@ def cosine_verify_numpy(
     interpreted fold (micro-benchmark in the round-4 commit message).
     Returns (out_cols..., sim) with sim >= threshold, rounded to 4
     decimals. Note: numpy's pairwise summation can differ from a
-    sequential fold in the last ulps — callers needing bit-exact
-    cross-engine hashes at 4-decimal rounding keep the fold path."""
-    import numpy as np
-    import pandas as pd
-
+    sequential fold in the last ulps (see cosine_banded_pairs)."""
     keep = list(out_cols)
     thr = float(threshold)
 
@@ -1100,15 +976,11 @@ def cosine_verify_numpy(
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.asarray(list(pdf[a_col]), dtype=np.float64)
-            B = np.asarray(list(pdf[b_col]), dtype=np.float64)
-            dots = np.einsum("ij,ij->i", A, B)
-            sims = dots / (
-                np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
+            mask, sims = _verify_cosine(
+                _vectors(pdf[a_col]), _vectors(pdf[b_col]), thr
             )
-            mask = sims >= thr
             out = pdf.loc[mask, keep].copy()
-            out["sim"] = np.round(sims[mask], 4)
+            out["sim"] = sims
             yield out
 
     schema = ", ".join(
@@ -1133,20 +1005,15 @@ def brute_force_topk_numpy(
 ) -> DataFrame:
     """Exact brute-force cosine top-k with the scoring loop in ONE
     numpy matmul per Arrow batch: ``queries`` is the collected
-    [(query_id, vector), ...] (q x dim floats, driver-bounded — the
-    same broadcast the fold plan shipped as a literal join side).
-    Each batch emits only its own top-k rows per query (ordered by
-    sim DESC, neighbor id ASC — any global top-k row is necessarily
-    in its batch's top-k under the same order, so the prune is
-    exact), and the final window ranks q x k x n_batches candidate
-    rows instead of q x |corpus|. The corpus never shuffles; the
-    plan is the 100 TB exact-scan shape with the interpreted
-    higher-order-function fold replaced by SIMD.
-    Returns (query_id, neighbor_id, rank, sim) with sim rounded to 4
-    decimals, rank 1..k."""
-    import numpy as np
-    import pandas as pd
-
+    [(query_id, vector), ...] (q x dim floats, driver-bounded, shipped
+    in the closure). Each batch emits only its own top-k rows per
+    query (``_cosine_topk``: sim DESC, neighbor id ASC — any global
+    top-k row is necessarily in its batch's top-k under the same
+    order, so the prune is exact), and the final window ranks
+    q x k x n_batches candidate rows instead of q x |corpus|. The
+    corpus never shuffles; this is the 100 TB exact-scan shape.
+    Returns (query_id, neighbor_id, rank, sim), rank 1..k, sim
+    unrounded."""
     qids = np.asarray([q[0] for q in queries], dtype=np.int64)
     Q = np.asarray([q[1] for q in queries], dtype=np.float64)
     Qn = np.linalg.norm(Q, axis=1)
@@ -1154,41 +1021,22 @@ def brute_force_topk_numpy(
 
     def run(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
             ids = pdf[id_col].values
-            V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            S = (V @ Q.T) / np.outer(np.linalg.norm(V, axis=1), Qn)
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(qids)):
-                order = np.lexsort((ids, -S[:, j]))[: min(k, n)]
-                out_q.append(np.full(len(order), qids[j]))
-                out_n.append(ids[order])
-                out_s.append(S[order, j])
+            V = _vectors(pdf[vec_col])
+            qi, ri, sim = _cosine_topk(
+                V, np.linalg.norm(V, axis=1), Q, Qn, ids, k
+            )
             yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
+                {"query_id": qids[qi], "neighbor_id": ids[ri], "sim": sim}
             )
 
     cand = corpus.select(id_col, vec_col).mapInPandas(
         run,
         schema=f"query_id long, neighbor_id {dt[id_col]}, sim double",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank",
-            F.round("sim", 4).alias("sim"),
-        )
-    )
+    return _rank_topk(cand, k).select("query_id", "neighbor_id", "rank", "sim")
 
 
 def brute_force_topk_fused(
@@ -1201,63 +1049,41 @@ def brute_force_topk_fused(
     """Single-task fused twin of the collect + brute_force_topk_numpy
     + rank-window plan for corpora below the scale gate (r9, guide
     §1.2): ONE mapInPandas task splits the coalesced table into
-    queries (id < ``query_id_below``) and corpus rows, runs the same
-    (n×dim)@(dim×q) float64 score matmul, and ranks per query with
-    the identical (sim DESC, neighbor id ASC) lexsort the distributed
-    per-batch prune + window use — no seed-collect job, no window
-    exchange, one Arrow boundary (3 jobs → 1 measured at sf0.1).
+    queries (id < ``query_id_below``) and corpus rows and ranks the
+    whole corpus with the same ``_cosine_topk`` the distributed
+    per-batch prune uses — no seed-collect job, no window exchange,
+    one Arrow boundary (3 jobs → 1 measured at sf0.1). Returns
+    (query_id, neighbor_id, rank, sim) like brute_force_topk_numpy.
     Above the gate the streaming per-batch top-k prune is the
     designed exact-scan shape (the corpus never fits one task)."""
-    import numpy as np
-    import pandas as pd
-
-    from duckdb_distributed_execution_spark import functions as _fx
-
-    fused_cap = _fx.FUSED_KERNEL_MAX_ROWS  # captured driver-side
     dt = dict(df.dtypes)
-    sel = df.select(id_col, vec_col)
 
-    def run(batches):
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = (
-            pd.concat(parts, ignore_index=True)
-            if len(parts) > 1
-            else parts[0]
-        )
-        check_fused_input_rows(len(pdf), "ann_bruteforce_topk_fused", fused_cap)
+    def kernel(pdf):
         ids = pdf[id_col].to_numpy()
-        V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+        V = _vectors(pdf[vec_col])
         qm = ids < query_id_below
-        qids, Q = ids[qm], V[qm]
-        cids, C = ids[~qm], V[~qm]
-        if not len(qids) or not len(cids):
-            return
-        Qn = np.linalg.norm(Q, axis=1)
-        S = (C @ Q.T) / np.outer(np.linalg.norm(C, axis=1), Qn)
-        out_q, out_n, out_r, out_s = [], [], [], []
-        for j in range(len(qids)):
-            order = np.lexsort((cids, -S[:, j]))[: min(k, len(cids))]
-            out_q.append(np.full(len(order), qids[j], dtype=np.int64))
-            out_n.append(cids[order])
-            out_r.append(np.arange(1, len(order) + 1, dtype=np.int32))
-            out_s.append(np.round(S[order, j], 4))
-        yield pd.DataFrame(
+        if qm.all() or not qm.any():
+            return None
+        Q, C, cids = V[qm], V[~qm], ids[~qm]
+        qi, ri, sim = _cosine_topk(
+            C, np.linalg.norm(C, axis=1), Q, np.linalg.norm(Q, axis=1),
+            cids, k,
+        )
+        rank = np.arange(len(qi)) - np.searchsorted(qi, qi) + 1
+        return pd.DataFrame(
             {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "rank": np.concatenate(out_r),
-                "sim": np.concatenate(out_s),
+                "query_id": ids[qm][qi].astype(np.int64),
+                "neighbor_id": cids[ri],
+                "rank": rank.astype(np.int32),
+                "sim": sim,
             }
         )
 
-    return sel.coalesce(1).mapInPandas(
-        run,
-        schema=(
-            f"query_id long, neighbor_id {dt[id_col]}, "
-            "rank int, sim double"
-        ),
+    return fused_single_task(
+        df.select(id_col, vec_col),
+        kernel,
+        f"query_id long, neighbor_id {dt[id_col]}, rank int, sim double",
+        "brute_force_topk_fused",
     )
 
 
@@ -1267,46 +1093,31 @@ def assign_nearest_seed_numpy(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     out_col: str = "cluster",
-    round_decimals: int = 6,
 ) -> DataFrame:
-    """Nearest-seed (max rounded cosine, lowest seed id on ties)
-    assignment in ONE Arrow-batched numpy pass: sims to all seeds are
-    a single (batch x dim) @ (dim x k) matmul — replacing the k-way
-    broadcast fan-out whose per-row interpreted higher-order-function
-    dots dominated semantic_dedup_seeded's wall after the pair pass
-    went numpy. ``seeds`` is the collected [(seed_id, vector), ...]
-    (k x dim floats — driver-bounded, broadcast in the closure).
-    Emits (id_col, out_col, vec_col): the vector rides through so the
-    downstream per-cluster pass needs no join back to the corpus.
-    Ties beyond rounding follow the oracle convention
-    (ORDER BY sim DESC, seed_id)."""
-    import numpy as np
-    import pandas as pd
-
-    seed_ids = np.asarray([s[0] for s in seeds], dtype=np.int64)
-    S = np.asarray([s[1] for s in seeds], dtype=np.float64)  # k x dim
+    """Nearest-seed (max cosine rounded to 6 decimals, lowest seed id
+    on ties — ``_nearest_seed``) assignment in ONE Arrow-batched numpy
+    pass: sims to all seeds are a single (batch x dim) @ (dim x k)
+    matmul — replacing the k-way broadcast fan-out whose per-row
+    interpreted higher-order-function dots dominated
+    semantic_dedup_seeded's wall after the pair pass went numpy.
+    ``seeds`` is the collected [(seed_id, vector), ...] (k x dim
+    floats — driver-bounded, shipped in the closure). Emits (id_col,
+    out_col, vec_col): the vector rides through so the downstream
+    per-cluster pass needs no join back to the corpus."""
+    seed_ids, S = _sorted_vectors(seeds)
     Sn = np.linalg.norm(S, axis=1)
-    order = np.argsort(seed_ids)          # tie-break: lowest seed id
-    seed_ids, S, Sn = seed_ids[order], S[order], Sn[order]
     dt = dict(df.dtypes)
 
     def run(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            sims = np.round(
-                (V @ S.T) / np.outer(np.linalg.norm(V, axis=1), Sn),
-                round_decimals,
-            )
-            # argmax returns the FIRST max index; rows are in
-            # ascending seed-id order, so ties resolve to the lowest
-            # seed id — the oracle's ORDER BY sim DESC, seed_id.
-            best = seed_ids[np.argmax(sims, axis=1)]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
-                    out_col: best,
+                    out_col: _nearest_seed(
+                        _vectors(pdf[vec_col]), S, Sn, seed_ids
+                    ),
                     vec_col: pdf[vec_col].values,
                 }
             )
@@ -1337,10 +1148,9 @@ def cosine_pairs_blocked_numpy(
     interpreted work and a pair-sized Arrow row stream if verified in
     Python. This form instead groups by block (applyInPandas: Arrow
     transfer is Theta(rows * dim), the block's VECTORS, never its
-    pairs), L2-normalizes once, and emits the upper triangle of
-    (V_chunk @ V.T) that clears the threshold. Rows are sorted by id
-    within the block so column-index > row-index is exactly
-    id_a < id_b.
+    pairs), sorts the block by id and emits ``_blocked_pairs``: the
+    upper triangle of (V_chunk @ V.T) / norms that clears the
+    threshold.
 
     Memory per task is row_block * |block| doubles (the chunked score
     matrix), never |block|^2. At 100 TB the block count IS the
@@ -1355,40 +1165,26 @@ def cosine_pairs_blocked_numpy(
     Returns (block_col, id_a, id_b, sim) with sim >= threshold rounded
     to 4 decimals; ``extra_out`` appends per-block constant columns.
     """
-    import numpy as np
-    import pandas as pd
-
     dt = dict(df.dtypes)
     thr = float(threshold)
     out_names = [block_col, "id_a", "id_b", "sim"] + list(extra_out)
 
     def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = {
-            block_col: pdf[block_col].iloc[:0],
-            "id_a": pdf[id_col].iloc[:0],
-            "id_b": pdf[id_col].iloc[:0],
-            "sim": pd.Series([], dtype="float64"),
-            **{c: pdf[c].iloc[:0] for c in extra_out},
-        }
-        if n < 2:
-            return pd.DataFrame(empty)
+        if len(pdf) < 2:
+            return pd.DataFrame(
+                {
+                    block_col: pdf[block_col].iloc[:0],
+                    "id_a": pdf[id_col].iloc[:0],
+                    "id_b": pdf[id_col].iloc[:0],
+                    "sim": pd.Series([], dtype="float64"),
+                    **{c: pdf[c].iloc[:0] for c in extra_out},
+                }
+            )
         pdf = pdf.sort_values(id_col, kind="mergesort", ignore_index=True)
-        ids = pdf[id_col].values
-        V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-        norms = np.linalg.norm(V, axis=1)
-        cols_idx = np.arange(n)
-        ia, ib, ss = [], [], []
-        for s in range(0, n, row_block):
-            e = min(s + row_block, n)
-            S = (V[s:e] @ V.T) / np.outer(norms[s:e], norms)
-            mask = (S >= thr) & (cols_idx[None, :] > np.arange(s, e)[:, None])
-            r, c = np.nonzero(mask)
-            ia.append(ids[r + s])
-            ib.append(ids[c])
-            ss.append(np.round(S[r, c], 4))
-        ia, ib, ss = np.concatenate(ia), np.concatenate(ib), np.concatenate(ss)
-        out = pd.DataFrame(
+        ia, ib, ss = _blocked_pairs(
+            pdf[id_col].values, _vectors(pdf[vec_col]), thr, row_block
+        )
+        return pd.DataFrame(
             {
                 block_col: np.repeat(pdf[block_col].iloc[0], len(ia)),
                 "id_a": ia,
@@ -1397,7 +1193,6 @@ def cosine_pairs_blocked_numpy(
                 **{c: np.repeat(pdf[c].iloc[0], len(ia)) for c in extra_out},
             }
         )
-        return out
 
     schema = ", ".join(
         [
@@ -1554,10 +1349,6 @@ def pq_subvectors(
     """Explode each vector into its ``m`` contiguous ``dsub``-dim
     subvectors: (id, sub, sv). Narrow rows — ``m`` per vector, each
     carrying only a ``dsub``-dim slice."""
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
     spark = df.sparkSession
     subs = spark.range(m).select(F.col("id").cast("int").alias("sub"))
     # downstream encode/LUT folds are Θ(rows·m·k) interpreted work
@@ -1614,7 +1405,6 @@ def pq_encode_numpy(
     m: int = 8,
     dsub: int = 8,
     passthrough: tuple = (),
-    quant: float = 1e6,
 ) -> DataFrame:
     """PQ encoding as ONE numpy matmul per Arrow batch (round-9
     surgery on the wave-62 build path): per (vector, subspace) the
@@ -1626,37 +1416,28 @@ def pq_encode_numpy(
     assigned corpus encodes to (id, cid, sub, code) in the SAME
     pipelined stage as the assignment, zero shuffles.
 
-    Determinism contract (the ``ivf_assign_numpy`` convention):
-    subspace d² via the oracle's expansion ⟨s,s⟩−2⟨s,c⟩+⟨c,c⟩,
-    quantized to ⌊d²·quant+.5⌋ BEFORE the argmin, ties to the lowest
-    code — mirrored by ``ORDER BY CAST(floor(dist*1e6+0.5) AS
-    BIGINT), code`` in the ann_ivf_pq_served_topk oracle. numpy's
-    pairwise dot summation can differ from DuckDB's sequential fold
-    in last ulps; the quantization makes a flipped pick a
-    measure-zero boundary event, and the oracle hash would catch it
-    loudly. (``pq_encode`` keeps the raw-double struct-min
-    convention for the wave-48 ADC family whose oracles pin it.)"""
-    import numpy as np
-    import pandas as pd
-
+    Determinism contract (``_nearest``, the ``ivf_assign_numpy``
+    convention): subspace d² via the oracle's expansion
+    ⟨s,s⟩−2⟨s,c⟩+⟨c,c⟩, quantized to ⌊d²·1e6+.5⌋ BEFORE the argmin,
+    ties to the lowest code — mirrored by ``ORDER BY
+    CAST(floor(dist*1e6+0.5) AS BIGINT), code`` in the
+    ann_ivf_pq_served_topk oracle. (``pq_encode`` keeps the
+    raw-double struct-min convention for the wave-48 ADC family whose
+    oracles pin it.)"""
     spark = df.sparkSession
     cb_rows = codebook.select("sub", "code", "cv").collect()
     by_sub: dict[int, list] = {}
     for r in cb_rows:
-        by_sub.setdefault(int(r["sub"]), []).append(
-            (int(r["code"]), list(r["cv"]))
-        )
+        by_sub.setdefault(int(r["sub"]), []).append((int(r["code"]), r["cv"]))
     subs_sorted = sorted(by_sub)
     if subs_sorted != list(range(m)):
         raise ValueError(f"codebook subs {subs_sorted} != range({m})")
     CB, CBcc, CBcodes = [], [], []
     for s in range(m):
-        entries = sorted(by_sub[s])  # ascending code: argmin's first
-        C = np.asarray([e[1] for e in entries], dtype=np.float64)
+        codes, C = _sorted_vectors(by_sub[s])  # ascending code
         CB.append(C)
         CBcc.append(np.einsum("ij,ij->i", C, C))
-        CBcodes.append(np.asarray([e[0] for e in entries],
-                                  dtype=np.int32))
+        CBcodes.append(codes.astype(np.int32))
     b = spark.sparkContext.broadcast((CB, CBcc, CBcodes))
     dt = dict(df.dtypes)
     cols = [id_col, *passthrough, vec_col]
@@ -1667,24 +1448,18 @@ def pq_encode_numpy(
             n = len(pdf)
             if not n:
                 continue
-            V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+            V = _vectors(pdf[vec_col])
             out = np.empty((n, m), dtype=np.int32)
             for s in range(m):
                 S_ = V[:, s * dsub:(s + 1) * dsub]
                 ss = np.einsum("ij,ij->i", S_, S_)
-                D = ss[:, None] - 2.0 * (S_ @ kCB[s].T) + kcc[s][None, :]
-                DQ = np.floor(D * quant + 0.5).astype(np.int64)
-                out[:, s] = kcodes[s][np.argmin(DQ, axis=1)]
+                out[:, s] = kcodes[s][_nearest(S_, ss, kCB[s], kcc[s])[0]]
             data = {id_col: np.repeat(pdf[id_col].values, m)}
             for p in passthrough:
                 data[p] = np.repeat(pdf[p].values, m)
             data["sub"] = np.tile(np.arange(m, dtype=np.int32), n)
             data["code"] = out.reshape(-1)
             yield pd.DataFrame(data)
-
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
 
     schema = ", ".join(
         [f"{id_col} {dt[id_col]}"]
@@ -1771,22 +1546,10 @@ def ivf_pq_serve_topk(
     (adist, neighbor_id), so the rerank set — and therefore the final
     top-k — is engine-exact against the SQL oracle
     (ann_ivf_pq_served_topk)."""
-    import numpy as np
-
-    from duckdb_distributed_execution_spark.functions import (
-        dot_product,
-        ensure_min_parallelism,
-        exact_sum,
-        l2_norm,
-    )
+    from duckdb_distributed_execution_spark.functions import exact_sum
 
     spark = codes.sparkSession
-    cent = sorted(
-        ((r[cid_col], list(r[vec_col])) for r in centroids.collect()),
-        key=lambda t: t[0],
-    )
-    cids = np.asarray([c[0] for c in cent], dtype=np.int64)
-    C = np.asarray([c[1] for c in cent], dtype=np.float64)
+    cids, C = _sorted_vectors(centroids.select(cid_col, vec_col).collect())
     cc = np.einsum("ij,ij->i", C, C)
     qrows = [
         (r[id_col], list(r[vec_col]))
@@ -1796,16 +1559,7 @@ def ivf_pq_serve_topk(
     qq = np.einsum("ij,ij->i", Q, Q)
     graph_nbrs = None
     if graph_rows is not None and graph_edges is not None:
-        pos = {int(c): i for i, c in enumerate(cids)}
-        by_src: dict[int, list[tuple[int, int]]] = {}
-        for src, dst, rank in graph_rows:
-            by_src.setdefault(pos[int(src)], []).append(
-                (int(rank), pos[int(dst)])
-            )
-        graph_nbrs = [
-            [j for _, j in sorted(by_src.get(i, []))[:graph_edges]]
-            for i in range(len(cids))
-        ]
+        graph_nbrs = _graph_nbrs(graph_rows, cids, graph_edges)
     probe_idx = _route_probes(Q, qq, C, cc, nprobe, graph_edges,
                               graph_nbrs=graph_nbrs)
     qid_type = dict(queries.dtypes)[id_col]
@@ -1910,9 +1664,6 @@ def hard_negative_topk_numpy(
     yields all-NaN sims and therefore zero output rows — callers
     should pre-filter anchors (pipeline49 does) and oracles carry the
     symmetric av-norm guard (ADVICE r6)."""
-    import numpy as np
-    import pandas as pd
-
     aids = np.asarray([a[0] for a in anchors], dtype=np.int64)
     albl = np.asarray([a[1] for a in anchors], dtype=np.int64)
     A = np.asarray([a[2] for a in anchors], dtype=np.float64)
@@ -1921,27 +1672,21 @@ def hard_negative_topk_numpy(
 
     def run(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
             ids = pdf[id_col].values
             lbl = np.asarray(pdf[label_col].values, dtype=np.int64)
-            V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            S = (V @ A.T) / np.outer(np.linalg.norm(V, axis=1), An)
-            mask = lbl[:, None] == albl[None, :]
-            S = np.where(mask, -np.inf, S)
-            out_a, out_n, out_s = [], [], []
-            for j in range(len(aids)):
-                order = np.lexsort((ids, -S[:, j]))[: min(k, n)]
-                keep = order[np.isfinite(S[order, j])]
-                out_a.append(np.full(len(keep), aids[j]))
-                out_n.append(ids[keep])
-                out_s.append(S[keep, j])
+            V = _vectors(pdf[vec_col])
+            qi, ri, sim = _cosine_topk(
+                V, np.linalg.norm(V, axis=1), A, An, ids, k,
+                exclude=lbl[:, None] == albl[None, :],
+            )
+            keep = np.isfinite(sim)
             yield pd.DataFrame(
                 {
-                    "anchor_id": np.concatenate(out_a),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
+                    "anchor_id": aids[qi[keep]],
+                    "neighbor_id": ids[ri[keep]],
+                    "sim": sim[keep],
                 }
             )
 
@@ -1949,14 +1694,6 @@ def hard_negative_topk_numpy(
         run,
         schema=f"anchor_id long, neighbor_id {dt[id_col]}, sim double",
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "anchor_id", "neighbor_id", "rank",
-            F.round("sim", 4).alias("sim"),
-        )
+    return _rank_topk(cand, k, key="anchor_id").select(
+        "anchor_id", "neighbor_id", "rank", F.round("sim", 4).alias("sim"),
     )

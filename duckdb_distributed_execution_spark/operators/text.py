@@ -276,51 +276,6 @@ def oracle_normalize(expr: str) -> str:
     )
 
 
-# --- Spark-SQL twin strings -------------------------------------------------
-# Single-parse forms of the Column builders above, for hot query
-# constructors: round-9 profiling measured Python-side plan building at
-# ~25% of the sf0.1 bench wall, nearly all py4j socket latency — the
-# quality/stopword Column chains alone are ~150 round trips. Each twin
-# returns SQL TEXT building the IDENTICAL expression tree through the
-# JVM parser (one round trip via F.expr). Literal conventions: \\s+
-# escapes to \s+ in Spark's default string-literal mode; D-suffixed
-# doubles keep arithmetic in DOUBLE exactly like F.lit(float).
-# Equivalence is pinned in tests/test_arrow_text.py.
-
-def spark_normalize_sql(expr: str) -> str:
-    return (
-        f"trim(regexp_replace(regexp_replace(lower({expr}), "
-        f"'[^a-z0-9 ]', ' '), '\\\\s+', ' '))"
-    )
-
-
-def spark_tokens_sql(expr: str) -> str:
-    return f"split(trim({expr}), '\\\\s+')"
-
-
-def _spark_stopword_array_sql() -> str:
-    return "array(" + ", ".join(f"'{s}'" for s in STOPWORDS) + ")"
-
-
-def spark_stopword_count_sql(expr: str) -> str:
-    toks = spark_tokens_sql(spark_normalize_sql(expr))
-    return (
-        f"CAST(size(filter({toks}, "
-        f"t -> array_contains({_spark_stopword_array_sql()}, t))) AS BIGINT)"
-    )
-
-
-def spark_quality_score_sql(expr: str) -> str:
-    toks = spark_tokens_sql(spark_normalize_sql(expr))
-    n = f"CAST(size({toks}) AS DOUBLE)"
-    uniq = f"CAST(size(array_distinct({toks})) AS DOUBLE)"
-    swc = f"CAST({spark_stopword_count_sql(expr)} AS DOUBLE)"
-    return (
-        f"0.4D * least(1.0D, {n} / 64.0D) + 0.3D * ({uniq} / {n}) "
-        f"+ 0.3D * (1.0D - {swc} / {n})"
-    )
-
-
 def hashed_logit(col: Column | str) -> Column:
     """Hashed-feature linear score: every normalized token is a
     feature whose integer milli-weight derives deterministically from

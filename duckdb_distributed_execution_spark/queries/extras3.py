@@ -371,7 +371,7 @@ def semantic_dedup_seeded(spark, sf_dir):
     if small_table(sf_dir, "embeddings"):
         return semantic_dedup_pairs_fused(
             e, id_col="vec_id", vec_col="embedding", k_seeds=8,
-            threshold=0.3, assign_round=6,
+            threshold=0.3,
         )
     # Seeds are k x dim floats — driver-bounded by construction, the
     # same budget kmeans_train's centroid loop holds.
@@ -387,7 +387,7 @@ def semantic_dedup_seeded(spark, sf_dir):
     # the corpus; the only shuffle is the groupBy(cluster) exchange.
     clustered = assign_nearest_seed_numpy(
         e, seeds, id_col="vec_id", vec_col="embedding",
-        out_col="cluster", round_decimals=6,
+        out_col="cluster",
     )
     return cosine_pairs_blocked_numpy(
         clustered, block_col="cluster", id_col="vec_id",

@@ -387,40 +387,17 @@ def text_token_stats(spark, sf_dir):
 def text_quality(spark, sf_dir):
     """Per-document quality scoring (length/diversity/stopword mix).
 
-    r9 surgery — the JVM column form re-derives normalize_text ~4×
-    and tokenize ~3× per row (quality_score + stopword_count, no CSE
-    across the interpreted HOF projection; measured ~0.9 ms/doc on
-    one core, and `documents` is a single row group at every SF so
-    the scan stage never parallelizes on its own). Two size-gated
-    plans, same results (pinned in tests/test_arrow_text.py):
-
-    * above the gate — ONE fused Arrow pass (doc_features_arrow with
-      emit_stopwords: RE2 normalize + numpy quality, same IEEE
-      operation order; sf1 measured 4.48 → ~0.9 s);
-    * below it — the JVM expression form over a min-parallelized
-      narrow projection (python-worker fixed cost exceeds the whole
-      JVM plan at toy scale; the repartition still un-serializes the
-      regex chain: sf0.1 measured 0.72 → 0.49 s)."""
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
+    One Arrow pass (doc_features_arrow with emit_stopwords: RE2
+    normalize + numpy quality, the oracle's IEEE operation order) at
+    every scale. The JVM column form re-derives normalize_text ~4×
+    and tokenize ~3× per row (no CSE across the interpreted HOF
+    projection); measured at sf0.1 on 4 cores it cost 1.90 s of CPU
+    and 0.83 s of wall against 1.18 s and 0.62 s for this pass, and
+    on a 32-core host at sf1 4.48 s of wall against ~0.9 s."""
     d = load(spark, sf_dir, "documents")["documents"]
-    if not small_table(sf_dir, "documents"):
-        feats = X.doc_features_arrow(
-            d, "doc_id", "text", emit_stopwords=True
-        )
-        return feats.select(
-            "doc_id",
-            F.round("quality", 6).alias("quality"),
-            "n_stopwords",
-        )
-    return ensure_min_parallelism(d.select("doc_id", "text")).select(
-        "doc_id",
-        F.round(F.expr(X.spark_quality_score_sql("text")), 6).alias(
-            "quality"
-        ),
-        F.expr(X.spark_stopword_count_sql("text")).alias("n_stopwords"),
+    feats = X.doc_features_arrow(d, "doc_id", "text", emit_stopwords=True)
+    return feats.select(
+        "doc_id", F.round("quality", 6).alias("quality"), "n_stopwords"
     )
 
 

@@ -108,12 +108,11 @@ def dedup_embedding_cosine_banded(spark, sf_dir):
     blocked form (dedup_embedding_cosine) instead; the infeasibility
     algebra lives in the module header.
 
-    verify='numpy' (round-5): the exact-verify stage runs the
-    Arrow-batched SIMD cosine (cosine_verify_numpy — 3.1x faster than
-    the interpreted fold at 200k pairs). Pair sets and 4-decimal sims
-    are identical to the fold in every measured run (the r4 judge's
-    independent check agrees); tests/test_operators.py pins the
-    fold==numpy equivalence on the planted corpus.
+    The exact-verify stage runs the Arrow-batched SIMD cosine
+    (cosine_verify_numpy — 3.1x faster than the interpreted fold at
+    200k pairs). Pair sets and 4-decimal sims are identical to the
+    fold in every measured run; tests/test_operators.py pins the
+    numpy verify against the fold cosine on sf0.001 pairs.
 
     r9 optimization (guide §1.2): below a corpus-size gate the whole
     pipeline (plant → sig → bucket pairs → verify) runs as ONE fused
@@ -142,7 +141,7 @@ def dedup_embedding_cosine_banded(spark, sf_dir):
     return cosine_banded_pairs(
         _planted(spark, sf_dir), "vec_id", "embedding", "label",
         threshold=_THRESH, n_tables=_N_TABLES, band_bits=_BAND_BITS,
-        dim=64, verify="numpy",
+        dim=64,
     )
 
 

@@ -143,22 +143,20 @@ _ORACLE_COSINE = """
 )
 def ann_bruteforce_topk(spark, sf_dir):
     """Exact ANN baseline: the query set (5 x 64 floats,
-    driver-bounded — the same payload the fold plan broadcast as a
-    join side) scores the partitioned corpus in ONE numpy matmul per
-    Arrow batch (round-5: the interpreted higher-order-function fold
-    this ran through r4 was 60%+ of its wall; brute_force_topk_numpy
-    also prunes to per-batch top-k before the rank window, so the
-    window sees q x k x n_batches rows, not q x |corpus|). The corpus
-    never shuffles — the 100 TB exact-scan shape. The fold-based
-    operator (similarity.brute_force_topk) stays for callers needing
-    the oracle's exact summation order; at 4-decimal rounding the two
-    agree on every measured corpus.
+    driver-bounded) scores the partitioned corpus in ONE numpy matmul
+    per Arrow batch (brute_force_topk_numpy: each batch keeps its
+    per-query top-k, so the rank window sees q x k x n_batches rows,
+    not q x |corpus|). The corpus never shuffles — the 100 TB
+    exact-scan shape. Engine.ann_topk(method='brute') runs the same
+    kernel.
 
     r9: below the corpus-size gate (small_table) the collect + scan +
     window plan (3 jobs of fixed cost at sf0.1) fuses into ONE
-    single-task Arrow kernel (brute_force_topk_fused — same matmul,
-    same lexsort rank order); above it the per-batch top-k prune + window stays the
-    designed exact-scan shape."""
+    single-task Arrow kernel (brute_force_topk_fused — the same
+    top-k function over the whole corpus); above it the per-batch
+    top-k prune + window stays the designed exact-scan shape. Both
+    kernels return unrounded sims; the 4-decimal round the oracle
+    compares is this query's final select."""
     from duckdb_distributed_execution_spark.operators.similarity import (
         brute_force_topk_fused,
         brute_force_topk_numpy,
@@ -166,17 +164,21 @@ def ann_bruteforce_topk(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")["embeddings"]
     if small_table(sf_dir, "embeddings"):
-        return brute_force_topk_fused(
+        out = brute_force_topk_fused(
             e, id_col="vec_id", vec_col="embedding", k=10,
             query_id_below=5,
         )
-    queries = [
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in e.filter(F.col("vec_id") < 5).collect()
-    ]
-    corpus = e.filter(F.col("vec_id") >= 5)
-    return brute_force_topk_numpy(
-        corpus, queries, id_col="vec_id", vec_col="embedding", k=10
+    else:
+        queries = [
+            (r.vec_id, [float(x) for x in r.embedding])
+            for r in e.filter(F.col("vec_id") < 5).collect()
+        ]
+        out = brute_force_topk_numpy(
+            e.filter(F.col("vec_id") >= 5), queries,
+            id_col="vec_id", vec_col="embedding", k=10,
+        )
+    return out.select(
+        "query_id", "neighbor_id", "rank", F.round("sim", 4).alias("sim")
     )
 
 

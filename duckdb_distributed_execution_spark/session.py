@@ -92,6 +92,10 @@ def local_session(master: str | None = None, app_name: str = "dde-spark",
     settings = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
+        # Naive parquet timestamps read as TIMESTAMP, not TIMESTAMP_NTZ
+        # (see sources.read_parquet_table), also for plain
+        # spark.read / readStream calls.
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         "spark.ui.enabled": "false",
         # The generated-class cache defaults to 100 entries, far too
         # few for a query mix whose plans hold several hundred codegen
@@ -1985,7 +1989,7 @@ class Engine:
         'minhash' (MinHash-LSH banded candidates + exact Jaccard),
         'simhash' (pigeonhole bit-chunk banding, zero recall loss),
         'setsim' (AllPairs/PPJoin prefix filter, exact), 'embedding'
-        (multi-table hyperplane LSH + exact cosine verify; pass
+        (multi-table hyperplane LSH + exact numpy cosine verify; pass
         threshold= for the sim cutoff). Extra kwargs flow to the
         underlying operator (operators/dedup.py, similarity.py).
         Eager: materializes the pairs (localCheckpoint) and records a
@@ -2176,8 +2180,10 @@ class Engine:
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  **kwargs) -> DataFrame:
         """Top-k cosine neighbors for each query vector against a
-        registered corpus table. Methods: 'brute' (exact — broadcast
-        queries, corpus never shuffles), 'lsh' (hyperplane-bucketed
+        registered corpus table. Methods: 'brute' (exact — the
+        collected queries score each corpus batch in one numpy matmul,
+        the kernel of the ann_bruteforce_topk query; corpus never
+        shuffles; sims unrounded), 'lsh' (hyperplane-bucketed
         candidates, exact re-rank), 'ivf' (k-means-cell-routed; pass
         centroids= or nprobe=), 'hard_negative' (top-k most-similar
         DIFFERENT-label vectors — contrastive-training negatives;
@@ -2199,7 +2205,13 @@ class Engine:
                     "ann_topk(method='brute') got unexpected "
                     f"options: {sorted(kwargs)}"
                 )
-            topk = S.brute_force_topk(corpus, q, id_col, vec_col, k=k)
+            queries = [
+                (r[id_col], [float(x) for x in r[vec_col]])
+                for r in q.select(id_col, vec_col).collect()
+            ]
+            topk = S.brute_force_topk_numpy(
+                corpus, queries, id_col, vec_col, k=k
+            )
         elif method == "lsh":
             topk = S.lsh_topk(corpus, q, id_col, vec_col, k=k, **kwargs)
         elif method == "ivf":

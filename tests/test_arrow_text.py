@@ -216,46 +216,6 @@ def test_doc_features_arrow_stopwords_matches_jvm(spark, docs):
     assert j == a
 
 
-def test_text_quality_gated_paths_identical(spark, monkeypatch):
-    """Both size-gated text_quality plans (Arrow fused kernel vs
-    min-parallelized JVM expressions) must return identical rows on
-    the same corpus — the gate may only change the plan, never the
-    result."""
-    import duckdb_distributed_execution_spark.queries as Q
-
-    fn = Q.all_queries()["text_quality"].fn
-    got_small = fn(spark, SF_ORACLE)  # small under the scale gate: JVM
-    monkeypatch.setattr(Q, "SMALL_TABLE_BYTES", -1)  # force Arrow path
-    got_big = fn(spark, SF_ORACLE)
-    assert got_small.exceptAll(got_big).limit(1).count() == 0
-    assert got_big.exceptAll(got_small).limit(1).count() == 0
-
-
-def test_spark_sql_twins_match_column_builders(spark, docs):
-    """r9 planning-latency surgery: the single-parse SQL twin strings
-    (spark_normalize_sql / spark_tokens_sql / spark_stopword_count_sql
-    / spark_quality_score_sql) must build trees whose results are
-    bit-identical to the Column builders on adversarial inputs."""
-    a = docs.select(
-        "doc_id",
-        X.normalize_text("text").alias("nn"),
-        X.tokens(X.normalize_text("text")).alias("tk"),
-        X.stopword_count("text").alias("sw"),
-        X.quality_score("text").alias("q"),
-    )
-    b = docs.select(
-        "doc_id",
-        F.expr(X.spark_normalize_sql("text")).alias("nn"),
-        F.expr(X.spark_tokens_sql(X.spark_normalize_sql("text"))).alias("tk"),
-        F.expr(X.spark_stopword_count_sql("text")).alias("sw"),
-        F.expr(X.spark_quality_score_sql("text")).alias("q"),
-    )
-    assert a.schema == b.schema
-    ra = sorted(map(repr, a.collect()))
-    rb = sorted(map(repr, b.collect()))
-    assert ra == rb
-
-
 @pytest.mark.parametrize("n", [1, 2, 3])
 def test_minhash_sig_rows_arrow_matches_jvm(spark, docs, n):
     """r9 minhash surgery: the fused Arrow signature kernel must be

@@ -1070,6 +1070,57 @@ def test_ann_facade(engine):
     assert any(s.startswith("ANN_TOPK(method=brute") for s in ops)
 
 
+def test_ann_brute_runs_the_query_kernel(engine):
+    """Engine.ann_topk(method='brute') is brute_force_topk_numpy, the
+    kernel of the registered ann_bruteforce_topk query: the same
+    (query_id, neighbor_id, rank) rows, unrounded sims, and at 4
+    decimals the DuckDB oracle's cosine top-k."""
+    import duckdb
+
+    from duckdb_distributed_execution_spark.operators.similarity import (
+        brute_force_topk_numpy,
+    )
+    from duckdb_distributed_execution_spark.queries.vectors import (
+        _ORACLE_COSINE,
+    )
+
+    engine.register_testdata(SF_SMOKE)
+    corpus = engine.table("embeddings")
+    q = corpus.filter(F.col("vec_id") < 5)
+    got = engine.ann_topk("embeddings", q, k=10, method="brute")
+    assert set(got.columns) == {"query_id", "neighbor_id", "rank", "sim"}
+    qrows = [
+        (r.vec_id, [float(x) for x in r.embedding]) for r in q.collect()
+    ]
+    ref = brute_force_topk_numpy(corpus, qrows, k=10)
+    rows = {(r.query_id, r.neighbor_id, r.rank): r.sim for r in got.collect()}
+    assert set(rows) == {
+        (r.query_id, r.neighbor_id, r.rank) for r in ref.collect()
+    }
+    assert len(rows) == 50
+    con = duckdb.connect()
+    try:
+        oracle = con.execute(f"""
+            WITH e AS (SELECT * FROM '{SF_SMOKE}/embeddings.parquet'),
+                 q AS (SELECT vec_id AS query_id,
+                              CAST(embedding AS DOUBLE[]) AS qv
+                       FROM e WHERE vec_id < 5),
+                 c AS (SELECT vec_id AS neighbor_id,
+                              CAST(embedding AS DOUBLE[]) AS cv FROM e),
+                 s AS (SELECT query_id, neighbor_id,
+                              {_ORACLE_COSINE.format(a='qv', b='cv')} AS sim
+                       FROM q CROSS JOIN c)
+            SELECT query_id, neighbor_id, rn, ROUND(sim, 4)
+            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY sim DESC, neighbor_id) AS rn FROM s)
+            WHERE rn <= 10""").fetchall()
+    finally:
+        con.close()
+    assert {(a, b, c): round(s, 4) for (a, b, c), s in rows.items()} == {
+        (a, b, c): s for a, b, c, s in oracle
+    }
+
+
 def test_decontaminate_facade(engine, spark):
     """Engine.decontaminate drops exactly the rows whose n-gram
     overlap with the bench table reaches the threshold."""

@@ -14,9 +14,13 @@ from duckdb_distributed_execution_spark.operators import multimodal as M
 from duckdb_distributed_execution_spark.operators import text as X
 from duckdb_distributed_execution_spark.operators.asof import asof_join, range_join
 from duckdb_distributed_execution_spark.operators.similarity import (
-    brute_force_topk,
+    brute_force_topk_numpy,
     lsh_topk,
 )
+
+
+def _query_rows(df):
+    return [(r.vec_id, [float(x) for x in r.embedding]) for r in df.collect()]
 
 
 def test_asof_join_backward(spark):
@@ -212,8 +216,8 @@ def test_brute_force_topk(spark):
         [(0, [1.0, 0.0]), (1, [1.0, 0.01]), (2, [0.0, 1.0]), (3, [0.9, 0.1])],
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
-    out = brute_force_topk(vecs.filter("vec_id != 0"),
-                           vecs.filter("vec_id = 0"), k=2)
+    out = brute_force_topk_numpy(vecs.filter("vec_id != 0"),
+                                 _query_rows(vecs.filter("vec_id = 0")), k=2)
     ranked = [r.neighbor_id for r in out.orderBy("rank").collect()]
     assert ranked == [1, 3]  # by cosine to (1,0)
 
@@ -223,7 +227,7 @@ def test_lsh_topk_recall_smoke(spark):
 
     t = load(spark, "/root/testdata/sf0.001", "embeddings")["embeddings"]
     q = t.filter("vec_id < 3")
-    exact = brute_force_topk(t.filter("vec_id >= 3"), q, k=5)
+    exact = brute_force_topk_numpy(t.filter("vec_id >= 3"), _query_rows(q), k=5)
     # bucket width must match corpus size: 3 planes → 8 buckets over
     # 500 vectors (8 planes/256 buckets would leave ~2 candidates).
     approx = lsh_topk(t.filter("vec_id >= 3"), q, k=5, n_planes=3)
@@ -1123,7 +1127,6 @@ def test_cosine_banded_pairs_fused_matches_distributed(spark):
     dist = cosine_banded_pairs(
         planted, "vec_id", "embedding", "label",
         threshold=0.8, n_tables=16, band_bits=12, dim=64,
-        verify="numpy",
     )
     fused = cosine_banded_pairs_fused(
         e, "vec_id", "embedding", "label",
@@ -1154,7 +1157,7 @@ def test_semantic_dedup_pairs_fused_matches_distributed(spark):
     ]
     clustered = assign_nearest_seed_numpy(
         e, seeds, id_col="vec_id", vec_col="embedding",
-        out_col="cluster", round_decimals=6,
+        out_col="cluster",
     )
     dist = cosine_pairs_blocked_numpy(
         clustered, block_col="cluster", id_col="vec_id",
@@ -1162,7 +1165,7 @@ def test_semantic_dedup_pairs_fused_matches_distributed(spark):
     )
     fused = semantic_dedup_pairs_fused(
         e, id_col="vec_id", vec_col="embedding",
-        k_seeds=8, threshold=0.3, assign_round=6,
+        k_seeds=8, threshold=0.3,
     )
     got = {(r.cluster, r.id_a, r.id_b): r.sim for r in fused.collect()}
     exp = {(r.cluster, r.id_a, r.id_b): r.sim for r in dist.collect()}
@@ -1287,33 +1290,74 @@ def test_connected_components_fused_matches_iterative(spark):
     assert comp[5] == 1 and comp[10] == 10 and comp[21] == 20
 
 
-def test_fused_kernel_input_guard(spark, monkeypatch):
-    """r10 verdict item 8: the size-gated fused single-task kernels
-    defend against an ungated caller passing a large relation. The cap
-    is captured DRIVER-side at kernel construction (executor workers
-    re-import the module, so a runtime read would be unpatchable) —
-    lowering the module constant makes a tiny corpus trip the guard
-    end-to-end through the Py4J boundary."""
-    from duckdb_distributed_execution_spark import functions as FX
+def _fused_kernels(spark):
+    """Each size-gated fused kernel, built over a tiny input (8 rows,
+    or 4 edges for connected components)."""
+    from duckdb_distributed_execution_spark.operators import similarity as S
     from duckdb_distributed_execution_spark.operators.graph import (
         connected_components_fused,
     )
+    from duckdb_distributed_execution_spark.operators.linalg import (
+        kcenter_greedy_fused,
+    )
 
-    # Helper unit semantics: at/below the limit is silent, above raises.
-    FX.check_fused_input_rows(10, "x", 10)
-    with pytest.raises(RuntimeError, match="fused single-task kernel"):
-        FX.check_fused_input_rows(11, "x", 10)
-
-    monkeypatch.setattr(FX, "FUSED_KERNEL_MAX_ROWS", 3)
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i}") for i in range(8)],
         "doc_id long, text string",
     )
-    with pytest.raises(Exception, match="fused single-task kernel"):
-        D.minhash_lsh_pairs(docs, "doc_id", "text", fuse=True).count()
-
+    vecs = spark.createDataFrame(
+        [(i, i % 2, [float(i + 1), 1.0, float(i % 3)]) for i in range(8)],
+        "vec_id long, label long, embedding array<double>",
+    )
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "u long, v long"
     )
-    with pytest.raises(Exception, match="fused single-task kernel"):
-        connected_components_fused(edges, "u", "v").count()
+    return {
+        "minhash": lambda: D.minhash_lsh_pairs(
+            docs, "doc_id", "text", fuse=True
+        ),
+        "connected_components": lambda: connected_components_fused(
+            edges, "u", "v"
+        ),
+        "cosine_banded": lambda: S.cosine_banded_pairs_fused(
+            vecs, threshold=0.1, n_tables=2, band_bits=2, dim=3
+        ),
+        "semantic_dedup": lambda: S.semantic_dedup_pairs_fused(
+            vecs, k_seeds=2
+        ),
+        "brute_force_topk": lambda: S.brute_force_topk_fused(
+            vecs, k=2, query_id_below=2
+        ),
+        "kcenter": lambda: kcenter_greedy_fused(vecs, k=3),
+    }
+
+
+def test_fused_kernel_guard_unit():
+    """At/below the limit is silent, above raises."""
+    from duckdb_distributed_execution_spark import functions as FX
+
+    FX.check_fused_input_rows(10, "x", 10)
+    with pytest.raises(RuntimeError, match="fused single-task kernel"):
+        FX.check_fused_input_rows(11, "x", 10)
+
+
+def test_fused_kernel_input_guard(spark, monkeypatch):
+    """r10 verdict item 8: the size-gated fused single-task kernels
+    defend against an ungated caller passing a large relation. Every
+    fused kernel runs through ``functions.fused_single_task``, which
+    captures the cap DRIVER-side when the operator is built (executor
+    workers re-import the module, so a runtime read would be
+    unpatchable): each of the six kernels runs under the default cap,
+    and with the module constant lowered its tiny input trips the
+    guard end-to-end through the Py4J boundary."""
+    from duckdb_distributed_execution_spark import functions as FX
+
+    kernels = _fused_kernels(spark)
+    assert len(kernels) == 6
+    for build in kernels.values():
+        build().collect()
+    monkeypatch.setattr(FX, "FUSED_KERNEL_MAX_ROWS", 3)
+    for name, build in kernels.items():
+        with pytest.raises(Exception, match="fused single-task kernel"):
+            build().collect()
+            pytest.fail(f"{name}: guard did not trip")

@@ -47,7 +47,6 @@ SCALE_GATED = [
     "dedup_embedding_cosine_banded",
     # the JVM or the Arrow text plan
     "dedup_exact",
-    "text_quality",
     "tokens_per_lang_topk",
     # join plan shape and join-strategy hint
     "join_multi_star",

@@ -49,7 +49,8 @@ texts = e.spark.createDataFrame([("Hello,  World!",), ("A-b c",)], "text string"
 rows = sorted(r["norm"] for r in texts.mapInPandas(normalize, "norm string").collect())
 keys = [
     "spark.master", "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
-    "spark.sql.session.timeZone", "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.session.timeZone", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.execution.arrow.pyspark.enabled",
     "spark.sql.codegen.cache.maxEntries", "spark.ui.enabled",
     "spark.locality.wait", "spark.driver.memory",
     "spark.python.daemon.module", "spark.executorEnv.PYTHONPATH",
@@ -85,6 +86,7 @@ def test_start_local_conf(start_local_run):
         "spark.sql.shuffle.partitions": "8",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.codegen.cache.maxEntries": "5000",
         "spark.ui.enabled": "false",

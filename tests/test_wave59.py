@@ -12,7 +12,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators.similarity import (
-    brute_force_topk,
+    brute_force_topk_numpy,
     ivf_topk,
 )
 
@@ -85,7 +85,11 @@ def test_graph_route_widens_single_probe_recall(spark):
     def pairs(df):
         return {(r["query_id"], r["neighbor_id"]) for r in df.collect()}
 
-    truth = pairs(brute_force_topk(corpus, queries, k=k))
+    qrows = [
+        (r["vec_id"], [float(x) for x in r["embedding"]])
+        for r in queries.collect()
+    ]
+    truth = pairs(brute_force_topk_numpy(corpus, qrows, k=k))
     single = pairs(ivf_topk(corpus, queries, cents, k=k, nprobe=1))
     routed = pairs(ivf_topk(corpus, queries, cents, k=k, graph_edges=2))
     r_single = len(single & truth) / len(truth)

@@ -17,7 +17,10 @@ of pairs where B was lower and the IQR ÷ median of A's runs:
     python tools/ab_worktree.py --dir-a <parent checkout> \
         --workload dml_mix --seeds 1-10 [--trace 0]
 
-Each run lasts the ``run_seconds`` that BENCHMARK.json fixes.
+Each run lasts the ``run_seconds`` that BENCHMARK.json fixes. The sf1
+workloads (``relational_sf1``, ``llm_ops_sf1``) generate their data
+with tools/gen_sf.py into each checkout's ``perfbench/.cache`` on
+first use.
 """
 
 from __future__ import annotations
@@ -160,7 +163,8 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=None)
     ap.add_argument("--queries", default=None)
     ap.add_argument("--workload", default=None,
-                    choices=("headline_sf0.1", "dml_mix"),
+                    choices=("headline_sf0.1", "dml_mix",
+                             "relational_sf1", "llm_ops_sf1"),
                     help="run perfbench/run.py instead of bench.py")
     ap.add_argument("--seeds", default="1-5",
                     help="perfbench seeds, one pair each (e.g. 1-5,8)")
