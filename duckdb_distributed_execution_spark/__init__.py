@@ -31,12 +31,6 @@ Catalyst planner, shuffle service and partial/final aggregation
 
 from pyspark.files import SparkFiles as _SparkFiles
 
-from duckdb_distributed_execution_spark.session import (
-    _PACKAGE_PARENT,
-    Engine,
-    _unlink,
-)
-
 if _SparkFiles._is_running_on_worker:
     # Imported by a Spark Python worker: stop its per-task zip directory
     # re-reads (see pyworker). Never in the driver.
@@ -46,6 +40,18 @@ if _SparkFiles._is_running_on_worker:
 
 __all__ = ["Engine", "ensure_worker_pythonpath"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    # ``Engine`` is loaded on first use (PEP 562): a Python worker that
+    # unpickles an operator kernel imports this package, and must not
+    # pay for ``session`` and the modules it pulls in (manifest, stats,
+    # typemap).
+    if name == "Engine":
+        from duckdb_distributed_execution_spark.session import Engine
+
+        return Engine
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 _PYFILES_ADDED: set[str] = set()
@@ -68,6 +74,11 @@ def ensure_worker_pythonpath(spark) -> None:
     import os
     import shutil
     import tempfile
+
+    from duckdb_distributed_execution_spark.session import (
+        _PACKAGE_PARENT,
+        _unlink,
+    )
 
     sc = spark.sparkContext
     key = sc.applicationId

@@ -34,6 +34,7 @@ from duckdb_distributed_execution_spark.operators.text import (
     arrow_normalize,
     arrow_tokens,
     normalize_text,
+    token_codes,
     tokens,
 )
 
@@ -200,10 +201,11 @@ def ngram_jaccard_pairs(
 
 # Carter-Wegman affine family over p = 2^31 - 1: each of the k
 # min-hashes is h_i(s) = (a_i * base(s) + b_i) mod p where base(s) is
-# a 28-bit md5-derived hash. One md5 per shingle total — the k-way
-# fan-out is pure long arithmetic inside whole-stage codegen, so
-# signature cost no longer scales with k (a production k=128 run pays
-# 128× fewer md5s than hashing per seed). Overflow-safe in both
+# a 28-bit md5-derived hash. The JVM plans pay one md5 per shingle
+# and the Arrow kernels one per distinct shingle per batch; either way
+# the k-way fan-out is pure long arithmetic, so signature cost does
+# not scale with k (a production k=128 run pays 128× fewer md5s than
+# hashing per seed). Overflow-safe in both
 # engines: a < 2^31, base < 2^28 → a·base + b < 2^59 + 2^31 < 2^63,
 # and a·base wraps p ~2^28 times so the derived hashes genuinely
 # reorder the shingles (an un-wrapped affine map would be monotonic
@@ -293,17 +295,26 @@ def _minhash_doc_hashes(pdf, id_col, text_col, shingle_n, shingle_fn):
     and the fused single-task twin :func:`minhash_lsh_pairs_fused` so
     the two plans can never drift. Returns ``None`` when no doc in
     the batch reaches ``shingle_n`` tokens (the explode plan emits no
-    rows for those either)."""
+    rows for those either).
+
+    Each distinct shingle of the batch is md5'd once and the hashes
+    gathered back by key. The built-in word shingles work on token
+    codes: each n-shingle is a rolling code ``key = factorize(key·
+    |vocab| + code[i+k])``, so its ``" "``-joined string is built once
+    per distinct shingle too; a ``shingle_fn``'s strings are
+    factorized as they come."""
     import hashlib
 
     import numpy as np
     import pandas as pd
-    import pyarrow.compute as pc
 
     md5 = hashlib.md5
     pdf = pdf[pdf[text_col].notna()]
     if not len(pdf):
         return None
+    # Both branches build (doc_ids, key, distinct): one row per
+    # (doc, shingle), the shingle's index into ``distinct`` and the
+    # batch's distinct shingle strings.
     if shingle_fn is not None:
         sh_lists = [shingle_fn(t) for t in pdf[text_col].values]
         n_sh = np.fromiter(
@@ -314,47 +325,56 @@ def _minhash_doc_hashes(pdf, id_col, text_col, shingle_n, shingle_fn):
         doc_ids = np.repeat(pdf[id_col].values, n_sh)
         if not len(doc_ids):
             return None
-        sh_strs = np.array(
-            [s for lst in sh_lists for s in lst], dtype=object
+        key, distinct = pd.factorize(
+            np.array([s for lst in sh_lists for s in lst], dtype=object)
         )
     else:
         toks, lens = arrow_tokens(arrow_normalize(pdf[text_col]))
-        flat = pc.list_flatten(toks).to_pandas().values
         n_sh = np.maximum(lens - (shingle_n - 1), 0)
         doc_ids = np.repeat(pdf[id_col].values, n_sh)
         if not len(doc_ids):
             # every doc in the batch is below shingle_n tokens —
             # the explode plan emits no rows for them either.
             return None
-        starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        idx = np.concatenate(
-            [np.arange(s, s + m) for s, m in zip(starts, n_sh)]
+        codes, vocab = token_codes(toks)
+        # flat position of every shingle's first token
+        starts = np.cumsum(lens) - lens
+        idx = np.arange(len(doc_ids)) + np.repeat(
+            starts - (np.cumsum(n_sh) - n_sh), n_sh
         )
-        if shingle_n == 1:
-            sh_strs = flat[idx]
-        elif shingle_n == 2:
-            sh_strs = np.array(
-                [flat[i] + " " + flat[i + 1] for i in idx],
-                dtype=object,
-            )
-        else:
-            sh_strs = np.array(
-                [" ".join(flat[i : i + shingle_n]) for i in idx],
-                dtype=object,
-            )
-    sdf = pd.DataFrame({"doc": doc_ids, "s": sh_strs})
-    sdf = sdf.drop_duplicates()
+        key, _ = pd.factorize(codes[idx])
+        for k in range(1, shingle_n):
+            key, _ = pd.factorize(key * len(vocab) + codes[idx + k])
+        # one representative position per distinct shingle
+        rep = np.empty(key.max() + 1, dtype=np.int64)
+        rep[key] = idx
+        words = [vocab[codes[rep + k]] for k in range(shingle_n)]
+        distinct = [" ".join(w) for w in zip(*words)]
     h = np.fromiter(
-        (
-            int(md5(s.encode()).hexdigest()[:7], 16)
-            for s in sdf["s"].values
-        ),
+        (int(md5(s.encode()).hexdigest()[:7], 16) for s in distinct),
         dtype=np.int64,
-        count=len(sdf),
-    )
+        count=len(distinct),
+    )[key]
     # distinct shingles can md5-collide into equal base hashes;
     # collect_set dedupes the VALUES, so mirror that here.
-    return pd.DataFrame({"doc": sdf["doc"].values, "h": h}).drop_duplicates()
+    return pd.DataFrame({"doc": doc_ids, "h": h}).drop_duplicates()
+
+
+def _minhash_sigs(dh, num_hashes):
+    """Deduped ``(doc, h)`` frame → (distinct docs ascending,
+    num_hashes × docs affine mins ``(a·h + b) mod p``, each doc's
+    sorted hash set as a numpy slice). The one numpy core behind both
+    the distributed signature rows and the fused single-task kernel."""
+    import numpy as np
+
+    coeffs = np.array(minhash_coeffs(num_hashes), dtype=np.int64)
+    A, B = coeffs[:, :1], coeffs[:, 1:]
+    order = np.lexsort((dh["h"].values, dh["doc"].values))
+    docs = dh["doc"].values[order]
+    hv = dh["h"].values[order]
+    uniq, start_idx = np.unique(docs, return_index=True)
+    mins = np.minimum.reduceat((A * hv + B) % MINHASH_P, start_idx, axis=1)
+    return uniq, mins, np.split(hv, start_idx[1:])
 
 
 def minhash_sig_rows_arrow(
@@ -380,9 +400,9 @@ def minhash_sig_rows_arrow(
     distinct-set contents.
 
     Docs whose shingle set is empty (fewer than ``shingle_n`` tokens)
-    drop their row, exactly like the explode plan. ``sh`` element
-    ORDER differs from collect_set's (both unspecified); every
-    consumer reads sizes/intersections only.
+    drop their row, exactly like the explode plan. ``sh`` is sorted
+    ascending (collect_set's order is unspecified); every consumer
+    reads sizes/intersections only.
 
     ``shingle_fn`` (r9) replaces the built-in word-shingle chain with
     a per-doc Python callable text → list of shingle strings — the
@@ -390,16 +410,12 @@ def minhash_sig_rows_arrow(
     JVM BPE-encode + array_shingles expression, so the whole
     signature relation keeps the zero-exchange kernel plan instead of
     falling back to the explode → groupBy form."""
-    import numpy as np
     import pandas as pd
 
     from duckdb_distributed_execution_spark.functions import (
         ensure_min_parallelism,
     )
 
-    coeffs = minhash_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64).reshape(-1, 1)
-    B = np.array([b for _, b in coeffs], dtype=np.int64).reshape(-1, 1)
     dt = dict(df.dtypes)
 
     def run(batches):
@@ -409,18 +425,11 @@ def minhash_sig_rows_arrow(
             )
             if dh is None:
                 continue
-            hv = dh["h"].values
-            order = np.argsort(dh["doc"].values, kind="stable")
-            docs_sorted = dh["doc"].values[order]
-            hv = hv[order]
-            uniq, start_idx = np.unique(docs_sorted, return_index=True)
-            AM = (A * hv.reshape(1, -1) + B) % MINHASH_P
-            mins = np.minimum.reduceat(AM, start_idx, axis=1)
-            sh_lists = np.split(hv, start_idx[1:])
+            uniq, mins, sh = _minhash_sigs(dh, num_hashes)
             out = {"doc": uniq}
             for i in range(num_hashes):
                 out[f"mh_{i}"] = mins[i]
-            out["sh"] = [list(v) for v in sh_lists]
+            out["sh"] = sh
             yield pd.DataFrame(out)
 
     mh_cols = ", ".join(f"mh_{i} long" for i in range(num_hashes))
@@ -518,30 +527,49 @@ def minhash_lsh_pairs_fused(
     shingle_fn=None,
 ) -> DataFrame:
     """Fused twin of :func:`minhash_lsh_pairs` for corpora below the
-    scale gate (guide §1.2/§2.4). The signature relation keeps the
-    PARALLEL zero-exchange Arrow kernel (per-doc md5/BPE work is the
-    real compute here — a fully single-task form measured SLOWER at
-    sf0.1: word 0.74 → 1.2 s — so only the post-signature pipeline
-    fuses); everything after it — banding, hot-bucket cap, pair
-    distinct, exact-Jaccard verify — collapses into ONE numpy task
-    behind a single ~5 MB repartition(1) exchange of the narrow sig
-    rows. The distributed form pays a persisted sig, the band-bucket
-    window exchange, the pair-distinct exchange and TWO verify joins
-    shipping ~130-element hash arrays per candidate (~10 stages of
-    fixed cost at toy scale, and the verify joins dominate when
-    banding is non-discriminative — the token-space query emits 412k
-    candidates at sf0.1).
+    scale gate (guide §1.2/§2.4): the WHOLE pipeline — doc hashes,
+    the k affine mins and the sorted per-doc hash sets, banding,
+    hot-bucket cap, pair distinct, exact-Jaccard verify — runs in ONE
+    numpy task over ``df.select(id, text)``, with no exchange at all.
+    On a 32-core host a single-task form once measured slower (sf0.1
+    word 0.74 → 1.2 s), because the per-shingle string build and md5
+    were the real compute and the parallel signature pass spread
+    them. Now each distinct shingle of a batch is joined and md5'd
+    once, so the one-task cost depends on distinct shingles ÷
+    shingles. Against the parallel signature pass + ``repartition(1)``
+    + numpy task, with the same doc hashes, on a 4-core host (work
+    CPU / wall, warm, medians of 3–5 runs, two runs per side):
+
+    - ``dedup_minhash_lsh`` at sf0.1 (ratio 0.0035): 0.58–0.71 s /
+      0.54–0.67 s against 1.02–1.29 s / 0.70–0.82 s;
+    - ``dedup_minhash_token_lsh`` at sf0.1 (BPE ``shingle_fn``, ratio
+      0.0057): 4.09–4.13 s / 3.99–4.03 s against 5.50–6.06 s /
+      3.17–3.32 s — the per-doc shingler runs on one core;
+    - a 4.1 MB table just under the gate with random words from a
+      60k vocabulary (ratio 0.98): 1.51–1.58 s / 1.46–1.57 s against
+      2.46–2.98 s / 1.16–1.38 s.
+
+    One task uses less CPU in every case and loses wall where the
+    per-shingle work is large; the ~2 MB shuffle of signature rows
+    at sf0.1 is gone. The distributed
+    form pays a persisted sig, the band-bucket window exchange, the
+    pair-distinct exchange and TWO verify joins shipping
+    ~130-element hash arrays per candidate (~10 stages of fixed cost
+    at toy scale, and the verify joins dominate when banding is
+    non-discriminative — the token-space query emits 412k candidates
+    at sf0.1).
 
     Result-identical to the distributed form by construction:
 
-    - signature rows come from the SAME kernel
-      (:func:`minhash_sig_rows_arrow`), so mins and hash sets are
-      bit-identical;
+    - mins and hash sets come from the SAME numpy functions
+      (:func:`_minhash_doc_hashes`, :func:`_minhash_sigs`) as the
+      distributed signature rows (:func:`minhash_sig_rows_arrow`),
+      and they do not depend on how docs are split into batches;
     - banding groups docs by the raw per-band min-tuple — the
       distributed form buckets on ``md5('b_mh0_mh1')``, a rename of
       the same key (md5 collisions between distinct tuples are the
       only divergence, probability ~2⁻¹²⁸; equality is pinned
-      empirically at sf0.01 and sf0.1);
+      empirically at sf0.001 and sf0.01);
     - the hot-bucket cap (1 < n ≤ max_bucket), unordered-pair
       distinct, and exact Jaccard use the same integer set sizes and
       the same double arithmetic (inter/(|a|+|b|−inter), int → f64
@@ -559,22 +587,22 @@ def minhash_lsh_pairs_fused(
     from duckdb_distributed_execution_spark.functions import (
         fused_single_task,
     )
+    from duckdb_distributed_execution_spark.operators.similarity import (
+        _bucket_pairs,
+    )
 
     assert num_hashes % band_size == 0
     n_bands = num_hashes // band_size
     id_t = dict(df.dtypes)[id_col]
     thr = float(verify_threshold)
-    sig = minhash_sig_rows_arrow(
-        df, id_col, text_col, shingle_n, num_hashes, shingle_fn=shingle_fn
-    )
-    mh_names = [f"mh_{i}" for i in range(num_hashes)]
 
     def kernel(pdf):
-        uniq = pdf["doc"].values
-        mins = np.vstack([pdf[m].values for m in mh_names])  # k x n
-        doc_h = [
-            np.sort(np.asarray(x, dtype=np.int64)) for x in pdf["sh"].values
-        ]
+        dh = _minhash_doc_hashes(
+            pdf, id_col, text_col, shingle_n, shingle_fn
+        )
+        if dh is None:
+            return None
+        uniq, mins, doc_h = _minhash_sigs(dh, num_hashes)
         sizes = np.fromiter(
             (len(x) for x in doc_h), dtype=np.int64, count=len(doc_h)
         )
@@ -585,23 +613,19 @@ def minhash_lsh_pairs_fused(
             band = mins[b * band_size : (b + 1) * band_size]  # bs x n
             order_b = np.lexsort(tuple(band[::-1]))
             sorted_band = band[:, order_b]
-            diff = np.zeros(n - 1, dtype=bool) if n > 1 else np.zeros(0, dtype=bool)
+            diff = np.zeros(max(n - 1, 0), dtype=bool)
             for r in range(band_size):
                 diff |= sorted_band[r, 1:] != sorted_band[r, :-1]
             bounds = np.flatnonzero(np.r_[True, diff, True])
             starts, ends = bounds[:-1], bounds[1:]
-            ok = np.flatnonzero(
-                ((ends - starts) >= 2) & ((ends - starts) <= max_bucket)
-            )
-            for gi in ok:
-                idx = order_b[starts[gi] : ends[gi]]
-                r, c = np.triu_indices(len(idx), k=1)
-                ia_parts.append(idx[r])
-                ib_parts.append(idx[c])
-        if not ia_parts:
-            return None
+            ok = ((ends - starts) >= 2) & ((ends - starts) <= max_bucket)
+            ia, ib = _bucket_pairs(order_b, starts[ok], ends[ok])
+            ia_parts.append(ia)
+            ib_parts.append(ib)
         ia = np.concatenate(ia_parts)
         ib = np.concatenate(ib_parts)
+        if not len(ia):
+            return None
         # unordered pair, emitted (smaller id, larger id) like the
         # p.id_a < p.id_b filter of the distributed unroll.
         ida, idb = uniq[ia], uniq[ib]
@@ -654,12 +678,11 @@ def minhash_lsh_pairs_fused(
         if candidates_only
         else f"id_a {id_t}, id_b {id_t}, jaccard double"
     )
-    # repartition(1), not a bare coalesce(1): coalesce would collapse
-    # the upstream sig kernel to one task too; the exchange it costs
-    # is one narrow ~|docs|·(8 longs + hash set) spill, and it is the
-    # ONLY exchange in the whole plan.
     return fused_single_task(
-        sig.repartition(1), kernel, out_schema, "minhash_lsh_pairs_fused"
+        df.select(id_col, text_col),
+        kernel,
+        out_schema,
+        "minhash_lsh_pairs_fused",
     )
 
 

@@ -104,6 +104,21 @@ def _band_keys(V, P, band_bits):
     return S.reshape(len(V), P.shape[1] // band_bits, band_bits) @ weights
 
 
+def _bucket_pairs(order, starts, ends):
+    """Every unordered pair of positions within each bucket
+    ``order[starts[i]:ends[i]]``, as (ia, ib) index arrays. One
+    ``triu_indices`` per distinct bucket size, and all buckets of that
+    size gathered at once, instead of one per bucket."""
+    sizes = ends - starts
+    ia, ib = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for m in np.unique(sizes[sizes >= 2]):
+        r, c = np.triu_indices(m, k=1)
+        first = starts[sizes == m][:, None]
+        ia.append(order[first + r].ravel())
+        ib.append(order[first + c].ravel())
+    return np.concatenate(ia), np.concatenate(ib)
+
+
 def _verify_cosine(A, B, threshold):
     """Row-wise cosine of two (pairs × dim) blocks (einsum dot over
     the norms): (mask of sim ≥ threshold, kept sims rounded to 4)."""
@@ -807,16 +822,13 @@ def cosine_banded_pairs_fused(
             bounds = np.flatnonzero(
                 np.r_[True, (bs[1:] != bs[:-1]) | (bb[1:] != bb[:-1]), True]
             )
-            starts, ends = bounds[:-1], bounds[1:]
-            for gi in np.flatnonzero((ends - starts) >= 2):
-                idx = order[starts[gi] : ends[gi]]
-                r, c = np.triu_indices(len(idx), k=1)
-                ia_parts.append(idx[r])
-                ib_parts.append(idx[c])
-        if not ia_parts:
-            return None
+            ia, ib = _bucket_pairs(order, bounds[:-1], bounds[1:])
+            ia_parts.append(ia)
+            ib_parts.append(ib)
         ia = np.concatenate(ia_parts)
         ib = np.concatenate(ib_parts)
+        if not len(ia):
+            return None
         ida, idb = ids[ia], ids[ib]
         swap = ida > idb
         ia[swap], ib[swap] = ib[swap], ia[swap]

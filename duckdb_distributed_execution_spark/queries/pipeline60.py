@@ -79,9 +79,10 @@ def dedup_minhash_token_lsh(spark, sf_dir):
     test_token_shingle_fn_matches_jvm). Token 3-grams over a 17-merge
     vocabulary are non-discriminative under 4 bands (412k candidates
     from 5k docs at sf0.1), so the verify joins dominated the
-    distributed plan; below the corpus-size gate the post-signature
-    pipeline fuses into one numpy task (minhash_lsh_pairs_fused —
-    length-prefilter + searchsorted verify; 6.0 → 1.7 s at sf0.1
+    distributed plan; below the corpus-size gate the whole pipeline,
+    signatures included, runs as one numpy task
+    (minhash_lsh_pairs_fused — length-prefilter + searchsorted
+    verify; the post-signature part alone took 6.0 → 1.7 s at sf0.1
     same-session, bit-identical pairs)."""
     d = load(spark, sf_dir, "documents")["documents"]
     pairs = D.minhash_lsh_pairs(

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators import text as X
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 ADVERSARIAL = [
     (1, "Hello, World!  multiple   spaces"),
@@ -85,8 +85,9 @@ def test_doc_features_arrow_on_real_corpus(spark):
         X.quality_score("text").alias("quality"),
         X.fingerprint("text").alias("fp"),
         F.size(F.split("text", " ")).alias("n_words"),
+        X.stopword_count("text").alias("n_stopwords"),
     )
-    arrow = X.doc_features_arrow(d, "doc_id", "text")
+    arrow = X.doc_features_arrow(d, "doc_id", "text", emit_stopwords=True)
     assert jvm.exceptAll(arrow).limit(1).count() == 0
     assert arrow.exceptAll(jvm).limit(1).count() == 0
 
@@ -284,6 +285,60 @@ def test_minhash_sig_rows_arrow_on_real_corpus(spark):
     assert arrow.exceptAll(jvm).limit(1).count() == 0
 
 
+def _doc_hashes_by_strings(pdf, n):
+    """String reference for the word-shingle doc hashes: normalize
+    each text, " "-join every n-token window and md5 it — one string
+    and one md5 per (doc, shingle) — then the distinct (doc, h)
+    pairs."""
+    import hashlib
+    import re
+
+    out = set()
+    for doc, text in zip(pdf["doc_id"], pdf["text"]):
+        if text is None:
+            continue
+        norm = re.sub(" +", " ", re.sub("[^a-z0-9 ]", " ", text.lower()))
+        toks = norm.strip(" ").split(" ")
+        for i in range(len(toks) - n + 1):
+            s = " ".join(toks[i : i + n])
+            out.add((doc, int(hashlib.md5(s.encode()).hexdigest()[:7], 16)))
+    return out
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 4])
+def test_minhash_doc_hashes_high_vocabulary(n):
+    """The token-code doc hashes (rolling shingle codes, one md5 per
+    distinct shingle) equal the per-shingle string form on a batch
+    with >20k distinct tokens, repeated shingles, and NULL, empty,
+    whitespace-only and shorter-than-n docs."""
+    import numpy as np
+    import pandas as pd
+
+    from duckdb_distributed_execution_spark.operators import dedup as D
+
+    rng = np.random.default_rng(7)
+    alphabet = np.array(list("abcdefghijklmnopqrstuvwxyz0123456789"))
+    lens = rng.integers(2, 9, 30_000)
+    chars = rng.choice(alphabet, lens.sum())
+    pool = np.array(
+        ["".join(w) for w in np.split(chars, np.cumsum(lens)[:-1])]
+    )
+    texts = [" ".join(rng.choice(pool, rng.integers(50, 400)))
+             for _ in range(300)]
+    texts[5] = texts[4]  # a duplicate doc
+    texts[6] = "Echo echo, ECHO! echo echo"  # repeated shingles
+    texts += [None, "", "   ", "!!", "one", "one two", "one two three"]
+    pdf = pd.DataFrame(
+        {"doc_id": np.arange(len(texts), dtype=np.int64) * 3 + 1,
+         "text": texts}
+    )
+    assert len(set(" ".join(t for t in texts if t).split())) > 20_000
+    dh = D._minhash_doc_hashes(pdf, "doc_id", "text", n, None)
+    got = list(zip(dh["doc"].tolist(), dh["h"].tolist()))
+    assert len(got) == len(set(got))
+    assert set(got) == _doc_hashes_by_strings(pdf, n)
+
+
 def test_token_shingle_fn_matches_jvm(spark):
     """r9 wave-60 routing: the per-doc Python mirror of the JVM
     BPE-encode + array_shingles expression (token_shingles_py →
@@ -339,24 +394,31 @@ def test_token_shingle_fn_matches_jvm(spark):
     assert kern.exceptAll(jvm).limit(1).count() == 0
 
 
+_FUSED_MINHASH_KW = {
+    "verify_0.12": dict(shingle_n=2, verify_threshold=0.12),
+    "verify_0.0": dict(shingle_n=2, verify_threshold=0.0),
+    "candidates_only": dict(shingle_n=2, candidates_only=True),
+}
+
+
 @pytest.mark.parametrize(
-    "kw",
+    "sf,kw",
     [
-        dict(shingle_n=2, verify_threshold=0.12),
-        dict(shingle_n=2, verify_threshold=0.0),
-        dict(shingle_n=2, candidates_only=True),
+        pytest.param(sf, kw, id=name if sf == SF_ORACLE else f"sf0.001-{name}")
+        for sf in (SF_ORACLE, SF_SMOKE)
+        for name, kw in _FUSED_MINHASH_KW.items()
     ],
-    ids=["verify_0.12", "verify_0.0", "candidates_only"],
 )
-def test_minhash_lsh_pairs_fused_matches_distributed(spark, kw):
-    """r9 fused post-signature kernel (banding + hot-bucket cap +
-    pair distinct + length-prefiltered exact-Jaccard verify in one
-    numpy task) must be row-identical — including the jaccard
-    DOUBLES — to the distributed plan it gates in for, at every
-    threshold shape the six query sites use."""
+def test_minhash_lsh_pairs_fused_matches_distributed(spark, sf, kw):
+    """The one-task MinHash-LSH kernel (doc hashes, signatures,
+    banding, hot-bucket cap, pair distinct and length-prefiltered
+    exact-Jaccard verify in one numpy task) must be row-identical —
+    including the jaccard DOUBLES — to the distributed plan it gates
+    in for, at every threshold shape the six query sites use and at
+    two scales."""
     from duckdb_distributed_execution_spark.operators import dedup as D
 
-    d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    d = spark.read.parquet(f"{sf}/documents.parquet")
     dist = D.minhash_lsh_pairs(
         d, "doc_id", "text", num_hashes=8, band_size=2, **kw
     )

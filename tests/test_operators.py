@@ -1332,6 +1332,33 @@ def _fused_kernels(spark):
     }
 
 
+def test_bucket_pairs_match_per_bucket_loop():
+    """The fused pair generators' shared helper: the same pair set as
+    one ``triu_indices`` per bucket, over buckets of mixed sizes
+    (singletons and empty ones included)."""
+    import numpy as np
+
+    from duckdb_distributed_execution_spark.operators.similarity import (
+        _bucket_pairs,
+    )
+
+    rng = np.random.default_rng(3)
+    sizes = rng.integers(0, 9, 200)
+    ends = np.cumsum(sizes)
+    starts = ends - sizes
+    order = rng.permutation(int(ends[-1]))
+    exp = set()
+    for s, e in zip(starts, ends):
+        idx = order[s:e]
+        r, c = np.triu_indices(len(idx), k=1)
+        exp |= set(zip(idx[r].tolist(), idx[c].tolist()))
+    ia, ib = _bucket_pairs(order, starts, ends)
+    got = list(zip(ia.tolist(), ib.tolist()))
+    assert len(got) == len(set(got)) and set(got) == exp
+    ia, ib = _bucket_pairs(order, starts[:0], ends[:0])
+    assert len(ia) == len(ib) == 0
+
+
 def test_fused_kernel_guard_unit():
     """At/below the limit is silent, above raises."""
     from duckdb_distributed_execution_spark import functions as FX

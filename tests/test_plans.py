@@ -182,11 +182,10 @@ HEADLINE_SHUFFLE_BUDGETS = {
     # test_join_multi_star_branches_agree).
     "join_multi_star": 1,       # AQE broadcasts every dim; fact agg
     "sessionize_window_sql": 1, # one keyed window exchange
-    "dedup_minhash_lsh": 1,     # r9 fused post-sig kernel: the only
-    #                             exchange left is the repartition(1)
-    #                             feeding the single numpy task
-    #                             (banding/cap/pairs/verify); the sig
-    #                             kernel itself is zero-exchange.
+    "dedup_minhash_lsh": 0,     # one-task kernel: doc hashes,
+    #                             signatures, banding, cap, pairs and
+    #                             verify in one numpy task over the
+    #                             coalesced scan, no exchange.
     #                             Above the small_table gate the
     #                             distributed shape (band bucket →
     #                             verify, 2 exchanges) returns.
@@ -220,10 +219,9 @@ HEADLINE_EXECUTED = {
     "agg_pricing_summary": (1, 2),
     "join_multi_star": (1, 6),
     "sessionize_window_sql": (1, 4),
-    "dedup_minhash_lsh": (1, 2),  # r9 fused post-sig kernel: one
-    #                               repartition(1) exchange, two thin
-    #                               codegen spans around the Python
-    #                               stages (gated scales only)
+    "dedup_minhash_lsh": (0, 2),  # one-task kernel: no exchange,
+    #                               two thin codegen spans around the
+    #                               Python stage (gated scales only)
     "tpch_q9_partsupp": (2, 8),
 }
 

@@ -44,3 +44,35 @@ def test_inventory_imports_without_spark():
     )
     assert res.returncode == 0, res.stderr[-2000:]
     assert res.stdout.startswith("OK")
+
+
+_WORKER_PROBE = r"""
+import sys
+
+import duckdb_distributed_execution_spark.operators.dedup  # noqa: F401
+
+heavy = [m for m in ("session", "manifest", "stats", "typemap")
+         if "duckdb_distributed_execution_spark." + m in sys.modules]
+assert not heavy, heavy
+from duckdb_distributed_execution_spark import Engine  # noqa: E402
+
+assert Engine.__module__ == "duckdb_distributed_execution_spark.session"
+print("OK")
+"""
+
+
+def test_operator_import_skips_engine_modules():
+    """A Python worker that unpickles an operator kernel imports the
+    package; the package loads ``Engine`` (and with it session,
+    manifest, stats and typemap) only when asked for it."""
+    import os
+
+    res = subprocess.run(
+        [sys.executable, "-c", _WORKER_PROBE],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert res.stdout.startswith("OK")
