@@ -36,7 +36,8 @@ import time
 from dataclasses import dataclass
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
+                         Window)
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -151,12 +152,19 @@ def _empty_df(spark: SparkSession, schema) -> DataFrame:
 
 
 # Per-rule violation predicates: the one definition of each constraint
-# shared by the write-time gate (Engine._check_constraints), ALTER ...
+# shared by the write-time gate (Engine._constraint_gate), ALTER ...
 # SET NOT NULL and the expect() data-quality rules.
 def _nulls(cols: list[str]) -> Column:
     """NOT NULL: a NULL in any of ``cols``."""
     return functools.reduce(
         lambda a, b: a | b, [F.col(c).isNull() for c in cols]
+    )
+
+
+def _nonnull(cols: list[str]) -> Column:
+    """No NULL in any of ``cols``."""
+    return functools.reduce(
+        lambda a, b: a & b, [F.col(c).isNotNull() for c in cols]
     )
 
 
@@ -177,11 +185,8 @@ def _duplicate_keys(df: DataFrame, keycols: list[str]) -> DataFrame:
     semantics; PK columns are NOT NULL so nothing escapes there). One
     grouped count over the key columns only — map-side combining, no
     row data shuffled."""
-    nonnull = functools.reduce(
-        lambda a, b: a & b, [F.col(c).isNotNull() for c in keycols]
-    )
     return (
-        df.select(*keycols).filter(nonnull)
+        df.select(*keycols).filter(_nonnull(keycols))
         .groupBy(*keycols)
         .agg(F.count(F.lit(1)).alias("__n"))
         .filter(F.col("__n") > 1)
@@ -197,49 +202,57 @@ def _unlink(paths) -> None:
             pass
 
 
-class _RowCounts:
-    """Row counts a write observes on its own plan
-    (``DataFrame.observe``): the staged write computes them, so they
-    cost no Spark job of their own. Tap each counted relation while
-    building the written plan; read the counts once the write ran.
-    ``spark`` is the session that runs the write; ``changes`` names the
-    tap whose zero count means the write changed nothing."""
+class _Observed:
+    """What a write observes on its own plan (``DataFrame.observe``):
+    row counts and constraint samples. The staged write computes them,
+    so they cost no Spark job of their own. Tap each observed relation
+    while building the written plan; read the values once the write
+    ran. ``spark`` is the session that runs the write; ``changes``
+    names the count whose zero means the write changed nothing."""
 
-    def __init__(self, spark: SparkSession, changes: str) -> None:
+    def __init__(self, spark: SparkSession,
+                 changes: str | None = None) -> None:
         self._session = spark._jsparkSession
         self._changes = changes
-        self._taps: dict[
-            str, tuple[Observation | None, DataFrame, Column | None]] = {}
-        self._got: dict[str, int] | None = None
+        self._taps: list[
+            tuple[Observation | None, DataFrame, dict[str, Column]]] = []
+        self._got: dict | None = None
+
+    def observe(self, df: DataFrame, **aggs: Column) -> DataFrame:
+        """``df``, observing each named aggregate over the rows flowing
+        through it."""
+        if df.sparkSession._jsparkSession != self._session:
+            # An observation completes through the session that
+            # registered it, and only that session's queries report to
+            # it: rows of another session (a foreachBatch micro-batch)
+            # would never report. They are aggregated directly instead.
+            self._taps.append((None, df, aggs))
+            return df
+        obs = Observation()
+        self._taps.append((obs, df, aggs))
+        return df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
 
     def tap(self, name: str, df: DataFrame,
             where: Column | None = None) -> DataFrame:
         """``df``, counting as ``name`` the rows flowing through it
         (only those where ``where`` is TRUE, when given)."""
-        if df.sparkSession._jsparkSession != self._session:
-            # An observation completes through the session that
-            # registered it, and only that session's queries report to
-            # it: rows of another session (a foreachBatch micro-batch)
-            # would never report. They are counted directly instead.
-            self._taps[name] = (None, df, where)
-            return df
-        obs = Observation()
-        self._taps[name] = (obs, df, where)
         hit = F.lit(1) if where is None else F.when(where, 1)
-        return df.observe(obs, F.count(hit).alias("n"))
+        return self.observe(df, **{name: F.count(hit)})
 
-    def get(self) -> dict[str, int]:
-        """The counts, after the write ran. Spark drops an observation
-        together with a subtree whose rows it proves unused (DELETE
-        ... WHERE true filters on a constant FALSE above the tap);
-        such a count is taken by a direct pass over the tapped rows."""
+    def get(self) -> dict:
+        """The observed values, after the write ran. Spark drops an
+        observation together with a subtree whose rows it proves unused
+        (DELETE ... WHERE true filters on a constant FALSE above the
+        tap); such values come from a direct aggregate over the tapped
+        rows."""
         if self._got is None:
             self._got = {}
-            for name, (obs, df, where) in self._taps.items():
-                self._got[name] = self._observed(obs)
-                if self._got[name] is None:
-                    rows = df if where is None else df.filter(where)
-                    self._got[name] = rows.count()
+            for obs, df, aggs in self._taps:
+                got = self._observed(obs)
+                if got is None:
+                    got = df.agg(*[c.alias(k) for k, c in aggs.items()]
+                                 ).first().asDict()
+                self._got.update(got)
         return self._got
 
     def changed(self) -> bool:
@@ -247,13 +260,85 @@ class _RowCounts:
         return bool(self.get()[self._changes])
 
     @staticmethod
-    def _observed(obs: Observation | None) -> int | None:
+    def _observed(obs: Observation | None) -> dict | None:
         if obs is None:
             return None
         try:
-            return obs.get["n"]
+            return obs.get
         except Py4JJavaError:  # no metrics: the tap was pruned
             return None
+
+
+class _Gate:
+    """The declared constraints of one write, checked on its staged
+    files before the manifest CAS (Engine._constraint_gate builds it).
+
+    NOT NULL/ENUM/CHECK: ``rules`` samples each rule's first violating
+    row among the rows the write adds, observed on the write. PRIMARY
+    KEY/UNIQUE: when the write holds the whole table in one partition
+    (a small table's rewrite), ``key_windows`` counts each key over a
+    window and samples a duplicate, again on the write; otherwise
+    ``check`` runs one grouped pass over the files the commit would
+    publish. ``check`` raises ValueError for the first violation in
+    this order: the rules as declared, the keys, then ``extra``."""
+
+    def __init__(self, obs: _Observed, table: str, columns: list[str],
+                 rules: list, keys: list[list[str]],
+                 extra: tuple[tuple[str, str], ...] = ()) -> None:
+        self._obs = obs
+        self._table = table
+        self._columns = columns
+        self._rules = rules
+        self._keys = keys
+        self._extra = extra
+
+    def rules(self, df: DataFrame, where: Column | None = None) -> DataFrame:
+        """``df`` (rows the write adds, table columns first), sampling
+        each rule's first violating row among those where ``where`` is
+        TRUE (all, when None)."""
+        if not self._rules:
+            return df
+        row = F.struct(*self._columns)
+        return self._obs.observe(df, **{
+            f"__rule{i}": F.first(F.when(
+                bad if where is None else where & bad, row),
+                ignorenulls=True)
+            for i, (bad, _) in enumerate(self._rules)
+        })
+
+    def key_windows(self, df: DataFrame) -> DataFrame:
+        """``df`` (the whole table as the write leaves it, in ONE
+        partition), sampling a duplicate of each key. The window needs
+        no exchange over one partition: the write's task sorts."""
+        for i, keycols in enumerate(self._keys):
+            n = F.count(F.lit(1)).over(Window.partitionBy(*keycols))
+            dup = (F.col("__n") > 1) & _nonnull(keycols)
+            df = self._obs.observe(
+                df.withColumn("__n", n),
+                **{f"__key{i}": F.min(F.when(dup, F.struct(*keycols)))},
+            ).drop("__n")
+        return df
+
+    def check(self, after) -> None:
+        """Raise the first violation (after the write ran). ``after()``
+        reads the table as the commit would leave it, for the keys no
+        window sampled."""
+        got = self._obs.get()
+        for i, (_, message) in enumerate(self._rules):
+            if got[f"__rule{i}"] is not None:
+                raise ValueError(message(got[f"__rule{i}"]))
+        for i, keycols in enumerate(self._keys):
+            if f"__key{i}" in got:
+                dup = got[f"__key{i}"]
+            else:
+                rows = _duplicate_keys(after(), keycols).limit(1).collect()
+                dup = tuple(rows[0])[:-1] if rows else None
+            if dup is not None:
+                raise ValueError(f"duplicate key {keycols} on "
+                                 f"{self._table}: {tuple(dup)!r}")
+        for metric, message in self._extra:
+            if got[metric] is not None:
+                raise ValueError(message)
 
 
 def _ddl(fn):
@@ -982,7 +1067,8 @@ class Engine:
     def _rewrite(self, name: str, rows, op: str = "rewrite",
                  files: list[str] | None = None,
                  compact: bool = True,
-                 counts: _RowCounts | None = None) -> dict[str, int]:
+                 counts: _Observed | None = None,
+                 gate: _Gate | None = None) -> dict[str, int]:
         """THE copy-on-write commit of a managed table (parquet files
         are immutable; ALTER/DELETE/UPDATE/MERGE rewrite, as a lakehouse
         format does): swap the live ``files`` (default: all) for the
@@ -995,14 +1081,17 @@ class Engine:
 
         Stage, observe, validate, then CAS. The new files are fully
         written first, invisible because no manifest lists them. The
-        row ``counts`` tapped on ``rows`` are read off that same write
-        (no job of their own). A write whose counts show no changed
-        row (``_RowCounts.changed``) unlinks its staged files and
-        returns without a snapshot or a commit. Otherwise the prior state is
-        snapshotted (hardlinks) for time travel, one atomic manifest
-        CAS publishes the swap, and superseded files are unlinked after
-        the commit (their inodes live on in the snapshot). Returns the
-        counts."""
+        row ``counts`` tapped on ``rows`` and the constraint samples
+        of ``gate`` are read off that same write (no job of their own);
+        a small table's whole rewrite runs in one partition, so its
+        key checks ride the write too (``_Gate.key_windows``). A write
+        whose counts show no changed row (``_Observed.changed``) or
+        that breaks a constraint unlinks its staged files and returns,
+        or raises, without a snapshot or a commit (``_settle``).
+        Otherwise the prior state is snapshotted (hardlinks) for time
+        travel, one atomic manifest CAS publishes the swap, and
+        superseded files are unlinked after the commit (their inodes
+        live on in the snapshot). Returns the counts."""
         t = self._require_managed(name)
         m = self._adopt_manifest(t.path)
         base = os.path.realpath(t.path)
@@ -1012,25 +1101,45 @@ class Engine:
             rows = rows(self._scan(name, live if whole else files))
         if whole and compact and self._small(name):
             rows = rows.coalesce(1)
+            if gate is not None:
+                rows = gate.key_windows(rows)
         new = self._ingest_files(t.path, rows, m["version"] + 1)
-        got = counts.get() if counts is not None else {}
-        if counts is not None and not counts.changed():
-            _unlink(os.path.join(t.path, f) for f in new)
-            return got
-        self._snapshot(name, op)
         gone = (
             set(live) if whole else {os.path.realpath(p) for p in files}
         )
         kept = [f for f in m["files"] if os.path.join(base, f) not in gone]
-        # One CAS publishes the version after the one the rewrite read
-        # its state from: a concurrent commit in between raises
-        # ConcurrentWriteError with nothing applied. The stream
-        # idempotence map (txns) carries forward.
-        manifest.commit_exact(t.path, kept + new, op, m["version"],
-                              txns=m.get("txns"))
-        _unlink(sorted(gone))  # post-commit GC
-        self._attach_managed(name, t.path, rows.schema)
-        return got
+        if self._settle(name, [os.path.join(base, f) for f in new],
+                        [os.path.join(base, f) for f in kept + new],
+                        counts, gate):
+            self._snapshot(name, op)
+            # One CAS publishes the version after the one the rewrite
+            # read its state from: a concurrent commit in between
+            # raises ConcurrentWriteError with nothing applied. The
+            # stream idempotence map (txns) carries forward.
+            manifest.commit_exact(t.path, kept + new, op, m["version"],
+                                  txns=m.get("txns"))
+            _unlink(sorted(gone))  # post-commit GC
+            self._attach_managed(name, t.path, rows.schema)
+        return counts.get() if counts is not None else {}
+
+    def _settle(self, name: str, staged: list[str], published: list[str],
+                counts: _Observed | None, gate: _Gate | None) -> bool:
+        """Whether a staged write goes on to its commit. ``staged`` are
+        the files it wrote, ``published`` the live files the commit
+        would leave. A write whose ``counts`` show no changed row
+        unlinks ``staged`` and returns False; one that breaks a
+        constraint of ``gate`` unlinks them and raises (keys no window
+        sampled are checked over ``published``)."""
+        try:
+            if counts is not None and not counts.changed():
+                _unlink(staged)
+                return False
+            if gate is not None:
+                gate.check(lambda: self._scan(name, published))
+            return True
+        except BaseException:
+            _unlink(staged)
+            raise
 
     def _scan(self, name: str, files: list[str]) -> DataFrame:
         """The rows of a managed table's ``files``, read with the view's
@@ -1062,14 +1171,17 @@ class Engine:
     def _append_files(self, name: str, df: DataFrame, op: str,
                       snapshot: bool = True,
                       txn: tuple[str, int] | None = None,
-                      counts: _RowCounts | None = None) -> bool:
+                      counts: _Observed | None = None,
+                      gate: _Gate | None = None) -> bool:
         """Atomic append: the new files land under the next version's
         names first, then ONE manifest rename makes them visible — a
         reader never sees a partially-written append (the old
         mode('append') write exposed in-progress part files to
-        directory-listing readers). ``counts`` work as in
+        directory-listing readers). ``counts`` and ``gate`` work as in
         ``_rewrite``: an append that changed no row unlinks its staged
-        files and commits nothing.
+        files and commits nothing, and one that breaks a constraint
+        unlinks them and raises; its keys are checked over the files
+        of the manifest it staged against plus the staged ones.
         ``txn=(app_id, version)`` makes the append IDEMPOTENT per
         application transaction (replayed streaming micro-batches
         commit at most once — the txns map travels in the same
@@ -1081,8 +1193,8 @@ class Engine:
         m = self._adopt_manifest(t.path)
         new = self._ingest_files(t.path, df, m["version"] + 1)
         staged = [os.path.join(t.path, f) for f in new]
-        if counts is not None and not counts.changed():
-            _unlink(staged)
+        live = [os.path.join(t.path, f) for f in m["files"]]
+        if not self._settle(name, staged, live + staged, counts, gate):
             return False
         if snapshot:
             self._snapshot(name, op)
@@ -1216,44 +1328,46 @@ class Engine:
     def insert_into(self, name: str, df: DataFrame) -> None:
         """Distributed columnar append — never the reference's
         row-by-row VALUES-string path (distributed_insert.cpp:71-86).
-        Large appends write straight to the table directory; small
-        tables are kept compacted (single file ⇒ single-task scans)."""
+        ``df``'s columns map to the table's by position. Large appends
+        write straight to the table directory; small tables are kept
+        compacted (single file ⇒ single-task scans), and their rewrite
+        is the one Spark job of the insert: the constraints are checked
+        on the staged write, before the commit (``_constraint_gate``)."""
         t = self._tables[name]
         if not t.managed:
             raise ValueError("INSERT requires a managed table")
-        target = self.table(name)
-        # persisted: the constraint check and the write read the source
-        # once between them
-        aligned = df.select(*[F.col(c).cast(f.dataType).alias(f.name) for c, f in
-                              zip(df.columns, target.schema.fields)]).persist()
-        try:
-            after = target.unionByName(aligned)
-            self._check_constraints(name, aligned, after=after)
-            if self._small(name):
-                self._rewrite(name, lambda cur: cur.unionByName(aligned),
-                              op="insert")
-            else:
-                self._append_files(name, aligned, "insert")
-        finally:
-            aligned.unpersist()
+        fields = self.table(name).schema.fields
+        if len(df.columns) != len(fields):
+            raise ValueError(
+                f"table {name} has {len(fields)} columns but "
+                f"{len(df.columns)} values were supplied")
+        gate = self._constraint_gate(name, _Observed(self.spark))
+        aligned = gate.rules(df.select(*[
+            F.col(c).cast(f.dataType).alias(f.name)
+            for c, f in zip(df.columns, fields)]))
+        if self._small(name):
+            self._rewrite(name, lambda cur: cur.unionByName(aligned),
+                          op="insert", gate=gate)
+        else:
+            self._append_files(name, aligned, "insert", gate=gate)
 
-    def _check_constraints(self, name: str, rows: DataFrame,
-                           cols: set[str] | None = None,
-                           after: DataFrame | None = None) -> None:
+    def _constraint_gate(self, name: str, obs: _Observed,
+                         cols: set[str] | None = None, keys: bool = True,
+                         extra: tuple[tuple[str, str], ...] = ()) -> _Gate:
         """THE constraint gate of every write (INSERT, UPDATE, MERGE,
-        COPY FROM): raise ValueError on the first declared rule of
-        ``name`` the write breaks, before anything is staged.
-        ``rows`` are the rows written (table columns); ``cols`` limits
-        the check to rules over those columns (UPDATE's SET list).
-        NOT NULL/ENUM/CHECK run as ONE filtered pass over ``rows``.
-        PRIMARY KEY/UNIQUE run over ``after``, the table as the write
-        leaves it; None skips them."""
+        COPY FROM): the declared rules of ``name``, observed into
+        ``obs`` on the staged write and raised, first declared rule
+        first, before the manifest CAS (``_Gate``). ``cols`` limits
+        the gate to constraints over those columns (UPDATE's SET
+        list); ``keys=False`` leaves out PRIMARY KEY/UNIQUE (a write
+        that cannot duplicate a key). ``extra`` are further
+        (observed metric, message) checks, raised after the keys."""
         lower = {c.lower() for c in cols or ()}
 
         def touched(used) -> bool:
             return cols is None or bool({c.lower() for c in used} & lower)
 
-        columns = rows.columns
+        columns = self.table(name).columns
         rules = []
         nn = sorted(c for (tn, c) in self._not_null
                     if tn == name and c in columns and touched([c]))
@@ -1269,27 +1383,9 @@ class Engine:
             if touched(re.findall(r"\w+", check)):
                 rules.append((_fails(check), lambda r, c=check: (
                     f"CHECK ({c}) violated on {name}: {tuple(r)!r}")))
-        samples = ()
-        if rules:
-            # a filter, not an aggregate: a rule the schema already
-            # guarantees (NOT NULL over non-nullable input) folds to
-            # FALSE and the pass costs no Spark job at all
-            row = F.struct(*columns)
-            hit = rows.filter(functools.reduce(
-                lambda a, b: a | b, [bad for bad, _ in rules]
-            )).select(*[F.when(bad, row) for bad, _ in rules]).limit(1)
-            samples = next(iter(hit.collect()), ())
-        for (_, message), sample in zip(rules, samples):
-            if sample is not None:
-                raise ValueError(message(sample))
-        keys = self._keys.get(name, []) if after is not None else []
-        for keycols in filter(touched, keys):
-            dup = _duplicate_keys(after, keycols).limit(1).collect()
-            if dup:
-                raise ValueError(
-                    f"duplicate key {keycols} on {name}: "
-                    f"{tuple(dup[0])[:-1]!r}"
-                )
+        keycols = [k for k in self._keys.get(name, []) if touched(k)]
+        return _Gate(obs, name, columns, rules, keycols if keys else [],
+                     extra)
 
     def insert_values(self, name: str, rows: list[tuple],
                       columns: list[str] | None = None) -> None:
@@ -1513,7 +1609,7 @@ class Engine:
     # A small table (Engine._small) skips the probe: its rewrite
     # compacts every file into one anyway, so the probe could spare
     # nothing. Either way the returned row count is observed on the
-    # rewrite itself (_RowCounts), and a write matching nothing commits
+    # rewrite itself (_Observed), and a write matching nothing commits
     # nothing.
 
     def _adopt_manifest(self, path: str) -> dict:
@@ -1718,7 +1814,7 @@ class Engine:
             for iname, imeta in self._vector_indexes.items()
             if imeta["table"] == name
         ]
-        counts = _RowCounts(self.spark, changes="deleted")
+        counts = _Observed(self.spark, changes="deleted")
         n_deleted = self._rewrite(
             name, lambda src: counts.tap("deleted", src, cond).filter(keep),
             op="delete", files=matched, counts=counts,
@@ -1734,40 +1830,42 @@ class Engine:
         pruning as delete_from: only files containing condition-TRUE
         rows are rewritten (non-matching rows in a rewritten file are
         carried through unchanged); a small table is rewritten whole.
-        Returns rows updated, observed on the rewrite."""
+        Returns rows updated, observed on the rewrite, which also
+        checks the constraints over the SET columns before the
+        commit."""
         self._require_managed(name, "UPDATE")
-        target = self.table(name)
-        fields = target.schema.fields
+        fields = self.table(name).schema.fields
         unknown = set(set_exprs) - {f.name for f in fields}
         if unknown:
             raise ValueError(f"columns {sorted(unknown)} not in {name!r}")
         cond = F.expr(condition)
+        counts = _Observed(self.spark, changes="updated")
+        gate = self._constraint_gate(name, counts, cols=set(set_exprs))
+        hit = F.col("__u")
 
         def apply(df: DataFrame) -> DataFrame:
             # ONE select: every SET expression and the WHERE see the
             # row as it was before the update (SQL semantics). Cast
             # back to the declared type: with file pruning a type-
             # widening SET would otherwise change the schema of ONLY
-            # the rewritten files.
-            return df.select(*[
+            # the rewritten files. The count and the rule samples see
+            # the updated rows only.
+            out = df.select(*[
                 F.when(cond, F.expr(set_exprs[f.name]))
                 .otherwise(F.col(f.name)).cast(f.dataType).alias(f.name)
                 if f.name in set_exprs else F.col(f.name)
                 for f in fields
-            ])
+            ], cond.alias("__u"))
+            out = gate.rules(counts.tap("updated", out, hit), where=hit)
+            return out.drop("__u")
 
         matched = None
         if not self._small(name):
             matched, n_updated = self._matched_files(name, condition)
             if n_updated == 0:
                 return 0
-        self._check_constraints(name, apply(target.filter(cond)),
-                                cols=set(set_exprs), after=apply(target))
-        counts = _RowCounts(self.spark, changes="updated")
-        return self._rewrite(
-            name, lambda src: apply(counts.tap("updated", src, cond)),
-            op="update", files=matched, counts=counts,
-        )["updated"]
+        return self._rewrite(name, apply, op="update", files=matched,
+                             counts=counts, gate=gate)["updated"]
 
     def summarize(self, name: str) -> DataFrame:
         """DuckDB-SUMMARIZE-style profile of a registered table: one
@@ -2890,11 +2988,11 @@ class Engine:
         if t is None or not t.managed:
             raise ValueError(f"copy_from requires a managed table, got {name!r}")
         target = self.spark.table(name)
+        counts = _Observed(self.spark, changes="rows")
+        gate = self._constraint_gate(name, counts)
         df = read(self.spark, path, fmt=fmt, schema=target.schema, **options)
-        self._check_constraints(name, df, after=target.unionByName(df))
-        counts = _RowCounts(self.spark, changes="rows")
-        self._append_files(name, counts.tap("rows", df), "copy",
-                           snapshot=False, counts=counts)
+        self._append_files(name, gate.rules(counts.tap("rows", df)), "copy",
+                           snapshot=False, counts=counts, gate=gate)
         return counts.get()["rows"]
 
     def reattach_warehouse(self) -> list[str]:
@@ -3088,46 +3186,68 @@ class Engine:
     def merge_upsert(self, name: str, source: DataFrame, on: list[str]) -> dict:
         """MERGE INTO name USING source ON key-equality: matched target
         rows are replaced by the source row, unmatched source rows are
-        inserted (the standard full-row upsert).  Copy-on-write like
-        DELETE/UPDATE; at lakehouse scale the identical plan (anti-join
-        + union) is what Delta's MERGE executes under the hood.  Errors
-        if the source has duplicate keys — SQL MERGE semantics forbid
+        inserted (the standard full-row upsert). A target row with a
+        NULL ON column matches nothing. Copy-on-write like
+        DELETE/UPDATE. Errors if the source has duplicate keys (a
+        NULL-holding key included) — SQL MERGE semantics forbid
         multiple matches for one target row. The target, kept and
         source row counts are observed on the rewrite (updated =
-        target − kept); an empty source commits nothing."""
+        target − kept); an empty source commits nothing.
+
+        A small table is rewritten in one partition, where one window
+        over the ON columns finds both the replaced target rows and
+        the duplicate source keys: the merge, its constraint checks
+        included, is one Spark job. A large table's rewrite drops the
+        replaced rows with an anti-join against the grouped source
+        keys (the plan Delta's MERGE runs); the source is persisted
+        there, as both sides of the join read it."""
         target = self.table(name)
-        # persisted: the checks and the rewrite read the source once
-        # between them
-        aligned = source.select(*[F.col(c) for c in target.columns]).persist()
+        # Source keys are distinct (checked), so a key holding every ON
+        # column cannot be duplicated by the merge.
+        keyed = all(set(on) <= set(k) for k in self._keys.get(name, []))
+        counts = _Observed(self.spark, changes="source")
+        gate = self._constraint_gate(
+            name, counts, keys=not keyed,
+            extra=(("dup_source", "merge_upsert: duplicate keys in source"),))
+        small = self._small(name)
+        aligned = source.select(*target.columns)
+        if not small:
+            aligned = aligned.persist()
+        new = gate.rules(counts.tap("source", aligned))
+
+        def merged(cur: DataFrame) -> DataFrame:
+            cur = counts.tap("target", cur)
+            if not small:
+                # groupBy puts NULL keys in one group, so a NULL-holding
+                # key counts as a duplicate like any other; the
+                # anti-join (in the target's column order: a USING join
+                # puts the ON columns first) matches no NULL
+                keys = counts.observe(
+                    aligned.groupBy(*on).agg(F.count(F.lit(1)).alias("__n")),
+                    dup_source=F.min(F.when(F.col("__n") > 1,
+                                            F.struct(*on))))
+                kept = cur.join(keys.select(*on), on=on, how="left_anti")
+                return counts.tap("kept", kept.select(*target.columns)
+                                  ).unionByName(new)
+            # the window groups NULL keys like groupBy; a target row
+            # holding one is never replaced
+            src = F.col("__src")
+            n_src = F.count(F.when(src, 1)).over(Window.partitionBy(*on))
+            both = (cur.withColumn("__src", F.lit(False))
+                    .unionByName(new.withColumn("__src", F.lit(True)))
+                    .coalesce(1).withColumn("__n", n_src))
+            gone = ~src & (F.col("__n") > 0) & _nonnull(on)
+            both = counts.observe(
+                both, kept=F.count(F.when(~src & ~gone, 1)),
+                dup_source=F.min(F.when(src & (F.col("__n") > 1),
+                                        F.struct(*on))))
+            return both.filter(~gone).drop("__src", "__n")
+
         try:
-            keys = aligned.select(*on)
-
-            def merged(cur: DataFrame, tap=lambda _, df: df) -> DataFrame:
-                # the rows of ``cur`` no source key matches, in the
-                # target's column order (a USING join puts the ON
-                # columns first), then the source rows
-                kept = tap("target", cur).join(
-                    keys, on=on, how="left_anti").select(*target.columns)
-                return tap("kept", kept).unionByName(tap("source", aligned))
-
-            # Source keys are distinct (checked below), so a key holding
-            # every ON column cannot be duplicated by the merge.
-            keyed = all(set(on) <= set(k) for k in self._keys.get(name, []))
-            self._check_constraints(
-                name, aligned, after=None if keyed else merged(target))
-            # groupBy puts NULL keys in one group, so a NULL-holding
-            # key counts as a duplicate like any other
-            dup = keys.groupBy(*on).agg(F.count(F.lit(1)).alias("__n"))
-            if dup.filter(F.col("__n") > 1).limit(1).collect():
-                raise ValueError("merge_upsert: duplicate keys in source")
-            # The counts are tapped on a plan of their own: the PK check
-            # above may run an action over merged(), and an observation
-            # reports the first action that carries it.
-            counts = _RowCounts(self.spark, changes="source")
-            got = self._rewrite(name, lambda cur: merged(cur, counts.tap),
-                                counts=counts)
+            got = self._rewrite(name, merged, counts=counts, gate=gate)
         finally:
-            aligned.unpersist()
+            if not small:
+                aligned.unpersist()
         n_updated = got["target"] - got["kept"]
         return {"updated": n_updated, "inserted": got["source"] - n_updated}
 

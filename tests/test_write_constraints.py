@@ -74,6 +74,37 @@ def test_write_rejects_violation(engine, spark, tmp_path, op, constraint):
         engine.drop_table(name)
 
 
+@pytest.mark.parametrize("large", [False, True], ids=["small", "large"])
+def test_first_violation_in_order(engine, spark, monkeypatch, large):
+    """A write breaking several constraints reports one: the first
+    declared rule, then the PRIMARY KEY, then MERGE's duplicate source
+    keys — on a small table's one-job rewrite and on a large table's
+    append or rewrite alike."""
+    if large:
+        monkeypatch.setattr(engine, "_COMPACT_BYTES", 0)
+    name = f"wc_order_{'large' if large else 'small'}"
+    engine.create_table(name, DDL)
+    try:
+        engine.insert_values(name, ROWS)
+        history = engine.history(name)
+        for row, match in (((1, None, "meh", 30), "NOT NULL"),
+                           ((1, -1, "meh", 30), "ENUM domain"),
+                           ((1, -1, "ok", 30), "CHECK")):
+            with pytest.raises(ValueError, match=match):
+                engine.insert_into(name, spark.createDataFrame([row], SCHEMA))
+        for src, on, match in (
+                ([(1, 5, "ok", 77), (2, 6, "ok", 77)], ["code"],
+                 r"duplicate key \['id'\]"),
+                ([(1, -1, "ok", 10), (1, 2, "ok", 10)], ["id"], "CHECK")):
+            with pytest.raises(ValueError, match=match):
+                engine.merge_upsert(
+                    name, spark.createDataFrame(src, SCHEMA), on=on)
+        assert engine.history(name) == history
+        assert sorted(map(tuple, engine.table(name).collect())) == ROWS
+    finally:
+        engine.drop_table(name)
+
+
 def test_update_matches_duckdb(engine):
     """UPDATE reads the pre-update row in every SET expression and in
     the WHERE, and rejects NOT NULL, CHECK and PRIMARY KEY violations

@@ -6,8 +6,10 @@ files, reads the observed count, then unlinks what it staged: no
 snapshot, no manifest version, no file left in the table directory or
 next to it. The counts must stay right on an empty table, an empty
 source, after DELETE ... WHERE true (whose constant-FALSE filter makes
-Spark drop the observation) and when MERGE's primary-key check runs an
-action over the merged rows before the write.
+Spark drop the observation) and when MERGE's primary-key check runs
+over the merged rows. A write that breaks a constraint also stages
+first and leaves nothing behind, and its key check sees rows another
+process appended.
 """
 
 from __future__ import annotations
@@ -133,8 +135,7 @@ def test_merge_into_empty_table_and_with_empty_source(spark, eng):
 
 def test_merge_on_non_key_columns_counts_the_write(spark, eng):
     """ON ``code`` does not cover the PRIMARY KEY, so the key check runs
-    over the merged rows before the write; the counts still come from
-    the write."""
+    over the merged rows; it and the counts come from the write."""
     src = spark.createDataFrame(
         [(100, 30, "new30"), (101, 999, "new999")], SCHEMA)
     assert eng.merge_upsert("we_t", src, on=["code"]) == {
@@ -166,3 +167,73 @@ def test_small_table_delete_tombstones_vector_index(spark, eng):
     finally:
         eng.drop_vector_index("we_idx", if_exists=True)
         eng.drop_table("we_vec")
+
+
+@pytest.mark.parametrize("large", [False, True], ids=["small", "large"])
+@pytest.mark.parametrize("op", ["insert", "copy_from"])
+def test_key_check_sees_rows_appended_by_another_process(spark, eng,
+                                                         tmp_path, op,
+                                                         large):
+    """The PRIMARY KEY check reads the files of the manifest the write
+    commits over: a key only another process's appended file holds is
+    a duplicate, whether the write rewrites a small table or appends
+    to a large one."""
+    if large:
+        eng._COMPACT_BYTES = 0
+    _append_externally(eng, "we_t", [(500, 5000, "ext500")])
+    src = str(tmp_path / "copy_src")
+    spark.createDataFrame([(500, 1, "mine")], SCHEMA).write.parquet(src)
+    before = _state(eng, "we_t")
+    with pytest.raises(ValueError, match=r"duplicate key \['id'\]"):
+        if op == "insert":
+            eng.insert_values("we_t", [(500, 1, "mine")])
+        else:
+            eng.copy_from("we_t", src)
+    assert _state(eng, "we_t") == before
+    live = eng._scan("we_t", eng._managed_files("we_t"))
+    assert live.filter("id = 500").count() == 1
+
+
+@pytest.mark.parametrize("large", [False, True], ids=["small", "large"])
+@pytest.mark.parametrize("case", ["insert_duplicate_key", "insert_null",
+                                  "merge_duplicate_source_key"])
+def test_rejected_write_leaves_no_trace(spark, eng, case, large):
+    """A write that breaks a constraint raises after staging its files
+    and before the commit: the manifest version, the history and the
+    files in and next to the table directory are as they were."""
+    if large:
+        eng._COMPACT_BYTES = 0
+    before, rows = _state(eng, "we_t"), _rows(eng, "we_t")
+    if case == "insert_duplicate_key":
+        src, match = [(3, 1, "again"), (100, 2, "new")], "duplicate key"
+    elif case == "insert_null":
+        # a nullable source: the NOT NULL rule cannot fold away
+        src, match = [(100, 1, "new"), (None, 2, "null id")], "NOT NULL"
+    else:
+        src = [(3, 1, "a"), (3, 2, "b"), (100, 3, "new")]
+        match = "duplicate keys in source"
+    df = spark.createDataFrame(src, SCHEMA)
+    with pytest.raises(ValueError, match=match):
+        if case.startswith("insert"):
+            eng.insert_into("we_t", df)
+        else:
+            eng.merge_upsert("we_t", df, on=["id"])
+    assert _state(eng, "we_t") == before
+    assert _rows(eng, "we_t") == rows
+
+
+@pytest.mark.parametrize("large", [False, True], ids=["small", "large"])
+def test_insert_empty_source_into_keyed_table(spark, eng, large):
+    """An empty source adds nothing to check; if Spark prunes a tap of
+    the empty rows, the gate aggregates them directly."""
+    if large:
+        eng._COMPACT_BYTES = 0
+    rows = _rows(eng, "we_t")
+    eng.insert_into("we_t", spark.createDataFrame([], SCHEMA))
+    assert _rows(eng, "we_t") == rows
+    eng.create_table("we_empty", DDL)
+    try:
+        eng.insert_into("we_empty", spark.createDataFrame([], SCHEMA))
+        assert _rows(eng, "we_empty") == []
+    finally:
+        eng.drop_table("we_empty")

@@ -2,20 +2,22 @@
 
 On a small table every write job is driver round trip, so the job
 count is the write's latency. Each op runs under its own job group and
-the status tracker counts the jobs it started:
+the status tracker counts the jobs it started. A small table's whole
+rewrite runs in one partition, and every constraint check and row
+count is observed on that one write, before the manifest commit:
 
-* DELETE and UPDATE (SET columns without rules) rewrite a small table
-  whole in one job; the deleted/updated count is observed on that
-  write, and neither the rewrite nor the view re-registration infers
-  a schema.
-* INSERT keeps its PRIMARY KEY pass (source cache stage, key shuffle,
-  key result) and one write.
-* MERGE adds the source-key check and the anti-join write.
-
-The sources declare ``qty`` non-nullable, as a typed client batch
-does, so the NOT NULL rule folds away and costs no job.
+* DELETE and UPDATE (SET columns without rules) rewrite the table in
+  one job; the deleted/updated count is observed on that write, and
+  neither the rewrite nor the view re-registration infers a schema.
+* INSERT is one job: NOT NULL/CHECK/ENUM samples are observed on the
+  new rows and PRIMARY KEY duplicates come from a per-key window.
+* MERGE is one job: one window over the ON columns drops the replaced
+  target rows and finds duplicate source keys.
 * At or above ``_COMPACT_BYTES`` DELETE still probes which files hold
   matches.
+
+The sources declare ``qty`` non-nullable, as a typed client batch
+does.
 """
 
 from __future__ import annotations
@@ -82,13 +84,27 @@ def test_small_table_write_job_budget(spark, eng):
 
     _, jobs = _jobs(spark, lambda: eng.insert_into(
         "wj_t", _rows(spark, 400, 450)))
-    assert jobs <= 4
+    assert jobs == 1
 
     got, jobs = _jobs(spark, lambda: eng.merge_upsert(
         "wj_t", _rows(spark, 440, 460), ["id"]))
     assert got == {"updated": 10, "inserted": 10}
-    assert jobs <= 5
+    assert jobs == 1
     assert eng.table("wj_t").count() == 400 - 57 + 50 + 10
+
+
+def test_insert_wrong_arity_fails_before_any_job(spark, eng):
+    """INSERT maps source columns to table columns by position: a
+    source with more or fewer columns is rejected before any Spark
+    job, changing nothing."""
+    wide = _rows(spark, 400, 401).withColumn("extra", F.lit(1))
+    narrow = _rows(spark, 400, 401).select("id")
+    for src, n in ((wide, 5), (narrow, 1)):
+        err, jobs = _jobs(spark, lambda: pytest.raises(
+            ValueError, eng.insert_into, "wj_t", src))
+        err.match(f"table wj_t has 4 columns but {n} values were supplied")
+        assert jobs == 0
+    assert eng.table("wj_t").count() == 400
 
 
 def test_large_table_delete_still_probes(spark, eng):
