@@ -8,12 +8,17 @@ best-effort CONVENIENCE POINTER at the latest version for legacy /
 external readers, refreshed after every commit. Engine readers resolve
 the highest-numbered version file directly.
 
-Round-7 made the commit crash-atomic and reader-consistent (stage new
-files invisible → one atomic rename → post-commit GC), but the commit
-itself was read-modify-write over the single pointer file: two
-concurrent writer PROCESSES could both read version v and both rename
-v+1, the second silently discarding the first writer's committed
-files. Round 8 (verdict task 1) makes the commit a COMPARE-AND-SWAP:
+The log is the table's ONLY version history. The latest version is the
+live table; every older version still in the directory is readable as
+it was (``Engine.table_at_version``), because a commit never deletes a
+data file: a superseded file stays until ``prune`` retires every
+version that lists it. Nothing prunes on commit; history is kept until
+an explicit ``prune`` (``Engine.vacuum_history``).
+
+A commit stages its new files invisibly, then publishes the version
+as one COMPARE-AND-SWAP, so two writer PROCESSES that both read
+version v cannot both publish v+1 (the second silently discarding the
+first writer's files):
 
 * A writer materializes the full manifest content in a temp file
   (fsync'd), then publishes it with ``link(2)`` to the version-numbered
@@ -61,9 +66,13 @@ __all__ = [
     "commit_exact",
     "last_txn",
     "list_versions",
+    "prune",
     "prune_watermark",
     "read_manifest",
+    "read_version",
+    "referenced",
     "try_commit",
+    "versions",
 ]
 
 POINTER = "_manifest.json"
@@ -71,18 +80,6 @@ _VERSION_FMT = "_manifest-v{:012d}.json"
 _VERSION_RE = re.compile(r"_manifest-v(\d{1,18})\.json$")
 _PRUNED_FMT = "_pruned-v{:012d}.marker"
 _PRUNED_RE = re.compile(r"_pruned-v(\d{1,18})\.marker$")
-# Committed version files retained behind the latest one. A lagging
-# reader that resolved version N keeps working while up to KEEP newer
-# commits land (the standard lakehouse read-vs-retention window —
-# Delta's logRetentionDuration, here expressed in versions).
-KEEP_VERSIONS = 20
-# Age floor on pruning: version files younger than this are never
-# unlinked even when they fall KEEP_VERSIONS behind — the time half of
-# the reader-retention contract (Delta's logRetentionDuration proper).
-# A reader that resolved version N is guaranteed N stays readable for
-# at least this many seconds OR until KEEP_VERSIONS newer commits land,
-# whichever is LATER. Tests that exercise pruning set this to 0.
-PRUNE_MIN_AGE_SECONDS = 600.0
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -147,6 +144,35 @@ def read_manifest(path: str) -> dict | None:
         return json.load(fh)
 
 
+def read_version(path: str, version: int) -> dict | None:
+    """The manifest of committed ``version``, None if it is not
+    retained (never committed, or pruned)."""
+    try:
+        with open(version_file(path, version)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
+def versions(path: str) -> list[dict]:
+    """Manifests of the retained versions, oldest first; the last one
+    is the live table. A pre-CAS table's pointer file is its one
+    version. A version a racing ``prune`` retires while this reads is
+    left out."""
+    out = [m for v in list_versions(path)
+           if (m := read_version(path, v)) is not None]
+    if not out:
+        m = read_manifest(path)
+        out = [m] if m is not None else []
+    return out
+
+
+def referenced(path: str) -> set[str]:
+    """Data files any retained version lists: the files that must stay
+    in the directory (a vacuum or an adopt sweep treats them as live)."""
+    return {f for m in versions(path) for f in m["files"]}
+
+
 def try_commit(path: str, files: list[str], op: str,
                version: int, txns: dict | None = None) -> dict | None:
     """ONE compare-and-swap attempt: publish ``files`` as exactly
@@ -163,15 +189,19 @@ def try_commit(path: str, files: list[str], op: str,
     so a committed version file is always complete and a crash at any
     point leaves at most an invisible ``_manifest.tmp.*`` orphan.
 
+    A commit publishes and deletes nothing else: the files it
+    supersedes stay until ``prune`` retires every version listing
+    them, and no commit prunes.
+
     A version number at or below the PRUNE WATERMARK is a loss even
     if the name is free: pruning unlinked that version's file, which
     would otherwise re-open the number for link(2) and let a stalled
-    loser (read base N, slept through >KEEP_VERSIONS commits) 'win' a
-    commit that never becomes latest — readers resolve max — while its
-    caller's post-commit GC deletes files the real latest still
-    references. The watermark is checked before staging AND re-checked
-    after the link (backing the link out on failure), closing the race
-    where pruning advances between check and link."""
+    loser (read base N, slept through commits past N+1 and the prune
+    that retired N+1) 'win' a commit that never becomes latest —
+    readers resolve max — and whose files no live version lists. The
+    watermark is checked before staging AND re-checked after the link
+    (backing the link out on failure), closing the race where pruning
+    advances between check and link."""
     if version <= prune_watermark(path):
         return None
     m = {
@@ -195,9 +225,10 @@ def try_commit(path: str, files: list[str], op: str,
     os.unlink(tmp)
     if version <= prune_watermark(path):
         # Pruning advanced past us between the pre-check and the link.
-        # Our version file can never be the resolved max (the watermark
-        # is always > KEEP_VERSIONS behind a live latest), so backing
-        # it out is invisible to readers.
+        # Our version file can never be the resolved max (a pruner
+        # never retires the latest version it saw, so the watermark is
+        # always below a live latest), so backing it out is invisible
+        # to readers.
         try:
             os.unlink(version_file(path, version))
         except OSError:
@@ -214,7 +245,6 @@ def try_commit(path: str, files: list[str], op: str,
     except OSError:
         pass
     _refresh_pointer(path)
-    _prune_versions(path, version)
     return m
 
 
@@ -327,60 +357,75 @@ def _refresh_pointer(path: str) -> None:
             pass
 
 
-def _prune_versions(path: str, latest: int) -> None:
-    """Unlink committed version files more than KEEP_VERSIONS behind
-    ``latest`` AND older than PRUNE_MIN_AGE_SECONDS (both retention
-    clauses must expire). Before any unlink, the prune WATERMARK is
-    raised to the highest version about to go — watermark-first
-    ordering means a version number is retired before its name is ever
-    free for reuse, so try_commit's watermark check is sound even
-    against pruners that crash mid-sweep. Safe concurrently: version
-    files are immutable, each unlink targets a distinct name, readers
-    resolve the max (never touched), and the marker scheme makes the
-    watermark monotone under racing pruners."""
-    now = time.time()
-    doomed = []
-    for v in list_versions(path):
-        if v >= latest - KEEP_VERSIONS:
-            continue
-        try:
-            age = now - os.path.getmtime(version_file(path, v))
-        except OSError:
-            continue
-        if age >= PRUNE_MIN_AGE_SECONDS:
-            doomed.append(v)
+def prune(path: str, keep_last: int = 0) -> int:
+    """Retire every version but the latest and the ``keep_last``
+    before it, then delete the data files only retired versions
+    listed. Returns the number of versions retired.
+
+    Watermark first: before any unlink the prune WATERMARK is raised
+    to the highest version about to go, so a version number is retired
+    before its name is ever free for reuse and try_commit's watermark
+    check holds even against a pruner that crashes mid-sweep. Then the
+    retired version files go, and only then their data files: a crash
+    in between leaves data files no version lists, which
+    ``Engine.vacuum_orphans`` reclaims, never a version listing a
+    missing file. The kept set is resolved after the version files
+    are gone, so it includes any commit that landed meanwhile (a
+    commit builds on the latest version, which is never retired).
+    Safe concurrently: version files are immutable, each unlink
+    targets a distinct name, readers resolve the max (never touched),
+    and the marker scheme makes the watermark monotone under racing
+    pruners."""
+    doomed = list_versions(path)[:-1]
+    doomed = doomed[:max(len(doomed) - keep_last, 0)]
     if not doomed:
-        return
-    new_w = max(doomed)
-    old_w = prune_watermark(path)
-    if new_w > old_w:
-        # publish the new watermark with the same create-if-absent
-        # primitive as commits (content irrelevant — the NAME is the
-        # value); EEXIST = another pruner already published it
-        tmp = os.path.join(
-            path, f"_manifest.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as fh:
-            fh.write("")
-        try:
-            os.link(tmp, os.path.join(path, _PRUNED_FMT.format(new_w)))
-        except FileExistsError:
-            pass
-        os.unlink(tmp)
-        # retire superseded markers (max is preserved: we only ever
-        # delete strictly below a marker that is already published)
-        for f in os.listdir(path):
-            m = _PRUNED_RE.fullmatch(f)
-            if m and int(m.group(1)) < new_w:
-                try:
-                    os.unlink(os.path.join(path, f))
-                except OSError:
-                    pass
+        return 0
+    _raise_watermark(path, doomed[-1])
+    files = set()
     for v in doomed:
+        m = read_version(path, v)
+        if m is None:
+            continue  # a racing pruner retired it
+        files.update(m["files"])
         try:
-            os.unlink(version_file(path, v))
-        except OSError:
+            os.remove(version_file(path, v))
+        except FileNotFoundError:
             pass
+    for f in sorted(files - referenced(path)):
+        try:
+            os.remove(os.path.join(path, f))
+        except FileNotFoundError:
+            pass
+    return len(doomed)
+
+
+def _raise_watermark(path: str, new_w: int) -> None:
+    """Publish ``new_w`` as the prune watermark unless it already is
+    at least that."""
+    if new_w <= prune_watermark(path):
+        return
+    # publish the new watermark with the same create-if-absent
+    # primitive as commits (content irrelevant — the NAME is the
+    # value); EEXIST = another pruner already published it
+    tmp = os.path.join(
+        path, f"_manifest.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+    )
+    with open(tmp, "w") as fh:
+        fh.write("")
+    try:
+        os.link(tmp, os.path.join(path, _PRUNED_FMT.format(new_w)))
+    except FileExistsError:
+        pass
+    os.unlink(tmp)
+    # retire superseded markers (max is preserved: we only ever
+    # delete strictly below a marker that is already published)
+    for f in os.listdir(path):
+        m = _PRUNED_RE.fullmatch(f)
+        if m and int(m.group(1)) < new_w:
+            try:
+                os.unlink(os.path.join(path, f))
+            except OSError:
+                pass
 
 
 def vacuum_tmp(path: str) -> int:

@@ -1045,7 +1045,6 @@ class Engine:
         self._keys.pop(name, None)
         self._checks.pop(name, None)
         self._foreign.pop(name, None)
-        shutil.rmtree(self._snapshot_dir(name), ignore_errors=True)
         for store in (self._defaults, self._enums):
             for k in [k for k in store if k[0] == name]:
                 del store[k]
@@ -1079,19 +1078,19 @@ class Engine:
         this engine attached its view is read and carried over, not
         dropped.
 
-        Stage, observe, validate, then CAS. The new files are fully
-        written first, invisible because no manifest lists them. The
-        row ``counts`` tapped on ``rows`` and the constraint samples
-        of ``gate`` are read off that same write (no job of their own);
-        a small table's whole rewrite runs in one partition, so its
-        key checks ride the write too (``_Gate.key_windows``). A write
+        Stage, settle, then CAS. The new files are fully written
+        first, invisible because no manifest lists them. The row
+        ``counts`` tapped on ``rows`` and the constraint samples of
+        ``gate`` are read off that same write (no job of their own); a
+        small table's whole rewrite runs in one partition, so its key
+        checks ride the write too (``_Gate.key_windows``). A write
         whose counts show no changed row (``_Observed.changed``) or
         that breaks a constraint unlinks its staged files and returns,
-        or raises, without a snapshot or a commit (``_settle``).
-        Otherwise the prior state is snapshotted (hardlinks) for time
-        travel, one atomic manifest CAS publishes the swap, and
-        superseded files are unlinked after the commit (their inodes
-        live on in the snapshot). Returns the counts."""
+        or raises, without a commit (``_settle``). Otherwise one
+        atomic manifest CAS publishes the swap as the next version.
+        The superseded files stay: the version before it still lists
+        them (time travel), until ``vacuum_history`` prunes it.
+        Returns the counts."""
         t = self._require_managed(name)
         m = self._adopt_manifest(t.path)
         base = os.path.realpath(t.path)
@@ -1111,14 +1110,12 @@ class Engine:
         if self._settle(name, [os.path.join(base, f) for f in new],
                         [os.path.join(base, f) for f in kept + new],
                         counts, gate):
-            self._snapshot(name, op)
             # One CAS publishes the version after the one the rewrite
             # read its state from: a concurrent commit in between
             # raises ConcurrentWriteError with nothing applied. The
             # stream idempotence map (txns) carries forward.
             manifest.commit_exact(t.path, kept + new, op, m["version"],
                                   txns=m.get("txns"))
-            _unlink(sorted(gone))  # post-commit GC
             self._attach_managed(name, t.path, rows.schema)
         return counts.get() if counts is not None else {}
 
@@ -1169,7 +1166,6 @@ class Engine:
         return total
 
     def _append_files(self, name: str, df: DataFrame, op: str,
-                      snapshot: bool = True,
                       txn: tuple[str, int] | None = None,
                       counts: _Observed | None = None,
                       gate: _Gate | None = None) -> bool:
@@ -1196,8 +1192,6 @@ class Engine:
         live = [os.path.join(t.path, f) for f in m["files"]]
         if not self._settle(name, staged, live + staged, counts, gate):
             return False
-        if snapshot:
-            self._snapshot(name, op)
         # Blind append: rebases onto any concurrent commit and retries
         # (manifest.commit_append) — INSERTs never lose a race.
         out = manifest.commit_append(t.path, new, op, txn=txn)
@@ -1237,11 +1231,6 @@ class Engine:
         schema = self.table(old).schema
         new_path = self._managed_path(new)
         os.rename(t.path, new_path)
-        if os.path.isdir(self._snapshot_dir(old)):
-            os.makedirs(
-                os.path.dirname(self._snapshot_dir(new)), exist_ok=True
-            )
-            os.rename(self._snapshot_dir(old), self._snapshot_dir(new))
         self.spark.catalog.dropTempView(old)
         del self._tables[old]
         self._attach_managed(new, new_path, schema)
@@ -1332,7 +1321,8 @@ class Engine:
         write straight to the table directory; small tables are kept
         compacted (single file ⇒ single-task scans), and their rewrite
         is the one Spark job of the insert: the constraints are checked
-        on the staged write, before the commit (``_constraint_gate``)."""
+        on the staged write, before the commit (``_constraint_gate``).
+        An empty source commits nothing."""
         t = self._tables[name]
         if not t.managed:
             raise ValueError("INSERT requires a managed table")
@@ -1341,15 +1331,17 @@ class Engine:
             raise ValueError(
                 f"table {name} has {len(fields)} columns but "
                 f"{len(df.columns)} values were supplied")
-        gate = self._constraint_gate(name, _Observed(self.spark))
-        aligned = gate.rules(df.select(*[
+        counts = _Observed(self.spark, changes="inserted")
+        gate = self._constraint_gate(name, counts)
+        aligned = gate.rules(counts.tap("inserted", df.select(*[
             F.col(c).cast(f.dataType).alias(f.name)
-            for c, f in zip(df.columns, fields)]))
+            for c, f in zip(df.columns, fields)])))
         if self._small(name):
             self._rewrite(name, lambda cur: cur.unionByName(aligned),
-                          op="insert", gate=gate)
+                          op="insert", counts=counts, gate=gate)
         else:
-            self._append_files(name, aligned, "insert", gate=gate)
+            self._append_files(name, aligned, "insert", counts=counts,
+                               gate=gate)
 
     def _constraint_gate(self, name: str, obs: _Observed,
                          cols: set[str] | None = None, keys: bool = True,
@@ -1443,7 +1435,7 @@ class Engine:
         table error; table columns missing from the input take their
         DEFAULT (or NULL). With ``allow_new_columns=True``, input
         columns the table lacks are first added to the table (typed
-        from the input schema, NULL for history) — a snapshotted ALTER,
+        from the input schema, NULL for history) — a versioned ALTER,
         so time travel sees the pre-evolution state — and the append
         then proceeds through the constraint-checked ``insert_into``.
         """
@@ -1591,8 +1583,10 @@ class Engine:
     # Every mutation first writes NEW data files into the directory
     # (invisible — not yet referenced), then commits by atomically
     # publishing a version-numbered manifest via link(2) compare-and-
-    # swap, and only then unlinks superseded data files. A reader
-    # therefore always sees a COMPLETE version; a crash at any point
+    # swap. Superseded data files stay for time travel until
+    # vacuum_history prunes every version listing them; no commit
+    # deletes one. A reader therefore always sees a COMPLETE version,
+    # an older version stays readable, a crash at any point
     # leaves the table consistent (stray files from a crashed writer
     # are invisible orphans — ``vacuum_orphans`` reclaims them); and a
     # CONCURRENT WRITER can never silently discard another's commit:
@@ -1693,16 +1687,21 @@ class Engine:
         so the crashed-writer hazard the round-7 docstring could only
         warn about is now impossible to trip by accident.)
 
-        Concurrent-writer safe: the diff against the live manifest is
-        recomputed and re-CAS'd until it wins (trickle ingest by many
-        external jobs is exactly the multi-writer scenario)."""
+        A file any retained version lists is not new: a file a write
+        superseded stays in the directory for time travel and must
+        not come back (CREATE's un-prefixed ``part-*`` files among
+        them).
+
+        Concurrent-writer safe: the diff against the retained versions
+        is recomputed and re-CAS'd until it wins (trickle ingest by
+        many external jobs is exactly the multi-writer scenario)."""
         t = self._tables[name]
         if not t.managed:
             raise ValueError("adopt_external_files requires a managed table")
         adopted = 0
         while True:
             m = self._adopt_manifest(t.path)
-            known = set(m["files"])
+            known = manifest.referenced(t.path)
             new = sorted(
                 f for f in os.listdir(t.path)
                 if f.endswith(".parquet")
@@ -1722,10 +1721,12 @@ class Engine:
 
     def vacuum_orphans(self, name: str,
                        min_age_seconds: float = 600.0) -> int:
-        """Remove data files in the table directory that the manifest
-        does not reference (left by a writer that crashed between
-        staging and commit, or between commit and GC). Also sweeps
-        ``_manifest.tmp.*`` orphans from writers that crashed
+        """Remove data files in the table directory that no retained
+        version lists (left by a writer that crashed between staging
+        and commit, or by a ``vacuum_history`` that crashed between
+        retiring versions and deleting their files). Files of older
+        retained versions are live: time travel reads them. Also
+        sweeps ``_manifest.tmp.*`` orphans from writers that crashed
         mid-commit (returned count stays data-files-only).
 
         CONCURRENT-WRITER SAFE via two guards (Delta VACUUM's
@@ -1733,7 +1734,7 @@ class Engine:
         is touched — a live writer's just-staged ``v{N}-part-*`` files
         and ``{table}__tmp.*`` staging dirs are spared while its
         commit is in flight; (2) the live-file set is RE-RESOLVED from
-        the manifest immediately before the unlink pass, so a blind
+        the manifests immediately before the unlink pass, so a blind
         append that commits during candidate collection keeps its
         files. ``min_age_seconds=0`` reclaims everything immediately
         and is only safe when no other writer can be mid-commit
@@ -1760,7 +1761,7 @@ class Engine:
             if d.startswith(stem) and _old_enough(dp):
                 shutil.rmtree(dp, ignore_errors=True)
         candidates = []
-        live = {os.path.basename(p) for p in self._managed_files(name)}
+        live = manifest.referenced(t.path)
         for f in os.listdir(t.path):
             p = os.path.join(t.path, f)
             if (f.endswith(".parquet") and os.path.isfile(p)
@@ -1769,7 +1770,7 @@ class Engine:
         if not candidates:
             return 0
         # re-resolve: spare anything a concurrent commit just adopted
-        live = {os.path.basename(p) for p in self._managed_files(name)}
+        live = manifest.referenced(t.path)
         n = 0
         for f in candidates:
             if f in live:
@@ -1967,7 +1968,7 @@ class Engine:
         many small appends/deletes (file-pruned DML deliberately
         leaves small rewritten files behind; this reclaims the file
         count). Full-size files are left byte-identical; returns the
-        number of files compacted. Snapshot-versioned like every other
+        number of files compacted. Versioned like every other
         mutation."""
         t = self._tables[name]
         if not t.managed:
@@ -2071,7 +2072,7 @@ class Engine:
             F.col("__fp").alias("fp"),
             F.lit(batch_id).cast("bigint").alias("first_seen_batch"),
         )
-        self._append_files(registry, admitted, "dedup_ingest", snapshot=False)
+        self._append_files(registry, admitted, "dedup_ingest")
         return survivors.drop("__fp")
 
     # ------------------------------------------------------------------
@@ -2364,7 +2365,7 @@ class Engine:
     # workload (RAG, retrieval eval, hard-negative mining) asks the
     # same index thousands of times. create_vector_index persists the
     # IVF(+centroid-graph) build as managed tables (manifest-committed,
-    # snapshot-versioned, catalog-recorded — they inherit ALL the
+    # versioned, catalog-recorded — they inherit ALL the
     # round-8 durability machinery), and vector_search serves from
     # them: queries route driver-side, the cells scan reads ONLY the
     # probed cells (the cells table is written cid-SORTED, so parquet
@@ -2733,8 +2734,7 @@ class Engine:
         ids = ids.select(id_col).distinct().localCheckpoint()
         n = ids.count()
         if n:
-            self._append_files(f"{name}__tombstones", ids,
-                               "vector_delete", snapshot=False)
+            self._append_files(f"{name}__tombstones", ids, "vector_delete")
         return n
 
     def vector_index_vacuum(self, name: str) -> int:
@@ -2992,7 +2992,7 @@ class Engine:
         gate = self._constraint_gate(name, counts)
         df = read(self.spark, path, fmt=fmt, schema=target.schema, **options)
         self._append_files(name, gate.rules(counts.tap("rows", df)), "copy",
-                           snapshot=False, counts=counts, gate=gate)
+                           counts=counts, gate=gate)
         return counts.get()["rows"]
 
     def reattach_warehouse(self) -> list[str]:
@@ -3006,7 +3006,7 @@ class Engine:
             return out
         for entry in sorted(os.listdir(self._warehouse)):
             if entry.startswith("."):
-                continue  # .snapshots — version history, not a table
+                continue  # hidden: not a table
             p = os.path.join(self._warehouse, entry)
             if os.path.isdir(p) and entry not in self._tables:
                 self._attach_managed(entry, p)
@@ -3017,107 +3017,53 @@ class Engine:
     # Table version history (time travel)
     # ------------------------------------------------------------------
     #
-    # Every mutation of a managed table (INSERT/DELETE/UPDATE/ALTER/
-    # MERGE — anything that goes through _rewrite or the append path)
-    # first snapshots the current state into
-    # <warehouse>/.snapshots/<table>/v<k>/. Snapshots are HARDLINKS of
-    # the immutable parquet files (copy-on-write: _rewrite replaces
-    # the live directory wholesale and the append path only adds new
-    # files, so linked bytes are never rewritten in place) — a
-    # snapshot costs O(#files) metadata, no data copy. This is the
-    # same version-pointer idea a lakehouse table format (Delta/
-    # Iceberg) implements with manifests; at 100 TB you'd use one of
-    # those — the engine ships the semantics at warehouse scale:
-    # table_at_version / history / restore_version / vacuum_history.
-
-    def _snapshot_dir(self, name: str) -> str:
-        return os.path.join(self._warehouse, ".snapshots", name)
-
-    def _snapshot(self, name: str, op: str) -> int:
-        t = self._tables.get(name)
-        if t is None or not t.managed or t.path is None \
-                or not os.path.isdir(t.path):
-            return -1
-        base = self._snapshot_dir(name)
-        os.makedirs(base, exist_ok=True)
-        # mkdir is the CAS here (EEXIST = a concurrent snapshotter took
-        # this number — re-list and take the next; same discipline as
-        # the manifest commit, r8)
-        while True:
-            existing = [
-                int(d[1:]) for d in os.listdir(base)
-                if d.startswith("v") and d[1:].isdigit()
-            ]
-            k = max(existing, default=-1) + 1
-            dst = os.path.join(base, f"v{k}")
-            try:
-                os.makedirs(dst)
-                break
-            except FileExistsError:
-                continue
-        # Link only the MANIFEST-listed live files: crash orphans and
-        # staged-but-uncommitted files in the table directory must not
-        # leak into the snapshot (table_at_version reads this dir).
-        m = self._adopt_manifest(t.path)
-        for f in m["files"]:
-            src = os.path.join(t.path, f)
-            if not os.path.isfile(src):
-                continue
-            try:
-                os.link(src, os.path.join(dst, f))
-            except OSError:
-                shutil.copy2(src, os.path.join(dst, f))
-        with open(os.path.join(dst, "_snapshot.json"), "w") as fh:
-            json.dump({"op": op, "ts": time.time(), "version": k}, fh)
-        return k
+    # The manifest log (manifest.py) IS the history: every committed
+    # write of a managed table is one version, v0 is the CREATE, and
+    # the latest is the live table. A commit deletes no data file, so
+    # every retained version reads as it was committed. Entry N of
+    # history() is version N, labelled with the op and time of the
+    # commit that superseded it (the state BEFORE that op ran), so
+    # len(history) is the live version until vacuum_history prunes
+    # the oldest ones and their files. Hidden warehouse entries (an
+    # old hard-link snapshot tree among them) are not tables.
 
     def history(self, name: str) -> list[dict]:
-        """Version history of a managed table, oldest first; each row
-        is the state BEFORE the recorded op ran."""
-        base = self._snapshot_dir(name)
-        if not os.path.isdir(base):
+        """Version history of a managed table, oldest first: one
+        ``{"version", "op", "ts"}`` per retained version below the
+        latest, ``op``/``ts`` those of the commit that followed it."""
+        t = self._tables.get(name)
+        if t is None or not t.managed or t.path is None:
             return []
-        out = []
-        for d in sorted(os.listdir(base), key=lambda s: int(s[1:])):
-            meta_path = os.path.join(base, d, "_snapshot.json")
-            meta = {"version": int(d[1:]), "op": "?", "ts": None}
-            if os.path.exists(meta_path):
-                with open(meta_path) as fh:
-                    meta = json.load(fh)
-            out.append(meta)
-        return out
+        ms = manifest.versions(t.path)
+        return [{"version": m["version"], "op": nxt["op"], "ts": nxt["ts"]}
+                for m, nxt in zip(ms, ms[1:])]
 
     def table_at_version(self, name: str, version: int) -> DataFrame:
-        """Read a managed table AS OF a recorded version (the state
-        before that version's op ran). The live table is version
-        ``len(history)``."""
-        if version >= len(self.history(name)):
+        """Read a managed table AS OF a retained version (the state
+        before the op history lists for it). The latest version is the
+        live table."""
+        t = self._require_managed(name, "time travel")
+        if version == self._adopt_manifest(t.path)["version"]:
             return self.table(name)
-        p = os.path.join(self._snapshot_dir(name), f"v{version}")
-        if not os.path.isdir(p):
+        m = manifest.read_version(t.path, version)
+        if m is None:
             raise ValueError(f"no version {version} for table {name!r}")
-        return self.spark.read.parquet(p)
+        return self.spark.read.parquet(
+            *[os.path.join(t.path, f) for f in m["files"]])
 
     def restore_version(self, name: str, version: int) -> None:
-        """Roll a managed table back to a snapshot (the rollback
-        itself is snapshotted first, so it can be undone)."""
-        df = self.table_at_version(name, version)  # lazy over the snapshot
+        """Roll a managed table back to a retained version (the
+        rollback is itself a version, so it can be undone)."""
+        df = self.table_at_version(name, version)  # lazy over its files
         self._rewrite(name, df, op=f"restore v{version}")
 
     def vacuum_history(self, name: str, keep_last: int = 0) -> int:
-        """Drop old snapshots, keeping the most recent ``keep_last``.
-        Returns the number of versions removed."""
-        base = self._snapshot_dir(name)
-        if not os.path.isdir(base):
-            return 0
-        versions = sorted(
-            (d for d in os.listdir(base) if d.startswith("v")),
-            key=lambda s: int(s[1:]),
-        )
-        drop = versions[: len(versions) - keep_last] if keep_last else versions
-        for d in drop:
-            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-        return len(drop)
+        """Drop old versions, keeping the most recent ``keep_last``
+        history entries, and delete the data files only the dropped
+        versions listed (``manifest.prune``). Returns the number of
+        versions removed."""
+        return manifest.prune(self._require_managed(name, "vacuum").path,
+                              keep_last)
 
     def compact_table(self, name: str,
                       target_file_bytes: int = 128 * 1024 * 1024) -> dict:

@@ -4,25 +4,25 @@ commit point re-based on the round-8 manifest CAS — verdict r7 #1).
 Every mutation of a managed table commits by atomically publishing a
 version-numbered manifest file via link(2) (manifest.try_commit); new
 data files are staged into the directory BEFORE the commit
-(unreferenced, invisible) and superseded files are unlinked only
-AFTER it. These tests prove the two properties that layout buys:
+(unreferenced, invisible), and no commit deletes a data file:
+superseded files go only when ``vacuum_history`` prunes every version
+listing them. These tests prove the two properties that layout buys:
 
-* **Crash atomicity** — a writer that dies at ANY step (injected by
-  monkeypatching the commit/GC syscalls) leaves the live table
-  readable and either fully-old or fully-new, never partial, with
-  recovery = nothing (pre-commit crash) or ``vacuum_orphans``
-  housekeeping (post-commit crash). The round-6 layout (remove
-  matched files, then rename replacements in) failed this: a crash in
-  the window lost rows from the live directory.
+* **Crash atomicity** — a writer or a vacuum that dies at ANY step
+  (injected by monkeypatching the commit/unlink syscalls) leaves the
+  live table readable and either fully-old or fully-new, never
+  partial, with recovery = nothing (pre-commit crash) or
+  ``vacuum_orphans`` housekeeping (crash mid-vacuum). The round-6
+  layout (remove matched files, then rename replacements in) failed
+  this: a crash in the window lost rows from the live directory.
 
 * **Reader consistency** — an INDEPENDENT resolver (modeled with
   DuckDB, the way a second process would read the table: open the
   manifest, scan exactly the files it lists) observes only complete
   versions while the engine mutates concurrently. The one permitted
   race is the standard lakehouse read-vs-vacuum race: a reader
-  holding a manifest from just before a commit can find a listed file
-  already GC'd and must re-resolve (Delta/Iceberg widen this window
-  with retention; the semantics are identical).
+  holding a manifest a ``vacuum_history`` then prunes can find a
+  listed file gone and must re-resolve.
 """
 
 from __future__ import annotations
@@ -34,6 +34,8 @@ import threading
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+
+from duckdb_distributed_execution_spark import manifest
 
 
 @pytest.fixture()
@@ -132,31 +134,43 @@ def test_crash_before_commit_preserves_old_version(spark, eng, monkeypatch):
 def test_crash_after_commit_before_gc_shows_new_version(
     spark, eng, monkeypatch
 ):
-    """Writer dies BETWEEN the commit and the post-commit unlink of
-    superseded files: the NEW version is live and complete; the old
-    matched file is an invisible orphan reclaimed by vacuum."""
+    """A commit deletes nothing; a superseded file goes when
+    vacuum_history prunes the versions listing it. A vacuum that dies
+    while unlinking those data files leaves the NEW version live and
+    complete and the retained history readable; the files it did not
+    reach are invisible orphans reclaimed by vacuum_orphans."""
     _make_table(spark, eng, "ac_post")
     path = eng._tables["ac_post"].path
+    assert eng.delete_from("ac_post", "k BETWEEN 120 AND 140") == 21
+    assert eng.delete_from("ac_post", "k BETWEEN 250 AND 259") == 10
+    live_sum = sum(range(300)) - sum(range(120, 141)) - sum(range(250, 260))
 
     real_remove = os.remove
 
     def exploding_remove(p):
         if p.endswith(".parquet"):
-            raise _Boom("crash during post-commit GC")
+            raise _Boom("crash while vacuum_history unlinks data files")
         return real_remove(p)
 
+    # keeps the version after the first DELETE and the live one; the
+    # file the first DELETE superseded is listed by neither
     monkeypatch.setattr(os, "remove", exploding_remove)
     with pytest.raises(_Boom):
-        eng.delete_from("ac_post", "k BETWEEN 120 AND 140")
+        eng.vacuum_history("ac_post", keep_last=1)
     monkeypatch.undo()
 
-    cnt, s = _resolve_external(path)
-    assert cnt == 279, "committed version must be live after the crash"
-    assert s == sum(range(300)) - sum(range(120, 141))
+    assert _resolve_external(path) == (269, live_sum), \
+        "committed version must be live after the crash"
     eng._attach_managed("ac_post", path)
-    assert eng.table("ac_post").count() == 279
+    assert eng.table("ac_post").count() == 269
+    hist = eng.history("ac_post")
+    assert [h["op"] for h in hist] == ["delete"]
+    assert eng.table_at_version("ac_post", hist[0]["version"]).count() == 279
     assert eng.vacuum_orphans("ac_post", min_age_seconds=0) >= 1
-    assert _resolve_external(path)[0] == 279
+    on_disk = {f for f in os.listdir(path) if f.endswith(".parquet")}
+    assert on_disk == manifest.referenced(path)
+    assert _resolve_external(path) == (269, live_sum)
+    assert eng.table_at_version("ac_post", hist[0]["version"]).count() == 279
 
 
 def test_crash_during_staging_is_invisible(spark, eng, monkeypatch):
@@ -219,9 +233,9 @@ def test_concurrent_reader_sees_only_complete_versions(spark, eng):
     """An external resolver polling in a tight loop while the engine
     runs a DELETE burst observes ONLY (count, sum) pairs belonging to
     a committed version — a mid-swap directory state (the round-6
-    hazard) would surface as an impossible pair. A read racing the
-    post-commit GC may find a just-unlinked file and must re-resolve;
-    such retries are counted and must not be the common case."""
+    hazard) would surface as an impossible pair. A read racing a
+    vacuum may find a just-unlinked file and must re-resolve; such
+    retries are counted and must not be the common case."""
     _make_table(spark, eng, "ac_rd", n_batches=4)
     path = eng._tables["ac_rd"].path
 

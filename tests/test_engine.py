@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 @pytest.fixture()
@@ -885,6 +885,226 @@ def test_time_travel_survives_reattach(engine):
     assert len(engine.history("tt2")) == 2
     assert engine.table_at_version("tt2", 1).count() == 1
     engine.drop_table("tt2")
+
+
+def _ids(df):
+    return sorted(r.id for r in df.collect())
+
+
+def test_lost_cas_leaves_history_unchanged(engine, monkeypatch):
+    """A DELETE that loses the manifest CAS to a concurrent commit
+    applies nothing, so it adds no history entry."""
+    from duckdb_distributed_execution_spark import Engine, manifest
+    from duckdb_distributed_execution_spark.manifest import (
+        ConcurrentWriteError,
+    )
+
+    engine.create_table("tt_cas", "id INTEGER")
+    try:
+        engine.insert_values("tt_cas", [(1,), (2,)])
+        seen = {}
+        real_ingest = Engine._ingest_files
+
+        def ingest_then_intrude(self, path, df, version):
+            out = real_ingest(self, path, df, version)
+            if not seen:
+                # another writer commits between the read and the CAS
+                manifest.commit_append(path, [], "append")
+                seen["history"] = self.history("tt_cas")
+            return out
+
+        monkeypatch.setattr(Engine, "_ingest_files", ingest_then_intrude)
+        with pytest.raises(ConcurrentWriteError):
+            engine.delete_from("tt_cas", "id = 1")
+        monkeypatch.undo()
+        assert engine.history("tt_cas") == seen["history"]
+    finally:
+        engine.drop_table("tt_cas")
+
+
+def _vector_table(engine, spark, name, index):
+    corpus = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
+    engine.create_table(name, "vec_id BIGINT, embedding FLOAT[]")
+    engine.insert_into(name, corpus.filter("vec_id < 32")
+                       .select("vec_id", "embedding"))
+    engine.create_vector_index(index, name, n_cells=2)
+    return corpus.filter("vec_id BETWEEN 40 AND 41")
+
+
+def test_replayed_txn_append_leaves_history_unchanged(engine, spark):
+    """A replayed application transaction commits nothing, so it adds
+    no history entry."""
+    batch = _vector_table(engine, spark, "tt_txn", "tt_txn_idx")
+    try:
+        assert engine.vector_index_upsert(
+            "tt_txn_idx", batch, txn=("app", 1)) == 2
+        hist = engine.history("tt_txn_idx__cells")
+        assert engine.vector_index_upsert(
+            "tt_txn_idx", batch, txn=("app", 1)) == 0
+        assert engine.history("tt_txn_idx__cells") == hist
+    finally:
+        engine.drop_vector_index("tt_txn_idx", if_exists=True)
+        engine.drop_table("tt_txn")
+
+
+def test_copy_from_is_a_history_entry(engine, spark, tmp_path):
+    engine.create_table("tt_copy", "id INTEGER")
+    try:
+        engine.insert_values("tt_copy", [(1,), (2,)])
+        src = str(tmp_path / "copy_src")
+        spark.createDataFrame([(3,), (4,)], "id INT").write.parquet(src)
+        v = len(engine.history("tt_copy"))
+        assert engine.copy_from("tt_copy", src) == 2
+        hist = engine.history("tt_copy")
+        assert len(hist) == v + 1 and hist[-1]["op"] == "copy"
+        assert _ids(engine.table_at_version("tt_copy", v)) == [1, 2]
+        assert _ids(engine.table("tt_copy")) == [1, 2, 3, 4]
+        engine.restore_version("tt_copy", v)
+        assert _ids(engine.table("tt_copy")) == [1, 2]
+    finally:
+        engine.drop_table("tt_copy")
+
+
+def test_vacuum_history_keeps_retained_versions_readable(engine):
+    """After a vacuum every remaining entry still reads its pre-op
+    rows, and a pruned version is gone, not the live table."""
+    engine.create_table("tt_vac", "id INTEGER")
+    try:
+        for i in range(4):
+            engine.insert_values("tt_vac", [(i,)])
+        assert engine.vacuum_history("tt_vac", keep_last=2) == 2
+        hist = engine.history("tt_vac")
+        assert [h["version"] for h in hist] == [2, 3]
+        for h in hist:
+            assert _ids(engine.table_at_version("tt_vac", h["version"])) \
+                == list(range(h["version"]))
+        with pytest.raises(ValueError, match="no version 1"):
+            engine.table_at_version("tt_vac", 1)
+        assert _ids(engine.table("tt_vac")) == [0, 1, 2, 3]
+    finally:
+        engine.drop_table("tt_vac")
+
+
+def test_history_is_the_manifest_log(engine, spark, tmp_path,
+                                     monkeypatch):
+    """Every write kind commits exactly one manifest version, and the
+    history lists every retained version below the latest."""
+    from duckdb_distributed_execution_spark import manifest
+
+    def check(name, write):
+        path = engine._tables[name].path
+        before = manifest.list_versions(path)
+        write()
+        after = manifest.list_versions(path)
+        assert after == before + [before[-1] + 1], name
+        assert [h["version"] for h in engine.history(name)] == after[:-1]
+
+    src = str(tmp_path / "log_src")
+    spark.createDataFrame([(100, "c")], "id BIGINT, v STRING"
+                          ).write.parquet(src)
+    engine.create_table("tt_log", "id BIGINT, v VARCHAR")
+    engine.create_dedup_registry("tt_log_reg")
+    batch = _vector_table(engine, spark, "tt_log_vec", "tt_log_idx")
+    try:
+        check("tt_log", lambda: engine.insert_values(
+            "tt_log", [(i, f"v{i}") for i in range(10)]))
+        with monkeypatch.context() as m:
+            m.setattr(engine, "_COMPACT_BYTES", 0)
+            check("tt_log", lambda: engine.insert_into(
+                "tt_log", spark.range(10, 20).selectExpr(
+                    "id", "CAST(id AS STRING) AS v")))
+        check("tt_log", lambda: engine.delete_from("tt_log", "id = 3"))
+        check("tt_log", lambda: engine.update_table(
+            "tt_log", {"v": "'u'"}, "id = 4"))
+        check("tt_log", lambda: engine.merge_upsert(
+            "tt_log", spark.createDataFrame(
+                [(5, "m"), (50, "n")], "id BIGINT, v STRING"), on=["id"]))
+        check("tt_log", lambda: engine.copy_from("tt_log", src))
+        check("tt_log", lambda: engine.add_column("tt_log", "w", "INTEGER"))
+        check("tt_log", lambda: engine.rename_column("tt_log", "w", "w2"))
+        check("tt_log", lambda: engine.drop_column("tt_log", "w2"))
+        check("tt_log", lambda: engine.compact_table("tt_log"))
+        check("tt_log", lambda: engine.optimize_zorder("tt_log", ["id"]))
+        check("tt_log", lambda: engine.restore_version("tt_log", 1))
+        check("tt_log_reg", lambda: engine.dedup_ingest(
+            "tt_log_reg", spark.createDataFrame([("a b",)], "text STRING")))
+        check("tt_log_idx__cells",
+              lambda: engine.vector_index_upsert("tt_log_idx", batch))
+        check("tt_log_idx__tombstones",
+              lambda: engine.vector_index_delete("tt_log_idx", [40]))
+    finally:
+        engine.drop_vector_index("tt_log_idx", if_exists=True)
+        for t in ("tt_log", "tt_log_reg", "tt_log_vec"):
+            engine.drop_table(t, if_exists=True)
+
+
+def _parquet_on_disk(path):
+    import os
+
+    return {f for f in os.listdir(path) if f.endswith(".parquet")}
+
+
+def test_vacuum_orphans_spares_retained_versions(engine):
+    """A file a write superseded is not an orphan while a retained
+    version lists it."""
+    from duckdb_distributed_execution_spark import manifest
+
+    engine.create_table("tt_orph", "id INTEGER")
+    try:
+        engine.insert_values("tt_orph", [(1,), (2,)])
+        engine.delete_from("tt_orph", "id = 1")
+        path = engine._tables["tt_orph"].path
+        live = set(manifest.read_manifest(path)["files"])
+        assert _parquet_on_disk(path) > live
+        assert engine.vacuum_orphans("tt_orph", min_age_seconds=0) == 0
+        assert _parquet_on_disk(path) == manifest.referenced(path)
+        assert _ids(engine.table_at_version("tt_orph", 0)) == []
+        assert _ids(engine.table_at_version("tt_orph", 1)) == [1, 2]
+    finally:
+        engine.drop_table("tt_orph")
+
+
+def test_adopt_external_files_skips_superseded_files(engine):
+    """CREATE writes un-prefixed ``part-*`` files; once a rewrite
+    supersedes them they stay for time travel and are not adopted."""
+    from duckdb_distributed_execution_spark import manifest
+
+    engine.create_table("tt_adopt", "id INTEGER")
+    try:
+        path = engine._tables["tt_adopt"].path
+        created = set(manifest.read_manifest(path)["files"])
+        assert created and all(f.startswith("part-") for f in created)
+        engine.insert_values("tt_adopt", [(1,)])
+        m = manifest.read_manifest(path)
+        assert not created & set(m["files"])
+        assert engine.adopt_external_files("tt_adopt") == 0
+        assert manifest.read_manifest(path) == m
+        assert _ids(engine.table("tt_adopt")) == [1]
+    finally:
+        engine.drop_table("tt_adopt")
+
+
+def test_vacuum_history_leaves_exactly_the_retained_files(engine):
+    from duckdb_distributed_execution_spark import manifest
+
+    engine.create_table("tt_gc", "id INTEGER, v VARCHAR")
+    try:
+        engine.insert_values("tt_gc", [(1, "a"), (2, "b")])
+        engine.insert_values("tt_gc", [(3, "c")])
+        engine.delete_from("tt_gc", "id = 1")
+        engine.update_table("tt_gc", {"v": "'z'"}, "id = 2")
+        path = engine._tables["tt_gc"].path
+        for k in (3, 1, 0):
+            engine.vacuum_history("tt_gc", keep_last=k)
+            assert len(engine.history("tt_gc")) == k
+            kept = manifest.versions(path)
+            assert len(kept) == k + 1
+            assert _parquet_on_disk(path) == {
+                f for m in kept for f in m["files"]}
+        assert sorted(map(tuple, engine.table("tt_gc").collect())) == [
+            (2, "z"), (3, "c")]
+    finally:
+        engine.drop_table("tt_gc")
 
 
 def test_insert_by_name_schema_evolution(engine, spark):

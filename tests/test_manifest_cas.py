@@ -104,17 +104,17 @@ def test_stale_base_version_raises_and_applies_nothing(tmp_path):
     assert set(m["files"]) == {"a.parquet", "b.parquet"}
 
 
-def test_pointer_converges_and_old_versions_prune(tmp_path, monkeypatch):
-    monkeypatch.setattr(manifest, "PRUNE_MIN_AGE_SECONDS", 0.0)
+def test_pointer_converges_and_old_versions_prune(tmp_path):
     path = str(tmp_path)
-    for i in range(manifest.KEEP_VERSIONS + 10):
+    for i in range(30):
         manifest.commit_append(path, [f"f{i}.parquet"], "append")
     latest = manifest.read_manifest(path)["version"]
     with open(os.path.join(path, manifest.POINTER)) as fh:
         assert json.load(fh)["version"] == latest
+    assert manifest.prune(path, keep_last=20) == latest - 20
     kept = manifest.list_versions(path)
     assert kept[-1] == latest
-    assert kept[0] >= latest - manifest.KEEP_VERSIONS
+    assert kept[0] == latest - 20
     # pruning never breaks resolution
     assert manifest.read_manifest(path)["version"] == latest
     # the watermark records the highest pruned version, ready to
@@ -122,13 +122,11 @@ def test_pointer_converges_and_old_versions_prune(tmp_path, monkeypatch):
     assert manifest.prune_watermark(path) == kept[0] - 1
 
 
-def test_prune_age_floor_retains_young_versions(tmp_path, monkeypatch):
-    """Reader-retention contract, time half: versions behind
-    KEEP_VERSIONS but younger than PRUNE_MIN_AGE_SECONDS survive —
-    a reader that resolved version N mid-burst keeps its snapshot."""
-    monkeypatch.setattr(manifest, "PRUNE_MIN_AGE_SECONDS", 3600.0)
+def test_prune_age_floor_retains_young_versions(tmp_path):
+    """Reader retention: commits never prune, so every version a
+    reader resolved mid-burst stays until an explicit prune."""
     path = str(tmp_path)
-    for i in range(manifest.KEEP_VERSIONS + 10):
+    for i in range(30):
         manifest.commit_append(path, [f"f{i}.parquet"], "append")
     kept = manifest.list_versions(path)
     assert kept[0] == 0                       # nothing pruned
@@ -138,20 +136,19 @@ def test_prune_age_floor_retains_young_versions(tmp_path, monkeypatch):
         assert json.load(fh)["version"] == 0
 
 
-def test_stalled_loser_cannot_reuse_pruned_version(tmp_path, monkeypatch):
+def test_stalled_loser_cannot_reuse_pruned_version(tmp_path):
     """The ADVICE-high scenario: a writer reads base version N, stalls
-    while >KEEP_VERSIONS commits land and pruning retires N+1's file,
-    then attempts commit_exact at N+1. Pre-fix, link(2) on the freed
-    name 'succeeded' — a phantom commit that never becomes latest,
-    whose caller then GC'd files the live manifest still referenced.
+    while commits land and a prune retires N+1's file, then attempts
+    commit_exact at N+1. Pre-fix, link(2) on the freed name
+    'succeeded' — a phantom commit that never becomes latest.
     Post-fix the watermark rejects it: ConcurrentWriteError, nothing
     applied, latest untouched."""
-    monkeypatch.setattr(manifest, "PRUNE_MIN_AGE_SECONDS", 0.0)
     path = str(tmp_path)
     manifest.commit_append(path, ["base.parquet"], "append")   # v0
     stale_base = manifest.read_manifest(path)["version"]       # reads v0
-    for i in range(manifest.KEEP_VERSIONS + 10):               # the stall
+    for i in range(30):                                        # the stall
         manifest.commit_append(path, [f"w{i}.parquet"], "append")
+    manifest.prune(path, keep_last=20)
     latest = manifest.read_manifest(path)["version"]
     assert manifest.prune_watermark(path) >= stale_base + 1    # v1 pruned
     before = manifest.read_manifest(path)
@@ -166,14 +163,14 @@ def test_stalled_loser_cannot_reuse_pruned_version(tmp_path, monkeypatch):
     assert stale_base + 1 not in manifest.list_versions(path)
 
 
-def test_stalled_append_rebases_past_watermark(tmp_path, monkeypatch):
+def test_stalled_append_rebases_past_watermark(tmp_path):
     """Blind appends are immune by construction: commit_append re-reads
     latest each attempt, so even after pruning it lands above the
     watermark and loses nothing."""
-    monkeypatch.setattr(manifest, "PRUNE_MIN_AGE_SECONDS", 0.0)
     path = str(tmp_path)
-    for i in range(manifest.KEEP_VERSIONS + 10):
+    for i in range(30):
         manifest.commit_append(path, [f"w{i}.parquet"], "append")
+    manifest.prune(path, keep_last=20)
     m = manifest.commit_append(path, ["late.parquet"], "append")
     assert m["version"] > manifest.prune_watermark(path)
     assert "late.parquet" in manifest.read_manifest(path)["files"]

@@ -1,10 +1,10 @@
 """Managed-table writes that change nothing, and the edge shapes of the
 row counts a write observes on its own plan.
 
-A DELETE, UPDATE, MERGE or COPY FROM that changes no row stages its
-files, reads the observed count, then unlinks what it staged: no
-snapshot, no manifest version, no file left in the table directory or
-next to it. The counts must stay right on an empty table, an empty
+A DELETE, UPDATE, MERGE, INSERT or COPY FROM that changes no row
+stages its files, reads the observed count, then unlinks what it
+staged: no manifest version (so no history entry), no file left in
+the table directory or next to it. The counts must stay right on an empty table, an empty
 source, after DELETE ... WHERE true (whose constant-FALSE filter makes
 Spark drop the observation) and when MERGE's primary-key check runs
 over the merged rows. A write that breaks a constraint also stages
@@ -62,6 +62,11 @@ def test_writes_changing_nothing_commit_nothing(spark, eng, tmp_path):
     src = str(tmp_path / "empty_src")
     empty.write.parquet(src)
     assert eng.copy_from("we_t", src) == 0
+    assert _state(eng, "we_t") == before
+    eng.insert_into("we_t", empty)
+    assert _state(eng, "we_t") == before
+    eng._COMPACT_BYTES = 0  # the large table's append path
+    eng.insert_into("we_t", empty)
     assert _state(eng, "we_t") == before
     assert _rows(eng, "we_t") == rows
 
