@@ -195,6 +195,22 @@ def _split_tokens(sql: str) -> list[tuple[str, str]]:
     return spans
 
 
+def rename_column_ref(sql: str, old: str, new: str) -> str:
+    """``sql`` with every reference to column ``old`` (any case) named
+    ``new``: a bare identifier that is not a function name, or a
+    quoted identifier. String literals and comments stay as written,
+    so ``CHECK (q >= 0 AND s <> 'q')`` renames only the column."""
+    bare = re.compile(rf"\b{re.escape(old)}\b(?!\s*\()", re.IGNORECASE)
+    out = []
+    for kind, text in _split_tokens(sql):
+        if kind == "code":
+            text = bare.sub(new, text)
+        elif kind == "qid" and text[1:-1].lower() == old.lower():
+            text = text[0] + new + text[-1]
+        out.append(text)
+    return "".join(out)
+
+
 _CLAUSE_KW_RE = re.compile(
     r"\b(FROM|JOIN|INTO|UPDATE|TABLE|SELECT|WHERE|GROUP|HAVING|ORDER|"
     r"LIMIT|OFFSET|ON|USING|SET|WINDOW|QUALIFY|WHEN|THEN|ELSE|RETURNING)\b",

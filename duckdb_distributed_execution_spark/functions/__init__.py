@@ -19,9 +19,11 @@ Two concerns live here:
    verify paths use the Arrow-batched numpy matmul variants in
    operators/similarity.py (``cosine_verify_numpy``) instead.
 
-It also holds the operator plumbing: tracked persists, the runner of
-the size-gated fused single-task kernels (``fused_single_task``) and
-small driver-side relations (``local_rows_df``).
+It also holds the operator plumbing: tracked persists, the one scale
+gate (``small_input``: does a frame read more than
+``SMALL_INPUT_BYTES``?), the runner of the size-gated fused
+single-task kernels (``fused_single_task``) and small driver-side
+relations (``local_rows_df``).
 """
 
 from __future__ import annotations
@@ -67,12 +69,57 @@ def release_operator_persists(spark) -> int:
     return len(jdfs)
 
 
+# The one small-input threshold: every plan with a small-scale form
+# (a fused single-task kernel, the JVM form of a text plan, the simple
+# broadcast join, no join-strategy hint) takes it exactly when
+# small_input() holds for the frame it reads. Measured input_bytes:
+#
+#   input        sf0.001   sf0.01    sf0.1      sf1
+#   documents    65,515    65,049    594,568    5,971,357
+#   embeddings   193,646   193,638   798,695    5,877,098
+#   orders       36,647    281,398   2,723,766  25,716,528
+#
+# (a frame scanning its table twice, like the simhash pair edges,
+# counts it twice). 4 MiB puts sf<=0.1 on the small side and sf1 on
+# the large side for all three tables, which is all the per-query
+# measurements behind the gates support: each was tuned at sf0.1 and
+# sf1 only, and some sat at 2 MiB (dedup_exact, text_quality) or 8 MiB
+# (join_multi_star, tpch_q9_partsupp), so between those scales the
+# choice is unmeasured.
+SMALL_INPUT_BYTES = 4 * 1024 * 1024
+
+# Inside join_multi_star's scale plan: a build side above this (sf10
+# orders; sf1 is 25.7 MB) is far beyond any broadcast budget, so the
+# fact join is pinned to the sort-free SHUFFLE_HASH form; below it AQE
+# broadcasts or sort-merges as its runtime stats dictate.
+SHUFFLE_HASH_GATE_BYTES = 64 * 1024 * 1024
+
+
+def input_bytes(df) -> int:
+    """Bytes ``df`` reads: Catalyst's size estimate summed over the
+    leaves of its ANALYZED plan (for a parquet scan, its files; 1-3 ms,
+    where optimizing the plan would cost 5-160 ms). A leaf without file
+    statistics reads as large: a driver-side relation reports
+    Long.MaxValue, a checkpoint the optimizer's estimate of the plan
+    it replaced (hundreds of MB for the sf0.01 simhash pair edges)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return sum(
+        int(leaves.apply(i).stats().sizeInBytes())
+        for i in range(leaves.size())
+    )
+
+
+def small_input(df) -> bool:
+    """The scale gate. Reads SMALL_INPUT_BYTES at call time, so a test
+    can force either branch by patching it."""
+    return input_bytes(df) <= SMALL_INPUT_BYTES
+
+
 # Defensive ceiling for the size-gated fused single-task kernels
-# (guide §1.2). Every query site routes to a fused kernel only below
-# the queries.small_table gate (4 MiB, ≲50k rows in this repo's
-# corpora), but the operators themselves must defend: an ungated
-# future caller passing a large relation would otherwise get a silent
-# one-task death march.
+# (guide §1.2). Every operator routes to a fused kernel only below
+# the small_input gate (4 MiB, ≲50k rows in this repo's corpora), but
+# the kernels themselves must defend: a future caller passing a large
+# relation would otherwise get a silent one-task death march.
 # Counted at RUNTIME inside the kernel (driver-side Catalyst estimates
 # are unknown for mid-pipeline relations), ~40× above any gated input
 # so it can only fire on misuse.

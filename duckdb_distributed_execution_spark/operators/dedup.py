@@ -29,11 +29,17 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from duckdb_distributed_execution_spark.functions import persist_tracked
+from duckdb_distributed_execution_spark.functions import (
+    ensure_min_parallelism,
+    fused_single_task,
+    persist_tracked,
+    small_input,
+)
 from duckdb_distributed_execution_spark.operators.text import (
     arrow_normalize,
     arrow_tokens,
     normalize_text,
+    oracle_normalize,
     token_codes,
     tokens,
 )
@@ -95,8 +101,6 @@ def word_shingles(col: Column, n: int) -> Column:
 
 
 def oracle_word_shingles(expr: str, n: int) -> str:
-    from duckdb_distributed_execution_spark.operators.text import oracle_normalize
-
     toks = f"regexp_split_to_array({oracle_normalize(expr)}, '\\s+')"
     if n == 1:
         return f"list_distinct({toks})"
@@ -292,7 +296,7 @@ def _minhash_doc_hashes(pdf, id_col, text_col, shingle_n, shingle_fn):
     """One batch → deduped ``(doc, h)`` pandas frame (md5-based 28-bit
     base hashes over distinct shingles) — the exact per-batch math of
     the signature kernel, shared by :func:`minhash_sig_rows_arrow`
-    and the fused single-task twin :func:`minhash_lsh_pairs_fused` so
+    and the fused single-task twin :func:`_minhash_lsh_pairs_fused` so
     the two plans can never drift. Returns ``None`` when no doc in
     the batch reaches ``shingle_n`` tokens (the explode plan emits no
     rows for those either).
@@ -412,10 +416,6 @@ def minhash_sig_rows_arrow(
     falling back to the explode → groupBy form."""
     import pandas as pd
 
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
     dt = dict(df.dtypes)
 
     def run(batches):
@@ -514,7 +514,7 @@ def oracle_minhash_lsh_sql(
     """
 
 
-def minhash_lsh_pairs_fused(
+def _minhash_lsh_pairs_fused(
     df: DataFrame,
     id_col: str,
     text_col: str,
@@ -584,9 +584,6 @@ def minhash_lsh_pairs_fused(
     import numpy as np
     import pandas as pd
 
-    from duckdb_distributed_execution_spark.functions import (
-        fused_single_task,
-    )
     from duckdb_distributed_execution_spark.operators.similarity import (
         _bucket_pairs,
     )
@@ -698,7 +695,6 @@ def minhash_lsh_pairs(
     candidates_only: bool = False,
     shingles: Column | None = None,
     shingle_fn=None,
-    fuse: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup detection:
     shingle → k min-hashes → bands of ``band_size`` → same-band-bucket
@@ -724,14 +720,13 @@ def minhash_lsh_pairs(
     cap=4096 to linear at 256); a pair lost to one dropped hot band
     still has the other n_bands-1 chances to surface."""
     assert num_hashes % band_size == 0
-    # ``fuse`` (r9): callers below the corpus-size gate route the
-    # ENTIRE pipeline through the single-task kernel (guide §1.2 —
-    # at toy scale the distributed plan is ~10 stages of fixed cost;
-    # the queries gate on small_table like every fused kernel here).
-    # Only the fixed shingle chains have a Python twin, so a custom
-    # ``shingles`` Column keeps the distributed form.
-    if fuse and shingles is None:
-        return minhash_lsh_pairs_fused(
+    # Below the scale gate (small_input) the ENTIRE pipeline runs as
+    # the single-task kernel (guide §1.2 — at toy scale the
+    # distributed plan is ~10 stages of fixed cost). Only the fixed
+    # shingle chains have a Python twin, so a custom ``shingles``
+    # Column keeps the distributed form.
+    if shingles is None and small_input(df):
+        return _minhash_lsh_pairs_fused(
             df, id_col, text_col, shingle_n, num_hashes, band_size,
             verify_threshold, max_bucket, candidates_only, shingle_fn,
         )
@@ -902,8 +897,6 @@ def simhash(col: Column, bits: int = SIMHASH_BITS) -> Column:
 
 
 def oracle_simhash(expr: str, bits: int = SIMHASH_BITS) -> str:
-    from duckdb_distributed_execution_spark.operators.text import oracle_normalize
-
     toks = f"list_distinct(regexp_split_to_array({oracle_normalize(expr)}, '\\s+'))"
     hashes = (
         f"list_transform({toks}, t -> CAST('0x' || substr(md5(t), 1, 15) AS BIGINT))"

@@ -25,6 +25,12 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from duckdb_distributed_execution_spark.functions import (
+    fused_single_task,
+    persist_tracked,
+    small_input,
+)
+
 
 # Diagnostic hook: number of alternating rounds the most recent
 # connected_components() call needed before its convergence check
@@ -32,13 +38,13 @@ from pyspark.sql import functions as F
 last_round_count = 0
 
 
-def connected_components_fused(
+def _connected_components_fused(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
 ) -> DataFrame:
     """Single-task union-find twin of connected_components for edge
-    sets below the caller's scale gate (r9, guide §1.2): the
+    sets below the scale gate (r9, guide §1.2): the
     alternating-star loop is the designed 100 TB shape, but at toy
     scale every round costs 2 keyed shuffles + a checkpoint + a
     convergence count — ~15 jobs for a 3-round graph. This form runs
@@ -49,10 +55,6 @@ def connected_components_fused(
     numerical). Same contract: only nodes appearing in ≥1 edge row
     are returned; self-loop-only nodes are their own component."""
     import pandas as pd
-
-    from duckdb_distributed_execution_spark.functions import (
-        fused_single_task,
-    )
 
     node_t = dict(edges.dtypes)[src]
     sel = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -99,7 +101,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 50,
-    fused: bool = False,
 ) -> DataFrame:
     """Return (node, component) with component = min node id reachable
     via the undirected edge set.  Only vertices that appear in at
@@ -122,14 +123,13 @@ def connected_components(
     edges after dedup (paper Lemma 1), so peak state never exceeds
     the bidirectional input.
 
-    ``fused=True`` (r9) routes through connected_components_fused —
-    the single-task union-find twin callers gate in below a corpus
-    scale threshold (queries pass queries.small_table; the
-    iterative loop stays the default and the only path above the
-    gate). The fused path does not touch last_round_count."""
+    Below the scale gate (``small_input(edges)``) the single-task
+    union-find twin (_connected_components_fused) runs instead; the
+    iterative loop is the only path above it. The fused path does not
+    touch last_round_count."""
     global last_round_count
-    if fused:
-        return connected_components_fused(edges, src, dst)
+    if small_input(edges):
+        return _connected_components_fused(edges, src, dst)
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
@@ -207,12 +207,11 @@ def dedup_clusters(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    fused: bool = False,
 ) -> DataFrame:
     """Cluster summary from a near-dup pair set: one row per duplicate
     cluster with the canonical keep id (min member) and member count.
     """
-    cc = connected_components(edges, src, dst, fused=fused)
+    cc = connected_components(edges, src, dst)
     return cc.groupBy(F.col("comp").alias("keep_id")).agg(
         F.count(F.lit(1)).alias("n_members")
     )
@@ -400,8 +399,6 @@ def kcore(
     # self-join — exactly once. Lazy MEMORY_AND_DISK, same rationale
     # as minhash_lsh_pairs: no extra up-front job, lineage survives
     # block loss at cluster scale.
-    from duckdb_distributed_execution_spark.functions import persist_tracked
-
     und = persist_tracked(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
         StorageLevel.MEMORY_AND_DISK,

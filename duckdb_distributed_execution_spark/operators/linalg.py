@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from duckdb_distributed_execution_spark.functions import (
     fused_single_task,
     local_rows_df,
+    small_input,
 )
 from duckdb_distributed_execution_spark.operators.similarity import (
     QUANT,
@@ -287,7 +288,13 @@ def kcenter_greedy(
     a certainty, and the pinned oracle hash would catch it loudly.
     Duplicate points are legal: once every point has distance 0 the
     argmax degenerates to the minimum id, identically on both
-    engines."""
+    engines.
+
+    Below the scale gate (``small_input(df)``) the whole loop runs in
+    one task (_kcenter_greedy_fused, result-identical): at toy scale
+    the distributed loop is 3 jobs × (k−1) rounds of fixed cost."""
+    if small_input(df):
+        return _kcenter_greedy_fused(df, id_col, vec_col, k)
     spark = df.sparkSession
     first = df.orderBy(id_col).select(id_col, vec_col).head()
     cur_id, cur_vec = first[0], np.asarray(first[1], dtype=np.float64)
@@ -332,7 +339,7 @@ def kcenter_greedy(
     ).select("sel_round", id_col, F.round("dist", 4).alias("dist"))
 
 
-def kcenter_greedy_fused(
+def _kcenter_greedy_fused(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -347,10 +354,7 @@ def kcenter_greedy_fused(
     construction: the same ``_center_dq`` per round (row dots are
     row-local, so batching cannot change them), the same elementwise
     least across rounds, the same (max dq, then min id) pick, and the
-    same min-id first pick. Callers gate on corpus file size
-    (queries.small_table, the repo's one scale gate); above the gate
-    the distributed loop — whose per-round scan parallelizes — is
-    untouched."""
+    same min-id first pick."""
 
     def kernel(pdf):
         ids = pdf[id_col].values

@@ -21,7 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from duckdb_distributed_execution_spark.functions import dot_product, l2_norm
+from duckdb_distributed_execution_spark.functions import (
+    dot_product,
+    ensure_min_parallelism,
+    l2_norm,
+)
 
 
 def tfidf_rank(
@@ -113,10 +117,6 @@ def cosine_rank(
     qv = qv.select(
         "query_id", "qid", "qv", l2_norm(F.col("qv")).alias("qn")
     ).alias("q")
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
     # per-pair interpreted dot folds run at the corpus scan's
     # parallelism (r6; see ensure_min_parallelism)
     c = ensure_min_parallelism(corpus).alias("c")

@@ -27,9 +27,11 @@ from pyspark.sql import functions as F
 from duckdb_distributed_execution_spark.functions import (
     dot_product,
     ensure_min_parallelism,
+    exact_sum,
     fused_single_task,
     l2_norm,
     local_rows_df,
+    persist_tracked,
 )
 from duckdb_distributed_execution_spark.queries.vectors import (
     _hyperplanes,
@@ -689,8 +691,6 @@ def cosine_banded_candidates(
     # the other dedup operators' mid-pipeline persists).
     from pyspark.storagelevel import StorageLevel
 
-    from duckdb_distributed_execution_spark.functions import persist_tracked
-
     sig = persist_tracked(sig, StorageLevel.MEMORY_AND_DISK)
     a = sig.select(
         F.col("__id").alias("id_a"), "__blk", "__t", "__bk"
@@ -788,7 +788,7 @@ def cosine_banded_pairs_fused(
     the JVM zip_with (elementwise casts and +/* are deterministic, so
     the planted vectors are bit-identical).
 
-    Callers gate on corpus file size (queries.small_table); above the
+    Callers gate on the corpus (functions.small_input); above the
     gate the distributed form's bucketed self-join + broadcast verify
     is the designed scale shape."""
     P = _band_planes(n_tables, band_bits, dim)
@@ -1501,8 +1501,6 @@ def pq_adc_topk(
     decimals before the sum (``exact_sum``) so the total is
     order-independent and engine-exact. Returns
     (query_id, neighbor_id, rank, adist)."""
-    from duckdb_distributed_execution_spark.functions import exact_sum
-
     qv = pq_subvectors(queries, id_col, vec_col, m, dsub).select(
         F.col("__id").alias("query_id"), "sub", F.col("sv").alias("qv")
     )
@@ -1558,8 +1556,6 @@ def ivf_pq_serve_topk(
     (adist, neighbor_id), so the rerank set — and therefore the final
     top-k — is engine-exact against the SQL oracle
     (ann_ivf_pq_served_topk)."""
-    from duckdb_distributed_execution_spark.functions import exact_sum
-
     spark = codes.sparkSession
     cids, C = _sorted_vectors(centroids.select(cid_col, vec_col).collect())
     cc = np.einsum("ij,ij->i", C, C)

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from duckdb_distributed_execution_spark.functions import ensure_min_parallelism
+
 # Deliberately small, deterministic English stopword list (shared
 # literal with the oracle SQL).
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "on", "for")
@@ -111,10 +113,6 @@ def tokens_exploded_arrow(df, id_col: str = "doc_id",
     import pandas as pd
     import pyarrow.compute as pc
 
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
     dt = dict(df.dtypes)
 
     def run(batches):
@@ -156,10 +154,6 @@ def grouped_token_counts_arrow(df, group_col: str,
     import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
 
     dt = dict(df.dtypes)
 
@@ -215,10 +209,6 @@ def term_counts_arrow(df, id_col: str, text_col: str, terms,
     import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
 
     dt = dict(df.dtypes)
     terms = list(terms)
@@ -341,10 +331,6 @@ def fingerprint_kv_arrow(df, id_col: str = "doc_id",
     gate on input bytes (see queries/llm.py::dedup_exact)."""
     import pandas as pd
 
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
     dt = dict(df.dtypes)
 
     def run(batches):
@@ -446,10 +432,6 @@ def doc_features_arrow(df, id_col: str = "doc_id",
     import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
 
     dt = dict(df.dtypes)
 
@@ -610,10 +592,6 @@ def bigram_ppl_scores(
     # (measured r6: the sf1 ingest funnel spent most of its 20 s
     # here). ensure_min_parallelism restores N-way compute; no-op on
     # well-partitioned inputs.
-    from duckdb_distributed_execution_spark.functions import (
-        ensure_min_parallelism,
-    )
-
     ws = ensure_min_parallelism(ws)
     # r8 funnel surgery, part 1 — ONE counting pass instead of two.
     # The corpus used to be tokenized+exploded once for unigram counts

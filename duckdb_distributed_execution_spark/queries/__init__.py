@@ -28,8 +28,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from duckdb_distributed_execution_spark.sources import path_bytes
-
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -85,51 +83,6 @@ def arr_str(col):
 
 
 _LOAD_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk parquet size of a testdata table — the cardinality
-    statistic a production catalog would provide (ANALYZE / CBO)."""
-    return path_bytes(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-# The one small-input threshold. Every query that has a small-scale
-# plan (a fused single-task kernel, the JVM form of a text plan, the
-# simple broadcast join, no join-strategy hint) takes it exactly when
-# small_table() holds; above it, the designed distributed plan.
-# Measured table_bytes of the gated tables:
-#
-#   table        sf0.001   sf0.01    sf0.1      sf1
-#   documents    65,515    65,049    594,568    5,971,357
-#   embeddings   193,646   193,638   798,695    5,877,098
-#   orders       36,647    281,398   2,723,766  25,716,528
-#
-# 4 MiB puts sf<=0.1 on the small side and sf1 on the large side for
-# all three tables, which is all the per-query measurements behind
-# the gates support: each was tuned at sf0.1 and sf1 only, and some
-# sat at 2 MiB (dedup_exact, text_quality) or 8 MiB (join_multi_star,
-# tpch_q9_partsupp). So between those scales the choice is unmeasured:
-# documents of 2-4 MiB (~sf0.35-0.7) keep dedup_exact and text_quality
-# on the JVM plan, and orders of 4-8 MiB (~sf0.16-0.33) take
-# join_multi_star's scale plan and tpch_q9_partsupp's hint.
-SMALL_TABLE_BYTES = 4 * 1024 * 1024
-
-
-def small_table(sf_dir: str, table: str) -> bool:
-    """The scale gate: is ``table`` small enough for the small-scale
-    plan? File size stands in for catalog row statistics. Reads
-    SMALL_TABLE_BYTES at call time, so a test can force either branch
-    by patching it."""
-    return table_bytes(sf_dir, table) <= SMALL_TABLE_BYTES
-
-
-# Inside join_multi_star's scale plan: build sides whose parquet
-# footprint exceeds this (sf10 orders; sf1 is 25.7 MB) are far beyond
-# any sane broadcast budget (parquet->UnsafeRow expansion is ~3-5x),
-# so the fact join is pinned to the sort-free SHUFFLE_HASH form;
-# below it, the hint is withheld and AQE broadcasts or sort-merges as
-# its runtime stats dictate.
-SHUFFLE_HASH_GATE_BYTES = 64 * 1024 * 1024
 
 
 def load(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -19,14 +19,16 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from duckdb_distributed_execution_spark.functions import (
+    dot_product,
+    ensure_min_parallelism,
+    exact_sum,
+    l2_norm,
+    small_input,
+)
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators import text as X
-from duckdb_distributed_execution_spark.queries import (
-    arr_str,
-    load,
-    register,
-    small_table,
-)
+from duckdb_distributed_execution_spark.queries import arr_str, load, register
 
 # ---------------------------------------------------------------------------
 # URL parsing / per-domain corpus stats
@@ -221,7 +223,7 @@ def tokens_per_lang_topk(spark, sf_dir):
 
     Either way the window input is |vocab per lang|, not |tokens|."""
     d = load(spark, sf_dir, "documents")["documents"]
-    if not small_table(sf_dir, "documents"):
+    if not small_input(d):
         freq = (
             X.grouped_token_counts_arrow(d, "lang")
             .groupBy("lang", "term")
@@ -368,7 +370,7 @@ def semantic_dedup_seeded(spark, sf_dir):
     # gate stays below sf1 so the cluster-parallel applyInPandas
     # keeps the scale decades (sf1/sf10 A/B rows) on the designed
     # IVF-blocked shape.
-    if small_table(sf_dir, "embeddings"):
+    if small_input(e):
         return semantic_dedup_pairs_fused(
             e, id_col="vec_id", vec_col="embedding", k_seeds=8,
             threshold=0.3,
@@ -656,8 +658,6 @@ def contamination_embedding_cosine(spark, sf_dir):
     contamination_ngram_overlap. Scale shape: benchmark broadcasts,
     corpus never shuffles; per-row cost is |bench| dot products in
     codegen."""
-    from duckdb_distributed_execution_spark.functions import dot_product, l2_norm
-
     e = load(spark, sf_dir, "embeddings")["embeddings"]
     v = e.select("vec_id", "embedding", l2_norm(F.col("embedding")).alias("n"))
     bench = v.filter(F.col("vec_id") % 17 == 0).select(
@@ -816,11 +816,6 @@ def rag_retrieval_topk(spark, sf_dir):
     pipeline in SQL, so cell assignment, in-cell ranking and the
     metadata join are all cross-engine-checked — nothing rests on
     ANN recall luck."""
-    from duckdb_distributed_execution_spark.functions import (
-        dot_product,
-        ensure_min_parallelism,
-        l2_norm,
-    )
     from duckdb_distributed_execution_spark.operators.similarity import (
         ivf_assign_numpy,
     )
@@ -1020,8 +1015,6 @@ def interpolate_linear(spark, sf_dir):
     (resample_gap_fill: zeros) and LOCF (window_ignore_nulls). One
     shuffle on the series key; both neighbor scans are frames of the
     same sort."""
-    from duckdb_distributed_execution_spark.functions import exact_sum
-
     ev = load(spark, sf_dir, "events")["events"]
     types = ("purchase", "signup")
     grid = (

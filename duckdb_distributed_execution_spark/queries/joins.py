@@ -14,19 +14,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.functions import (
+    SHUFFLE_HASH_GATE_BYTES,
     exact_sum,
     exact_sum_final,
     exact_sum_partial,
+    input_bytes,
     oracle_exact_sum,
+    small_input,
 )
 from duckdb_distributed_execution_spark.operators.asof import asof_join
-from duckdb_distributed_execution_spark.queries import (
-    SHUFFLE_HASH_GATE_BYTES,
-    load,
-    register,
-    small_table,
-    table_bytes,
-)
+from duckdb_distributed_execution_spark.queries import load, register
 
 
 @register(
@@ -240,7 +237,7 @@ def join_multi_star(spark, sf_dir):
     0.89 s — AQE's runtime join choice beats the forced shuffle-hash
     until the fact sorts dominate. At sf0.1 (2.7 MB) the rewrite is
     pure fixed cost (0.49 s simple vs 0.76 s rewritten, r9) — so:
-    small orders (small_table) simple; otherwise agg-below-join +
+    small orders (small_input) simple; otherwise agg-below-join +
     snowflake prefilter; the SHUFFLE_HASH pin only beyond
     SHUFFLE_HASH_GATE_BYTES (64 MB; sf10+: 3.71 → 1.94 s, r9), where
     the build side is far beyond any broadcast budget and sort-merge
@@ -251,7 +248,7 @@ def join_multi_star(spark, sf_dir):
     orders_dated = t["orders"].filter(
         F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp")
     )
-    if small_table(sf_dir, "orders"):
+    if small_input(t["orders"]):
         return (
             orders_dated
             .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
@@ -267,7 +264,7 @@ def join_multi_star(spark, sf_dir):
         )
     return join_multi_star_scale_plan(
         spark, sf_dir,
-        shuffle_hash=table_bytes(sf_dir, "orders") > SHUFFLE_HASH_GATE_BYTES,
+        shuffle_hash=input_bytes(t["orders"]) > SHUFFLE_HASH_GATE_BYTES,
     )
 
 

@@ -9,12 +9,19 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from duckdb_distributed_execution_spark.functions import exact_avg, oracle_exact_avg
+from duckdb_distributed_execution_spark.functions import (
+    dot_product,
+    exact_avg,
+    l2_norm,
+    oracle_exact_avg,
+    small_input,
+)
 from duckdb_distributed_execution_spark.operators import dedup as D
+from duckdb_distributed_execution_spark.operators import graph as G
 from duckdb_distributed_execution_spark.operators.graph import oracle_pagerank_sql
 from duckdb_distributed_execution_spark.operators import multimodal as M
 from duckdb_distributed_execution_spark.operators import text as X
-from duckdb_distributed_execution_spark.queries import load, register, small_table
+from duckdb_distributed_execution_spark.queries import load, register
 
 
 @register(
@@ -31,12 +38,12 @@ from duckdb_distributed_execution_spark.queries import load, register, small_tab
 def dedup_exact(spark, sf_dir):
     """Exact dedup groups on the normalized-text fingerprint — one
     hash shuffle, map-side combined. Above the scale gate
-    (small_table) the fingerprint runs as one Arrow-batched
+    (small_input) the fingerprint runs as one Arrow-batched
     normalize+md5 pass (fingerprint_kv_arrow — byte-identical; Java's interpreted regex
     chain measured 2.17 → 1.15 s at organic sf1); below it the JVM
     column form wins (Python-worker fixed cost dominates toy scale)."""
     d = load(spark, sf_dir, "documents")["documents"]
-    if not small_table(sf_dir, "documents"):
+    if not small_input(d):
         kv = X.fingerprint_kv_arrow(d, "doc_id", "text")
         return kv.groupBy("dedup_key").agg(
             F.min("doc_id").alias("keep_id"),
@@ -136,14 +143,13 @@ def dedup_ngram_jaccard(spark, sf_dir):
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup pairs: shingle → 8 min-hashes → 4 bands →
     bucket join → exact-Jaccard verify (operators/dedup.py). Below
-    the corpus-size gate the whole pipeline runs as one numpy task
-    (minhash_lsh_pairs_fused — bit-identical, pinned by test +
-    selfcheck); above it the designed distributed shape."""
+    the corpus-size gate the operator runs the whole pipeline as one
+    numpy task (bit-identical, pinned by test + selfcheck); above it
+    the designed distributed shape."""
     d = load(spark, sf_dir, "documents")["documents"]
     pairs = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         verify_threshold=0.12,
-        fuse=small_table(sf_dir, "documents"),
     )
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
@@ -265,8 +271,6 @@ def dedup_embedding_cosine(spark, sf_dir):
     measured by embedding_banded_recall and pruning power by
     embedding_banded_selectivity; see also ann_lsh_candidates and
     semantic_dedup_seeded (IVF-cluster blocking)."""
-    from duckdb_distributed_execution_spark.functions import dot_product, l2_norm
-
     e = load(spark, sf_dir, "embeddings")["embeddings"]
     withn = e.select(
         "vec_id", "label", "embedding", l2_norm(F.col("embedding")).alias("n")
@@ -317,8 +321,6 @@ def pipeline_dedup_quality_filter(spark, sf_dir):
     operator used standalone elsewhere; this query proves they
     compose — one shuffle for the dedup group, broadcast-joined
     embeddings."""
-    from duckdb_distributed_execution_spark.functions import l2_norm
-
     d = load(spark, sf_dir, "documents", "embeddings")
     docs = d["documents"].select(
         "doc_id",
@@ -625,11 +627,7 @@ def _cc_edges(spark, sf_dir):
 def dedup_connected_components(spark, sf_dir):
     """Per-document duplicate-cluster id (min doc_id reachable through
     the SimHash near-dup pair graph)."""
-    from duckdb_distributed_execution_spark.operators import graph as G
-
-    cc = G.connected_components(
-        _cc_edges(spark, sf_dir), fused=small_table(sf_dir, "documents")
-    )
+    cc = G.connected_components(_cc_edges(spark, sf_dir))
     return cc.select(F.col("node").alias("doc_id"), F.col("comp").alias("component"))
 
 
@@ -645,11 +643,7 @@ def dedup_connected_components(spark, sf_dir):
 def dedup_cluster_keep_one(spark, sf_dir):
     """Cluster summary: canonical survivor (min member id) + cluster
     size — the row set a pipeline anti-joins against to drop dups."""
-    from duckdb_distributed_execution_spark.operators import graph as G
-
-    return G.dedup_clusters(
-        _cc_edges(spark, sf_dir), fused=small_table(sf_dir, "documents")
-    )
+    return G.dedup_clusters(_cc_edges(spark, sf_dir))
 
 
 @register(
@@ -677,12 +671,8 @@ def dedup_cluster_keep_best(spark, sf_dir):
     exact integer, so the argmax is engine-stable; the join and
     window shuffle on the component id, whose cardinality is the
     cluster count — no global funnel."""
-    from duckdb_distributed_execution_spark.operators import graph as G
-
     d = load(spark, sf_dir, "documents")["documents"]
-    cc = G.connected_components(
-        _cc_edges(spark, sf_dir), fused=small_table(sf_dir, "documents")
-    )
+    cc = G.connected_components(_cc_edges(spark, sf_dir))
     q = d.select("doc_id", X.hashed_logit("text").alias("logit"))
     joined = cc.join(q, cc["node"] == q["doc_id"]).select(
         F.col("comp").alias("component"), "doc_id", "logit"
@@ -718,8 +708,6 @@ def graph_pagerank(spark, sf_dir):
     cluster resolution.  Fixed-point quantization between iterations
     makes the distributed loop bit-identical to the oracle's unrolled
     single-node evaluation."""
-    from duckdb_distributed_execution_spark.operators import graph as G
-
     return G.pagerank(_cc_edges(spark, sf_dir), iterations=5)
 
 

@@ -18,15 +18,20 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from duckdb_distributed_execution_spark.functions import dot_product, l2_norm
+from duckdb_distributed_execution_spark.functions import (
+    dot_product,
+    l2_norm,
+    small_input,
+)
 from duckdb_distributed_execution_spark.operators.similarity import (
     cosine_banded_candidates,
     cosine_banded_pairs,
+    cosine_banded_pairs_fused,
     oracle_cosine_banded_candidates_sql,
     oracle_planted_corpus_sql,
     plant_near_dups,
 )
-from duckdb_distributed_execution_spark.queries import load, register, small_table
+from duckdb_distributed_execution_spark.queries import load, register
 
 # --- Banded-LSH configuration (round-4 retune) -----------------------------
 #
@@ -121,17 +126,13 @@ def dedup_embedding_cosine_banded(spark, sf_dir):
     6 jobs of fixed cost); above it the bucketed self-join +
     broadcast-verify plan is the designed scale shape.
     tests/test_operators.py pins fused == distributed row equality."""
-    from duckdb_distributed_execution_spark.operators.similarity import (
-        cosine_banded_pairs_fused,
-    )
-
     # Measured same-session: at sf0.1 (~2k rows) the distributed plan
     # is 6 jobs of pure fixed cost (0.96 → 0.27 s fused); at sf1
     # (20k rows) the single task loses to the bucketed self-join +
     # broadcast verify (fused 4.2 s vs distributed 2.1 s — the
     # per-bucket pair work parallelizes, the kernel serializes it).
-    if small_table(sf_dir, "embeddings"):
-        e = load(spark, sf_dir, "embeddings")["embeddings"]
+    e = load(spark, sf_dir, "embeddings")["embeddings"]
+    if small_input(e):
         return cosine_banded_pairs_fused(
             e, "vec_id", "embedding", "label",
             threshold=_THRESH, n_tables=_N_TABLES,

@@ -23,7 +23,7 @@ from duckdb_distributed_execution_spark.operators.text import (
     token_count,
     tokens,
 )
-from duckdb_distributed_execution_spark.queries import load, register, small_table
+from duckdb_distributed_execution_spark.queries import load, register
 
 _CAP = 128  # context-window size in tokens for the packing queries
 
@@ -608,7 +608,6 @@ def minhash_lsh_selectivity(spark, sf_dir):
     cand = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         candidates_only=True,
-        fuse=small_table(sf_dir, "documents"),
     )
     # Tagged UNION + pivot agg instead of a 1-row scalar cross join
     # (same pattern as embedding_banded_selectivity).

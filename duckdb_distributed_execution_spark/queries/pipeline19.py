@@ -22,7 +22,7 @@ from duckdb_distributed_execution_spark.functions import (
     oracle_exact_sum,
 )
 from duckdb_distributed_execution_spark.operators import dedup as D
-from duckdb_distributed_execution_spark.queries import load, register, small_table
+from duckdb_distributed_execution_spark.queries import load, register
 
 # ---------------------------------------------------------------------------
 # CUSUM changepoint over daily event volume
@@ -279,7 +279,6 @@ def dedup_threshold_curve(spark, sf_dir):
     pairs = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         verify_threshold=min(_CURVE_THRESHOLDS),
-        fuse=small_table(sf_dir, "documents"),
     )
     th = F.array(*[F.lit(float(t)) for t in _CURVE_THRESHOLDS])
     swept = pairs.select(

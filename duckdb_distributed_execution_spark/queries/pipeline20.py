@@ -21,7 +21,7 @@ from duckdb_distributed_execution_spark.functions import (
 )
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators.text import tokens
-from duckdb_distributed_execution_spark.queries import load, register, small_table
+from duckdb_distributed_execution_spark.queries import load, register
 
 # ---------------------------------------------------------------------------
 # Theil–Sen robust trend over daily event volume
@@ -151,7 +151,6 @@ def dedup_cross_source_matrix(spark, sf_dir):
     pairs = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         verify_threshold=0.12,
-        fuse=small_table(sf_dir, "documents"),
     )
     src = d.select("doc_id", "source")
     joined = (

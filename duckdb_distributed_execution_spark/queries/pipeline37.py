@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators import dedup as D
-from duckdb_distributed_execution_spark.queries import load, register, small_table
+from duckdb_distributed_execution_spark.operators import graph as G
+from duckdb_distributed_execution_spark.queries import load, register
 from duckdb_distributed_execution_spark.queries.llm import _CC_EDGES_ORACLE
 
 # ---------------------------------------------------------------------------
@@ -52,7 +53,6 @@ def dup_cluster_size_histogram(spark, sf_dir):
     Iterative hash-min CC (one keyed join per round); everything
     after runs on the |components| aggregate; the singleton count is
     a tagged-union combine of two 1-row aggregates."""
-    from duckdb_distributed_execution_spark.operators import graph as G
     from duckdb_distributed_execution_spark.queries.llm import _cc_edges
 
     # cc feeds BOTH the size histogram and the paired-node count; a
@@ -60,9 +60,7 @@ def dup_cluster_size_histogram(spark, sf_dir):
     # whole simhash-edge + CC pipeline (r9 — the fused CC path has no
     # internal checkpoint, unlike the iterative loop whose per-round
     # checkpoints made recomputation cheap by accident).
-    cc = G.connected_components(
-        _cc_edges(spark, sf_dir), fused=small_table(sf_dir, "documents")
-    ).localCheckpoint()
+    cc = G.connected_components(_cc_edges(spark, sf_dir)).localCheckpoint()
     sizes = cc.groupBy("comp").agg(F.count(F.lit(1)).alias("sz"))
     hist = sizes.groupBy(F.col("sz").alias("cluster_size")).agg(
         F.count(F.lit(1)).alias("n_clusters")

@@ -29,9 +29,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from duckdb_distributed_execution_spark.functions import persist_tracked
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators import graph as G
-from duckdb_distributed_execution_spark.queries import load, register, small_table
+from duckdb_distributed_execution_spark.queries import load, register
 from duckdb_distributed_execution_spark.queries.llm import (
     _CC_EDGES_ORACLE,
     _SIMHASH_UND_ORACLE,
@@ -141,11 +142,13 @@ def cluster_safe_split(spark, sf_dir):
     in the result, not the docstring. The 1-row leak count broadcasts
     onto the 2-row summary (bounded crossJoin)."""
     d = load(spark, sf_dir, "documents")["documents"]
-    edges = _cc_edges(spark, sf_dir).select("id_a", "id_b")
-    edges = edges.localCheckpoint()  # feeds CC and the leak count
-    cc = G.connected_components(
-        edges, fused=small_table(sf_dir, "documents")
-    ).select(
+    # The pairs feed CC and the leak count, so they are computed once,
+    # in parallel: the count fills the persist, which CC's one task
+    # then reads. Persisted, not checkpointed: CC picks its form from
+    # the scans under its input, which a checkpoint hides.
+    edges = persist_tracked(_cc_edges(spark, sf_dir).select("id_a", "id_b"))
+    edges.count()
+    cc = G.connected_components(edges).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
     )
     comp = d.select("doc_id").join(cc, "doc_id", "left").select(

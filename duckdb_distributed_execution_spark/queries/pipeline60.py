@@ -25,9 +25,10 @@ from pyspark.sql import functions as F
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators.bpe import (
     bpe_apply_expr,
+    bpe_apply_py,
     oracle_bpe_apply,
 )
-from duckdb_distributed_execution_spark.queries import load, register, small_table
+from duckdb_distributed_execution_spark.queries import load, register
 from duckdb_distributed_execution_spark.queries.pipeline42 import BPE_MERGES
 
 _N = 3         # token-gram width (wave-57 convention)
@@ -80,10 +81,10 @@ def dedup_minhash_token_lsh(spark, sf_dir):
     vocabulary are non-discriminative under 4 bands (412k candidates
     from 5k docs at sf0.1), so the verify joins dominated the
     distributed plan; below the corpus-size gate the whole pipeline,
-    signatures included, runs as one numpy task
-    (minhash_lsh_pairs_fused — length-prefilter + searchsorted
-    verify; the post-signature part alone took 6.0 → 1.7 s at sf0.1
-    same-session, bit-identical pairs)."""
+    signatures included, runs as one numpy task (the operator's
+    fused kernel — length-prefilter + searchsorted verify; the
+    post-signature part alone took 6.0 → 1.7 s at sf0.1 same-session,
+    bit-identical pairs)."""
     d = load(spark, sf_dir, "documents")["documents"]
     pairs = D.minhash_lsh_pairs(
         d,
@@ -93,7 +94,6 @@ def dedup_minhash_token_lsh(spark, sf_dir):
         band_size=2,
         verify_threshold=_THRESH,
         shingle_fn=token_shingles_py(BPE_MERGES, _N, _SEP),
-        fuse=small_table(sf_dir, "documents"),
     )
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
@@ -103,10 +103,6 @@ def token_shingles_py(merges, n: int, sep: str):
     bpe_apply_expr → split('|') → drop ''/' ' tokens →
     array_shingles(n, sep) — distinct n-grams in first-occurrence
     order (order is irrelevant downstream; only the SET feeds md5)."""
-    from duckdb_distributed_execution_spark.operators.bpe import (
-        bpe_apply_py,
-    )
-
     enc = bpe_apply_py(merges)
 
     def fn(text: str):

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators import text as X
-from duckdb_distributed_execution_spark.queries import load, register, small_table
+from duckdb_distributed_execution_spark.queries import load, register
 
 # ---------------------------------------------------------------------------
 # Window frame EXCLUDE CURRENT ROW (DuckDB-native; Spark emulation)
@@ -314,7 +314,6 @@ def minhash_candidate_recall(spark, sf_dir):
     cand = D.minhash_lsh_pairs(
         d, "doc_id", "text", shingle_n=2, num_hashes=8, band_size=2,
         verify_threshold=0.0,
-        fuse=small_table(sf_dir, "documents"),
     ).select("id_a", "id_b")
     hits = truth.join(cand, on=["id_a", "id_b"], how="left_semi")
     return (

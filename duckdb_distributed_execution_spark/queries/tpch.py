@@ -20,12 +20,9 @@ from duckdb_distributed_execution_spark.functions import (
     exact_avg,
     exact_sum,
     oracle_exact_sum,
+    small_input,
 )
-from duckdb_distributed_execution_spark.queries import (
-    load,
-    register,
-    small_table,
-)
+from duckdb_distributed_execution_spark.queries import load, register
 
 
 @register(
@@ -1074,7 +1071,7 @@ def tpch_q9_partsupp(spark, sf_dir):
     # 1.99 s, worse — the profit rows are 1-per-line already). At
     # sf0.1 (2.7 MB) AQE broadcasts and the forced shuffle loses (r9),
     # so the gate keeps the hint off there.
-    if not small_table(sf_dir, "orders"):
+    if not small_input(t["orders"]):
         li = li.hint("shuffle_hash")
     return (
         li.join(

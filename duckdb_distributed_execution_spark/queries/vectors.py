@@ -23,17 +23,14 @@ from pyspark.sql import functions as F
 from duckdb_distributed_execution_spark.functions import (
     EXACT_DECIMAL,
     dot_product,
+    exact_avg_rounded,
     l2_norm,
     oracle_exact_avg,
     oracle_exact_avg_rounded,
     oracle_exact_sum,
+    small_input,
 )
-from duckdb_distributed_execution_spark.queries import (
-    arr_str,
-    load,
-    register,
-    small_table,
-)
+from duckdb_distributed_execution_spark.queries import arr_str, load, register
 
 
 @register(
@@ -150,7 +147,7 @@ def ann_bruteforce_topk(spark, sf_dir):
     exact-scan shape. Engine.ann_topk(method='brute') runs the same
     kernel.
 
-    r9: below the corpus-size gate (small_table) the collect + scan +
+    r9: below the corpus-size gate (small_input) the collect + scan +
     window plan (3 jobs of fixed cost at sf0.1) fuses into ONE
     single-task Arrow kernel (brute_force_topk_fused — the same
     top-k function over the whole corpus); above it the per-batch
@@ -163,7 +160,7 @@ def ann_bruteforce_topk(spark, sf_dir):
     )
 
     e = load(spark, sf_dir, "embeddings")["embeddings"]
-    if small_table(sf_dir, "embeddings"):
+    if small_input(e):
         out = brute_force_topk_fused(
             e, id_col="vec_id", vec_col="embedding", k=10,
             query_id_below=5,
@@ -859,8 +856,6 @@ def embedding_centroids(spark, sf_dir):
     → (label, dim) grouped exact mean: one shuffle of scalar rows —
     never materializes per-partition dense matrices, so it scales to
     any corpus × dimension product."""
-    from duckdb_distributed_execution_spark.functions import exact_avg_rounded
-
     e = load(spark, sf_dir, "embeddings")["embeddings"]
     pe = e.select(
         "label",

@@ -179,6 +179,15 @@ def _fails(check: str) -> Column:
     return ~F.expr(check)
 
 
+def _default_col(default) -> Column:
+    """A column DEFAULT as a Spark column: a DDL default captured as
+    SQL text (SqlDefault) is evaluated, any other value is a literal
+    (None: NULL)."""
+    if isinstance(default, SqlDefault):
+        return F.expr(default)
+    return F.lit(default)
+
+
 def _duplicate_keys(df: DataFrame, keycols: list[str]) -> DataFrame:
     """PRIMARY KEY / UNIQUE: the key groups of ``df`` holding more than
     one row. Rows with a NULL key component are exempt (SQL UNIQUE
@@ -1207,11 +1216,15 @@ class Engine:
     @_ddl
     def add_column(self, name: str, col: str, type_str: str,
                    default=None) -> None:
+        """ALTER TABLE ADD COLUMN; ``default`` fills existing rows and,
+        as in DuckDB, later inserts that omit the column."""
         from duckdb_distributed_execution_spark.typemap import duckdb_to_spark
 
         dt = duckdb_to_spark(type_str)
-        self._rewrite(
-            name, lambda cur: cur.withColumn(col, F.lit(default).cast(dt)))
+        fill = _default_col(default).cast(dt)
+        self._rewrite(name, lambda cur: cur.withColumn(col, fill))
+        if default is not None:
+            self._defaults[(name, col)] = default
 
     @_ddl
     def drop_column(self, name: str, col: str) -> None:
@@ -1219,7 +1232,17 @@ class Engine:
 
     @_ddl
     def rename_column(self, name: str, old: str, new: str) -> None:
+        """ALTER TABLE RENAME COLUMN. As in DuckDB the column keeps its
+        constraints and index entries; CHECK text is rewritten outside
+        string literals."""
+        from duckdb_distributed_execution_spark.dialect import (
+            rename_column_ref,
+        )
+
         self._rewrite(name, lambda cur: cur.withColumnRenamed(old, new))
+        self._move_constraints(
+            name, name, lambda c: new if c.lower() == old.lower() else c,
+            lambda check: rename_column_ref(check, old, new))
 
     @_ddl
     def rename_table(self, old: str, new: str) -> None:
@@ -1239,19 +1262,29 @@ class Engine:
         # the old name, so enforcement silently lapsed after a rename
         # — and the persistent catalog would have made the lapse
         # durable).
+        self._move_constraints(old, new)
+
+    def _move_constraints(self, old: str, new: str, col=lambda c: c,
+                          check=lambda c: c) -> None:
+        """Re-key table ``old``'s constraint and index entries to table
+        ``new``, each column named ``col(column)`` and each CHECK text
+        ``check(text)``."""
         for store in (self._defaults, self._enums):
-            for (tn, col) in [k for k in store if k[0] == old]:
-                store[(new, col)] = store.pop((tn, col))
-        renamed_nn = {(new, c) for (tn, c) in self._not_null if tn == old}
-        self._not_null = {
-            k for k in self._not_null if k[0] != old
-        } | renamed_nn
-        for store in (self._keys, self._checks, self._foreign):
-            if old in store:
-                store[new] = store.pop(old)
+            for tn, c in [k for k in store if k[0] == old]:
+                store[(new, col(c))] = store.pop((tn, c))
+        self._not_null = {(new, col(c)) if tn == old else (tn, c)
+                          for tn, c in self._not_null}
+        if old in self._keys:
+            self._keys[new] = [[col(c) for c in k]
+                               for k in self._keys.pop(old)]
+        if old in self._checks:
+            self._checks[new] = [check(c) for c in self._checks.pop(old)]
+        if old in self._foreign:
+            self._foreign[new] = self._foreign.pop(old)
         for iname, e in list(self._indexes.items()):
             if e.table == old:
-                self._indexes[iname] = IndexEntry(iname, new, e.columns)
+                self._indexes[iname] = IndexEntry(
+                    iname, new, tuple(col(c) for c in e.columns))
 
     @_ddl
     def alter_column_type(self, name: str, col: str, type_str: str) -> None:
@@ -1414,12 +1447,7 @@ class Engine:
         if columns is not None:
             for f in target.schema.fields:
                 if f.name not in columns:
-                    dflt = self._defaults.get((name, f.name))
-                    if isinstance(dflt, SqlDefault):
-                        # DDL DEFAULT captured as SQL text — evaluate.
-                        dcol = F.expr(dflt)
-                    else:
-                        dcol = F.lit(dflt)
+                    dcol = _default_col(self._defaults.get((name, f.name)))
                     df = df.withColumn(f.name, dcol.cast(f.dataType))
             df = df.select(*[f.name for f in target.schema.fields])
         self.insert_into(name, df)
@@ -1459,8 +1487,7 @@ class Engine:
             if f.name in df.columns:
                 aligned_cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
             else:
-                dflt = self._defaults.get((name, f.name))
-                dcol = F.expr(dflt) if isinstance(dflt, SqlDefault) else F.lit(dflt)
+                dcol = _default_col(self._defaults.get((name, f.name)))
                 aligned_cols.append(dcol.cast(f.dataType).alias(f.name))
         self.insert_into(name, df.select(*aligned_cols))
 
@@ -2739,36 +2766,45 @@ class Engine:
 
     def vector_index_vacuum(self, name: str) -> int:
         """Physically apply accumulated tombstones: rewrite the cells
-        table minus tombstoned ids (cid-sorted again, so row-group
-        pruning stays sharp), then clear the tombstone relation. Both
-        rewrites are state-dependent manifest commits — a concurrent
-        upsert between the read and the cells commit raises
-        ConcurrentWriteError with nothing applied (re-run), never a
-        silent lost batch. Crash between the two commits is safe: the
-        tombstones are merely applied twice (anti-join of already-
-        removed ids is a no-op). Returns rows removed from cells."""
+        (and PQ codes) minus tombstoned ids, cid-sorted again so
+        row-group pruning stays sharp, then clear the tombstone files
+        applied. Both read what the manifest lists, not this engine's
+        views, so another process's upsert or delete is kept; a
+        tombstone committed after the vacuum started waits for the
+        next one. A commit racing a rewrite raises ConcurrentWriteError
+        with nothing applied (re-run); a crash between the commits
+        re-applies tombstones harmlessly. Returns rows removed from
+        cells."""
         meta = self._vector_indexes.get(name)
         if meta is None:
             raise ValueError(f"vector index {name!r} does not exist")
         id_col = meta["id_col"]
-        tomb = self.table(f"{name}__tombstones")
-        cells = self.table(f"{name}__cells")
-        kept = cells.join(F.broadcast(tomb), id_col, "left_anti")
-        before = cells.count()
-        kept = kept.sort("cid").localCheckpoint()
-        removed = before - kept.count()
-        if removed:
-            self._rewrite(f"{name}__cells", kept, op="vector_vacuum",
+        tombstones = f"{name}__tombstones"
+        applied = self._managed_files(tombstones)
+        dead = F.broadcast(
+            self._scan(tombstones, applied).select(id_col).distinct()
+            .withColumn("__dead", F.lit(True))
+        )
+        counts = _Observed(self.spark, changes="removed")
+
+        def reclaim(rows: DataFrame, tap: bool = False) -> DataFrame:
+            # Tapped above the sort: its range-partition sampling job
+            # would otherwise count the removed rows a second time.
+            marked = rows.join(dead, id_col, "left").sort("cid")
+            if tap:
+                marked = counts.tap("removed", marked, F.col("__dead"))
+            return (marked.filter(F.col("__dead").isNull())
+                    .select(*rows.columns))
+
+        removed = self._rewrite(
+            f"{name}__cells", lambda rows: reclaim(rows, tap=True),
+            op="vector_vacuum", compact=False, counts=counts,
+        )["removed"]
+        if removed and meta.get("pq_m"):
+            self._rewrite(f"{name}__codes", reclaim, op="vector_vacuum",
                           compact=False)
-            if meta.get("pq_m"):
-                codes = self.table(f"{name}__codes")
-                kept_codes = codes.join(
-                    F.broadcast(tomb), id_col, "left_anti"
-                ).sort("cid").localCheckpoint()
-                self._rewrite(f"{name}__codes", kept_codes,
-                              op="vector_vacuum", compact=False)
-        self._rewrite(f"{name}__tombstones", tomb.limit(0),
-                      op="vector_vacuum")
+        self._rewrite(tombstones, lambda rows: rows.limit(0),
+                      op="vector_vacuum", files=applied)
         return removed
 
     def vector_index_stats(self, name: str) -> DataFrame:

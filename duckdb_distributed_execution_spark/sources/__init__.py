@@ -20,8 +20,8 @@ _READERS = ("parquet", "csv", "json", "orc")
 def path_bytes(path: str) -> int:
     """On-disk size of a file, or of every file under a directory; a
     missing path counts as 0 bytes. The file-size statistic that
-    stands in for a catalog's ANALYZE stats in the queries' scale
-    gate (``queries.table_bytes``) and the streaming backlog sizing."""
+    stands in for a catalog's ANALYZE stats in the streaming backlog
+    sizing."""
     try:
         if os.path.isdir(path):
             return sum(

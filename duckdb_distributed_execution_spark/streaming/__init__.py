@@ -45,9 +45,10 @@ def stream_source_bytes(stream_df: DataFrame) -> int:
     source's directory narrowed by its ``pathGlobFilter``, or a custom
     source's file such as ``duckdb_remote``'s database). A
     stream-stream join counts both inputs; a source without a path
-    counts 0. The same file-size statistic the queries' scale gate
-    uses (sources.path_bytes — the stand-in for a catalog's ANALYZE
-    stats)."""
+    counts 0. The streaming counterpart of functions.input_bytes: a
+    streaming relation carries no Catalyst size statistics, so this
+    sums file sizes (sources.path_bytes — the stand-in for a
+    catalog's ANALYZE stats)."""
     from duckdb_distributed_execution_spark.sources import path_bytes
 
     total = 0

@@ -409,30 +409,35 @@ _FUSED_MINHASH_KW = {
         for name, kw in _FUSED_MINHASH_KW.items()
     ],
 )
-def test_minhash_lsh_pairs_fused_matches_distributed(spark, sf, kw):
+def test_minhash_lsh_pairs_fused_matches_distributed(
+    spark, monkeypatch, sf, kw
+):
     """The one-task MinHash-LSH kernel (doc hashes, signatures,
     banding, hot-bucket cap, pair distinct and length-prefiltered
     exact-Jaccard verify in one numpy task) must be row-identical —
     including the jaccard DOUBLES — to the distributed plan it gates
     in for, at every threshold shape the six query sites use and at
     two scales."""
+    from duckdb_distributed_execution_spark import functions as FX
     from duckdb_distributed_execution_spark.operators import dedup as D
 
     d = spark.read.parquet(f"{sf}/documents.parquet")
-    dist = D.minhash_lsh_pairs(
+    fused = D._minhash_lsh_pairs_fused(
         d, "doc_id", "text", num_hashes=8, band_size=2, **kw
     )
-    fused = D.minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=8, band_size=2, fuse=True, **kw
+    monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", -1)
+    dist = D.minhash_lsh_pairs(
+        d, "doc_id", "text", num_hashes=8, band_size=2, **kw
     )
     got = sorted(map(tuple, fused.collect()))
     exp = sorted(map(tuple, dist.collect()))
     assert got == exp and len(got) > 0
 
 
-def test_minhash_lsh_pairs_fused_token_variant(spark):
+def test_minhash_lsh_pairs_fused_token_variant(spark, monkeypatch):
     """The token-space twin (shingle_fn) through the fused kernel:
     pairs identical to the distributed token plan."""
+    from duckdb_distributed_execution_spark import functions as FX
     from duckdb_distributed_execution_spark.operators import dedup as D
     from duckdb_distributed_execution_spark.queries.pipeline60 import (
         BPE_MERGES,
@@ -444,13 +449,14 @@ def test_minhash_lsh_pairs_fused_token_variant(spark):
 
     d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     fn = token_shingles_py(BPE_MERGES, _N, _SEP)
-    dist = D.minhash_lsh_pairs(
+    fused = D._minhash_lsh_pairs_fused(
         d, "doc_id", "text", num_hashes=8, band_size=2,
         verify_threshold=_THRESH, shingle_fn=fn,
     )
-    fused = D.minhash_lsh_pairs(
+    monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", -1)
+    dist = D.minhash_lsh_pairs(
         d, "doc_id", "text", num_hashes=8, band_size=2,
-        verify_threshold=_THRESH, shingle_fn=fn, fuse=True,
+        verify_threshold=_THRESH, shingle_fn=fn,
     )
     got = sorted(map(tuple, fused.collect()))
     exp = sorted(map(tuple, dist.collect()))

@@ -1200,6 +1200,34 @@ def test_dedup_facade(engine):
     assert any(s.startswith("DEDUP(method=exact") for s in ops)
 
 
+def test_dedup_pairs_minhash_gates_on_its_table(engine, monkeypatch):
+    """Engine.dedup_pairs runs the same self-gating operator as the
+    registered queries: on the small sf0.001 documents table the
+    one-task kernel (no exchange), and under a negative threshold the
+    distributed plan, with the same pairs."""
+    from duckdb_distributed_execution_spark import functions as FX
+    from duckdb_distributed_execution_spark.operators import dedup as D
+
+    engine.register_testdata(SF_SMOKE)
+    fused_plans = []
+
+    def spy(*args, _fused=D._minhash_lsh_pairs_fused, **kwargs):
+        out = _fused(*args, **kwargs)
+        fused_plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(D, "_minhash_lsh_pairs_fused", spy)
+    kw = dict(method="minhash", shingle_n=2, num_hashes=8, band_size=2,
+              verify_threshold=0.12)
+    fused = sorted(map(tuple, engine.dedup_pairs("documents", **kw).collect()))
+    assert len(fused_plans) == 1 and "Exchange" not in fused_plans[0]
+
+    monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", -1)
+    dist = sorted(map(tuple, engine.dedup_pairs("documents", **kw).collect()))
+    assert len(fused_plans) == 1
+    assert fused == dist and len(fused) > 0
+
+
 def test_cut_substrings_facade(engine):
     """Engine.cut_substrings must equal its oracle-checked query twins
     (dedup_substring_cut / dedup_substring_cut_text) row-for-row, and
@@ -1513,11 +1541,12 @@ def test_ann_hard_negative_facade_matches_query_twin(engine, spark):
     assert got == want
 
 
-def test_release_operator_caches(engine):
+def test_release_operator_caches(engine, monkeypatch):
     """r10 verdict item 7: the operator-internal lazy persists (the
     minhash signature relation here) accumulate in the CacheManager
     because their consumers are lazy; Engine.release_operator_caches()
     must empty it, and a second call must be a no-op."""
+    from duckdb_distributed_execution_spark import functions as FX
     from duckdb_distributed_execution_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
@@ -1527,11 +1556,10 @@ def test_release_operator_caches(engine):
     spark.catalog.clearCache()
     engine.release_operator_caches()  # drop leftovers from other tests
 
-    # fuse=False forces the distributed branch, whose signature
-    # relation is the tracked lazy persist.
-    pairs = minhash_lsh_pairs(
-        engine.table("documents"), "doc_id", "text", fuse=False
-    )
+    # A negative threshold forces the distributed branch, whose
+    # signature relation is the tracked lazy persist.
+    monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", -1)
+    pairs = minhash_lsh_pairs(engine.table("documents"), "doc_id", "text")
     pairs.count()  # materializes the pipeline, filling the cache
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert not jcm.isEmpty()

@@ -19,6 +19,16 @@ from duckdb_distributed_execution_spark.operators.similarity import (
 )
 
 
+@pytest.fixture
+def distributed(monkeypatch):
+    """No input is small under a negative threshold, so every operator
+    that picks its own form (minhash_lsh_pairs, connected_components,
+    kcenter_greedy) takes the distributed one."""
+    from duckdb_distributed_execution_spark import functions as FX
+
+    monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", -1)
+
+
 def _query_rows(df):
     return [(r.vec_id, [float(x) for x in r.embedding]) for r in df.collect()]
 
@@ -489,7 +499,7 @@ def test_keyed_row_number_null_key_raises(spark):
         keyed_row_number(df, ["k"], ["id"], num_partitions=4).collect()
 
 
-def test_minhash_lsh_partition_independent(spark):
+def test_minhash_lsh_partition_independent(spark, distributed):
     """The full LSH pipeline (shingle -> sig -> band -> bucket join ->
     verify) must produce identical pairs at any input partitioning —
     the property that makes it safe to scale executor counts."""
@@ -582,7 +592,7 @@ def test_simhash_pairs_wide_signature(spark):
     assert all(5 not in pair for pair in got)
 
 
-def test_connected_components_chain_converges(spark):
+def test_connected_components_chain_converges(spark, distributed):
     """Worst-case depth regression: a 1000-link chain (diameter 1000)
     must converge within the default iteration budget — the
     large-star/small-star alternation (r7) needs O(log² n) rounds
@@ -605,7 +615,7 @@ def test_connected_components_chain_converges(spark):
     )
 
 
-def test_connected_components_round_count_shallow(spark):
+def test_connected_components_round_count_shallow(spark, distributed):
     """The round-count pin behind the r7 graph-family speedup: real
     near-dup pair graphs are star-shaped/shallow, and the alternation
     must finish them in a handful of rounds (measured at sf0.1:
@@ -1258,7 +1268,7 @@ def test_boilerplate_ngrams_array_distinct_matches_global(spark):
     assert max(got.values()) >= 21
 
 
-def test_connected_components_fused_matches_iterative(spark):
+def test_connected_components_fused_matches_iterative(spark, distributed):
     """r9 single-task union-find twin must label every node with the
     same min-reachable component id as the alternating-star loop —
     pure integer graph semantics, asserted on the real sf0.01 simhash
@@ -1271,7 +1281,7 @@ def test_connected_components_fused_matches_iterative(spark):
     it = {(r.node, r.comp)
           for r in G.connected_components(edges).collect()}
     fu = {(r.node, r.comp)
-          for r in G.connected_components(edges, fused=True).collect()}
+          for r in G._connected_components_fused(edges).collect()}
     assert it == fu and len(it) > 0
 
     hand = spark.createDataFrame(
@@ -1284,7 +1294,7 @@ def test_connected_components_fused_matches_iterative(spark):
     it = {(r.node, r.comp)
           for r in G.connected_components(hand).collect()}
     fu = {(r.node, r.comp)
-          for r in G.connected_components(hand, fused=True).collect()}
+          for r in G._connected_components_fused(hand).collect()}
     assert it == fu
     comp = dict(fu)
     assert comp[5] == 1 and comp[10] == 10 and comp[21] == 20
@@ -1295,10 +1305,10 @@ def _fused_kernels(spark):
     or 4 edges for connected components)."""
     from duckdb_distributed_execution_spark.operators import similarity as S
     from duckdb_distributed_execution_spark.operators.graph import (
-        connected_components_fused,
+        _connected_components_fused,
     )
     from duckdb_distributed_execution_spark.operators.linalg import (
-        kcenter_greedy_fused,
+        _kcenter_greedy_fused,
     )
 
     docs = spark.createDataFrame(
@@ -1313,10 +1323,8 @@ def _fused_kernels(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5)], "u long, v long"
     )
     return {
-        "minhash": lambda: D.minhash_lsh_pairs(
-            docs, "doc_id", "text", fuse=True
-        ),
-        "connected_components": lambda: connected_components_fused(
+        "minhash": lambda: D._minhash_lsh_pairs_fused(docs, "doc_id", "text"),
+        "connected_components": lambda: _connected_components_fused(
             edges, "u", "v"
         ),
         "cosine_banded": lambda: S.cosine_banded_pairs_fused(
@@ -1328,7 +1336,7 @@ def _fused_kernels(spark):
         "brute_force_topk": lambda: S.brute_force_topk_fused(
             vecs, k=2, query_id_below=2
         ),
-        "kcenter": lambda: kcenter_greedy_fused(vecs, k=3),
+        "kcenter": lambda: _kcenter_greedy_fused(vecs, k=3),
     }
 
 

@@ -174,11 +174,12 @@ def test_aqe_skew_join_split(spark, tmp_path):
 # never actually run.)
 HEADLINE_SHUFFLE_BUDGETS = {
     "agg_pricing_summary": 1,   # one partial→final agg exchange
-    # r9 plans are SIZE-GATED (queries.small_table, file size standing
-    # in for catalog stats): at smoke scale join_multi_star takes the simple
-    # broadcast shape and q9 withholds its SHUFFLE_HASH hint, so the
-    # counts below are the small-SF topology; at sf10 the gates flip
-    # to agg-below-join + shuffle-hash (branch equality pinned by
+    # r9 plans are SIZE-GATED (functions.small_input, the scanned file
+    # size standing in for catalog stats): at smoke scale
+    # join_multi_star takes the simple broadcast shape and q9 withholds
+    # its SHUFFLE_HASH hint, so the counts below are the small-SF
+    # topology; at sf10 the gates flip to agg-below-join +
+    # shuffle-hash (branch equality pinned by
     # test_join_multi_star_branches_agree).
     "join_multi_star": 1,       # AQE broadcasts every dim; fact agg
     "sessionize_window_sql": 1, # one keyed window exchange
@@ -186,7 +187,7 @@ HEADLINE_SHUFFLE_BUDGETS = {
     #                             signatures, banding, cap, pairs and
     #                             verify in one numpy task over the
     #                             coalesced scan, no exchange.
-    #                             Above the small_table gate the
+    #                             Above the small_input gate the
     #                             distributed shape (band bucket →
     #                             verify, 2 exchanges) returns.
     "tpch_q9_partsupp": 2,      # scalar supplier-count agg + final

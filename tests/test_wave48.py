@@ -217,18 +217,20 @@ def test_register_rejects_duplicate_names():
         register("target_encode_loo")(lambda spark, sf: None)
 
 
-def test_kcenter_greedy_fused_matches_distributed(spark):
+def test_kcenter_greedy_fused_matches_distributed(spark, monkeypatch):
     """r9: the size-gated single-task k-center twin must be
     row-identical to the distributed per-round loop (same numpy d²
     expansion, same quantized least-fold, same max-dq/min-id pick)."""
+    from duckdb_distributed_execution_spark import functions as FX
     from duckdb_distributed_execution_spark.operators.linalg import (
+        _kcenter_greedy_fused,
         kcenter_greedy,
-        kcenter_greedy_fused,
     )
     from duckdb_distributed_execution_spark.queries import load
 
     e = load(spark, "/root/testdata/sf0.01", "embeddings")["embeddings"]
+    b = _kcenter_greedy_fused(e, "vec_id", "embedding", k=6)
+    monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", -1)
     a = kcenter_greedy(e, "vec_id", "embedding", k=6)
-    b = kcenter_greedy_fused(e, "vec_id", "embedding", k=6)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0

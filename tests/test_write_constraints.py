@@ -156,3 +156,63 @@ def test_table_files_decimal_zone_map(engine):
     assert {(r.column, r.min_val, r.max_val) for r in rows} >= {("id", "1", "7")}
     assert {r.n_rows for r in rows} == {2}
     engine.drop_table("tf_dec")
+
+
+def test_rename_column_keeps_constraints_like_duckdb(engine):
+    """RENAME COLUMN keeps the column's NOT NULL, DEFAULT, CHECK and
+    PRIMARY KEY, as DuckDB does; a string literal in the CHECK that
+    spells the old name is not renamed."""
+    import duckdb
+
+    ddl = ("id INTEGER PRIMARY KEY, q INTEGER NOT NULL DEFAULT 5, "
+           "s VARCHAR, CHECK (q >= 0 AND s <> 'q')")
+    bad = [(2, None, "b"), (3, -1, "b"), (1, 2, "b"), (4, 2, "q")]
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE r ({ddl})")
+    con.execute("INSERT INTO r VALUES (1, 1, 'a')")
+    engine.create_table("ren_c", ddl)
+    engine.insert_values("ren_c", [(1, 1, "a")])
+    try:
+        for old, new in (("q", "qq"), ("id", "pk")):
+            con.execute(f"ALTER TABLE r RENAME COLUMN {old} TO {new}")
+            engine.rename_column("ren_c", old, new)
+            for row in bad:
+                with pytest.raises(duckdb.ConstraintException):
+                    con.execute("INSERT INTO r VALUES (?, ?, ?)", row)
+                with pytest.raises(ValueError):
+                    engine.insert_values("ren_c", [row])
+        con.execute("INSERT INTO r (pk, s) VALUES (5, 'c')")
+        engine.insert_values("ren_c", [(5, "c")], columns=["pk", "s"])
+        con.execute("INSERT INTO r VALUES (6, 2, 'b')")
+        engine.insert_values("ren_c", [(6, 2, "b")])
+        want = con.execute("SELECT * FROM r ORDER BY pk").fetchall()
+        assert sorted(map(tuple, engine.table("ren_c").collect())) == want
+        assert engine.table("ren_c").columns == ["pk", "qq", "s"]
+    finally:
+        engine.drop_table("ren_c")
+
+
+def test_add_column_default_fills_later_inserts_like_duckdb(engine, spark):
+    """ADD COLUMN ... DEFAULT fills the existing rows and every later
+    insert that omits the column, as in DuckDB."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE a (id INTEGER, s VARCHAR)")
+    con.execute("INSERT INTO a VALUES (1, 'a')")
+    con.execute("ALTER TABLE a ADD COLUMN w INTEGER DEFAULT 7")
+    con.execute("INSERT INTO a (id, s) VALUES (2, 'b')")
+    con.execute("INSERT INTO a BY NAME SELECT 'c' AS s, 3 AS id")
+    want = con.execute("SELECT * FROM a ORDER BY id").fetchall()
+    assert want == [(1, "a", 7), (2, "b", 7), (3, "c", 7)]
+    engine.create_table("add_d", "id INTEGER, s VARCHAR")
+    try:
+        engine.insert_values("add_d", [(1, "a")])
+        engine.add_column("add_d", "w", "INTEGER", default=7)
+        engine.insert_values("add_d", [(2, "b")], columns=["id", "s"])
+        engine.insert_by_name(
+            "add_d", spark.createDataFrame([("c", 3)], "s STRING, id INT"))
+        got = sorted(map(tuple, engine.table("add_d").collect()))
+        assert got == want
+    finally:
+        engine.drop_table("add_d")

@@ -115,6 +115,69 @@ def test_whole_rewrite_keeps_rows_appended_by_another_process(spark, eng,
     assert got[500] == "ext500" and got[501] == "ext501"
 
 
+def _commit_externally(eng, name, df, fname):
+    """Commit ``df``'s rows to managed table ``name`` the way another
+    process does (a parquet file plus manifest.commit_append), unseen
+    by ``eng``'s view."""
+    import shutil
+
+    path = eng._tables[name].path
+    stage = path + "-external"
+    df.coalesce(1).write.parquet(stage)
+    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    os.rename(os.path.join(stage, part), os.path.join(path, fname))
+    shutil.rmtree(stage)
+    manifest.commit_append(path, [fname], "external append")
+
+
+def test_vector_vacuum_keeps_writes_of_another_process(spark, eng,
+                                                       monkeypatch):
+    """vector_index_vacuum applies the tombstones the manifest lists
+    and rewrites the cells the manifest lists: an upsert and a delete
+    another process committed since this engine attached its views are
+    kept and applied, and a delete committed while the vacuum runs is
+    left for the next vacuum."""
+    from pyspark.sql import functions as F
+
+    corpus = spark.read.parquet(
+        "/root/testdata/sf0.01/embeddings.parquet").filter("vec_id < 32")
+    eng.create_table("we_vec", "vec_id BIGINT, embedding FLOAT[]")
+    try:
+        eng.insert_into("we_vec", corpus.select("vec_id", "embedding"))
+        eng.create_vector_index("we_idx", "we_vec", n_cells=2)
+        assert eng.vector_index_delete("we_idx", [1, 2]) == 2
+        cells = eng.table("we_idx__cells")
+        tomb = eng.table("we_idx__tombstones")
+
+        def tombstone(i):
+            return spark.createDataFrame([(i,)], tomb.schema)
+
+        _commit_externally(
+            eng, "we_idx__cells",
+            cells.filter("vec_id = 7").withColumn(
+                "vec_id", F.lit(900).cast("long")),
+            "external-upsert.parquet")
+        _commit_externally(eng, "we_idx__tombstones", tombstone(3),
+                           "external-delete.parquet")
+        rewrite = eng._rewrite
+
+        def racing(name, *args, **kwargs):
+            if name == "we_idx__cells":
+                _commit_externally(eng, "we_idx__tombstones", tombstone(4),
+                                   "external-late-delete.parquet")
+            return rewrite(name, *args, **kwargs)
+
+        monkeypatch.setattr(eng, "_rewrite", racing)
+        assert eng.vector_index_vacuum("we_idx") == 3
+        ids = {r.vec_id for r in eng.table("we_idx__cells").collect()}
+        assert 900 in ids and 4 in ids and not ids & {1, 2, 3}
+        assert [r.vec_id for r in eng.table("we_idx__tombstones").collect()
+                ] == [4]
+    finally:
+        eng.drop_vector_index("we_idx", if_exists=True)
+        eng.drop_table("we_vec")
+
+
 def test_delete_all_then_merge(spark, eng):
     assert eng.delete_from("we_t", "true") == 20
     assert _rows(eng, "we_t") == []
