@@ -70,9 +70,12 @@ def release_operator_persists(spark) -> int:
 
 
 # The one small-input threshold: every plan with a small-scale form
-# (a fused single-task kernel, the JVM form of a text plan, the simple
-# broadcast join, no join-strategy hint) takes it exactly when
-# small_input() holds for the frame it reads. Measured input_bytes:
+# (a fused single-task kernel, the JVM form of a text plan, no
+# join-strategy hint) takes it exactly when small_input() holds for
+# the frame it reads: each twin operator asks about its own input, only
+# tokens_per_lang_topk and tpch_q9_partsupp in the query. Patch it to
+# force a branch (-1: every gate large, 1 << 40: every gate small;
+# join_multi_star reads SHUFFLE_HASH_GATE_BYTES). Measured input_bytes:
 #
 #   input        sf0.001   sf0.01    sf0.1      sf1
 #   documents    65,515    65,049    594,568    5,971,357
@@ -84,14 +87,14 @@ def release_operator_persists(spark) -> int:
 # the large side for all three tables, which is all the per-query
 # measurements behind the gates support: each was tuned at sf0.1 and
 # sf1 only, and some sat at 2 MiB (dedup_exact, text_quality) or 8 MiB
-# (join_multi_star, tpch_q9_partsupp), so between those scales the
-# choice is unmeasured.
+# (tpch_q9_partsupp), so between those scales the choice is unmeasured.
 SMALL_INPUT_BYTES = 4 * 1024 * 1024
 
-# Inside join_multi_star's scale plan: a build side above this (sf10
-# orders; sf1 is 25.7 MB) is far beyond any broadcast budget, so the
-# fact join is pinned to the sort-free SHUFFLE_HASH form; below it AQE
-# broadcasts or sort-merges as its runtime stats dictate.
+# join_multi_star's gate: orders above this (sf10; sf1 is 25.7 MB) is
+# far beyond any broadcast budget, so the query takes its rewrite with
+# the fact join pinned to the sort-free SHUFFLE_HASH form; below it the
+# simple broadcast plan wins (the rewrite lost at sf0.1 and local sf1,
+# with or without the hint).
 SHUFFLE_HASH_GATE_BYTES = 64 * 1024 * 1024
 
 

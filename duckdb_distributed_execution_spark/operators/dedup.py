@@ -1,12 +1,12 @@
 """Deduplication suite for training-data pipelines (north-star
 greenfield — BASELINE.json).
 
-Five detectors, each a pure DataFrame plan designed around its
+Four detectors, each a pure DataFrame plan designed around its
 100 TB shuffle profile:
 
-- **exact** — hash groupBy on a canonical key. One shuffle on the
-  key; map-side partial aggregation keeps it near-linear.
-- **fingerprint** — md5 over normalized text, then exact dedup.
+- **exact** — hash groupBy on the md5 of the normalized text. One
+  shuffle on the key; map-side partial aggregation keeps it
+  near-linear.
 - **n-gram Jaccard** — shingle sets + blocked self-join + set
   intersection. The block column bounds candidate pairs (never an
   unblocked n² self-join).
@@ -38,6 +38,8 @@ from duckdb_distributed_execution_spark.functions import (
 from duckdb_distributed_execution_spark.operators.text import (
     arrow_normalize,
     arrow_tokens,
+    fingerprint,
+    md5_hex,
     normalize_text,
     oracle_normalize,
     token_codes,
@@ -59,20 +61,59 @@ def oracle_hash60(expr: str) -> str:
 # Exact / fingerprint dedup
 # ---------------------------------------------------------------------------
 
-def exact_dedup_groups(df: DataFrame, key: Column, id_col: str) -> DataFrame:
-    """Group rows by an exact key; keep the minimum id as the canonical
-    representative. Returns (keep_id, n_dups, key)."""
-    return df.groupBy(key.alias("dedup_key")).agg(
+def fingerprint_groups(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """Exact dedup groups on the normalized-text fingerprint: one row
+    per distinct ``fingerprint(text_col)`` with the minimum id as the
+    row to keep. Returns (dedup_key, keep_id, n_dups). One hash
+    shuffle on the key, map-side combined.
+
+    Below the scale gate (``small_input(df)``) the key is the JVM
+    column expression; above it one Arrow-batched normalize+md5 pass
+    computes it (_fingerprint_kv_arrow — byte-identical). Java's
+    interpreted regex replace chain dominates the JVM form once
+    documents are beyond toy scale, while below that the
+    Python-worker fixed cost dominates."""
+    if small_input(df):
+        src, key = df, fingerprint(text_col).alias("dedup_key")
+    else:
+        src, key = _fingerprint_kv_arrow(df, id_col, text_col), "dedup_key"
+    return src.groupBy(key).agg(
         F.min(id_col).alias("keep_id"),
         F.count(F.lit(1)).alias("n_dups"),
     )
 
 
-def drop_exact_dups(df: DataFrame, key: Column, id_col: str) -> DataFrame:
-    """Keep one row (min id) per key — the actual dedup operator. A
-    single shuffle on the key; no window needed (min-id join back)."""
-    keep = df.groupBy(key.alias("__k")).agg(F.min(id_col).alias(id_col))
-    return df.join(keep.drop("__k"), on=id_col, how="left_semi")
+def _fingerprint_kv_arrow(df: DataFrame, id_col: str,
+                          text_col: str) -> DataFrame:
+    """(id, dedup_key) via ONE Arrow-batched normalize+md5 pass —
+    byte-identical to ``fingerprint`` (same regex chain through Arrow
+    RE2 kernels + Python full-case lower; the JVM-equivalence argument
+    is arrow_normalize's). Measured at organic sf1: 2.17 → 1.15 s
+    against the JVM column form."""
+    import pandas as pd
+
+    dt = dict(df.dtypes)
+
+    def run(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            mask = pdf[text_col].notna()
+            fp = md5_hex(arrow_normalize(pdf[text_col][mask]))
+            out = pd.DataFrame(
+                {
+                    id_col: pdf[id_col].values,
+                    "dedup_key": pd.Series([None] * len(pdf), dtype=object),
+                }
+            )
+            out.loc[mask.values, "dedup_key"] = fp
+            yield out
+
+    return ensure_min_parallelism(df.select(id_col, text_col)).mapInPandas(
+        run, schema=f"{id_col} {dt[id_col]}, dedup_key string"
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -2,7 +2,7 @@
 
 Two paths (north-star greenfield, BASELINE.json):
 
-- ``brute_force_topk_numpy`` — exact: the collected query set scores
+- ``brute_force_topk`` — exact: the collected query set scores
   every Arrow batch of the corpus in one numpy matmul, each batch
   keeps its per-query top-k, and a rank window merges them (REPOSE's
   local-top-k-then-merge, ICDE 2021). The corpus never shuffles.
@@ -12,16 +12,17 @@ Two paths (north-star greenfield, BASELINE.json):
   plan with learned centroids instead of hyperplanes.
 
 The numpy math each operator runs per batch lives once, in the
-private functions below; a size-gated single-task kernel
-(``*_fused``) and its distributed Arrow pass call the same function,
-so the two forms agree by construction.
+private functions below; an operator's single-task kernel
+(``_*_fused``, run below ``functions.small_input``) and its
+distributed Arrow pass call the same function, so the two forms agree
+by construction.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.functions import (
@@ -32,6 +33,7 @@ from duckdb_distributed_execution_spark.functions import (
     l2_norm,
     local_rows_df,
     persist_tracked,
+    small_input,
 )
 from duckdb_distributed_execution_spark.queries.vectors import (
     _hyperplanes,
@@ -141,7 +143,7 @@ def _nearest_seed(V, S, Sn, seed_ids):
     return seed_ids[np.argmax(sims, axis=1)]
 
 
-def _blocked_pairs(ids, V, threshold, row_block):
+def _blocked_pairs(ids, V, threshold, row_block=4096):
     """Cosine pairs ≥ threshold among id-sorted rows (column index >
     row index is exactly id_a < id_b), scored ``row_block`` rows at a
     time so memory is row_block·n doubles. Returns (id_a, id_b, sim
@@ -430,7 +432,7 @@ def ivf_topk(
 
     r7 (sf1 watchlist): the probe SCORING stage is one numpy matmul
     per Arrow batch with a per-cell query mask — the same
-    brute_force_topk_numpy shape, restricted to each batch row's own
+    brute_force_topk shape, restricted to each batch row's own
     cell — replacing the interpreted JVM dot-product fold over the
     (member × probing-query) join that dominated the sf1 wall
     (ann_ivf_multiprobe_topk 4.11× vs DuckDB in the r6 table). Query
@@ -715,18 +717,33 @@ def cosine_banded_pairs(
     n_tables: int = 16,
     band_bits: int = 12,
     dim: int = 64,
+    plant: tuple | None = None,
 ) -> DataFrame:
     """LSH candidates → exact cosine verify ≥ threshold. The verify
     step is exact, so precision is 1.0 by construction; recall is the
     candidate-generation recall (see cosine_banded_candidates).
     Returns (id_a, id_b, sim) with sim rounded to 4 decimals.
+    ``plant`` = (every, shift_scale, id_offset) runs over the
+    plant_near_dups corpus of ``df`` instead of ``df``.
 
-    The joined pairs go through the Arrow-batched SIMD verify
-    (cosine_verify_numpy — 3.1x faster than the interpreted fold at
-    200k pairs). numpy's pairwise summation can differ from DuckDB's
-    sequential fold in the last ulps, so a pair whose cosine sits
-    within an ulp of the threshold or of a 4-decimal rounding tie
+    Below the scale gate (``small_input(df)``) the whole pipeline
+    runs as one task (_cosine_banded_pairs_fused, planting included).
+    Above it the bucketed self-join feeds the Arrow-batched SIMD
+    verify (cosine_verify_numpy — 3.1x faster than the interpreted
+    fold at 200k pairs). numpy's pairwise summation can differ from
+    DuckDB's sequential fold in the last ulps, so a pair whose cosine
+    sits within an ulp of the threshold or of a 4-decimal rounding tie
     could differ from the oracle; none has been observed."""
+    if small_input(df):
+        return _cosine_banded_pairs_fused(
+            df, id_col, vec_col, block_col, threshold, n_tables,
+            band_bits, dim, plant,
+        )
+    if plant is not None:
+        every, shift_scale, id_offset = plant
+        df = plant_near_dups(
+            df, id_col, vec_col, every, shift_scale, id_offset, dim
+        )
     cand = cosine_banded_candidates(
         df, id_col, vec_col, block_col, n_tables, band_bits, dim
     )
@@ -759,7 +776,7 @@ def cosine_banded_pairs(
     )
 
 
-def cosine_banded_pairs_fused(
+def _cosine_banded_pairs_fused(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -770,8 +787,8 @@ def cosine_banded_pairs_fused(
     dim: int = 64,
     plant: tuple | None = None,
 ) -> DataFrame:
-    """Single-task fused twin of ``plant_near_dups →
-    cosine_banded_pairs`` for corpora below the scale gate (guide
+    """Single-task form of ``cosine_banded_pairs`` for corpora below
+    the scale gate (guide
     §1.2/§2.4: at toy scale the distributed plan is pure fixed cost —
     6 jobs: sig persist materialization, a bucket broadcast, the
     pair-distinct exchange, two verify-map broadcasts each re-scanning
@@ -786,11 +803,7 @@ def cosine_banded_pairs_fused(
     plant_near_dups into the kernel: clone = f64(v) + c·f64(roll(v))
     — the same two IEEE-double ops per element in the same order as
     the JVM zip_with (elementwise casts and +/* are deterministic, so
-    the planted vectors are bit-identical).
-
-    Callers gate on the corpus (functions.small_input); above the
-    gate the distributed form's bucketed self-join + broadcast verify
-    is the designed scale shape."""
+    the planted vectors are bit-identical)."""
     P = _band_planes(n_tables, band_bits, dim)
     thr = float(threshold)
     blk_cols = [block_col] if block_col else []
@@ -845,24 +858,55 @@ def cosine_banded_pairs_fused(
     )
 
 
-def semantic_dedup_pairs_fused(
+def semantic_dedup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k_seeds: int = 8,
     threshold: float = 0.3,
-    row_block: int = 4096,
 ) -> DataFrame:
-    """Single-task fused twin of semantic_dedup_seeded's three-job
-    plan (seed collect → assign_nearest_seed_numpy Arrow pass →
-    groupBy(cluster) exchange → cosine_pairs_blocked_numpy Arrow
-    pass) for corpora below the scale gate. The same numpy functions
-    in ONE mapInPandas task: rows sorted by id, the k lowest ids are
-    the seeds (the orderBy/limit collect's contract), ``_nearest_seed``
-    assigns, and ``_blocked_pairs`` scores each cluster. Zero
-    exchanges, zero collect jobs, one Arrow boundary. Above the gate
-    the per-cluster applyInPandas remains the designed IVF-blocked
-    scale shape (cluster count = the parallelism)."""
+    """Seeded semantic dedup: every row joins the cluster of its
+    nearest seed (the ``k_seeds`` lowest ids; ``_nearest_seed``), and
+    each cluster emits its cosine pairs ≥ threshold. Returns
+    (cluster, id_a, id_b, sim), sim rounded to 4 decimals.
+
+    Below the scale gate (``small_input(df)``) one task does it all
+    (_semantic_dedup_pairs_fused). Above it the seeds are collected
+    (k x dim floats, driver-bounded), one Arrow pass assigns
+    (assign_nearest_seed_numpy) and the per-cluster applyInPandas
+    scores each cluster (cosine_pairs_blocked_numpy): the IVF-blocked
+    scale shape, cluster count = the parallelism."""
+    if small_input(df):
+        return _semantic_dedup_pairs_fused(
+            df, id_col, vec_col, k_seeds, threshold
+        )
+    seeds = [
+        (r[id_col], [float(x) for x in r[vec_col]])
+        for r in df.orderBy(id_col).limit(k_seeds).collect()
+    ]
+    clustered = assign_nearest_seed_numpy(
+        df, seeds, id_col=id_col, vec_col=vec_col, out_col="cluster",
+    )
+    return cosine_pairs_blocked_numpy(
+        clustered, block_col="cluster", id_col=id_col, vec_col=vec_col,
+        threshold=threshold,
+    )
+
+
+def _semantic_dedup_pairs_fused(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k_seeds: int = 8,
+    threshold: float = 0.3,
+) -> DataFrame:
+    """Single-task form of ``semantic_dedup_pairs`` (seed collect →
+    assign_nearest_seed_numpy Arrow pass → groupBy(cluster) exchange
+    → cosine_pairs_blocked_numpy Arrow pass). The same numpy
+    functions in ONE mapInPandas task: rows sorted by id, the k
+    lowest ids are the seeds (the orderBy/limit collect's contract),
+    ``_nearest_seed`` assigns, and ``_blocked_pairs`` scores each
+    cluster. Zero exchanges, zero collect jobs, one Arrow boundary."""
     sel = df.select(id_col, vec_col)
     id_t = dict(sel.dtypes)[id_col]
     thr = float(threshold)
@@ -879,7 +923,7 @@ def semantic_dedup_pairs_fused(
             m = best == cid
             if int(m.sum()) < 2:
                 continue
-            a, b, sim = _blocked_pairs(ids[m], V[m], thr, row_block)
+            a, b, sim = _blocked_pairs(ids[m], V[m], thr)
             out.append((np.repeat(cid, len(a)), a, b, sim))
         if not out:
             return None
@@ -1008,32 +1052,39 @@ def cosine_verify_numpy(
     return cand_with_vecs.mapInPandas(run, schema=schema + ", sim double")
 
 
-def brute_force_topk_numpy(
-    corpus: DataFrame,
-    queries: list[tuple[int, list[float]]],
+def brute_force_topk(
+    df: DataFrame,
+    is_query: Column,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
-    """Exact brute-force cosine top-k with the scoring loop in ONE
-    numpy matmul per Arrow batch: ``queries`` is the collected
-    [(query_id, vector), ...] (q x dim floats, driver-bounded, shipped
-    in the closure). Each batch emits only its own top-k rows per
-    query (``_cosine_topk``: sim DESC, neighbor id ASC — any global
-    top-k row is necessarily in its batch's top-k under the same
-    order, so the prune is exact), and the final window ranks
-    q x k x n_batches candidate rows instead of q x |corpus|. The
-    corpus never shuffles; this is the 100 TB exact-scan shape.
-    Returns (query_id, neighbor_id, rank, sim), rank 1..k, sim
-    unrounded."""
-    qids = np.asarray([q[0] for q in queries], dtype=np.int64)
-    Q = np.asarray([q[1] for q in queries], dtype=np.float64)
-    Qn = np.linalg.norm(Q, axis=1)
-    dt = dict(corpus.dtypes)
+    """Exact brute-force cosine top-k: the rows of ``df`` where
+    ``is_query`` is true are the queries, the rows where it is false
+    the corpus. Returns (query_id, neighbor_id, rank, sim), rank 1..k
+    in (sim DESC, neighbor_id ASC) order, sim unrounded.
+
+    Below the scale gate (``small_input(df)``) one task splits the
+    rows and ranks the whole corpus (_brute_force_topk_fused). Above
+    it the query rows are collected (q x dim floats, driver-bounded,
+    shipped in the closure) and score each Arrow batch of the corpus
+    in ONE numpy matmul; each batch emits only its own top-k rows per
+    query (``_cosine_topk``: any global top-k row is necessarily in
+    its batch's top-k under the same order, so the prune is exact),
+    and the final window ranks q x k x n_batches candidate rows
+    instead of q x |corpus|. The corpus never shuffles; this is the
+    100 TB exact-scan shape."""
+    if small_input(df):
+        return _brute_force_topk_fused(df, is_query, id_col, vec_col, k)
+    rows = df.filter(is_query).select(id_col, vec_col).collect()
+    qids = np.asarray([r[0] for r in rows], dtype=np.int64)
+    Q = np.asarray([r[1] for r in rows], dtype=np.float64)
+    Qn = np.linalg.norm(Q, axis=-1)
+    dt = dict(df.dtypes)
 
     def run(batches):
         for pdf in batches:
-            if not len(pdf):
+            if not len(pdf) or not len(qids):
                 continue
             ids = pdf[id_col].values
             V = _vectors(pdf[vec_col])
@@ -1044,36 +1095,31 @@ def brute_force_topk_numpy(
                 {"query_id": qids[qi], "neighbor_id": ids[ri], "sim": sim}
             )
 
-    cand = corpus.select(id_col, vec_col).mapInPandas(
+    cand = df.filter(~is_query).select(id_col, vec_col).mapInPandas(
         run,
         schema=f"query_id long, neighbor_id {dt[id_col]}, sim double",
     )
     return _rank_topk(cand, k).select("query_id", "neighbor_id", "rank", "sim")
 
 
-def brute_force_topk_fused(
+def _brute_force_topk_fused(
     df: DataFrame,
+    is_query: Column,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    query_id_below: int = 5,
 ) -> DataFrame:
-    """Single-task fused twin of the collect + brute_force_topk_numpy
-    + rank-window plan for corpora below the scale gate (r9, guide
-    §1.2): ONE mapInPandas task splits the coalesced table into
-    queries (id < ``query_id_below``) and corpus rows and ranks the
-    whole corpus with the same ``_cosine_topk`` the distributed
-    per-batch prune uses — no seed-collect job, no window exchange,
-    one Arrow boundary (3 jobs → 1 measured at sf0.1). Returns
-    (query_id, neighbor_id, rank, sim) like brute_force_topk_numpy.
-    Above the gate the streaming per-batch top-k prune is the
-    designed exact-scan shape (the corpus never fits one task)."""
+    """Single-task form of ``brute_force_topk`` (r9, guide §1.2): ONE
+    mapInPandas task splits the coalesced table into query and corpus
+    rows and ranks the whole corpus with the same ``_cosine_topk`` the
+    distributed per-batch prune uses — no query-collect job, no window
+    exchange, one Arrow boundary (3 jobs → 1 measured at sf0.1)."""
     dt = dict(df.dtypes)
 
     def kernel(pdf):
         ids = pdf[id_col].to_numpy()
         V = _vectors(pdf[vec_col])
-        qm = ids < query_id_below
+        qm = pdf["__q"].to_numpy(dtype=bool)
         if qm.all() or not qm.any():
             return None
         Q, C, cids = V[qm], V[~qm], ids[~qm]
@@ -1092,7 +1138,7 @@ def brute_force_topk_fused(
         )
 
     return fused_single_task(
-        df.select(id_col, vec_col),
+        df.select(id_col, vec_col, is_query.alias("__q")),
         kernel,
         f"query_id long, neighbor_id {dt[id_col]}, rank int, sim double",
         "brute_force_topk_fused",
@@ -1659,7 +1705,7 @@ def hard_negative_topk_numpy(
     """Hard-NEGATIVE mining for embedding/contrastive training: for
     each anchor (id, label, vector), the k most-similar corpus vectors
     with a DIFFERENT label — the near-miss negatives a triplet/InfoNCE
-    batch builder wants. Same plan shape as brute_force_topk_numpy
+    batch builder wants. Same plan shape as brute_force_topk
     (anchors broadcast, one numpy matmul per Arrow batch, exact
     per-batch top-k prune, corpus never shuffles) plus a label mask:
     same-label columns are -inf'd before the per-batch prune, so the

@@ -318,41 +318,6 @@ def oracle_fingerprint(expr: str) -> str:
     return f"md5({oracle_normalize(expr)})"
 
 
-def fingerprint_kv_arrow(df, id_col: str = "doc_id",
-                         text_col: str = "text"):
-    """(id, dedup_key) via ONE Arrow-batched normalize+md5 pass —
-    byte-identical to ``fingerprint`` (same regex chain through Arrow
-    RE2 kernels + Python full-case lower; the JVM-equivalence argument
-    is arrow_normalize's).
-    The corpus-scale fast path for exact dedup: Java's interpreted
-    regex replace chain dominates the JVM form's wall once documents
-    are beyond toy scale (measured at organic sf1: 2.17 → 1.15 s),
-    while below that the Python-worker fixed cost dominates — callers
-    gate on input bytes (see queries/llm.py::dedup_exact)."""
-    import pandas as pd
-
-    dt = dict(df.dtypes)
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mask = pdf[text_col].notna()
-            fp = md5_hex(arrow_normalize(pdf[text_col][mask]))
-            out = pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "dedup_key": pd.Series([None] * len(pdf), dtype=object),
-                }
-            )
-            out.loc[mask.values, "dedup_key"] = fp
-            yield out
-
-    return ensure_min_parallelism(df.select(id_col, text_col)).mapInPandas(
-        run, schema=f"{id_col} {dt[id_col]}, dedup_key string"
-    )
-
-
 def stopword_count(col: Column | str) -> Column:
     toks = tokens(normalize_text(col))
     sw = F.array(*[F.lit(s) for s in STOPWORDS])

@@ -349,51 +349,23 @@ def semantic_dedup_seeded(spark, sf_dir):
     the r4 judge flagged this block pass as the template's missing
     sibling).
 
-    r9 optimization (guide §1.2): below a corpus-size gate the whole
-    pipeline (seed pick → assign → within-cluster pairs) runs as ONE
-    fused single-task Arrow kernel (semantic_dedup_pairs_fused — same
-    numpy ops, zero exchanges and no separate seed-collect job vs the
-    distributed form's 3 jobs / 2 Arrow stages of fixed cost — the
-    floor decomposition README §perf records); above it the
-    per-cluster applyInPandas stays the designed IVF-blocked scale
-    shape. tests/test_operators.py pins fused == distributed row
-    equality."""
+    semantic_dedup_pairs picks its form: one task below the scale gate
+    (no exchange, no seed-collect job; the distributed form is 3 jobs
+    / 2 Arrow stages of fixed cost there), the per-cluster
+    applyInPandas above it. tests/test_operators.py pins fused ==
+    distributed row equality."""
     from duckdb_distributed_execution_spark.operators.similarity import (
-        assign_nearest_seed_numpy,
-        cosine_pairs_blocked_numpy,
-        semantic_dedup_pairs_fused,
+        semantic_dedup_pairs,
     )
 
-    e = load(spark, sf_dir, "embeddings")["embeddings"]
     # Gate measured same-session: sf0.1 fused 0.22 s vs 0.53 s / 3
     # jobs distributed; sf1 (5.9 MB) a wash (1.25 vs 1.28 s) — the
     # gate stays below sf1 so the cluster-parallel applyInPandas
     # keeps the scale decades (sf1/sf10 A/B rows) on the designed
     # IVF-blocked shape.
-    if small_input(e):
-        return semantic_dedup_pairs_fused(
-            e, id_col="vec_id", vec_col="embedding", k_seeds=8,
-            threshold=0.3,
-        )
-    # Seeds are k x dim floats — driver-bounded by construction, the
-    # same budget kmeans_train's centroid loop holds.
-    seeds = [
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in e.orderBy("vec_id").limit(8).collect()
-    ]
-    # Round-5: BOTH passes are single numpy matmuls per Arrow batch —
-    # assignment against the 8 broadcast seeds (was an 8-way fan-out
-    # of interpreted higher-order-function dots), then the
-    # within-cluster pair pass (cosine_pairs_blocked_numpy). The
-    # vector rides through the assignment output, so no join back to
-    # the corpus; the only shuffle is the groupBy(cluster) exchange.
-    clustered = assign_nearest_seed_numpy(
-        e, seeds, id_col="vec_id", vec_col="embedding",
-        out_col="cluster",
-    )
-    return cosine_pairs_blocked_numpy(
-        clustered, block_col="cluster", id_col="vec_id",
-        vec_col="embedding", threshold=0.3,
+    e = load(spark, sf_dir, "embeddings")["embeddings"]
+    return semantic_dedup_pairs(
+        e, id_col="vec_id", vec_col="embedding", k_seeds=8, threshold=0.3,
     )
 
 

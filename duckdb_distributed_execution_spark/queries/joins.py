@@ -13,14 +13,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from duckdb_distributed_execution_spark import functions as FX
 from duckdb_distributed_execution_spark.functions import (
-    SHUFFLE_HASH_GATE_BYTES,
     exact_sum,
     exact_sum_final,
     exact_sum_partial,
-    input_bytes,
     oracle_exact_sum,
-    small_input,
 )
 from duckdb_distributed_execution_spark.operators.asof import asof_join
 from duckdb_distributed_execution_spark.queries import load, register
@@ -229,26 +227,19 @@ def join_multi_star(spark, sf_dir):
     tools/probe_relational_floors.py shows the residual is agg/join
     CPU, not shuffle — pre-bucketed facts do not improve it).
 
-    Two-stage gate (r10 — the r9 single 64 MB gate jumped straight
-    from "simple broadcast plan" to "full sf10 rewrite"; probing the
-    middle decade found the rewrite WITHOUT the hint already wins at
-    sf1). Measured same-session warm at sf1 (orders 25.7 MB): simple
-    2.02 s, rewrite+SHUFFLE_HASH 1.15 s, rewrite without hint
-    0.89 s — AQE's runtime join choice beats the forced shuffle-hash
-    until the fact sorts dominate. At sf0.1 (2.7 MB) the rewrite is
-    pure fixed cost (0.49 s simple vs 0.76 s rewritten, r9) — so:
-    small orders (small_input) simple; otherwise agg-below-join +
-    snowflake prefilter; the SHUFFLE_HASH pin only beyond
-    SHUFFLE_HASH_GATE_BYTES (64 MB; sf10+: 3.71 → 1.94 s, r9), where
-    the build side is far beyond any broadcast budget and sort-merge
-    sorts are the next term."""
+    One gate (SHUFFLE_HASH_GATE_BYTES of orders): the simple broadcast
+    plan below, the rewrite with the SHUFFLE_HASH pin above. On 4 vCPU,
+    CPU / wall in s, equal rows: simple 0.90 / 0.75 vs rewrite + hint
+    1.08 / 0.72 at sf0.1, 2.43 / 1.46 vs 3.61 / 1.44 at local sf1 (the
+    unhinted rewrite lost too: 1.13 / 0.85, 3.86 / 1.53), 68.4 / 19.7
+    vs 35.8 / 10.7 at local sf10."""
     t = load(spark, sf_dir, "customer", "orders", "lineitem", "nation", "region")
     rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     region = t["region"].filter(F.col("r_name").isin("AMERICA", "ASIA"))
     orders_dated = t["orders"].filter(
         F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp")
     )
-    if small_input(t["orders"]):
+    if FX.input_bytes(t["orders"]) <= FX.SHUFFLE_HASH_GATE_BYTES:
         return (
             orders_dated
             .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
@@ -262,23 +253,6 @@ def join_multi_star(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n_items"),
                  exact_sum(rev).alias("revenue"))
         )
-    return join_multi_star_scale_plan(
-        spark, sf_dir,
-        shuffle_hash=input_bytes(t["orders"]) > SHUFFLE_HASH_GATE_BYTES,
-    )
-
-
-def join_multi_star_scale_plan(spark, sf_dir, shuffle_hash: bool = True):
-    """The big-SF branch of join_multi_star, module-level so
-    tests/test_plans.py can pin its result equality to the simple
-    plan at oracle scale (both branches must stay interchangeable).
-    ``shuffle_hash=False`` is the middle-decade form: same
-    agg-below-join + snowflake prefilter, but the fact-join strategy
-    is left to AQE's runtime stats (measured faster at sf1, where the
-    grouped fact side is broadcastable-ish and sorts are cheap)."""
-    t = load(spark, sf_dir, "customer", "orders", "lineitem", "nation", "region")
-    rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-    region = t["region"].filter(F.col("r_name").isin("AMERICA", "ASIA"))
     cust = (
         t["customer"]
         .join(F.broadcast(t["nation"]),
@@ -288,10 +262,10 @@ def join_multi_star_scale_plan(spark, sf_dir, shuffle_hash: bool = True):
         .select("c_custkey", "n_name")
     )
     orders = (
-        t["orders"]
-        .filter(F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        orders_dated
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "n_name")
+        .hint("shuffle_hash")
     )
     li = (
         t["lineitem"]
@@ -301,8 +275,6 @@ def join_multi_star_scale_plan(spark, sf_dir, shuffle_hash: bool = True):
             exact_sum_partial(rev).alias("__rev"),
         )
     )
-    if shuffle_hash:
-        orders = orders.hint("shuffle_hash")
     return (
         orders
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))

@@ -18,15 +18,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from duckdb_distributed_execution_spark.functions import (
-    dot_product,
-    l2_norm,
-    small_input,
-)
+from duckdb_distributed_execution_spark.functions import dot_product, l2_norm
 from duckdb_distributed_execution_spark.operators.similarity import (
     cosine_banded_candidates,
     cosine_banded_pairs,
-    cosine_banded_pairs_fused,
     oracle_cosine_banded_candidates_sql,
     oracle_planted_corpus_sql,
     plant_near_dups,
@@ -119,11 +114,10 @@ def dedup_embedding_cosine_banded(spark, sf_dir):
     fold in every measured run; tests/test_operators.py pins the
     numpy verify against the fold cosine on sf0.001 pairs.
 
-    r9 optimization (guide §1.2): below a corpus-size gate the whole
-    pipeline (plant → sig → bucket pairs → verify) runs as ONE fused
-    single-task Arrow kernel (cosine_banded_pairs_fused — same numpy
-    ops, zero exchanges/broadcasts/persists vs the distributed form's
-    6 jobs of fixed cost); above it the bucketed self-join +
+    Below the scale gate cosine_banded_pairs runs the whole pipeline
+    (plant → sig → bucket pairs → verify) as ONE single-task Arrow
+    kernel (zero exchanges/broadcasts/persists vs the distributed
+    form's 6 jobs of fixed cost); above it the bucketed self-join +
     broadcast-verify plan is the designed scale shape.
     tests/test_operators.py pins fused == distributed row equality."""
     # Measured same-session: at sf0.1 (~2k rows) the distributed plan
@@ -131,18 +125,14 @@ def dedup_embedding_cosine_banded(spark, sf_dir):
     # (20k rows) the single task loses to the bucketed self-join +
     # broadcast verify (fused 4.2 s vs distributed 2.1 s — the
     # per-bucket pair work parallelizes, the kernel serializes it).
+    # The planting rides inside the one task: planting outside it
+    # (plant_near_dups, then the kernel) cost 0.36 vs 0.21 s of CPU at
+    # sf0.1.
     e = load(spark, sf_dir, "embeddings")["embeddings"]
-    if small_input(e):
-        return cosine_banded_pairs_fused(
-            e, "vec_id", "embedding", "label",
-            threshold=_THRESH, n_tables=_N_TABLES,
-            band_bits=_BAND_BITS, dim=64,
-            plant=(_EVERY, _SHIFT, 10_000_000),
-        )
     return cosine_banded_pairs(
-        _planted(spark, sf_dir), "vec_id", "embedding", "label",
+        e, "vec_id", "embedding", "label",
         threshold=_THRESH, n_tables=_N_TABLES, band_bits=_BAND_BITS,
-        dim=64,
+        dim=64, plant=(_EVERY, _SHIFT, 10_000_000),
     )
 
 

@@ -28,7 +28,6 @@ from duckdb_distributed_execution_spark.functions import (
     oracle_exact_avg,
     oracle_exact_avg_rounded,
     oracle_exact_sum,
-    small_input,
 )
 from duckdb_distributed_execution_spark.queries import arr_str, load, register
 
@@ -139,41 +138,24 @@ _ORACLE_COSINE = """
     """,
 )
 def ann_bruteforce_topk(spark, sf_dir):
-    """Exact ANN baseline: the query set (5 x 64 floats,
-    driver-bounded) scores the partitioned corpus in ONE numpy matmul
-    per Arrow batch (brute_force_topk_numpy: each batch keeps its
-    per-query top-k, so the rank window sees q x k x n_batches rows,
-    not q x |corpus|). The corpus never shuffles — the 100 TB
-    exact-scan shape. Engine.ann_topk(method='brute') runs the same
-    kernel.
-
-    r9: below the corpus-size gate (small_input) the collect + scan +
-    window plan (3 jobs of fixed cost at sf0.1) fuses into ONE
-    single-task Arrow kernel (brute_force_topk_fused — the same
-    top-k function over the whole corpus); above it the per-batch
-    top-k prune + window stays the designed exact-scan shape. Both
-    kernels return unrounded sims; the 4-decimal round the oracle
-    compares is this query's final select."""
+    """Exact ANN baseline: the 5 lowest ids are the queries, the rest
+    the corpus, over ONE scan (brute_force_topk, the operator
+    Engine.ann_topk(method='brute') runs). Below the scale gate it is
+    one task; above it the collected query set (5 x 64 floats,
+    driver-bounded) scores the partitioned corpus in one numpy matmul
+    per Arrow batch, each batch keeping its per-query top-k, so the
+    rank window sees q x k x n_batches rows, not q x |corpus|. The
+    corpus never shuffles — the 100 TB exact-scan shape. Both forms
+    return unrounded sims; the 4-decimal round the oracle compares is
+    this query's final select."""
     from duckdb_distributed_execution_spark.operators.similarity import (
-        brute_force_topk_fused,
-        brute_force_topk_numpy,
+        brute_force_topk,
     )
 
     e = load(spark, sf_dir, "embeddings")["embeddings"]
-    if small_input(e):
-        out = brute_force_topk_fused(
-            e, id_col="vec_id", vec_col="embedding", k=10,
-            query_id_below=5,
-        )
-    else:
-        queries = [
-            (r.vec_id, [float(x) for x in r.embedding])
-            for r in e.filter(F.col("vec_id") < 5).collect()
-        ]
-        out = brute_force_topk_numpy(
-            e.filter(F.col("vec_id") >= 5), queries,
-            id_col="vec_id", vec_col="embedding", k=10,
-        )
+    out = brute_force_topk(
+        e, F.col("vec_id") < 5, id_col="vec_id", vec_col="embedding", k=10
+    )
     return out.select(
         "query_id", "neighbor_id", "rank", F.round("sim", 4).alias("sim")
     )

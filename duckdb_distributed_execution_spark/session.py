@@ -1228,7 +1228,33 @@ class Engine:
 
     @_ddl
     def drop_column(self, name: str, col: str) -> None:
+        """ALTER TABLE DROP COLUMN. As in DuckDB the column's NOT NULL,
+        DEFAULT and single-column CHECK go with it, and a column in a
+        PRIMARY KEY or UNIQUE key, in an index, or in a CHECK that
+        names another column is refused with the table unchanged."""
+        from duckdb_distributed_execution_spark.dialect import (
+            rename_column_ref,
+        )
+
+        def names(check: str, c: str) -> bool:
+            return rename_column_ref(check, c, "\0") != check
+
+        gone = col.lower()
+        others = [c for c in self.table(name).columns if c.lower() != gone]
+        keys = self._keys.get(name, []) + [
+            e.columns for e in self._indexes.values() if e.table == name]
+        users = [f"({', '.join(k)})" for k in keys
+                 if gone in map(str.lower, k)]
+        users += [k for k in self._checks.get(name, [])
+                  if names(k, col) and any(names(k, o) for o in others)]
+        if users:
+            raise ValueError(
+                f"cannot drop column {col!r} of {name!r}: the key, index "
+                f"or CHECK {'; '.join(users)} depends on it")
         self._rewrite(name, lambda cur: cur.drop(col))
+        self._move_constraints(
+            name, name, lambda c: None if c.lower() == gone else c,
+            lambda check: None if names(check, col) else check)
 
     @_ddl
     def rename_column(self, name: str, old: str, new: str) -> None:
@@ -1268,17 +1294,25 @@ class Engine:
                           check=lambda c: c) -> None:
         """Re-key table ``old``'s constraint and index entries to table
         ``new``, each column named ``col(column)`` and each CHECK text
-        ``check(text)``."""
+        ``check(text)``. A column's NOT NULL, DEFAULT and ENUM entries
+        go when ``col`` maps it to None, a CHECK when ``check`` does;
+        its keys and indexes must not name such a column."""
         for store in (self._defaults, self._enums):
             for tn, c in [k for k in store if k[0] == old]:
-                store[(new, col(c))] = store.pop((tn, c))
+                v = store.pop((tn, c))
+                if col(c) is not None:
+                    store[(new, col(c))] = v
         self._not_null = {(new, col(c)) if tn == old else (tn, c)
-                          for tn, c in self._not_null}
+                          for tn, c in self._not_null
+                          if tn != old or col(c) is not None}
         if old in self._keys:
             self._keys[new] = [[col(c) for c in k]
                                for k in self._keys.pop(old)]
         if old in self._checks:
-            self._checks[new] = [check(c) for c in self._checks.pop(old)]
+            kept = [k for k in map(check, self._checks.pop(old))
+                    if k is not None]
+            if kept:
+                self._checks[new] = kept
         if old in self._foreign:
             self._foreign[new] = self._foreign.pop(old)
         for iname, e in list(self._indexes.items()):
@@ -2163,16 +2197,16 @@ class Engine:
         df = self.spark.table(table)
         if method == "exact":
             from duckdb_distributed_execution_spark.operators.dedup import (
-                drop_exact_dups,
-            )
-            from duckdb_distributed_execution_spark.operators.text import (
-                fingerprint,
+                fingerprint_groups,
             )
 
+            keep = fingerprint_groups(df, id_col, text_col).select(
+                F.col("keep_id").alias(id_col)
+            )
             with Timer() as t:
-                out = drop_exact_dups(
-                    df, fingerprint(F.col(text_col)), id_col
-                ).localCheckpoint(eager=True)
+                out = df.join(keep, on=id_col, how="left_semi").localCheckpoint(
+                    eager=True
+                )
             self.recorder.record(
                 f"DEDUP(method=exact, table={table})", out, t.ms
             )
@@ -2306,10 +2340,10 @@ class Engine:
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  **kwargs) -> DataFrame:
         """Top-k cosine neighbors for each query vector against a
-        registered corpus table. Methods: 'brute' (exact — the
-        collected queries score each corpus batch in one numpy matmul,
-        the kernel of the ann_bruteforce_topk query; corpus never
-        shuffles; sims unrounded), 'lsh' (hyperplane-bucketed
+        registered corpus table. Methods: 'brute' (exact —
+        similarity.brute_force_topk over the corpus and query rows,
+        the operator of the ann_bruteforce_topk query, one task below
+        the scale gate; sims unrounded), 'lsh' (hyperplane-bucketed
         candidates, exact re-rank), 'ivf' (k-means-cell-routed; pass
         centroids= or nprobe=), 'hard_negative' (top-k most-similar
         DIFFERENT-label vectors — contrastive-training negatives;
@@ -2331,12 +2365,11 @@ class Engine:
                     "ann_topk(method='brute') got unexpected "
                     f"options: {sorted(kwargs)}"
                 )
-            queries = [
-                (r[id_col], [float(x) for x in r[vec_col]])
-                for r in q.select(id_col, vec_col).collect()
-            ]
-            topk = S.brute_force_topk_numpy(
-                corpus, queries, id_col, vec_col, k=k
+            tagged = corpus.select(
+                id_col, vec_col, F.lit(False).alias("__q")
+            ).unionByName(q.select(id_col, vec_col, F.lit(True).alias("__q")))
+            topk = S.brute_force_topk(
+                tagged, F.col("__q"), id_col, vec_col, k=k
             )
         elif method == "lsh":
             topk = S.lsh_topk(corpus, q, id_col, vec_col, k=k, **kwargs)

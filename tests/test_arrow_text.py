@@ -93,20 +93,22 @@ def test_doc_features_arrow_on_real_corpus(spark):
 
 
 def test_fingerprint_kv_arrow_matches_jvm(spark, docs):
-    """The r8 dedup_exact fast path: fingerprint_kv_arrow must be
+    """The r8 dedup_exact fast path: dedup._fingerprint_kv_arrow must be
     byte-identical to the JVM fingerprint on adversarial strings
     (unicode, nulls, regex metachars, whitespace zoo) AND the real
     corpus — same contract as doc_features_arrow's fp column."""
+    from duckdb_distributed_execution_spark.operators import dedup as D
+
     jvm = docs.select(
         "doc_id", X.fingerprint("text").alias("dedup_key")
     )
-    arrow = X.fingerprint_kv_arrow(docs, "doc_id", "text")
+    arrow = D._fingerprint_kv_arrow(docs, "doc_id", "text")
     assert jvm.exceptAll(arrow).limit(1).count() == 0
     assert arrow.exceptAll(jvm).limit(1).count() == 0
 
     d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     jvm2 = d.select("doc_id", X.fingerprint("text").alias("dedup_key"))
-    arrow2 = X.fingerprint_kv_arrow(d, "doc_id", "text")
+    arrow2 = D._fingerprint_kv_arrow(d, "doc_id", "text")
     assert jvm2.exceptAll(arrow2).limit(1).count() == 0
     assert arrow2.exceptAll(jvm2).limit(1).count() == 0
 

@@ -1318,33 +1318,31 @@ def test_ann_facade(engine):
     assert any(s.startswith("ANN_TOPK(method=brute") for s in ops)
 
 
-def test_ann_brute_runs_the_query_kernel(engine):
-    """Engine.ann_topk(method='brute') is brute_force_topk_numpy, the
-    kernel of the registered ann_bruteforce_topk query: the same
-    (query_id, neighbor_id, rank) rows, unrounded sims, and at 4
-    decimals the DuckDB oracle's cosine top-k."""
+def test_ann_brute_runs_the_query_kernel(engine, monkeypatch):
+    """Engine.ann_topk(method='brute') runs brute_force_topk, the
+    operator of the registered ann_bruteforce_topk query, over the
+    corpus and query rows: unrounded sims, and at 4 decimals the
+    DuckDB oracle's cosine top-k over the whole corpus."""
     import duckdb
 
-    from duckdb_distributed_execution_spark.operators.similarity import (
-        brute_force_topk_numpy,
-    )
+    from duckdb_distributed_execution_spark.operators import similarity as S
     from duckdb_distributed_execution_spark.queries.vectors import (
         _ORACLE_COSINE,
     )
 
+    calls = []
+
+    def spy(*args, _op=S.brute_force_topk, **kwargs):
+        calls.append(args)
+        return _op(*args, **kwargs)
+
+    monkeypatch.setattr(S, "brute_force_topk", spy)
     engine.register_testdata(SF_SMOKE)
-    corpus = engine.table("embeddings")
-    q = corpus.filter(F.col("vec_id") < 5)
+    q = engine.table("embeddings").filter(F.col("vec_id") < 5)
     got = engine.ann_topk("embeddings", q, k=10, method="brute")
+    assert len(calls) == 1
     assert set(got.columns) == {"query_id", "neighbor_id", "rank", "sim"}
-    qrows = [
-        (r.vec_id, [float(x) for x in r.embedding]) for r in q.collect()
-    ]
-    ref = brute_force_topk_numpy(corpus, qrows, k=10)
     rows = {(r.query_id, r.neighbor_id, r.rank): r.sim for r in got.collect()}
-    assert set(rows) == {
-        (r.query_id, r.neighbor_id, r.rank) for r in ref.collect()
-    }
     assert len(rows) == 50
     con = duckdb.connect()
     try:
@@ -1367,6 +1365,98 @@ def test_ann_brute_runs_the_query_kernel(engine):
     assert {(a, b, c): round(s, 4) for (a, b, c), s in rows.items()} == {
         (a, b, c): s for a, b, c, s in oracle
     }
+
+
+# Each Engine method that runs a size-gated twin operator: the call,
+# the registered query running the same operator, and the module
+# function only its small form calls.
+def _facade_twins(engine):
+    from duckdb_distributed_execution_spark.operators import dedup as D
+    from duckdb_distributed_execution_spark.operators import similarity as S
+
+    q = engine.table("embeddings").filter(F.col("vec_id") < 5)
+    return {
+        "dedup_pairs_embedding": (
+            lambda: engine.dedup_pairs(
+                "embeddings", method="embedding", id_col="vec_id",
+                threshold=0.3, band_bits=4,
+            ),
+            "dedup_embedding_cosine_banded",
+            S, "_cosine_banded_pairs_fused",
+        ),
+        "ann_topk_brute": (
+            lambda: engine.ann_topk("embeddings", q, k=10, method="brute"),
+            "ann_bruteforce_topk",
+            S, "_brute_force_topk_fused",
+        ),
+        "dedup_exact": (
+            lambda: engine.dedup("documents", method="exact"),
+            "dedup_exact",
+            D, "fingerprint",
+        ),
+    }
+
+
+def _spy_small_form(monkeypatch, module, name):
+    calls = []
+
+    def spy(*args, _fn=getattr(module, name), **kwargs):
+        calls.append(name)
+        return _fn(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, spy)
+    return calls
+
+
+@pytest.mark.parametrize(
+    "facade", ["dedup_pairs_embedding", "ann_topk_brute", "dedup_exact"]
+)
+def test_facade_takes_its_querys_branch(engine, monkeypatch, facade):
+    """The Engine method asks the scale gate about its table and, on
+    the small sf0.001 tables, takes the small form, as its registered
+    query does."""
+    from duckdb_distributed_execution_spark import functions as FX
+    from duckdb_distributed_execution_spark.queries import all_queries
+
+    engine.register_testdata(SF_SMOKE)
+    call, query, module, small_fn = _facade_twins(engine)[facade]
+    sizes = []
+
+    def recorded(df, _input_bytes=FX.input_bytes):
+        sizes.append(_input_bytes(df))
+        return sizes[-1]
+
+    monkeypatch.setattr(FX, "input_bytes", recorded)
+    small = _spy_small_form(monkeypatch, module, small_fn)
+    call()
+    assert sizes, f"{facade} never consulted small_input"
+    assert all(b <= FX.SMALL_INPUT_BYTES for b in sizes), sizes
+    assert small, f"{facade} did not take the small form"
+
+    small.clear()
+    all_queries()[query].fn(engine.spark, SF_SMOKE)
+    assert small, f"{query} did not take the small form"
+
+
+@pytest.mark.parametrize(
+    "facade", ["dedup_pairs_embedding", "ann_topk_brute", "dedup_exact"]
+)
+def test_facade_forms_return_the_same_rows(engine, monkeypatch, facade):
+    """Under a negative threshold the Engine method runs the large
+    form, and returns the same rows as the small form."""
+    from duckdb_distributed_execution_spark import functions as FX
+
+    engine.register_testdata(SF_SMOKE)
+    call, _, module, small_fn = _facade_twins(engine)[facade]
+    small = _spy_small_form(monkeypatch, module, small_fn)
+    small_rows = sorted(map(tuple, call().collect()))
+    assert small and len(small_rows) > 0
+
+    small.clear()
+    monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", -1)
+    large_rows = sorted(map(tuple, call().collect()))
+    assert not small
+    assert large_rows == small_rows
 
 
 def test_decontaminate_facade(engine, spark):

@@ -11,10 +11,11 @@ from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators import dedup as D
 from duckdb_distributed_execution_spark.operators import multimodal as M
+from duckdb_distributed_execution_spark.operators import similarity as S
 from duckdb_distributed_execution_spark.operators import text as X
 from duckdb_distributed_execution_spark.operators.asof import asof_join, range_join
 from duckdb_distributed_execution_spark.operators.similarity import (
-    brute_force_topk_numpy,
+    brute_force_topk,
     lsh_topk,
 )
 
@@ -23,14 +24,12 @@ from duckdb_distributed_execution_spark.operators.similarity import (
 def distributed(monkeypatch):
     """No input is small under a negative threshold, so every operator
     that picks its own form (minhash_lsh_pairs, connected_components,
-    kcenter_greedy) takes the distributed one."""
+    kcenter_greedy, brute_force_topk, cosine_banded_pairs,
+    semantic_dedup_pairs, fingerprint_groups) takes the distributed
+    one."""
     from duckdb_distributed_execution_spark import functions as FX
 
     monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", -1)
-
-
-def _query_rows(df):
-    return [(r.vec_id, [float(x) for x in r.embedding]) for r in df.collect()]
 
 
 def test_asof_join_backward(spark):
@@ -140,17 +139,23 @@ def test_recursive_cte(spark):
         recursive_cte(seed, lambda f: f, max_iterations=3)  # never empties
 
 
-def test_exact_dedup(spark):
+def test_exact_dedup(spark, monkeypatch):
+    """fingerprint_groups keeps the minimum id per normalized text, in
+    its Arrow form (a driver-side frame reads as large) and, under a
+    threshold no input exceeds, in its JVM form."""
+    from duckdb_distributed_execution_spark import functions as FX
+
     df = spark.createDataFrame(
         [(1, "Hello, World!"), (2, "hello world"), (3, "different text"),
          (4, "HELLO  world")],
         "doc_id LONG, text STRING",
     )
-    kept = D.drop_exact_dups(df, X.fingerprint("text"), "doc_id")
-    assert sorted(r.doc_id for r in kept.collect()) == [1, 3]
-    groups = D.exact_dedup_groups(df, X.fingerprint("text"), "doc_id")
-    g = {r.keep_id: r.n_dups for r in groups.collect()}
-    assert g == {1: 3, 3: 1}
+    for threshold in (FX.SMALL_INPUT_BYTES, 1 << 63):
+        monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", threshold)
+        groups = D.fingerprint_groups(df, "doc_id", "text")
+        assert groups.columns == ["dedup_key", "keep_id", "n_dups"]
+        g = {r.keep_id: r.n_dups for r in groups.collect()}
+        assert g == {1: 3, 3: 1}
 
 
 def test_word_shingles(spark):
@@ -226,10 +231,12 @@ def test_brute_force_topk(spark):
         [(0, [1.0, 0.0]), (1, [1.0, 0.01]), (2, [0.0, 1.0]), (3, [0.9, 0.1])],
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
-    out = brute_force_topk_numpy(vecs.filter("vec_id != 0"),
-                                 _query_rows(vecs.filter("vec_id = 0")), k=2)
+    out = brute_force_topk(vecs, F.col("vec_id") == 0, k=2)
     ranked = [r.neighbor_id for r in out.orderBy("rank").collect()]
     assert ranked == [1, 3]  # by cosine to (1,0)
+    # no query rows: both forms rank nothing
+    assert brute_force_topk(vecs, F.lit(False), k=2).count() == 0
+    assert S._brute_force_topk_fused(vecs, F.lit(False), k=2).count() == 0
 
 
 def test_lsh_topk_recall_smoke(spark):
@@ -237,7 +244,7 @@ def test_lsh_topk_recall_smoke(spark):
 
     t = load(spark, "/root/testdata/sf0.001", "embeddings")["embeddings"]
     q = t.filter("vec_id < 3")
-    exact = brute_force_topk_numpy(t.filter("vec_id >= 3"), _query_rows(q), k=5)
+    exact = brute_force_topk(t, F.col("vec_id") < 3, k=5)
     # bucket width must match corpus size: 3 planes → 8 buckets over
     # 500 vectors (8 planes/256 buckets would leave ~2 candidates).
     approx = lsh_topk(t.filter("vec_id >= 3"), q, k=5, n_planes=3)
@@ -1117,95 +1124,53 @@ def test_extract_features_real_decode(spark):
     assert feats[4][0] == 5.0 and feats[4][5] == 12000.0  # wav, rate
 
 
-def test_cosine_banded_pairs_fused_matches_distributed(spark):
+def test_cosine_banded_pairs_fused_matches_distributed(spark, distributed):
     """r9 fused single-task kernel (plant → LSH sig → bucket pairs →
     verify in one mapInPandas) must be row-identical to the
-    distributed plan it gates in for below the scale gate — including
-    the planted clones, which the kernel recomputes in numpy with the
-    same IEEE-double ops the JVM zip_with performs."""
-    from duckdb_distributed_execution_spark.operators.similarity import (
-        cosine_banded_pairs,
-        cosine_banded_pairs_fused,
-        plant_near_dups,
-    )
+    distributed plan cosine_banded_pairs runs above the scale gate —
+    including the planted clones, which the kernel recomputes in numpy
+    with the same IEEE-double ops the JVM zip_with performs."""
     from duckdb_distributed_execution_spark.queries import load
 
     e = load(spark, "/root/testdata/sf0.01", "embeddings")["embeddings"]
-    planted = plant_near_dups(
-        e, "vec_id", "embedding", every=7, shift_scale=0.4
-    )
-    dist = cosine_banded_pairs(
-        planted, "vec_id", "embedding", "label",
-        threshold=0.8, n_tables=16, band_bits=12, dim=64,
-    )
-    fused = cosine_banded_pairs_fused(
-        e, "vec_id", "embedding", "label",
-        threshold=0.8, n_tables=16, band_bits=12, dim=64,
-        plant=(7, 0.4, 10_000_000),
+    kw = dict(threshold=0.8, n_tables=16, band_bits=12, dim=64,
+              plant=(7, 0.4, 10_000_000))
+    dist = S.cosine_banded_pairs(e, "vec_id", "embedding", "label", **kw)
+    fused = S._cosine_banded_pairs_fused(
+        e, "vec_id", "embedding", "label", **kw
     )
     got = {(r.id_a, r.id_b): r.sim for r in fused.collect()}
     exp = {(r.id_a, r.id_b): r.sim for r in dist.collect()}
     assert got == exp and len(got) > 0
 
 
-def test_semantic_dedup_pairs_fused_matches_distributed(spark):
+def test_semantic_dedup_pairs_fused_matches_distributed(spark, distributed):
     """r9 fused single-task kernel (seed pick → assign → per-cluster
     pairs in one mapInPandas) must be row-identical to the
     collect + assign_nearest_seed_numpy + cosine_pairs_blocked_numpy
-    plan it gates in for below the scale gate."""
-    from duckdb_distributed_execution_spark.operators.similarity import (
-        assign_nearest_seed_numpy,
-        cosine_pairs_blocked_numpy,
-        semantic_dedup_pairs_fused,
-    )
+    plan semantic_dedup_pairs runs above the scale gate."""
     from duckdb_distributed_execution_spark.queries import load
 
     e = load(spark, "/root/testdata/sf0.01", "embeddings")["embeddings"]
-    seeds = [
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in e.orderBy("vec_id").limit(8).collect()
-    ]
-    clustered = assign_nearest_seed_numpy(
-        e, seeds, id_col="vec_id", vec_col="embedding",
-        out_col="cluster",
-    )
-    dist = cosine_pairs_blocked_numpy(
-        clustered, block_col="cluster", id_col="vec_id",
-        vec_col="embedding", threshold=0.3,
-    )
-    fused = semantic_dedup_pairs_fused(
-        e, id_col="vec_id", vec_col="embedding",
-        k_seeds=8, threshold=0.3,
-    )
+    kw = dict(id_col="vec_id", vec_col="embedding", k_seeds=8, threshold=0.3)
+    dist = S.semantic_dedup_pairs(e, **kw)
+    fused = S._semantic_dedup_pairs_fused(e, **kw)
     got = {(r.cluster, r.id_a, r.id_b): r.sim for r in fused.collect()}
     exp = {(r.cluster, r.id_a, r.id_b): r.sim for r in dist.collect()}
     assert got == exp and len(got) > 0
 
 
-def test_brute_force_topk_fused_matches_distributed(spark):
+def test_brute_force_topk_fused_matches_distributed(spark, distributed):
     """r9 fused single-task kernel (query split → score matmul →
     per-query lexsort rank in one mapInPandas) must be row-identical
-    to the collect + per-batch-prune + rank-window plan it gates in
-    for below the scale gate."""
-    from duckdb_distributed_execution_spark.operators.similarity import (
-        brute_force_topk_fused,
-        brute_force_topk_numpy,
-    )
+    to the collect + per-batch-prune + rank-window plan
+    brute_force_topk runs above the scale gate."""
     from duckdb_distributed_execution_spark.queries import load
 
     e = load(spark, "/root/testdata/sf0.01", "embeddings")["embeddings"]
-    queries = [
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in e.filter(F.col("vec_id") < 5).collect()
-    ]
-    dist = brute_force_topk_numpy(
-        e.filter(F.col("vec_id") >= 5), queries,
-        id_col="vec_id", vec_col="embedding", k=10,
-    )
-    fused = brute_force_topk_fused(
-        e, id_col="vec_id", vec_col="embedding", k=10,
-        query_id_below=5,
-    )
+    is_query = F.col("vec_id") < 5
+    dist = S.brute_force_topk(e, is_query, k=10)
+    fused = S._brute_force_topk_fused(e, is_query, k=10)
     got = {(r.query_id, r.neighbor_id): (r.rank, r.sim)
            for r in fused.collect()}
     exp = {(r.query_id, r.neighbor_id): (r.rank, r.sim)
@@ -1303,7 +1268,6 @@ def test_connected_components_fused_matches_iterative(spark, distributed):
 def _fused_kernels(spark):
     """Each size-gated fused kernel, built over a tiny input (8 rows,
     or 4 edges for connected components)."""
-    from duckdb_distributed_execution_spark.operators import similarity as S
     from duckdb_distributed_execution_spark.operators.graph import (
         _connected_components_fused,
     )
@@ -1327,14 +1291,14 @@ def _fused_kernels(spark):
         "connected_components": lambda: _connected_components_fused(
             edges, "u", "v"
         ),
-        "cosine_banded": lambda: S.cosine_banded_pairs_fused(
+        "cosine_banded": lambda: S._cosine_banded_pairs_fused(
             vecs, threshold=0.1, n_tables=2, band_bits=2, dim=3
         ),
-        "semantic_dedup": lambda: S.semantic_dedup_pairs_fused(
+        "semantic_dedup": lambda: S._semantic_dedup_pairs_fused(
             vecs, k_seeds=2
         ),
-        "brute_force_topk": lambda: S.brute_force_topk_fused(
-            vecs, k=2, query_id_below=2
+        "brute_force_topk": lambda: S._brute_force_topk_fused(
+            vecs, F.col("vec_id") < 2, k=2
         ),
         "kcenter": lambda: _kcenter_greedy_fused(vecs, k=3),
     }

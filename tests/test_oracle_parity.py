@@ -25,7 +25,8 @@ REPRESENTATIVE = [
     "csv_roundtrip",
 ]
 
-# Every query whose plan shape is chosen by functions.small_input.
+# Every query whose plan shape is chosen by functions.input_bytes:
+# through small_input, or join_multi_star's SHUFFLE_HASH_GATE_BYTES.
 SCALE_GATED = [
     # minhash_lsh_pairs picks its form
     "minhash_candidate_recall",
@@ -40,12 +41,15 @@ SCALE_GATED = [
     "dedup_cluster_keep_best",
     "dup_cluster_size_histogram",
     "cluster_safe_split",
-    # a fused kernel or the distributed plan (kcenter_greedy picks)
+    # a fused kernel or the distributed plan (brute_force_topk,
+    # semantic_dedup_pairs, kcenter_greedy, cosine_banded_pairs pick)
     "ann_bruteforce_topk",
     "semantic_dedup_seeded",
     "coreset_kcenter_greedy",
     "dedup_embedding_cosine_banded",
-    # the JVM or the Arrow text plan
+    "embedding_banded_recall",
+    # the JVM or the Arrow text plan (fingerprint_groups picks for
+    # dedup_exact)
     "dedup_exact",
     "tokens_per_lang_topk",
     # join plan shape and join-strategy hint
@@ -84,6 +88,7 @@ def test_large_branch_matches_oracle(spark, duck, monkeypatch, name):
     from duckdb_distributed_execution_spark.queries import load
 
     monkeypatch.setattr(FX, "SMALL_INPUT_BYTES", -1)
+    monkeypatch.setattr(FX, "SHUFFLE_HASH_GATE_BYTES", -1)
     assert not FX.small_input(load(spark, SF_ORACLE, "documents")["documents"])
     _assert_matches_oracle(spark, duck, name)
 

@@ -333,38 +333,27 @@ def test_runtime_bloom_filter_pruning(spark):
                 spark.conf.set(k, v)
 
 
-def test_join_multi_star_branches_agree(spark):
+def test_join_multi_star_branches_agree(spark, monkeypatch):
     """The size gate swaps PLANS, never results: the scale plan
-    (agg-below-join + snowflake prefilter + SHUFFLE_HASH) must return
-    exactly the simple plan's rows at oracle scale."""
+    (agg-below-join + snowflake prefilter + SHUFFLE_HASH), taken under
+    a negative SHUFFLE_HASH_GATE_BYTES, must return exactly the simple
+    plan's rows at oracle scale."""
     from tests.conftest import SF_ORACLE
 
-    from duckdb_distributed_execution_spark.queries.joins import (
-        join_multi_star_scale_plan,
-    )
+    from duckdb_distributed_execution_spark import functions as FX
 
     simple = all_queries()["join_multi_star"].fn(spark, SF_ORACLE)
-    scale = join_multi_star_scale_plan(spark, SF_ORACLE)
+    monkeypatch.setattr(FX, "SHUFFLE_HASH_GATE_BYTES", -1)
+    scale = all_queries()["join_multi_star"].fn(spark, SF_ORACLE)
+
+    def hinted(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return "shuffle_hash" in plan
+
+    assert hinted(scale) and not hinted(simple)
     rs = {tuple(r) for r in simple.collect()}
     rc = {tuple(r) for r in scale.collect()}
     assert rs == rc and len(rs) > 0
-
-
-def test_join_multi_star_middle_branch_agrees(spark):
-    """r10 two-stage gate: the middle-band form (same rewrite, fact
-    join left to AQE) must also return exactly the simple plan's
-    rows — the hint flag may swap join strategy, never results."""
-    from tests.conftest import SF_ORACLE
-
-    from duckdb_distributed_execution_spark.queries.joins import (
-        join_multi_star_scale_plan,
-    )
-
-    simple = all_queries()["join_multi_star"].fn(spark, SF_ORACLE)
-    mid = join_multi_star_scale_plan(spark, SF_ORACLE, shuffle_hash=False)
-    rs = {tuple(r) for r in simple.collect()}
-    rm = {tuple(r) for r in mid.collect()}
-    assert rs == rm and len(rs) > 0
 
 
 @pytest.mark.parametrize(

@@ -117,3 +117,30 @@ def test_queries_hold_no_byte_size_literals():
         "byte-size literals in queries/ (route the decision through "
         "functions.small_input): " + "; ".join(offenders)
     )
+
+
+def test_single_task_kernels_stay_private():
+    """A twin operator picks its one-task form itself (small_input on
+    its own input), so a registered query and the Engine method that
+    run it take the same form: no public ``*_fused`` function under
+    operators/, and no ``*_fused`` name in queries/ or session.py."""
+    import pathlib
+
+    import duckdb_distributed_execution_spark as P
+
+    pkg = pathlib.Path(P.__file__).parent
+    public_def = re.compile(r"^def [a-z]\w*_fused\b")
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted((pkg / "operators").glob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if public_def.search(line)
+    ]
+    callers = sorted((pkg / "queries").glob("*.py")) + [pkg / "session.py"]
+    offenders += [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in callers
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "_fused" in line
+    ]
+    assert not offenders, "; ".join(offenders)

@@ -12,7 +12,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from duckdb_distributed_execution_spark.operators.similarity import (
-    brute_force_topk_numpy,
+    brute_force_topk,
     ivf_topk,
 )
 
@@ -85,11 +85,10 @@ def test_graph_route_widens_single_probe_recall(spark):
     def pairs(df):
         return {(r["query_id"], r["neighbor_id"]) for r in df.collect()}
 
-    qrows = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in queries.collect()
-    ]
-    truth = pairs(brute_force_topk_numpy(corpus, qrows, k=k))
+    tagged = corpus.withColumn("q", F.lit(False)).unionByName(
+        queries.withColumn("q", F.lit(True))
+    )
+    truth = pairs(brute_force_topk(tagged, F.col("q"), k=k))
     single = pairs(ivf_topk(corpus, queries, cents, k=k, nprobe=1))
     routed = pairs(ivf_topk(corpus, queries, cents, k=k, graph_edges=2))
     r_single = len(single & truth) / len(truth)

@@ -192,6 +192,62 @@ def test_rename_column_keeps_constraints_like_duckdb(engine):
         engine.drop_table("ren_c")
 
 
+def test_drop_column_constraints_like_duckdb(engine):
+    """DROP COLUMN takes the column's NOT NULL, DEFAULT and
+    single-column CHECK with it, as DuckDB does, so a later insert of
+    the remaining columns succeeds; a column in a PRIMARY KEY, a
+    UNIQUE key, an index or a CHECK naming another column is refused
+    by both, with the table unchanged."""
+    import duckdb
+
+    ddl = ("id INTEGER PRIMARY KEY, q INTEGER NOT NULL DEFAULT 3, "
+           "s VARCHAR, CHECK (q >= 0)")
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE d ({ddl})")
+    con.execute("INSERT INTO d VALUES (1, 1, 'a')")
+    engine.create_table("drop_c", ddl)
+    try:
+        engine.insert_values("drop_c", [(1, 1, "a")])
+        con.execute("ALTER TABLE d DROP COLUMN q")
+        engine.drop_column("drop_c", "q")
+        con.execute("INSERT INTO d VALUES (2, 'b')")
+        engine.insert_values("drop_c", [(2, "b")])
+        want = con.execute("SELECT * FROM d ORDER BY id").fetchall()
+        assert sorted(map(tuple, engine.table("drop_c").collect())) == want
+        with pytest.raises(duckdb.ConstraintException):
+            con.execute("INSERT INTO d VALUES (2, 'c')")
+        with pytest.raises(ValueError, match="duplicate key"):
+            engine.insert_values("drop_c", [(2, "c")])
+    finally:
+        engine.drop_table("drop_c")
+
+    refused = [
+        ("id INTEGER PRIMARY KEY, q INTEGER", "id", None),
+        ("id INTEGER, q INTEGER UNIQUE", "q", None),
+        ("id INTEGER, q INTEGER, CHECK (q > id)", "q", None),
+        ("id INTEGER, q INTEGER", "q", ["q"]),
+    ]
+    for ddl, col, index in refused:
+        con = duckdb.connect()
+        con.execute(f"CREATE TABLE r ({ddl})")
+        engine.create_table("drop_r", ddl)
+        try:
+            if index:
+                con.execute(f"CREATE INDEX ix ON r ({', '.join(index)})")
+                engine.create_index("drop_ix", "drop_r", index)
+            with pytest.raises(duckdb.CatalogException):
+                con.execute(f"ALTER TABLE r DROP COLUMN {col}")
+            with pytest.raises(ValueError, match="cannot drop column"):
+                engine.drop_column("drop_r", col)
+            assert engine.table("drop_r").columns == ["id", "q"]
+            con.execute("INSERT INTO r VALUES (1, 2)")
+            engine.insert_values("drop_r", [(1, 2)])
+            assert engine.table("drop_r").collect() == [(1, 2)]
+        finally:
+            engine.drop_index("drop_ix", if_exists=True)
+            engine.drop_table("drop_r")
+
+
 def test_add_column_default_fills_later_inserts_like_duckdb(engine, spark):
     """ADD COLUMN ... DEFAULT fills the existing rows and every later
     insert that omits the column, as in DuckDB."""
