@@ -43,6 +43,8 @@ from pyspark.sql import types as T
 
 from duckdb_distributed_execution_spark import manifest
 from duckdb_distributed_execution_spark.manifest import ConcurrentWriteError
+from duckdb_distributed_execution_spark.sources import (read_parquet_files,
+                                                        read_parquet_table)
 from duckdb_distributed_execution_spark.stats import QueryRecorder, Timer
 from duckdb_distributed_execution_spark.typemap import (
     SqlDefault,
@@ -475,8 +477,6 @@ class Engine:
                 f"failed to register table {name!r} because it's already registered"
             )
         if fmt == "parquet":
-            from duckdb_distributed_execution_spark.sources import read_parquet_table
-
             df = read_parquet_table(self.spark, path)
         else:
             df = self.spark.read.format(fmt).load(path)
@@ -1023,14 +1023,15 @@ class Engine:
         ``schema`` is the schema of the frame the engine just wrote
         there. Spark keeps it in every file footer and a parquet read
         infers exactly it, made nullable (the file source makes a
-        given schema nullable the same way), so passing it skips the
-        one-task schema-inference job. None (a directory of unknown
-        provenance: catalog reload, reattach, adopt) infers."""
-        m = self._adopt_manifest(path)
-        files = [os.path.join(path, f) for f in m["files"]]
-        reader = self.spark.read if schema is None else (
-            self.spark.read.schema(schema))
-        df = reader.parquet(*files) if files else reader.parquet(path)
+        given schema nullable the same way). None (a directory of
+        unknown provenance: catalog reload, reattach, adopt) takes the
+        schema inference would from one footer read on the driver
+        (``sources.read_parquet_files``). Neither runs a Spark job up
+        to ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+        (32) files; above it Spark lists the files in a job."""
+        files = [os.path.join(path, f)
+                 for f in self._adopt_manifest(path)["files"]]
+        df = read_parquet_files(self.spark, files, schema)
         df.createOrReplaceTempView(name)
         self._tables[name] = RegisteredTable(name, path, "parquet", managed=True)
 
@@ -3069,7 +3070,14 @@ class Engine:
         the warehouse directory (the reference's server keeps its
         catalog in the duckling DuckDB file across restarts; here the
         warehouse parquet layout IS the durable catalog). Returns the
-        re-attached table names."""
+        re-attached table names. Each table opens over its manifest
+        files with the schema of one footer read on the driver, so
+        reattaching runs no Spark job for a table of up to 32 files
+        (``_attach_managed``).
+
+        Hidden entries are skipped: a warehouse written before history
+        moved into the manifest log keeps a ``.snapshots/`` tree, which
+        is ignored and whose history is not migrated."""
         out = []
         if not os.path.isdir(self._warehouse):
             return out
@@ -3117,8 +3125,8 @@ class Engine:
         m = manifest.read_version(t.path, version)
         if m is None:
             raise ValueError(f"no version {version} for table {name!r}")
-        return self.spark.read.parquet(
-            *[os.path.join(t.path, f) for f in m["files"]])
+        return read_parquet_files(
+            self.spark, [os.path.join(t.path, f) for f in m["files"]])
 
     def restore_version(self, name: str, version: int) -> None:
         """Roll a managed table back to a retained version (the

@@ -94,20 +94,21 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     (dirname, pathGlobFilter=basename)."""
     from duckdb_distributed_execution_spark import ensure_worker_pythonpath
 
-    ensure_worker_pythonpath(spark)
-    from duckdb_distributed_execution_spark.sources import _nanos_columns
+    from duckdb_distributed_execution_spark.sources import (
+        _floor_nanos,
+        footer_schema,
+        schema_file,
+    )
 
-    ts_is_nanos = "ts" in _nanos_columns(path)
-    if ts_is_nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_worker_pythonpath(spark)
+    probe = schema_file([path])
+    ts_is_nanos = probe is not None and (
+        "ts" in footer_schema(spark, probe)[1])
     reader = spark.readStream.schema(_events_schema(ts_is_nanos))
     if os.path.isfile(path):
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    raw = reader.parquet(path)
-    if ts_is_nanos:
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return raw
+    return _floor_nanos(reader.parquet(path), ["ts"] if ts_is_nanos else [])
 
 
 def read_documents_stream(spark: SparkSession, path: str) -> DataFrame:

@@ -23,11 +23,12 @@ does.
 from __future__ import annotations
 
 import decimal
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tests.conftest import spark_jobs
 
 DDL = ("id BIGINT PRIMARY KEY, qty INTEGER NOT NULL, "
        "price DECIMAL(12,2), tag VARCHAR")
@@ -49,19 +50,6 @@ def _rows(spark, lo, hi):
     )
 
 
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn started)."""
-    sc = spark.sparkContext
-    group = f"write-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture()
 def eng(spark, tmp_path):
     from duckdb_distributed_execution_spark import Engine
@@ -75,18 +63,18 @@ def eng(spark, tmp_path):
 
 
 def test_small_table_write_job_budget(spark, eng):
-    n, jobs = _jobs(spark, lambda: eng.delete_from("wj_t", "id % 7 = 3"))
+    n, jobs = spark_jobs(spark, lambda: eng.delete_from("wj_t", "id % 7 = 3"))
     assert (n, jobs) == (57, 1)
 
-    n, jobs = _jobs(spark, lambda: eng.update_table(
+    n, jobs = spark_jobs(spark, lambda: eng.update_table(
         "wj_t", {"price": "price + 1"}, "tag = 'b' AND qty < 50"))
     assert n > 0 and jobs == 1
 
-    _, jobs = _jobs(spark, lambda: eng.insert_into(
+    _, jobs = spark_jobs(spark, lambda: eng.insert_into(
         "wj_t", _rows(spark, 400, 450)))
     assert jobs == 1
 
-    got, jobs = _jobs(spark, lambda: eng.merge_upsert(
+    got, jobs = spark_jobs(spark, lambda: eng.merge_upsert(
         "wj_t", _rows(spark, 440, 460), ["id"]))
     assert got == {"updated": 10, "inserted": 10}
     assert jobs == 1
@@ -100,7 +88,7 @@ def test_insert_wrong_arity_fails_before_any_job(spark, eng):
     wide = _rows(spark, 400, 401).withColumn("extra", F.lit(1))
     narrow = _rows(spark, 400, 401).select("id")
     for src, n in ((wide, 5), (narrow, 1)):
-        err, jobs = _jobs(spark, lambda: pytest.raises(
+        err, jobs = spark_jobs(spark, lambda: pytest.raises(
             ValueError, eng.insert_into, "wj_t", src))
         err.match(f"table wj_t has 4 columns but {n} values were supplied")
         assert jobs == 0
@@ -123,7 +111,7 @@ def test_large_table_delete_still_probes(spark, eng):
         return real(name, condition)
 
     eng._matched_files = probe
-    n, jobs = _jobs(spark, lambda: eng.delete_from("wj_t", "id >= 450"))
+    n, jobs = spark_jobs(spark, lambda: eng.delete_from("wj_t", "id >= 450"))
     assert n == 50 and calls == ["id >= 450"]
     # the probe's aggregate on top of the rewrite of the one matched file
     assert jobs >= 2
@@ -136,9 +124,9 @@ def test_expect_row_rules_one_pass(spark, eng):
     rules = [{"not_null": "tag"},
              {"accepted_values": ("tag", ["a", "b"])},
              {"in_range": ("qty", 0, 49)}]
-    _, one_agg = _jobs(
+    _, one_agg = spark_jobs(
         spark, lambda: eng.table("wj_t").agg(F.count(F.lit(1))).collect())
-    out, jobs = _jobs(spark, lambda: eng.expect("wj_t", rules))
+    out, jobs = spark_jobs(spark, lambda: eng.expect("wj_t", rules))
     assert jobs == one_agg
     got = {(r.rule, r.target): (r.n_violations, r.sample) for r in out.collect()}
     assert got[("not_null", "tag")] == (0, "")
