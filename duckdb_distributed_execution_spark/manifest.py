@@ -3,7 +3,14 @@
 A managed table is a directory of immutable parquet data files plus a
 commit log of manifest files. Each committed version is its own
 immutable file ``_manifest-v{N:012d}.json`` listing exactly the data
-files that make up that version; ``_manifest.json`` is kept as a
+files that make up that version, and the table schema they are read
+with (Spark's ``StructType.json()``, an opaque string here). A version
+may list no file: CREATE TABLE, or a DELETE that removed every row, is
+its schema alone and writes no data (the reference's CREATE TABLE is
+likewise only a catalog entry, duckherder_schema_catalog_entry.cpp).
+Only a directory adopted from outside the engine (``adopt``), or
+written before versions carried a schema, has none; readers take it
+from a file footer. ``_manifest.json`` is kept as a
 best-effort CONVENIENCE POINTER at the latest version for legacy /
 external readers, refreshed after every commit. Engine readers resolve
 the highest-numbered version file directly.
@@ -174,15 +181,18 @@ def referenced(path: str) -> set[str]:
 
 
 def try_commit(path: str, files: list[str], op: str,
-               version: int, txns: dict | None = None) -> dict | None:
+               version: int, txns: dict | None = None,
+               schema: str | None = None) -> dict | None:
     """ONE compare-and-swap attempt: publish ``files`` as exactly
     ``version``. Returns the manifest on the win, None if that version
     number was already taken (lost race — re-read and rebase/abort).
-    ``txns`` is the application-transaction map ({app_id: last applied
-    transaction version} — Delta's SetTransaction action): each commit
-    stores the FULL map, so the latest manifest always answers "what
-    was the last batch app X applied?" without any log-history scan —
-    prune-safe by construction.
+    ``schema`` is the table schema the version is read with (None:
+    unknown; readers fall back to a file footer). ``txns`` is the
+    application-transaction map ({app_id: last applied transaction
+    version} — Delta's SetTransaction action): each commit stores the
+    FULL map, so the latest manifest always answers "what was the last
+    batch app X applied?" without any log-history scan — prune-safe by
+    construction.
 
     The content is fully written and fsync'd in a temp file first;
     link(2) then creates the version name atomically (EEXIST = loss),
@@ -212,6 +222,8 @@ def try_commit(path: str, files: list[str], op: str,
     }
     if txns:
         m["txns"] = dict(txns)
+    if schema is not None:
+        m["schema"] = schema
     tmp = os.path.join(path, f"_manifest.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as fh:
         json.dump(m, fh)
@@ -250,7 +262,8 @@ def try_commit(path: str, files: list[str], op: str,
 
 def commit_exact(path: str, files: list[str], op: str,
                  base_version: int | None,
-                 txns: dict | None = None) -> dict:
+                 txns: dict | None = None,
+                 schema: str | None = None) -> dict:
     """Commit ``files`` as the version directly after ``base_version``
     (the version this mutation READ its state from; None = the table
     had no manifest). Any intervening commit makes the read stale →
@@ -259,7 +272,7 @@ def commit_exact(path: str, files: list[str], op: str,
     manifest's ``txns`` map through (rewrites otherwise erase stream
     idempotence state, re-opening replayed batches after a compact)."""
     version = 0 if base_version is None else base_version + 1
-    m = try_commit(path, files, op, version, txns=txns)
+    m = try_commit(path, files, op, version, txns=txns, schema=schema)
     if m is None:
         cur = read_manifest(path)
         raise ConcurrentWriteError(
@@ -271,13 +284,16 @@ def commit_exact(path: str, files: list[str], op: str,
 
 
 def commit_append(path: str, new_files: list[str], op: str,
-                  txn: tuple[str, int] | None = None) -> dict:
+                  txn: tuple[str, int] | None = None,
+                  schema: str | None = None) -> dict:
     """Commit ``new_files`` appended to the live file list, REBASING
     onto the winner and retrying if a concurrent commit lands first.
     Blind appends conflict with nothing: the staged files are fresh
     uniquely-named objects no other transaction references, so
     append-after-rebase preserves every concurrent commit's effect
-    (WriteSerializable append semantics).
+    (WriteSerializable append semantics). The schema of the version
+    appended to carries forward, like ``txns``; ``schema`` stands in
+    only when that version has none.
 
     ``txn=(app_id, txn_version)`` stamps this append as application
     transaction ``txn_version`` of ``app_id`` ATOMICALLY with the data
@@ -292,6 +308,7 @@ def commit_append(path: str, new_files: list[str], op: str,
         base = cur["files"] if cur else []
         version = (cur["version"] + 1) if cur else 0
         txns = dict(cur.get("txns") or {}) if cur else {}
+        kept_schema = (cur or {}).get("schema", schema)
         if txn is not None:
             app, tv = txn
             last = txns.get(app)
@@ -299,7 +316,7 @@ def commit_append(path: str, new_files: list[str], op: str,
                 return cur  # already applied — idempotent skip
             txns[app] = tv
         m = try_commit(path, base + list(new_files), op,
-                       version, txns=txns or None)
+                       version, txns=txns or None, schema=kept_schema)
         if m is not None:
             return m
 
@@ -315,9 +332,10 @@ def last_txn(path: str, app: str) -> int | None:
 
 def adopt(path: str) -> dict:
     """Manifest for a directory that predates one (legacy layout or an
-    externally-written parquet dir, e.g. a fresh CTAS): adopt the
-    current ``*.parquet`` listing as version 0. If a concurrent
-    adopter wins the race, return the winner's manifest."""
+    externally-written parquet dir): adopt the current ``*.parquet``
+    listing as version 0, with no schema (nothing but the files says
+    what it is). If a concurrent adopter wins the race, return the
+    winner's manifest."""
     m = read_manifest(path)
     if m is not None:
         return m

@@ -96,7 +96,7 @@ def local_session(master: str | None = None, app_name: str = "dde-spark",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         # Naive parquet timestamps read as TIMESTAMP, not TIMESTAMP_NTZ
-        # (see sources.read_parquet_table), also for plain
+        # (see sources.footer_schema), also for plain
         # spark.read / readStream calls.
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         "spark.ui.enabled": "false",
@@ -141,16 +141,12 @@ from duckdb_distributed_execution_spark.functions import (
 )
 
 
-def _empty_df(spark: SparkSession, schema) -> DataFrame:
-    """Zero-row DataFrame with ``schema`` (StructType or DDL string)
-    via an empty JVM RDD. ``createDataFrame([], schema)`` routes the
-    empty list through the Python-RDD serialization path and measures
-    7-10 s per call at local[32] (a Python-worker handshake per write,
-    guide §4: every Python path pays the boundary); the emptyRDD form
-    is the same schema, nullability included, at ~0.2 s."""
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+def _version_schema(m: dict) -> T.StructType | None:
+    """The table schema manifest version ``m`` records; None for a
+    version written before versions carried one, or adopted from a
+    directory the engine did not write."""
+    s = m.get("schema")
+    return None if s is None else T.StructType.fromJson(json.loads(s))
 
 
 # Per-rule violation predicates: the one definition of each constraint
@@ -1004,14 +1000,25 @@ class Engine:
             self._checks[name] = cons.checks
         if cons.foreign:
             self._foreign[name] = cons.foreign
-        self._write_managed(name, _empty_df(self.spark, schema).coalesce(1))
+        self._write_managed(name, schema=schema)
 
-    def _write_managed(self, name: str, df: DataFrame) -> None:
-        """Write ``df`` as the first version of managed table ``name``
-        and attach it with the schema just written."""
+    def _write_managed(self, name: str, df: DataFrame | None = None,
+                       schema: T.StructType | None = None) -> None:
+        """Commit version 0 of managed table ``name`` and attach it:
+        the files of ``df``, or, with ``schema`` instead, no file at
+        all: a catalog entry that writes no data and runs no Spark
+        job."""
         path = self._managed_path(name)
-        df.write.mode("overwrite").parquet(path)
-        self._attach_managed(name, path, df.schema)
+        if df is None:
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+        else:
+            df.write.mode("overwrite").parquet(path)
+            schema = df.schema
+        files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        manifest.commit_exact(path, files, "create", None,
+                              schema=schema.json())
+        self._attach_managed(name, path, schema)
 
     def _attach_managed(self, name: str, path: str,
                         schema: T.StructType | None = None) -> None:
@@ -1023,14 +1030,19 @@ class Engine:
         ``schema`` is the schema of the frame the engine just wrote
         there. Spark keeps it in every file footer and a parquet read
         infers exactly it, made nullable (the file source makes a
-        given schema nullable the same way). None (a directory of
-        unknown provenance: catalog reload, reattach, adopt) takes the
-        schema inference would from one footer read on the driver
-        (``sources.read_parquet_files``). Neither runs a Spark job up
-        to ``spark.sql.sources.parallelPartitionDiscovery.threshold``
-        (32) files; above it Spark lists the files in a job."""
-        files = [os.path.join(path, f)
-                 for f in self._adopt_manifest(path)["files"]]
+        given schema nullable the same way). None (catalog reload,
+        reattach, adopt) takes the schema the live version records.
+        Only a version without one (written before versions carried a
+        schema, or adopted from a foreign directory) takes the schema
+        inference would from one footer read on the driver
+        (``sources.read_parquet_files``). None of these runs a Spark
+        job up to ``spark.sql.sources.parallelPartitionDiscovery
+        .threshold`` (32) files; above it Spark lists the files in a
+        job."""
+        m = self._adopt_manifest(path)
+        files = [os.path.join(path, f) for f in m["files"]]
+        if schema is None:
+            schema = _version_schema(m)
         df = read_parquet_files(self.spark, files, schema)
         df.createOrReplaceTempView(name)
         self._tables[name] = RegisteredTable(name, path, "parquet", managed=True)
@@ -1125,7 +1137,8 @@ class Engine:
             # raises ConcurrentWriteError with nothing applied. The
             # stream idempotence map (txns) carries forward.
             manifest.commit_exact(t.path, kept + new, op, m["version"],
-                                  txns=m.get("txns"))
+                                  txns=m.get("txns"),
+                                  schema=rows.schema.json())
             self._attach_managed(name, t.path, rows.schema)
         return counts.get() if counts is not None else {}
 
@@ -1204,7 +1217,8 @@ class Engine:
             return False
         # Blind append: rebases onto any concurrent commit and retries
         # (manifest.commit_append) — INSERTs never lose a race.
-        out = manifest.commit_append(t.path, new, op, txn=txn)
+        out = manifest.commit_append(t.path, new, op, txn=txn,
+                                     schema=schema.json())
         if txn is not None and not set(new) <= set(out["files"]):
             # idempotent skip: this txn version was already applied
             _unlink(staged)
@@ -1687,7 +1701,11 @@ class Engine:
         """Materialize ``df`` as new data files INSIDE the table
         directory but OUTSIDE the manifest — staged in a scratch dir,
         then renamed in under fresh version-prefixed names. Invisible
-        to every reader until a manifest commit references them.
+        to every reader until a manifest commit references them. A
+        part file without rows (Spark writes one for an empty first
+        partition, to carry the schema) is left out: the version's
+        schema keeps the table readable, so a write with no rows
+        stages no file and its commit lists none.
 
         The scratch dir is WRITER-UNIQUE (pid+uuid suffix — r8): with
         the manifest CAS two processes may legitimately stage for the
@@ -1697,17 +1715,13 @@ class Engine:
         dirs; ``vacuum_orphans`` sweeps them."""
         import uuid as _uuid
 
+        import pyarrow.parquet as pq
+
         tmp = f"{path}__tmp.{os.getpid()}.{_uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(tmp)
-        parts = sorted(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        if not parts:
-            # zero-partition result (AQE collapses an empty relation to
-            # no write tasks): persist ONE schema-bearing empty file so
-            # the manifest never goes empty and scans keep their schema
-            df.limit(0).repartition(1).write.mode("overwrite").parquet(tmp)
-            parts = sorted(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
+        parts = sorted(
+            f for f in os.listdir(tmp) if f.endswith(".parquet")
+            and pq.read_metadata(os.path.join(tmp, f)).num_rows)
         out = []
         for fn in parts:
             # part-file names carry fresh UUIDs; the version prefix
@@ -1751,8 +1765,10 @@ class Engine:
 
         A file any retained version lists is not new: a file a write
         superseded stays in the directory for time travel and must
-        not come back (CREATE's un-prefixed ``part-*`` files among
-        them).
+        not come back (the un-prefixed ``part-*`` files a materialized
+        view, rollup or vector index is first written with among them).
+        The adopted files are read with the schema the live version
+        records.
 
         Concurrent-writer safe: the diff against the retained versions
         is recomputed and re-CAS'd until it wins (trickle ingest by
@@ -1775,7 +1791,7 @@ class Engine:
                 return adopted
             if manifest.try_commit(
                 t.path, m["files"] + new, "adopt", m["version"] + 1,
-                txns=m.get("txns"),
+                txns=m.get("txns"), schema=m.get("schema"),
             ) is not None:
                 self._attach_managed(name, t.path)
                 return adopted + len(new)
@@ -2499,9 +2515,8 @@ class Engine:
 
         # tombstones: ids DELETEd from the index since the build —
         # CAS-appended like upserts, anti-joined at serve time
-        id_type = dict(corpus.dtypes)[id_col]
-        self._write_managed(f"{name}__tombstones",
-                            _empty_df(self.spark, f"{id_col} {id_type}"))
+        self._write_managed(f"{name}__tombstones", schema=T.StructType(
+            [T.StructField(id_col, corpus.schema[id_col].dataType)]))
 
         import numpy as np
 
@@ -3071,8 +3086,10 @@ class Engine:
         catalog in the duckling DuckDB file across restarts; here the
         warehouse parquet layout IS the durable catalog). Returns the
         re-attached table names. Each table opens over its manifest
-        files with the schema of one footer read on the driver, so
-        reattaching runs no Spark job for a table of up to 32 files
+        files with the schema its live version records; only a version
+        without one (written before versions carried a schema) takes
+        it from one footer read on the driver. Either way reattaching
+        runs no Spark job for a table of up to 32 files
         (``_attach_managed``).
 
         Hidden entries are skipped: a warehouse written before history
@@ -3118,7 +3135,8 @@ class Engine:
     def table_at_version(self, name: str, version: int) -> DataFrame:
         """Read a managed table AS OF a retained version (the state
         before the op history lists for it). The latest version is the
-        live table."""
+        live table. It is read with the schema that version records
+        (or, for a version without one, its footer's)."""
         t = self._require_managed(name, "time travel")
         if version == self._adopt_manifest(t.path)["version"]:
             return self.table(name)
@@ -3126,7 +3144,8 @@ class Engine:
         if m is None:
             raise ValueError(f"no version {version} for table {name!r}")
         return read_parquet_files(
-            self.spark, [os.path.join(t.path, f) for f in m["files"]])
+            self.spark, [os.path.join(t.path, f) for f in m["files"]],
+            _version_schema(m))
 
     def restore_version(self, name: str, version: int) -> None:
         """Roll a managed table back to a retained version (the

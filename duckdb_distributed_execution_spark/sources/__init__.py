@@ -106,13 +106,19 @@ def footer_schema(spark: SparkSession,
     footer on the driver with Spark's own converter (the conversion
     schema inference runs in a one-task job), and the names of its
     top-level TIMESTAMP(NANOS) columns. Those convert as long (Spark
-    has no nanosecond timestamps) on a clone of the session's SQL conf,
-    so the session itself is left as it is."""
+    has no nanosecond timestamps), and naive timestamps as TIMESTAMP,
+    on a clone of the session's SQL conf, so the session itself is left
+    as it is."""
     jvm = spark._jvm
     jspark = spark._jsparkSession
     pq = jvm.org.apache.spark.sql.execution.datasources.parquet
     conf = jspark.sessionState().conf().clone()
     conf.setConfString("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Naive parquet timestamps (isAdjustedToUTC=false) surface as
+    # TimestampType, not TIMESTAMP_NTZ: the session runs in UTC so the
+    # values are identical, NTZ forbids epoch casts (CAST AS BIGINT),
+    # and DuckDB's naive timestamps then compare bit-for-bit.
+    conf.setConfString("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     meta = pq.ParquetFooterReader.readFooter(
         jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -173,11 +179,6 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     microsecond timestamps — the truncation DuckDB applies when
     fetching TIMESTAMP_NS), with the schema of one driver-side footer
     read (``read_parquet_files``)."""
-    # Naive parquet timestamps (isAdjustedToUTC=false) must surface as
-    # TimestampType, not TIMESTAMP_NTZ: the session runs in UTC so the
-    # values are identical, NTZ forbids epoch casts (CAST AS BIGINT),
-    # and DuckDB's naive timestamps then compare bit-for-bit.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     return read_parquet_files(spark, [path])
 
 

@@ -1065,23 +1065,24 @@ def test_vacuum_orphans_spares_retained_versions(engine):
 
 
 def test_adopt_external_files_skips_superseded_files(engine):
-    """CREATE writes un-prefixed ``part-*`` files; once a rewrite
-    supersedes them they stay for time travel and are not adopted."""
+    """A materialized view is first written with un-prefixed ``part-*``
+    files; once a rewrite supersedes them they stay for time travel
+    and are not adopted."""
     from duckdb_distributed_execution_spark import manifest
 
-    engine.create_table("tt_adopt", "id INTEGER")
+    engine.create_materialized_view("tt_adopt", "SELECT 1 AS id")
     try:
         path = engine._tables["tt_adopt"].path
         created = set(manifest.read_manifest(path)["files"])
         assert created and all(f.startswith("part-") for f in created)
-        engine.insert_values("tt_adopt", [(1,)])
+        engine.refresh_materialized_view("tt_adopt")
         m = manifest.read_manifest(path)
         assert not created & set(m["files"])
         assert engine.adopt_external_files("tt_adopt") == 0
         assert manifest.read_manifest(path) == m
         assert _ids(engine.table("tt_adopt")) == [1]
     finally:
-        engine.drop_table("tt_adopt")
+        engine.drop_materialized_view("tt_adopt")
 
 
 def test_vacuum_history_leaves_exactly_the_retained_files(engine):

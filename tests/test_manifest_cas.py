@@ -176,6 +176,59 @@ def test_stalled_append_rebases_past_watermark(tmp_path):
     assert "late.parquet" in manifest.read_manifest(path)["files"]
 
 
+# The table schema a version records is an opaque string here (Spark's
+# StructType.json() in the engine).
+_SCHEMA = '{"fields":[{"name":"id","type":"long"}],"type":"struct"}'
+_SCHEMA2 = '{"fields":[{"name":"id","type":"integer"}],"type":"struct"}'
+
+
+def test_try_commit_writes_the_schema(tmp_path):
+    path = str(tmp_path)
+    m = manifest.try_commit(path, [], "create", 0, schema=_SCHEMA)
+    assert (m["files"], m["schema"]) == ([], _SCHEMA)
+    with open(manifest.version_file(path, 0)) as fh:
+        assert json.load(fh) == m
+    manifest.commit_exact(path, ["a.parquet"], "rewrite", 0,
+                          schema=_SCHEMA2)
+    assert manifest.read_version(path, 1)["schema"] == _SCHEMA2
+    assert manifest.read_manifest(path)["schema"] == _SCHEMA2
+
+
+def test_commit_append_carries_the_schema_across_a_lost_cas(
+        tmp_path, monkeypatch):
+    """An append that loses the CAS rebases onto the winner and keeps
+    the schema of the version it lands on, as it keeps ``txns``."""
+    path = str(tmp_path)
+    manifest.try_commit(path, [], "create", 0, schema=_SCHEMA)
+    real = manifest.try_commit
+    raced = []
+
+    def lose_once(p, files, op, version, txns=None, schema=None):
+        if not raced:
+            # a concurrent writer takes the version first
+            raced.append(real(p, ["w.parquet"], "rewrite", version,
+                              schema=_SCHEMA2))
+        return real(p, files, op, version, txns=txns, schema=schema)
+
+    monkeypatch.setattr(manifest, "try_commit", lose_once)
+    m = manifest.commit_append(path, ["a.parquet"], "append")
+    assert raced[0]["version"] == 1 and m["version"] == 2
+    assert m["files"] == ["a.parquet", "w.parquet"]
+    assert m["schema"] == _SCHEMA2
+    # a given schema stands in only for a version without one
+    m = manifest.commit_append(path, ["b.parquet"], "append", schema=_SCHEMA)
+    assert m["schema"] == _SCHEMA2
+
+
+def test_adopt_of_a_foreign_directory_has_no_schema(tmp_path):
+    (tmp_path / "x.parquet").write_bytes(b"")
+    m = manifest.adopt(str(tmp_path))
+    assert m["files"] == ["x.parquet"] and "schema" not in m
+    m = manifest.commit_append(str(tmp_path), ["y.parquet"], "append",
+                               schema=_SCHEMA)
+    assert m["schema"] == _SCHEMA
+
+
 # ---------------------------------------------------------------------
 # process level: real OS processes racing the same directory
 # ---------------------------------------------------------------------

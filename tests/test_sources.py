@@ -319,6 +319,31 @@ def test_read_parquet_table_runs_no_job(spark, name):
     _assert_like_inferred(spark, df, path)
 
 
+NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
+
+def test_read_parquet_table_leaves_ntz_conf(spark):
+    """A session that infers naive timestamps as TIMESTAMP_NTZ keeps
+    its conf; the package still reads them as TIMESTAMP, with the rows
+    the conf's default gives."""
+    from pyspark.sql.types import TimestampType
+
+    path = os.path.join(SF_SMOKE, "events.parquet")
+    before = spark.conf.get(NTZ)
+    spark.conf.set(NTZ, "false")
+    try:
+        ref, _ = _read(spark, path)
+        expected = _rows(ref)
+        spark.conf.set(NTZ, "true")
+        df, jobs = _read(spark, path)
+        assert jobs == 0
+        assert spark.conf.get(NTZ) == "true"
+        assert isinstance(df.schema["ts"].dataType, TimestampType)
+        assert _rows(df) == expected
+    finally:
+        spark.conf.set(NTZ, before)
+
+
 def test_register_table_runs_no_job(spark, tmp_path):
     from duckdb_distributed_execution_spark import Engine
 
@@ -651,7 +676,11 @@ def test_adopt_and_time_travel_run_no_job(spark, tmp_path):
             df, jobs = spark_jobs(
                 spark, lambda: e.table_at_version("fr_t", h["version"]))
             assert jobs == 0
-            _assert_like_inferred(spark, df, *files)
+            if files:
+                _assert_like_inferred(spark, df, *files)
+            else:  # CREATE's version: the schema alone, no file
+                assert df.schema == e.table("fr_t").schema
+                assert df.collect() == []
     finally:
         e.close()
         spark.catalog.dropTempView("fr_t")
@@ -680,3 +709,23 @@ def test_package_reads_parquet_with_a_schema():
                 if n:
                     found[os.path.relpath(path, pkg)] = n
     assert found == {"sources/__init__.py": 1}
+
+
+def test_package_builds_no_table_from_an_empty_frame():
+    """No package code writes an empty frame to give a table its
+    schema: a manifest version carries the schema, so CREATE TABLE
+    and an empty write commit no file and run no job for it."""
+    import re
+
+    empty_write = re.compile(r"emptyRDD|\.limit\(0\)[^\n]*\.write\b")
+    pkg = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "duckdb_distributed_execution_spark")
+    found = []
+    for root, dirs, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path, encoding="utf-8") as f:
+                    if empty_write.search(f.read()):
+                        found.append(os.path.relpath(path, pkg))
+    assert found == []

@@ -5,15 +5,21 @@ just wrote instead of letting Spark infer it from a file footer (an
 inference is one Spark job per write). This holds only if the two are
 the same schema, so after every write kind the view's schema must
 equal what a fresh ``spark.read.parquet`` of the manifest-listed files
-infers — types, nullability and field metadata alike. The table mixes
+infers — types, nullability and field metadata alike — and so must
+the schema the manifest version records. The table mixes
 the types whose parquet round trip has pitfalls: DECIMAL, TIMESTAMP
 and ARRAY<FLOAT>.
 """
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from duckdb_distributed_execution_spark import manifest
 
 SF = "/root/testdata/sf0.01"
 DDL = ("id BIGINT PRIMARY KEY, amt DECIMAL(12,2) NOT NULL, ts TIMESTAMP, "
@@ -35,10 +41,18 @@ def _rows(spark, lo, hi):
 
 
 def _check(eng, name):
+    """The view has the schema Spark infers from the live files; a
+    version that lists no file has only the schema it records, read
+    as a scan reads a given schema (nullable). The recorded schema,
+    which a reload opens the table with, reads as the same."""
+    m = manifest.read_manifest(eng._tables[name].path)
+    recorded = eng.spark.read.schema(
+        T.StructType.fromJson(json.loads(m["schema"]))).parquet().schema
     files = eng._managed_files(name)
-    inferred = eng.spark.read.parquet(*files).schema
+    inferred = eng.spark.read.parquet(*files).schema if files else recorded
     assert eng.table(name).schema == inferred, name
     assert eng.table(name).schema.json() == inferred.json(), name
+    assert recorded.json() == inferred.json(), name
 
 
 @pytest.fixture()
